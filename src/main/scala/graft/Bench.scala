@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.core.GraftSession
 object Bench {
   /** Fixed-work calibration canary, run once per timed pass.
     *
@@ -25,21 +27,18 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
+  /** A failed query still reads -1 in the contract line; stderr names
+    * the cause.
+    */
+  private def reportFailure(phase: String, name: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $phase $name failed: ${e.getClass.getName}: ${e.getMessage}")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Contract default is local[32]; SPARK_GRAFT_CPUS overrides for
     // iterating on smaller boxes.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // TableIO.normalizeEventTs's TIMESTAMP_NTZ branch casts through the
-      // session timezone; without this pin, bench semantics over ts would
-      // diverge from Verify/oracle on a non-UTC host.
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores(32)
+    val spark = GraftSession.local(cpus)
     // Schema tripwire (r9: a silent fixture regeneration turned 39 bench
     // entries into -1). Loud on stderr, non-fatal — the contract line
     // still reports whatever runs, with `failed` carrying the signal.
@@ -53,7 +52,7 @@ object Bench {
     // codegen of each operator's expression tree.
     SparkEntry.benchQueries.foreach { name =>
       try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => reportFailure("warm-up", name, e) }
       spark.catalog.clearCache()
     }
     canaryOnce(spark) // warm the canary's own codegen too
@@ -69,7 +68,8 @@ object Bench {
     def timedPass(): Map[String, Double] = SparkEntry.benchQueries.map { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true }
+        catch { case e: Throwable => reportFailure("timed pass", name, e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       // Drop intermediates persisted by operators (dedup gram/band
       // tables) so successive runs are timed from a clean state.

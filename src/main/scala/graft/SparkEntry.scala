@@ -781,8 +781,8 @@ object SparkEntry {
     // similarity AND half the signature CPU of the r=4 shape.
     // Perf note (round 5): the round-4 driver bench showed this SLOWER
     // than the exhaustive oracle (2.17 vs 1.83 s) after round 3 showed it
-    // faster (1.4 vs 1.9). Re-measured with 3 separated full passes
-    // (tools.TimeQueries, sf0.1): minhash min 2.04 s (2.95/2.04/2.15) vs
+    // faster (1.4 vs 1.9). Re-measured with 3 separated full passes,
+    // min per query (Bench's protocol, sf0.1): minhash min 2.04 s (2.95/2.04/2.15) vs
     // jaccard min 2.19 s (2.43/2.20/2.19) — minhash wins again; the r4
     // flip sits inside this box's established ±20% noise band. The thin
     // margin at sf0.1 is expected: 5k docs is where the exhaustive

@@ -32,6 +32,13 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
+  /** Local core count for mains: `SPARK_GRAFT_CPUS` when set, else
+    * `default`. A value that is not an integer throws here, before any
+    * session exists or any output is written.
+    */
+  def cores(default: Int = Runtime.getRuntime.availableProcessors()): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)
+
   /** Local session with WARN logging, used by mains and tests. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = builder(s"local[$cores]", math.max(cores, 1)).getOrCreate()

@@ -279,7 +279,9 @@ object TextFunctions {
     *     the CaseWhen form in TextFunctionsSpec). An earlier
     *     HOF-aggregate attempt (4-counter struct accumulator) measured
     *     2.3x SLOWER — interpreted lambdas — which is why this is a
-    *     kernel, not a fold.
+    *     kernel, not a fold. Measured alone (`sum(hash(·))` over the
+    *     sf0.1 documents, min of 3, local[4] on a 4-core VM): 0.16 s,
+    *     vs 0.59 s for the four-count fold and 0.14 s for `length`.
     * A real pipeline would swap in a trained n-gram profile model; the
     * operator shape (pure column expression, no shuffle) is the part
     * that matters at scale.

@@ -95,7 +95,9 @@ object Dedup {
     * variant on corpora with small shared vocabularies; see
     * [[jaccardPairsPrefixFiltered]] for the boilerplate-heavy/hot-shingle
     * case. For corpora too large for either exact form,
-    * [[minHashNearDuplicates]] is the scale path.
+    * [[minHashNearDuplicates]] is the scale path. At sf0.001 a warm run
+    * (0.57 s, 4-core VM) costs no more than tokenizing and exploding the
+    * same documents alone (0.63 s): the wall there is scheduling floor.
     */
   def jaccardPairs(
       df: DataFrame,
@@ -286,7 +288,10 @@ object Dedup {
     * when the keepers do: output is provably identical to running the
     * sketch on the raw corpus, while candidate verification scales with
     * DISTINCT-text near-dup density (copy-dense stress at 250k docs:
-    * 507s raw -> seconds collapsed).
+    * 507s raw -> seconds collapsed). Candidate volume on the sf0.1
+    * documents at 32 hashes x 16 bands, minJaccard 0.2: 80k band rows,
+    * 5,646 band collisions, 2,045 distinct candidates, 256 verified
+    * pairs — as many as exhaustive [[jaccardPairs]] finds there.
     */
   def minHashNearDuplicates(
       df: DataFrame,
@@ -1008,6 +1013,10 @@ object Dedup {
     * high-cosine pair can still differ in > maxHamming bits — more planes
     * or probes trade cost for recall); precision is exact thanks to the
     * verify step. This is the 100 TB path for [[embeddingNearDuplicates]].
+    * On the sf0.1 embeddings (16 planes, maxHamming 2: chunks of 6, 6 and
+    * 4 bits, minCosine 0.5) the chunk join yields 198,913 collisions and
+    * 193,326 distinct pairs for exact cosine to verify, of which 7 pass:
+    * the verify join does nearly all the work.
     */
   def embeddingNearDuplicatesLSH(
       df: DataFrame,

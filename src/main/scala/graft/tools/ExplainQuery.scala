@@ -17,7 +17,7 @@ object ExplainQuery {
       .getOrElse(Seq("q_scan_filter_project"))
     val bad = names.filterNot(SparkEntry.queries.contains)
     require(bad.isEmpty, s"unknown queries: ${bad.mkString(",")}")
-    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = GraftSession.local(GraftSession.cores())
     names.foreach { n =>
       println(s"=== $n ===")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

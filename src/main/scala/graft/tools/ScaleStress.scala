@@ -22,7 +22,7 @@ object ScaleStress {
     val sections = args.lift(2).map(_.split(',').toSet)
     def section(name: String)(body: => Unit): Unit =
       if (sections.forall(_.contains(name))) body
-    val spark = GraftSession.local(32)
+    val spark = GraftSession.local(GraftSession.cores())
 
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()
