@@ -3601,7 +3601,10 @@ object SparkEntry {
             when(fl >= 80, 3L).when(fl >= 60, 2L).when(fl >= 30, 1L)
               .otherwise(0L))).as("x"))
       val votes = g12.unionByName(g3)
-      graft.operators.MlEval.krippendorffAlphaInterval(votes, "u", "x")
+      // the alpha fold is eager (one collected job, a driver-local
+      // result), so the surprisal cache is released as soon as it returns
+      try graft.operators.MlEval.krippendorffAlphaInterval(votes, "u", "x")
+      finally sur.unpersist()
     }),
 
     // Multi-rater agreement (r16, Fleiss 1971): the 3-filter panel —

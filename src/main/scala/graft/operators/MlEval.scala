@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import Census.r6
+
 /** Classifier evaluation over scored corpora — the measurement layer a
   * quality-filtering pipeline needs BEFORE it trusts a score column to
   * gate training data: ROC/AUC (does the score rank good above bad at
@@ -330,6 +332,25 @@ object MlEval {
           .as("uncertainty"))
   }
 
+  /** Loud cardinality gate on the bounded-by-vocabulary driver
+    * collects (r20 — the r19 verdict's one scale hole): the kappa/AC1
+    * cell censuses are categories²-bounded BY ASSUMPTION, and a
+    * high-cardinality "label" column (free text, ids) silently turns
+    * the one-job driver assembly into an unbounded collect. The gate
+    * rides the SAME job as the collect ([[Census.collectBounded]]),
+    * failing with an actionable message instead of a driver OOM.
+    * Under the limit the collected rows are identical to a plain
+    * collect (all downstream folds are order-free integer / decimal
+    * sums, so row order is immaterial).
+    */
+  private[graft] val MaxDriverCells = 2000000
+
+  private def collectCellsBounded(
+      df: DataFrame, what: String, maxCells: Int): Array[org.apache.spark.sql.Row] =
+    Census.collectBounded(df, maxCells, s"$what: cell census",
+      "the driver assembly assumes a bounded label vocabulary " +
+        "(categories² cells); bucket or recode the label column upstream")
+
   /** Cohen's kappa (Cohen 1960): chance-corrected agreement between two
     * CATEGORICAL raters over the same units — the standard QC readout
     * for labeled training data (two annotators, or two automatic
@@ -347,41 +368,11 @@ object MlEval {
     * rank/tie operators share); the divisions are fixed-order IEEE, so
     * the whole readout replays bitwise in SQL.
     */
-  /** House 6dp round — bit-equal to Spark's `round(col, 6)` on double
-    * (both go through BigDecimal.valueOf semantics + HALF_UP), the
-    * established driver-fold posture (Preferences.bradleyTerryDriver,
-    * spec-pinned bitwise against the distributed twin).
-    */
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame =
+    cohenKappa(df, aCol, bCol, MaxDriverCells)
 
-  /** Loud cardinality gate on the bounded-by-vocabulary driver
-    * collects (r20 — the r19 verdict's one scale hole): the kappa/AC1
-    * cell censuses are categories²-bounded BY ASSUMPTION, and a
-    * high-cardinality "label" column (free text, ids) silently turns
-    * the one-job driver assembly into an unbounded collect. The gate
-    * rides the SAME job as the collect — `limit(max+1)` bounds what
-    * can ever reach the driver, and row max+1 proves the census is
-    * over-limit, failing with an actionable message instead of a
-    * driver OOM. Under the limit the collected rows are identical to
-    * a plain collect (all downstream folds are order-free integer /
-    * decimal sums, so row order is immaterial).
-    */
-  // var, not val: a test seam — the production limit is far above any
-  // fixture, so the gate spec lowers it to prove the loud failure path
-  // and restores it (suites run sequentially; no concurrent readers)
-  private[graft] var MaxDriverCells = 2000000L
-  private def collectCellsBounded(
-      df: DataFrame, what: String): Array[org.apache.spark.sql.Row] = {
-    val rows = df.limit(MaxDriverCells.toInt + 1).collect()
-    require(rows.length <= MaxDriverCells,
-      s"$what: cell census exceeds $MaxDriverCells rows — the driver " +
-        "assembly assumes a bounded label vocabulary (categories² cells); " +
-        "bucket or recode the label column upstream")
-    rows
-  }
-
-  def cohenKappa(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  private[graft] def cohenKappa(
+      df: DataFrame, aCol: String, bCol: String, maxCells: Int): DataFrame = {
     // r19 shape (guide §2.4): the confusion-cell census is BOUNDED
     // (categories², the label vocabulary), so the fit runs ONE
     // distributed job — the cell fold, collected — and the po/pe/kappa
@@ -394,7 +385,7 @@ object MlEval {
     val cells = collectCellsBounded(df
       .select(col(aCol).cast("string").as("a"), col(bCol).cast("string").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
-      .groupBy("a", "b").agg(count(lit(1)).as("c")), "cohenKappa")
+      .groupBy("a", "b").agg(count(lit(1)).as("c")), "cohenKappa", maxCells)
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val n = cells.iterator.map(_._3).sum
     if (n <= 0)
@@ -432,7 +423,11 @@ object MlEval {
     * bitwise-replayable. m_k(2n − m_k) stays in the signed-long lane
     * for n up to ~1.5e9 (the shared bounded-input posture).
     */
-  def gwetAc1(df: DataFrame, aCol: String, bCol: String): DataFrame = {
+  def gwetAc1(df: DataFrame, aCol: String, bCol: String): DataFrame =
+    gwetAc1(df, aCol, bCol, MaxDriverCells)
+
+  private[graft] def gwetAc1(
+      df: DataFrame, aCol: String, bCol: String, maxCells: Int): DataFrame = {
     // missing votes drop as unrated, not as phantom categories: a null
     // surviving the groupBy would never match the USING full join and
     // so would count as an extra category in K and the pe_gamma fold
@@ -446,7 +441,7 @@ object MlEval {
     val cells = collectCellsBounded(df
       .select(col(aCol).cast("string").as("a"), col(bCol).cast("string").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
-      .groupBy("a", "b").agg(count(lit(1)).as("c")), "gwetAc1")
+      .groupBy("a", "b").agg(count(lit(1)).as("c")), "gwetAc1", maxCells)
       .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val n = cells.iterator.map(_._3).sum
     if (n <= 0)
@@ -571,7 +566,11 @@ object MlEval {
     * one grade). Labels must be integer grades (cast to long).
     */
   def cohenKappaWeighted(
-      df: DataFrame, aCol: String, bCol: String): DataFrame = {
+      df: DataFrame, aCol: String, bCol: String): DataFrame =
+    cohenKappaWeighted(df, aCol, bCol, MaxDriverCells)
+
+  private[graft] def cohenKappaWeighted(
+      df: DataFrame, aCol: String, bCol: String, maxCells: Int): DataFrame = {
     // r19 shape: bounded-cell driver assembly (the [[cohenKappa]]
     // pattern) — one cell-fold job; the observed and expected
     // disagreement integer folds (including the marginal cross
@@ -581,7 +580,7 @@ object MlEval {
     val cells = collectCellsBounded(df
       .select(col(aCol).cast("long").as("i"), col(bCol).cast("long").as("j"))
       .filter(col("i").isNotNull && col("j").isNotNull)
-      .groupBy("i", "j").agg(count(lit(1)).as("c")), "cohenKappaWeighted")
+      .groupBy("i", "j").agg(count(lit(1)).as("c")), "cohenKappaWeighted", maxCells)
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val n = cells.iterator.map(_._3).sum
     if (n <= 0)
@@ -656,7 +655,7 @@ object MlEval {
         .unionByName(perK.select(lit(2).as("t"),
           col("__ck").cast("decimal(38,6)").as("sdo"),
           lit(0L).as("n_units"), lit(0L).as("n"))),
-      "krippendorffAlpha (category census)")
+      "krippendorffAlpha (category census)", MaxDriverCells)
     val uRow = rows.find(_.getInt(0) == 1).get
     val sdo = uRow.getDecimal(1)
     val nUnits = uRow.getLong(2)

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import Census.{d6, r6}
 
 /** PAIRWISE-PREFERENCE AGGREGATION — the readout layer for
   * RLHF/preference training data: human (or judge-model) comparisons
@@ -19,11 +22,16 @@ import org.apache.spark.sql.functions._
   * decimal-staged sums, so a FIXED iteration count replays bitwise in
   * SQL — the whole fit is oracle-checkable, which gradient fits are not.
   *
-  * Scale shape: comparisons fold once into the unordered pair-count
-  * table (|item-pair| rows) and a per-item win census; each sweep is
-  * one item-keyed join pair + one bounded aggregation over the pair
-  * table — work proportional to distinct PAIRS, never to raw
-  * comparisons; iterates localCheckpoint so plan depth stays constant.
+  * Scale shape, shared by every iterative fit here (BT, ties, order,
+  * Plackett-Luce, Rank Centrality): comparisons fold once into a
+  * census (pair votes, ordered pairs or distinct orderings — work
+  * proportional to distinct PAIRS, never to raw comparisons) and an
+  * item vector collected under a loud bound. Each fit is ONE fold: a
+  * per-census-row term function and an item-grain update on the
+  * driver, run through [[Census]] — the census is collected once when
+  * it fits [[CollectBound.Default]], else each sweep is one Spark job
+  * over the cached census. Terms are exact scale-6 decimals, so both
+  * ways give the same bits.
   * Convergence caveat (Hunter's condition): the comparison graph should
   * be strongly connected — an item with zero wins sinks to strength 0,
   * and two zero-win items compared only against each other would
@@ -31,28 +39,21 @@ import org.apache.spark.sql.functions._
   */
 object Preferences {
 
-  /** Default caps for the driver MM fast path: pair ROWS and estimated
-    * collected BYTES (keys are strings — 4M rows of long keys plus map
-    * overhead could be hundreds of MB on a default heap, so the gate
-    * bounds both; the distributed path costs only ~2.4x the driver fold
-    * at 500k pairs, measured r16).
+  /** Items are the aggregation grain (models, sources, judges): every
+    * fit's item vector is collected, and stops loudly past this many.
     */
-  val DefaultDriverPairLimit: Long = 500000L
-  val DefaultDriverByteLimit: Long = 128L << 20
+  private val MaxItems = 100000
 
-  /** Estimated driver-side bytes for a collected pair table: 2 bytes
-    * per key char (String is UTF-16 on heap) plus ~120 bytes/row of
-    * object headers, tuple and map-entry overhead.
+  private def collectItems(items: DataFrame, fit: String): Array[Row] =
+    Census.collectBounded(items, MaxItems, s"$fit: item vector",
+      "items are the aggregation grain (models, sources, judges); " +
+        "aggregate the item ids upstream")
+
+  /** Estimated driver bytes per collected pair row: 2 bytes per key
+    * char (String is UTF-16 on heap) plus ~120 bytes of object headers.
     */
-  private def driverFits(
-      pairs: DataFrame, pairLimit: Long, byteLimit: Long): Boolean = {
-    val st = pairs.agg(
-      count(lit(1)).as("__rows"),
-      coalesce(sum(length(col("a")) + length(col("b"))), lit(0L)).as("__chars"))
-      .head()
-    val (rows, chars) = (st.getLong(0), st.getLong(1))
-    rows <= pairLimit && (2L * chars + 120L * rows) <= byteLimit
-  }
+  private def pairRowBytes(a: String, b: String): Column =
+    lit(120L) + lit(2L) * (length(col(a)) + length(col(b)))
 
   /** Record-level normalization shared by the whole BT family. */
   private def normalizeCmp(
@@ -81,151 +82,92 @@ object Preferences {
         greatest(col("w"), col("l")).as("b"))
       .agg(sum(col("cn")).as("n"))
 
+  /** Pair-vote census — (a, b, wa, wb): one row per unordered pair
+    * (a < b) with each side's wins, grouped by `keys` as well. The
+    * census [[bradleyTerry]] and [[rankCentrality]] sweep.
+    */
+  private def pairVotes(oc: DataFrame, keys: Column*): DataFrame =
+    oc.groupBy(keys ++ Seq(
+        least(col("w"), col("l")).as("a"),
+        greatest(col("w"), col("l")).as("b")): _*)
+      .agg(sum(when(col("w") < col("l"), col("cn")).otherwise(0L)).as("wa"),
+        sum(when(col("w") > col("l"), col("cn")).otherwise(0L)).as("wb"))
+
+  /** Item vector of a pair-vote census: (keys…, item, n_wins,
+    * n_comparisons, deg) with deg the distinct-opponent count.
+    */
+  private def pairItems(pv: DataFrame, keys: Column*): DataFrame =
+    pv.select(keys :+ explode(array(
+        struct(col("a").as("item"), col("wa").as("w"),
+          (col("wa") + col("wb")).as("n")),
+        struct(col("b").as("item"), col("wb").as("w"),
+          (col("wa") + col("wb")).as("n")))).as("e"): _*)
+      .groupBy(keys :+ col("e.item").as("item"): _*)
+      .agg(sum(col("e.w")).as("n_wins"), sum(col("e.n")).as("n_comparisons"),
+        count(lit(1)).as("deg"))
+
+  /** The mean-1 renormalization every MM update ends with: an exact
+    * decimal total of the 6dp strengths, then one division per item.
+    */
+  private def meanOne(gu: Array[(String, Double)]): Map[String, Double] = {
+    val k = gu.length.toDouble
+    val tot = gu.map { case (_, v) => BigDecimal(v).setScale(6) }.sum.toDouble
+    gu.map { case (it, v) => it -> r6(v * k / tot) }.toMap
+  }
+
   def bradleyTerry(
       df: DataFrame, /* one row per comparison */
       winnerCol: String,
       loserCol: String,
-      iters: Int = 10,
-      driverPairLimit: Long = DefaultDriverPairLimit,
-      driverByteLimit: Long = DefaultDriverByteLimit): DataFrame = {
-    val oc = orderedCensus(normalizeCmp(df, winnerCol, loserCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try fitFromOrdered(oc, iters, driverPairLimit, driverByteLimit)
-    finally oc.unpersist()
-  }
+      iters: Int = 10): DataFrame =
+    bradleyTerry(df, winnerCol, loserCol, iters, CollectBound.Default)
 
-  /** The MM fit from a precomputed ordered census (persisted by the
-    * caller). Both regimes release their own pair/item caches before
-    * returning (r17 advice: no per-call cache accretion): the driver
-    * path has collected everything it needs, and the distributed
-    * path's result is item-grain bounded, so it localCheckpoints
-    * eagerly and drops the inputs.
+  private[graft] def bradleyTerry(
+      df: DataFrame, winnerCol: String, loserCol: String,
+      iters: Int, bound: CollectBound): DataFrame =
+    fitFromOrdered(orderedCensus(normalizeCmp(df, winnerCol, loserCol)), iters, bound)
+
+  /** The MM fit from an ordered census. The pair-vote census it sweeps
+    * is cached for the call and released before returning (r17 advice:
+    * no per-call cache accretion); the result is driver-local.
     */
   private def fitFromOrdered(
-      oc: DataFrame,
-      iters: Int,
-      driverPairLimit: Long,
-      driverByteLimit: Long): DataFrame = {
+      oc: DataFrame, iters: Int, bound: CollectBound): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
-    // pairs/items are cheap folds of the CACHED census — the driver
-    // path collects them right away, so persisting them there is pure
-    // block-manager overhead (measured +0.3s/call at sf0.1); only the
-    // distributed sweep loop, which re-reads them every iteration,
-    // persists its own copies below.
-    val pairs = unorderedPairs(oc)
-    val winCensus = oc.groupBy(col("w").as("item")).agg(sum(col("cn")).as("n_wins"))
-    val items = oc.select(col("w").as("item"))
-      .unionByName(oc.select(col("l").as("item")))
-      .distinct()
-      .join(winCensus, Seq("item"), "left")
-      .select(col("item"), coalesce(col("n_wins"), lit(0L)).as("n_wins"))
-    val k = items.count().toDouble
-    // Items are the AGGREGATION grain (sources, models, judges), so the
-    // pair table is usually tiny: fold the MM sweeps on the driver with
-    // byte-identical arithmetic (6dp grid, exact BigDecimal sums — the
-    // Components driver-union-find pattern) instead of paying 10 rounds
-    // of job launch + checkpoint for a 20-row table (measured 6.8s ->
-    // fixture-cost-only at sf0.1). The distributed path below remains
-    // for pair tables past the limit and is pinned output-identical in
-    // PreferencesSpec.
-    val res =
-      if (driverFits(pairs, driverPairLimit, driverByteLimit))
-        bradleyTerryDriver(pairs, items, k, iters)
-      else {
-        val pairsC = pairs
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val itemsC = items
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val adj = pairsC.select(col("a").as("i"), col("b").as("j"), col("n"))
-          .unionByName(pairsC.select(col("b").as("i"), col("a").as("j"), col("n")))
-        val nCmp = adj.groupBy(col("i").as("item"))
-          .agg(sum(col("n")).as("n_comparisons"))
-        var g = itemsC.select(col("item"), lit(1.0).as("gamma"))
-        for (_ <- 1 to iters) {
-          // denominator fold: 6dp terms through an exact decimal sum, so
-          // the per-item Σ is order-free on both engines
-          val s = adj
-            .join(g.select(col("item").as("i"), col("gamma").as("__gi")), Seq("i"))
-            .join(g.select(col("item").as("j"), col("gamma").as("__gj")), Seq("j"))
-            .withColumn("__t", round(col("n").cast("double")
-              / (col("__gi") + col("__gj")), 6).cast("decimal(28,6)"))
-            .groupBy(col("i").as("item"))
-            .agg(sum(col("__t")).cast("double").as("__s"))
-          val unnorm = itemsC.join(s, Seq("item"))
-            .select(col("item"),
-              round(col("n_wins").cast("double") / col("__s"), 6).as("__gu"))
-          val tot = unnorm.agg(
-            sum(col("__gu").cast("decimal(28,6)")).cast("double").as("__tot"))
-          g = unnorm.crossJoin(tot)
-            .select(col("item"),
-              round(col("__gu") * lit(k) / col("__tot"), 6).as("gamma"))
-            .localCheckpoint(true)
-        }
-        // item-grain output: materialize so the sweep caches release
-        // (r17 advice), then drop them
-        val out = itemsC.join(g, Seq("item")).join(nCmp, Seq("item"))
-          .select(col("item"), col("gamma").as("strength"),
-            col("n_wins"), col("n_comparisons"),
-            // implied win probability vs an average (strength-1) opponent
-            round(col("gamma") / (col("gamma") + lit(1.0)), 6).as("p_beat_avg"))
-          .localCheckpoint(true)
-        pairsC.unpersist()
-        itemsC.unpersist()
-        out
-      }
-    res
-  }
-
-  /** Driver MM fold — the same grid arithmetic as the distributed path
-    * (6dp rounds, exact decimal sums via BigDecimal, one IEEE division
-    * per ratio), so the two paths are bitwise interchangeable.
-    */
-  private def bradleyTerryDriver(
-      pairs: DataFrame, items: DataFrame, k: Double, iters: Int): DataFrame = {
-    val spark = pairs.sparkSession
+    val spark = oc.sparkSession
     import spark.implicits._
-    val pairRows = pairs.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val itemRows = items.collect()
-      .map(r => (r.getString(0), r.getLong(1)))
-    btDriverCore(pairRows, itemRows, k, iters).toSeq
-      .toDF("item", "strength", "n_wins", "n_comparisons", "p_beat_avg")
+    val pv = pairVotes(oc).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val items = collectItems(pairItems(pv), "bradleyTerry")
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      btFold(Census(pv, pairRowBytes("a", "b"), bound), items, iters).toSeq
+        .toDF("item", "strength", "n_wins", "n_comparisons", "p_beat_avg")
+    } finally pv.unpersist()
   }
 
-  /** The in-memory MM fold shared by [[bradleyTerryDriver]] and the
-    * vectorized [[bradleyTerryBySlice]] driver path — one arithmetic,
-    * so the two callers are bitwise interchangeable by construction.
-    * Returns (item, strength, n_wins, n_comparisons, p_beat_avg) in
-    * `itemRows` order.
+  /** The MM fold over a pair-vote census, shared by [[bradleyTerry]]
+    * and every [[bradleyTerryBySlice]] slice: 6dp terms summed as exact
+    * decimals, one IEEE division per ratio. `items` is (item, n_wins,
+    * n_comparisons); returns (item, strength, n_wins, n_comparisons,
+    * p_beat_avg) in `items` order.
     */
-  private def btDriverCore(
-      pairRows: Array[(String, String, Long)],
-      itemRows: Array[(String, Long)],
-      k: Double,
+  private def btFold(
+      census: Census,
+      items: Array[(String, Long, Long)],
       iters: Int): Array[(String, Double, Long, Long, Double)] = {
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val nCmp = {
-      val m = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-      pairRows.foreach { case (a, b, n) => m(a) += n; m(b) += n }
-      m
-    }
-    var gamma = itemRows.map { case (it, _) => it -> 1.0 }.toMap
+    var gamma = items.map(_._1 -> 1.0).toMap
     for (_ <- 1 to iters) {
-      val acc = scala.collection.mutable.Map.empty[String, BigDecimal]
-        .withDefaultValue(BigDecimal(0).setScale(6))
-      pairRows.foreach { case (a, b, n) =>
-        val t = BigDecimal(r6(n.toDouble / (gamma(a) + gamma(b)))).setScale(6)
-        acc(a) += t; acc(b) += t
+      val g = gamma
+      val den = census.sweep { (r, acc) =>
+        val (a, b) = (r.getString(0), r.getString(1))
+        val t = d6((r.getLong(2) + r.getLong(3)).toDouble / (g(a) + g(b)))
+        acc.add(a, t); acc.add(b, t)
       }
-      val gu = itemRows.map { case (it, w) =>
-        it -> r6(w.toDouble / acc(it).toDouble)
-      }
-      val tot = gu.map { case (_, v) => BigDecimal(v).setScale(6) }.sum.toDouble
-      gamma = gu.map { case (it, v) => it -> r6(v * k / tot) }.toMap
+      gamma = meanOne(items.map { case (it, w, _) =>
+        it -> r6(w.toDouble / den(it).toDouble) })
     }
-    itemRows.map { case (it, w) =>
-      (it, gamma(it), w, nCmp(it), r6(gamma(it) / (gamma(it) + 1.0)))
+    items.map { case (it, w, n) =>
+      (it, gamma(it), w, n, r6(gamma(it) / (gamma(it) + 1.0)))
     }
   }
 
@@ -245,9 +187,8 @@ object Preferences {
     *
     * Input grain: one row per comparison with `outcomeCol` ∈
     * {'a','b','tie'} relative to (itemACol, itemBCol). Same 6dp-grid /
-    * exact-decimal staging as the plain fit, so a fixed sweep count
-    * replays bitwise; same driver fast path for bounded pair tables
-    * with a distributed fallback, pinned identical in PreferencesSpec.
+    * exact-decimal staging and the same one-fold [[Census]] shape as
+    * the plain fit, over the (a, b, wa, wb, t) pair census.
     */
   def bradleyTerryTies(
       df: DataFrame,
@@ -255,11 +196,17 @@ object Preferences {
       itemBCol: String,
       outcomeCol: String,
       theta: Double = 1.5,
-      iters: Int = 10,
-      driverPairLimit: Long = DefaultDriverPairLimit,
-      driverByteLimit: Long = DefaultDriverByteLimit): DataFrame = {
+      iters: Int = 10): DataFrame =
+    bradleyTerryTies(df, itemACol, itemBCol, outcomeCol, theta, iters,
+      CollectBound.Default)
+
+  private[graft] def bradleyTerryTies(
+      df: DataFrame, itemACol: String, itemBCol: String, outcomeCol: String,
+      theta: Double, iters: Int, bound: CollectBound): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
     require(theta > 1.0, s"theta must be > 1 (ties have zero mass at 1), got $theta")
+    val spark = df.sparkSession
+    import spark.implicits._
     val cmp = df.select(
         col(itemACol).cast("string").as("ia"),
         col(itemBCol).cast("string").as("ib"),
@@ -279,108 +226,37 @@ object Preferences {
         sum(when(col("r") === "wa", 1L).otherwise(0L)).as("wa"),
         sum(when(col("r") === "wb", 1L).otherwise(0L)).as("wb"),
         sum(when(col("r") === "t", 1L).otherwise(0L)).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val items = cmp.select(col("ia").as("item"))
-      .unionByName(cmp.select(col("ib").as("item")))
-      .distinct()
-      .join(
-        pairs.select(col("a").as("item"), (col("wa") + col("t")).as("__c"))
-          .unionByName(
-            pairs.select(col("b").as("item"), (col("wb") + col("t")).as("__c")))
-          .groupBy("item").agg(sum(col("__c")).as("n_credit")),
-        Seq("item"), "left")
-      .select(col("item"), coalesce(col("n_credit"), lit(0L)).as("n_credit"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val k = items.count().toDouble
-    val res = if (driverFits(pairs, driverPairLimit, driverByteLimit))
-      bradleyTerryTiesDriver(pairs, items, k, theta, iters)
-    else {
-      // directed table: one row per ordered (i, j) carrying both
-      // direction counts + ties, so each sweep is ONE join pair
-      val dir = pairs.select(col("a").as("i"), col("b").as("j"),
-          col("wa").as("wij"), col("wb").as("wji"), col("t"))
-        .unionByName(pairs.select(col("b").as("i"), col("a").as("j"),
-          col("wb").as("wij"), col("wa").as("wji"), col("t")))
-      var g = items.select(col("item"), lit(1.0).as("gamma"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val items = collectItems(pairs.select(explode(array(
+            struct(col("a").as("item"), col("wa").as("w"), col("t")),
+            struct(col("b").as("item"), col("wb").as("w"), col("t")))).as("e"))
+          .groupBy(col("e.item").as("item"))
+          .agg(sum(col("e.w")).as("n_wins"), sum(col("e.t")).as("n_ties")),
+          "bradleyTerryTies")
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val census = Census(pairs, pairRowBytes("a", "b"), bound)
+      var gamma = items.map(_._1 -> 1.0).toMap
       for (_ <- 1 to iters) {
-        val s = dir
-          .join(g.select(col("item").as("i"), col("gamma").as("__gi")), Seq("i"))
-          .join(g.select(col("item").as("j"), col("gamma").as("__gj")), Seq("j"))
-          .withColumn("__t1", round((col("wij") + col("t")).cast("double")
-            / (col("__gi") + lit(theta) * col("__gj")), 6).cast("decimal(28,6)"))
-          .withColumn("__t2", round((col("wji") + col("t")).cast("double")
-            * lit(theta) / (col("__gj") + lit(theta) * col("__gi")), 6)
-            .cast("decimal(28,6)"))
-          .groupBy(col("i").as("item"))
-          .agg((sum(col("__t1")) + sum(col("__t2"))).cast("double").as("__s"))
-        val unnorm = items.join(s, Seq("item"))
-          .select(col("item"),
-            round(col("n_credit").cast("double") / col("__s"), 6).as("__gu"))
-        val tot = unnorm.agg(
-          sum(col("__gu").cast("decimal(28,6)")).cast("double").as("__tot"))
-        g = unnorm.crossJoin(tot)
-          .select(col("item"),
-            round(col("__gu") * lit(k) / col("__tot"), 6).as("gamma"))
-          .localCheckpoint(true)
+        val g = gamma
+        val den = census.sweep { (r, acc) =>
+          val (a, b) = (r.getString(0), r.getString(1))
+          val (wa, wb, t) = (r.getLong(2), r.getLong(3), r.getLong(4))
+          // a's denominator: (wa + t)/(ga + θgb) + (wb + t)·θ/(gb + θga)
+          acc.add(a, d6((wa + t).toDouble / (g(a) + theta * g(b))))
+          acc.add(a, d6((wb + t).toDouble * theta / (g(b) + theta * g(a))))
+          acc.add(b, d6((wb + t).toDouble / (g(b) + theta * g(a))))
+          acc.add(b, d6((wa + t).toDouble * theta / (g(a) + theta * g(b))))
+        }
+        // credit = wins + ties
+        gamma = meanOne(items.map { case (it, w, t) =>
+          it -> r6((w + t).toDouble / den(it).toDouble) })
       }
-      finishTies(items, g, pairs, theta)
-    }
-    // item-grain output: materialize, then release the per-call caches
-    // (r17 advice — both regimes read pairs/items lazily via finishTies)
-    val out = res.localCheckpoint(true)
-    pairs.unpersist()
-    items.unpersist()
-    out
-  }
-
-  private def finishTies(
-      items: DataFrame, g: DataFrame, pairs: DataFrame, theta: Double): DataFrame = {
-    val census = pairs.select(col("a").as("item"), col("wa").as("__w"), col("t"))
-      .unionByName(pairs.select(col("b").as("item"), col("wb").as("__w"), col("t")))
-      .groupBy("item")
-      .agg(sum(col("__w")).as("n_wins"), sum(col("t")).as("n_ties"))
-    items.join(g, Seq("item")).join(census, Seq("item"))
-      .select(col("item"), col("gamma").as("strength"),
-        col("n_wins"), col("n_ties"),
+      items.toSeq.map { case (it, w, t) =>
         // win prob vs an average (strength-1) opponent under theta
-        round(col("gamma") / (col("gamma") + lit(theta)), 6).as("p_beat_avg"))
-  }
-
-  /** Driver fold for [[bradleyTerryTies]] — identical grid arithmetic. */
-  private def bradleyTerryTiesDriver(
-      pairs: DataFrame, items: DataFrame, k: Double,
-      theta: Double, iters: Int): DataFrame = {
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val pairRows = pairs.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4)))
-    val itemRows = items.collect().map(r => (r.getString(0), r.getLong(1)))
-    var gamma = itemRows.map { case (it, _) => it -> 1.0 }.toMap
-    for (_ <- 1 to iters) {
-      val acc = scala.collection.mutable.Map.empty[String, BigDecimal]
-        .withDefaultValue(BigDecimal(0).setScale(6))
-      pairRows.foreach { case (a, b, wa, wb, t) =>
-        // a's denominator: (wa + t)/(ga + θgb) + (wb + t)·θ/(gb + θga)
-        acc(a) += BigDecimal(r6((wa + t).toDouble
-          / (gamma(a) + theta * gamma(b)))).setScale(6)
-        acc(a) += BigDecimal(r6((wb + t).toDouble * theta
-          / (gamma(b) + theta * gamma(a)))).setScale(6)
-        acc(b) += BigDecimal(r6((wb + t).toDouble
-          / (gamma(b) + theta * gamma(a)))).setScale(6)
-        acc(b) += BigDecimal(r6((wa + t).toDouble * theta
-          / (gamma(a) + theta * gamma(b)))).setScale(6)
-      }
-      val gu = itemRows.map { case (it, credit) =>
-        it -> r6(credit.toDouble / acc(it).toDouble)
-      }
-      val tot = gu.map { case (_, v) => BigDecimal(v).setScale(6) }.sum.toDouble
-      gamma = gu.map { case (it, v) => it -> r6(v * k / tot) }.toMap
-    }
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val g = gamma.toSeq.toDF("item", "gamma")
-    finishTies(items, g, pairs, theta)
+        (it, gamma(it), w, t, r6(gamma(it) / (gamma(it) + theta)))
+      }.toDF("item", "strength", "n_wins", "n_ties", "p_beat_avg")
+    } finally pairs.unpersist()
   }
 
   /** ORDER-EFFECT Bradley-Terry (Davidson & Beaver 1977; MM scheme
@@ -400,22 +276,26 @@ object Preferences {
     * replays bitwise in SQL (the oracle unrolls the alternation).
     *
     * Scale shape: comparisons fold once into the ORDERED-pair census
-    * (f, s, n, first-wins); sweeps are joins over that bounded table;
-    * θ is one scalar fold per sweep. Driver fast path for bounded pair
-    * tables (byte-gated like [[bradleyTerry]]), distributed fallback
-    * pinned bitwise-identical. Same connectivity caveat as the plain
-    * fit; additionally every item should appear in BOTH positions
-    * somewhere, or θ and that item's γ are partially confounded.
+    * (f, s, n, first-wins); each iteration is two [[Census]] sweeps of
+    * that census (the γ terms, then the θ sum with the new γ). Same
+    * connectivity caveat as the plain fit; additionally every item
+    * should appear in BOTH positions somewhere, or θ and that item's γ
+    * are partially confounded.
     */
   def bradleyTerryOrder(
       df: DataFrame,
       winnerCol: String,
       loserCol: String,
       firstCol: String,
-      iters: Int = 10,
-      driverPairLimit: Long = DefaultDriverPairLimit,
-      driverByteLimit: Long = DefaultDriverByteLimit): DataFrame = {
+      iters: Int = 10): DataFrame =
+    bradleyTerryOrder(df, winnerCol, loserCol, firstCol, iters, CollectBound.Default)
+
+  private[graft] def bradleyTerryOrder(
+      df: DataFrame, winnerCol: String, loserCol: String, firstCol: String,
+      iters: Int, bound: CollectBound): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
+    val spark = df.sparkSession
+    import spark.implicits._
     val cmp = df.select(
         col(winnerCol).cast("string").as("w"),
         col(loserCol).cast("string").as("l"),
@@ -430,114 +310,43 @@ object Preferences {
       .groupBy("f", "s")
       .agg(count(lit(1)).as("n"),
         sum(when(col("__fw"), 1L).otherwise(0L)).as("wf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val winCensus = cmp.groupBy(col("w").as("item")).agg(count(lit(1)).as("n_wins"))
-    val items = cmp.select(col("w").as("item"))
-      .unionByName(cmp.select(col("l").as("item")))
-      .distinct()
-      .join(winCensus, Seq("item"), "left")
-      .select(col("item"), coalesce(col("n_wins"), lit(0L)).as("n_wins"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val k = items.count().toDouble
-    val nCmpTbl = op.select(col("f").as("item"), col("n"))
-      .unionByName(op.select(col("s").as("item"), col("n")))
-      .groupBy("item").agg(sum(col("n")).as("n_comparisons"))
-    val wFirst = op.agg(coalesce(sum(col("wf")), lit(0L)).as("__wf")).head().getLong(0)
-    val finish: (DataFrame, Double) => DataFrame = (g, theta) =>
-      items.join(g, Seq("item")).join(nCmpTbl, Seq("item"))
-        .select(col("item"), col("gamma").as("strength"),
-          col("n_wins"), col("n_comparisons"), lit(theta).as("theta"))
-    val res = if (driverFits(op.select(col("f").as("a"), col("s").as("b")),
-        driverPairLimit, driverByteLimit)) {
-      val (g, theta) = bradleyTerryOrderDriver(op, items, k, wFirst, iters)
-      finish(g, theta)
-    } else {
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // per item: wins, comparisons, and wins from the first position
+      val items = collectItems(op.select(explode(array(
+            struct(col("f").as("item"), col("wf").as("w"), col("n"),
+              col("wf").as("fw")),
+            struct(col("s").as("item"), (col("n") - col("wf")).as("w"), col("n"),
+              lit(0L).as("fw")))).as("e"))
+          .groupBy(col("e.item").as("item"))
+          .agg(sum(col("e.w")).as("n_wins"), sum(col("e.n")).as("n_comparisons"),
+            sum(col("e.fw")).as("first_wins")),
+          "bradleyTerryOrder")
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      val wFirst = items.map(_._4).sum
+      val census = Census(op, pairRowBytes("f", "s"), bound)
+      var gamma = items.map(_._1 -> 1.0).toMap
       var theta = 1.0
-      var g = items.select(col("item"), lit(1.0).as("gamma"))
       for (_ <- 1 to iters) {
-        val terms = op
-          .join(g.select(col("item").as("f"), col("gamma").as("__gf")), Seq("f"))
-          .join(g.select(col("item").as("s"), col("gamma").as("__gs")), Seq("s"))
-        val s = terms
-          .select(col("f").as("item"),
-            round(col("n").cast("double") * lit(theta)
-              / (lit(theta) * col("__gf") + col("__gs")), 6)
-              .cast("decimal(28,6)").as("__t"))
-          .unionByName(terms.select(col("s").as("item"),
-            round(col("n").cast("double")
-              / (lit(theta) * col("__gf") + col("__gs")), 6)
-              .cast("decimal(28,6)").as("__t")))
-          .groupBy("item")
-          .agg(sum(col("__t")).cast("double").as("__s"))
-        val unnorm = items.join(s, Seq("item"))
-          .select(col("item"),
-            round(col("n_wins").cast("double") / col("__s"), 6).as("__gu"))
-        val tot = unnorm.agg(
-          sum(col("__gu").cast("decimal(28,6)")).cast("double").as("__tot"))
-        g = unnorm.crossJoin(tot)
-          .select(col("item"),
-            round(col("__gu") * lit(k) / col("__tot"), 6).as("gamma"))
-          .localCheckpoint(true)
-        // θ update with the NEW γ (Hunter's alternation) — one scalar
-        // fold over the bounded pair census
-        val sTheta = op
-          .join(g.select(col("item").as("f"), col("gamma").as("__gf")), Seq("f"))
-          .join(g.select(col("item").as("s"), col("gamma").as("__gs")), Seq("s"))
-          .select(round(col("n").cast("double") * col("__gf")
-            / (lit(theta) * col("__gf") + col("__gs")), 6)
-            .cast("decimal(28,6)").as("__t"))
-          .agg(coalesce(sum(col("__t")), lit(0).cast("decimal(28,6)"))
-            .cast("double").as("__st"))
-          .head().getDouble(0)
-        theta = BigDecimal(wFirst.toDouble / sTheta)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+        val (g, th) = (gamma, theta)
+        val den = census.sweep { (r, acc) =>
+          val (f, s, n) = (r.getString(0), r.getString(1), r.getLong(2).toDouble)
+          val d = th * g(f) + g(s)
+          acc.add(f, d6(n * th / d)); acc.add(s, d6(n / d))
+        }
+        gamma = meanOne(items.map { case (it, w, _, _) =>
+          it -> r6(w.toDouble / den(it).toDouble) })
+        // θ update with the NEW γ (Hunter's alternation): one scalar sum
+        val g2 = gamma
+        val st = census.sweep { (r, acc) =>
+          val (f, s) = (r.getString(0), r.getString(1))
+          acc.add("theta", d6(r.getLong(2).toDouble * g2(f) / (th * g2(f) + g2(s))))
+        }
+        theta = r6(wFirst.toDouble / st("theta").toDouble)
       }
-      finish(g, theta)
-    }
-    // item-grain output: materialize, then release the per-call caches
-    // (r17 advice — finish() reads op/items lazily in both regimes)
-    val out = res.localCheckpoint(true)
-    op.unpersist()
-    items.unpersist()
-    out
-  }
-
-  /** Driver fold for [[bradleyTerryOrder]] — identical grid arithmetic
-    * (the bradleyTerryDriver pattern), returning the final strengths
-    * frame plus θ.
-    */
-  private def bradleyTerryOrderDriver(
-      op: DataFrame, items: DataFrame, k: Double, wFirst: Long,
-      iters: Int): (DataFrame, Double) = {
-    val spark = op.sparkSession
-    import spark.implicits._
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val groups = op.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val itemRows = items.collect().map(r => (r.getString(0), r.getLong(1)))
-    var gamma = itemRows.map { case (it, _) => it -> 1.0 }.toMap
-    var theta = 1.0
-    for (_ <- 1 to iters) {
-      val acc = scala.collection.mutable.Map.empty[String, BigDecimal]
-        .withDefaultValue(BigDecimal(0).setScale(6))
-      groups.foreach { case (f, s, n, _) =>
-        val den = theta * gamma(f) + gamma(s)
-        acc(f) += BigDecimal(r6(n.toDouble * theta / den)).setScale(6)
-        acc(s) += BigDecimal(r6(n.toDouble / den)).setScale(6)
-      }
-      val gu = itemRows.map { case (it, w) =>
-        it -> r6(w.toDouble / acc(it).toDouble)
-      }
-      val tot = gu.map { case (_, v) => BigDecimal(v).setScale(6) }.sum.toDouble
-      gamma = gu.map { case (it, v) => it -> r6(v * k / tot) }.toMap
-      val sTheta = groups.map { case (f, s, n, _) =>
-        BigDecimal(r6(n.toDouble * gamma(f)
-          / (theta * gamma(f) + gamma(s)))).setScale(6)
-      }.sum.toDouble
-      theta = r6(wFirst.toDouble / sTheta)
-    }
-    (gamma.toSeq.toDF("item", "gamma"), theta)
+      items.toSeq.map { case (it, w, n, _) => (it, gamma(it), w, n, theta) }
+        .toDF("item", "strength", "n_wins", "n_comparisons", "theta")
+    } finally op.unpersist()
   }
 
   /** [[bradleyTerry]] with UNCERTAINTY: strengths alone can't gate a
@@ -569,7 +378,7 @@ object Preferences {
     // pair census from the raw comparisons after the fit already had)
     val oc = orderedCensus(normalizeCmp(df, winnerCol, loserCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fit = fitFromOrdered(oc, iters, DefaultDriverPairLimit, DefaultDriverByteLimit)
+    val fit = fitFromOrdered(oc, iters, CollectBound.Default)
     val pairs = unorderedPairs(oc)
     val adj = pairs.select(col("a").as("i"), col("b").as("j"), col("n"))
       .unionByName(pairs.select(col("b").as("i"), col("a").as("j"), col("n")))
@@ -636,7 +445,7 @@ object Preferences {
     // integers, one less pass.
     val oc = orderedCensus(cmp)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fit = fitFromOrdered(oc, iters, DefaultDriverPairLimit, DefaultDriverByteLimit)
+    val fit = fitFromOrdered(oc, iters, CollectBound.Default)
       .select(col("item"), col("strength"))
     // position-bias block, per judge
     val pos = cmp.groupBy("g").agg(
@@ -793,7 +602,7 @@ object Preferences {
     // table fold the shared ordered census, one source scan per call
     val oc = orderedCensus(normalizeCmp(df, winnerCol, loserCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val fit = fitFromOrdered(oc, iters, DefaultDriverPairLimit, DefaultDriverByteLimit)
+    val fit = fitFromOrdered(oc, iters, CollectBound.Default)
       .select(col("item"), col("strength"))
     val pairVotes = oc.groupBy(
         least(col("w"), col("l")).as("item_a"),
@@ -1003,16 +812,19 @@ object Preferences {
     * position gates: a preference ORDER that holds pooled but flips
     * inside a segment means the pooled strengths average away a real
     * disagreement (Simpson's-paradox risk for reward-model training
-    * mixes). Each slice's fit is the exact [[bradleyTerry]] arithmetic
-    * on that slice's pair census, so per-slice outputs are bitwise
-    * what the plain fit would produce on the filtered records
-    * (spec-pinned), and the whole readout replays in SQL.
+    * mixes). Each slice's fit is the exact [[bradleyTerry]] fold on
+    * that slice's pair census, so per-slice outputs are bitwise what
+    * the plain fit would produce on the filtered records (spec-pinned),
+    * and the whole readout replays in SQL.
     *
-    * Scale shape: ONE source fold into the slice-keyed ordered census;
-    * slices are an analysis grain (bounded — `maxSlices` guards the
-    * loop loudly), and each per-slice fit folds the shared cached
-    * census, so the comparison source is scanned once regardless of
-    * slice count.
+    * Scale shape: ONE source fold into the slice-keyed pair-vote
+    * census, cached; slices are an analysis grain (bounded —
+    * `maxSlices` guards loudly, off the same slice-grain stats job
+    * that sizes each slice's census). Every slice within
+    * [[CollectBound.Default]] is collected in ONE job with its item
+    * vector (r19 vectorization: no per-slice job chain); a slice past
+    * it is swept in place on the cached census, so its census is never
+    * collected.
     */
   def bradleyTerryBySlice(
       df: DataFrame,
@@ -1020,113 +832,62 @@ object Preferences {
       winnerCol: String,
       loserCol: String,
       iters: Int = 10,
-      maxSlices: Int = 1000,
-      driverPairLimit: Long = DefaultDriverPairLimit,
-      driverByteLimit: Long = DefaultDriverByteLimit): DataFrame = {
+      maxSlices: Int = 1000): DataFrame =
+    bradleyTerryBySlice(df, sliceCol, winnerCol, loserCol, iters, maxSlices,
+      CollectBound.Default)
+
+  private[graft] def bradleyTerryBySlice(
+      df: DataFrame, sliceCol: String, winnerCol: String, loserCol: String,
+      iters: Int, maxSlices: Int, bound: CollectBound): DataFrame = {
+    require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
+    val spark = df.sparkSession
+    import spark.implicits._
     val cmp = df.select(
         col(sliceCol).cast("string").as("s"),
         col(winnerCol).cast("string").as("w"),
         col(loserCol).cast("string").as("l"))
       .filter(col("s").isNotNull && col("w").isNotNull && col("l").isNotNull
         && col("w") =!= col("l"))
-    val oc = cmp.groupBy("s", "w", "l").agg(count(lit(1)).as("cn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pvS = pairVotes(cmp.groupBy("s", "w", "l").agg(count(lit(1)).as("cn")), col("s"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // r19 vectorization (the r18 verdict's headline ask): instead of
-      // one driver-scheduled fit PER slice (4+ jobs each — gate agg,
-      // item count, two collects), fold the cached census ONCE into
-      // slice-keyed pair and item tables, collect them in ONE job, and
-      // run every slice's MM sweeps through the shared in-memory core
-      // ([[btDriverCore]] — the same arithmetic [[bradleyTerryDriver]]
-      // uses, so per-slice outputs stay bitwise the plain fit's,
-      // spec-pinned). A slice whose pair table exceeds the driver gate
-      // (the same row/byte thresholds [[fitFromOrdered]] applies) falls
-      // back to the distributed fit for that slice alone.
-      val pairsS = oc.groupBy(col("s"),
-          least(col("w"), col("l")).as("a"),
-          greatest(col("w"), col("l")).as("b"))
-        .agg(sum(col("cn")).as("n"))
-      val winS = oc.groupBy(col("s"), col("w").as("item"))
-        .agg(sum(col("cn")).as("n_wins"))
-      val itemsS = oc.select(col("s"), col("w").as("item"))
-        .unionByName(oc.select(col("s"), col("l").as("item")))
-        .distinct()
-        .join(winS, Seq("s", "item"), "left")
-        .select(col("s"), col("item"),
-          coalesce(col("n_wins"), lit(0L)).as("n_wins"))
-      // r20 (the r19 verdict's #1): the per-slice driver gate now runs
-      // BEFORE anything slice-sized is collected. One cheap slice-grain
-      // job over the cached census yields each slice's pair-row count
-      // and character mass (Spark length() counts code points, exactly
-      // what the old driver-side codePointCount computed), the
-      // fitFromOrdered row/byte thresholds partition slices
-      // driver-vs-distributed from those stats, and only gate-passing
-      // slices' censuses are ever collected. The slice-count cap also
-      // fires off this bounded stats collect (limit'd at maxSlices+1)
-      // instead of after a full census collect. When every slice passes
-      // — the expected case; slices are an analysis grain — the big
-      // collect below is byte-identical to the pre-gate form.
-      val sliceStats = pairsS.groupBy(col("s")).agg(
-          count(lit(1)).as("pr"),
-          sum(length(col("a")).cast("long") + length(col("b")).cast("long"))
-            .as("chars"))
+      val stats = pvS.groupBy(col("s"))
+        .agg(count(lit(1)), sum(pairRowBytes("a", "b")))
         .limit(maxSlices + 1)
         .collect()
-      require(sliceStats.length <= maxSlices,
+      require(stats.length <= maxSlices,
         s"more than maxSlices=$maxSlices slices — slices are " +
           "an analysis grain; pre-aggregate or raise the cap deliberately")
-      val statBySlice = sliceStats
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      val slices = statBySlice.keys.toArray.sorted
-      val spark = oc.sparkSession
-      import spark.implicits._
-      val (driverSlices, bigSlices) = slices.partition { sl =>
-        val (pr, chars) = statBySlice(sl)
-        pr <= driverPairLimit &&
-          (2L * chars + 120L * pr) <= driverByteLimit
-      }
-      val bigSet = bigSlices.toSet
+      val (small, big) = stats.sortBy(_.getString(0))
+        .partition(r => bound.admits(r.getLong(1), r.getLong(2)))
+      val bigSlices = big.map(_.getString(0))
       val collectable =
-        if (bigSet.isEmpty) pairsS
-          .select(lit(1).as("t"), col("s"), col("a"), col("b"), col("n"))
-          .unionByName(itemsS.select(lit(2).as("t"), col("s"),
-            col("item").as("a"), lit(null).cast("string").as("b"),
-            col("n_wins").as("n")))
-        else pairsS.filter(!col("s").isin(bigSlices.toSeq: _*))
-          .select(lit(1).as("t"), col("s"), col("a"), col("b"), col("n"))
-          .unionByName(itemsS.filter(!col("s").isin(bigSlices.toSeq: _*))
-            .select(lit(2).as("t"), col("s"),
-              col("item").as("a"), lit(null).cast("string").as("b"),
-              col("n_wins").as("n")))
-      val rows = collectable.collect()
-      val pairRowsBySlice = rows.filter(_.getInt(0) == 1)
-        .map(r => (r.getString(1), (r.getString(2), r.getString(3), r.getLong(4))))
-        .groupBy(_._1).map { case (s, g) => s -> g.map(_._2) }
-      val itemRowsBySlice = rows.filter(_.getInt(0) == 2)
-        .map(r => (r.getString(1), (r.getString(2), r.getLong(4))))
-        .groupBy(_._1).map { case (s, g) => s -> g.map(_._2) }
-      val driverOut = driverSlices.flatMap { sl =>
-        val ps = pairRowsBySlice.getOrElse(sl, Array.empty)
-        val is = itemRowsBySlice(sl)
-        btDriverCore(ps, is, is.length.toDouble, iters)
-          .map { case (it, g, w, n, p) => (sl, it, g, w, n, p) }
-      }.toSeq.toDF(
-        "slice", "item", "strength", "n_wins", "n_comparisons", "p_beat_avg")
-      val fits = bigSlices.map { sl =>
-        fitFromOrdered(oc.filter(col("s") === sl).select("w", "l", "cn"),
-            iters, driverPairLimit, driverByteLimit)
-          .withColumn("slice", lit(sl))
-          .select(col("slice"), col("item"), col("strength"),
-            col("n_wins"), col("n_comparisons"), col("p_beat_avg"))
+        if (bigSlices.isEmpty) pvS else pvS.filter(!col("s").isin(bigSlices.toSeq: _*))
+      val rows = collectable
+        .select(lit(1).as("t"), col("s"), col("a"), col("b"), col("wa"), col("wb"))
+        .unionByName(pairItems(collectable, col("s")).select(lit(2).as("t"), col("s"),
+          col("item").as("a"), lit(null).cast("string").as("b"),
+          col("n_wins").as("wa"), col("n_comparisons").as("wb")))
+        .collect()
+      val censusOf = rows.filter(_.getInt(0) == 1).groupBy(_.getString(1))
+      val itemsOf = rows.filter(_.getInt(0) == 2).groupBy(_.getString(1))
+      val collectedFits = small.map(_.getString(0)).map { sl =>
+        val census = Census.collected(censusOf(sl)
+          .map(r => Row(r.getString(2), r.getString(3), r.getLong(4), r.getLong(5))))
+        sl -> btFold(census,
+          itemsOf(sl).map(r => (r.getString(2), r.getLong(4), r.getLong(5))), iters)
       }
-      (driverOut +: fits.toSeq).reduce(_ unionByName _)
-    } finally oc.unpersist()
+      val inPlaceFits = bigSlices.map { sl =>
+        val pv = pvS.filter(col("s") === sl).select("a", "b", "wa", "wb")
+        val items = collectItems(pairItems(pv), "bradleyTerryBySlice")
+          .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+        sl -> btFold(Census.inPlace(pv), items, iters)
+      }
+      (collectedFits ++ inPlaceFits).toSeq
+        .flatMap { case (sl, fit) => fit.map { case (it, g, w, n, p) => (sl, it, g, w, n, p) } }
+        .toDF("slice", "item", "strength", "n_wins", "n_comparisons", "p_beat_avg")
+    } finally pvS.unpersist()
   }
-
-  /** Default caps for the Plackett-Luce driver fast path: distinct
-    * ORDERINGS (the census grain) and estimated collected bytes.
-    */
-  val DefaultDriverOrderingLimit: Long = 500000L
 
   /** Canonicalized listwise positions — the record-level normalization
     * shared by the whole listwise family: (session, item, pos, m) with
@@ -1235,11 +996,9 @@ object Preferences {
     *
     * Scale shape: rankings fold ONCE into the distinct-ORDERINGS
     * census (identical item sequences collapse with a count, the
-    * listwise analog of the pair census); each sweep is one item-keyed
-    * join + two bounded windows over the census explode + one item
-    * aggregation — work proportional to distinct orderings, never raw
-    * sessions. Bounded censuses fold on the driver with byte-identical
-    * arithmetic (pinned == distributed in PreferencesSpec).
+    * listwise analog of the pair census); each sweep is one [[Census]]
+    * pass over it — work proportional to distinct orderings, never raw
+    * sessions.
     *
     * Hunter's condition applies stage-wise: an item that is ALWAYS
     * ranked last has W = 0 and sinks to strength 0 (the ML limit); a
@@ -1256,94 +1015,69 @@ object Preferences {
       groupCol: String,
       itemCol: String,
       rankCol: String,
-      iters: Int = 10,
-      driverOrderingLimit: Long = DefaultDriverOrderingLimit,
-      driverByteLimit: Long = DefaultDriverByteLimit): DataFrame = {
+      iters: Int = 10): DataFrame =
+    plackettLuce(df, groupCol, itemCol, rankCol, iters, CollectBound.Default)
+
+  private[graft] def plackettLuce(
+      df: DataFrame, groupCol: String, itemCol: String, rankCol: String,
+      iters: Int, bound: CollectBound): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
-    val w = org.apache.spark.sql.expressions.Window
-    val posed = listwisePositions(df, groupCol, itemCol, rankCol)
+    val spark = df.sparkSession
+    import spark.implicits._
     // the orderings census: the ONE source fold; sessions with the
     // same item sequence collapse
-    val census = posed
+    val census = listwisePositions(df, groupCol, itemCol, rankCol)
       .groupBy("g")
       .agg(sort_array(collect_list(struct(col("pos"), col("item")))).as("sl"))
       .select(transform(col("sl"), x => x.getField("item")).as("ord"))
       .groupBy("ord").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // census explode: one row per (ordering, position); okey is a
-    // plain-string window key (array partition keys shuffle wide).
-    // md5(to_json(ord)) is COLLISION-FREE across distinct orderings
-    // (r18 advice: concat_ws("|", ord) merged two orderings whose item
-    // strings contain '|', silently interleaving their suffix sums);
-    // the JSON form is injective on string arrays and the digest keeps
-    // the shuffle key narrow. The driver-gate byte estimate below
-    // keeps concat_ws as its content-size proxy — it measures the
-    // collected ord payload, not the window key.
-    val st = census
-      .select(md5(to_json(col("ord"))).as("okey"), col("n"),
-        size(col("ord")).cast("long").as("m"),
-        posexplode(col("ord")).as(Seq("p0", "item")))
-      .select(col("okey"), col("n"), col("m"), col("item"),
-        (col("p0") + 1L).as("pos"))
-    val items = st.groupBy("item").agg(
-      sum(when(col("pos") <= col("m") - 1L, col("n")).otherwise(0L))
-        .as("n_chosen"),
-      sum(col("n")).as("n_rankings"))
-    val stats = census.agg(
-      count(lit(1)).as("__rows"),
-      coalesce(sum(length(concat_ws("|", col("ord")))), lit(0L)).as("__chars"))
-      .head()
-    val (cRows, cChars) = (stats.getLong(0), stats.getLong(1))
-    val res =
-      if (cRows <= driverOrderingLimit &&
-          (2L * cChars + 200L * cRows) <= driverByteLimit)
-        plackettLuceDriver(census, items, iters)
-      else {
-        val stC = st.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val itemsC = items.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val k = itemsC.count().toDouble
-        val wDesc = w.partitionBy("okey").orderBy(col("pos").desc)
-          .rowsBetween(w.unboundedPreceding, w.currentRow)
-        val wAsc = w.partitionBy("okey").orderBy(col("pos").asc)
-          .rowsBetween(w.unboundedPreceding, w.currentRow)
-        var g = itemsC.select(col("item"), lit(1.0).as("gamma"))
-        for (_ <- 1 to iters) {
-          // S_t: exact-decimal suffix sum of 6dp gammas (order-free);
-          // stage term: ONE IEEE division landed back on the grid
-          val pre = stC
-            .join(g.select(col("item"), col("gamma")), Seq("item"))
-            .withColumn("__sfx",
-              sum(col("gamma").cast("decimal(28,6)")).over(wDesc))
-            .withColumn("__inv",
-              when(col("pos") < col("m") && col("__sfx").cast("double") > 0.0,
-                round(col("n").cast("double") / col("__sfx").cast("double"), 6))
-                .otherwise(0.0).cast("decimal(28,6)"))
-            .withColumn("__pre", sum(col("__inv")).over(wAsc))
-          val den = pre.groupBy("item")
-            .agg(sum(col("__pre")).cast("double").as("__d"))
-          val unnorm = itemsC.join(den, Seq("item"))
-            .select(col("item"),
-              when(col("__d") > 0.0,
-                round(col("n_chosen").cast("double") / col("__d"), 6))
-                .otherwise(0.0).as("__gu"))
-          val tot = unnorm.agg(
-            sum(col("__gu").cast("decimal(28,6)")).cast("double").as("__tot"))
-          g = unnorm.crossJoin(tot)
-            .select(col("item"),
-              round(col("__gu") * lit(k) / col("__tot"), 6).as("gamma"))
-            .localCheckpoint(true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val items = collectItems(census
+          .select(col("n"), size(col("ord")).as("m"),
+            posexplode(col("ord")).as(Seq("p0", "item")))
+          .groupBy("item").agg(
+            sum(when(col("p0") < col("m") - 1, col("n")).otherwise(0L)).as("n_chosen"),
+            sum(col("n")).as("n_rankings")),
+          "plackettLuce")
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      val sweeps = Census(census,
+        lit(200L) + lit(2L) * length(concat_ws("|", col("ord"))), bound)
+      var gamma = items.map(_._1 -> 1.0).toMap
+      for (_ <- 1 to iters) {
+        val g = gamma
+        val den = sweeps.sweep { (r, acc) =>
+          val ord = r.getSeq[String](0)
+          val n = r.getLong(1).toDouble
+          val m = ord.length
+          // S_t: exact suffix sums of the 6dp gammas
+          val sfx = new Array[BigDecimal](m)
+          var run = Census.Zero6
+          var t = m - 1
+          while (t >= 0) {
+            run = run + BigDecimal(g(ord(t))).setScale(6)
+            sfx(t) = run
+            t -= 1
+          }
+          // each item's denominator: the prefix of its stage terms
+          var pre = Census.Zero6
+          t = 0
+          while (t < m) {
+            val sd = sfx(t).toDouble
+            if (t < m - 1 && sd > 0.0) pre = pre + d6(n / sd)
+            acc.add(ord(t), pre)
+            t += 1
+          }
         }
-        val out = itemsC.join(g, Seq("item"))
-          .select(col("item"), col("gamma").as("strength"),
-            col("n_chosen"), col("n_rankings"),
-            round(col("gamma") / (col("gamma") + lit(1.0)), 6).as("p_beat_avg"))
-          .localCheckpoint(true) // item-grain; lets the caches release
-        stC.unpersist()
-        itemsC.unpersist()
-        out
+        gamma = meanOne(items.map { case (it, wCh, _) =>
+          val d = den(it).toDouble
+          it -> (if (d > 0.0) r6(wCh.toDouble / d) else 0.0)
+        })
       }
-    census.unpersist()
-    res
+      items.toSeq.map { case (it, wCh, nr) =>
+        (it, gamma(it), wCh, nr, r6(gamma(it) / (gamma(it) + 1.0)))
+      }.toDF("item", "strength", "n_chosen", "n_rankings", "p_beat_avg")
+    } finally census.unpersist()
   }
 
   /** RANK CENTRALITY (Negahban, Oh & Shah 2012, "Iterative ranking
@@ -1363,10 +1097,8 @@ object Preferences {
     * the sum-1 renormalization is one division back onto the grid — so
     * the whole fit replays bitwise in SQL, like the MM family.
     *
-    * Scale shape: identical to [[bradleyTerry]] — comparisons fold
-    * once into the ordered pair census; each sweep is one item-keyed
-    * join + two bounded aggregations over the census. Bounded censuses
-    * fold on the driver (pinned == distributed in PreferencesSpec).
+    * Scale shape: identical to [[bradleyTerry]] — one [[Census]] sweep
+    * of the pair-vote census per power iteration.
     *
     * Caveats: the chain must be irreducible for a meaningful stationary
     * vector — gate with [[preferenceConnectivity]]; a fixed sweep count
@@ -1378,198 +1110,52 @@ object Preferences {
       df: DataFrame,
       winnerCol: String,
       loserCol: String,
-      iters: Int = 10,
-      driverPairLimit: Long = DefaultDriverPairLimit,
-      driverByteLimit: Long = DefaultDriverByteLimit): DataFrame = {
+      iters: Int = 10): DataFrame =
+    rankCentrality(df, winnerCol, loserCol, iters, CollectBound.Default)
+
+  private[graft] def rankCentrality(
+      df: DataFrame, winnerCol: String, loserCol: String,
+      iters: Int, bound: CollectBound): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
-    val oc = orderedCensus(normalizeCmp(df, winnerCol, loserCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pairs = unorderedPairs(oc)
-    // directed win counts per unordered pair
-    val pv = oc.groupBy(
-        least(col("w"), col("l")).as("a"),
-        greatest(col("w"), col("l")).as("b"))
-      .agg(sum(when(col("w") < col("l"), col("cn")).otherwise(0L)).as("wa"),
-        sum(when(col("w") > col("l"), col("cn")).otherwise(0L)).as("wb"))
-    val winCensus = oc.groupBy(col("w").as("item")).agg(sum(col("cn")).as("n_wins"))
-    val items = oc.select(col("w").as("item"))
-      .unionByName(oc.select(col("l").as("item")))
-      .distinct()
-      .join(winCensus, Seq("item"), "left")
-      .select(col("item"), coalesce(col("n_wins"), lit(0L)).as("n_wins"))
-    val res =
-      if (driverFits(pairs, driverPairLimit, driverByteLimit))
-        rankCentralityDriver(pv, items, iters)
-      else {
-        val k = items.count()
-        // d_max: the max distinct-opponent degree (bounded agg)
-        val deg = pv.select(col("a").as("item"))
-          .unionByName(pv.select(col("b").as("item")))
-          .groupBy("item").agg(count(lit(1)).as("deg"))
-        val dMax = deg.agg(max(col("deg"))).head().getLong(0).toDouble
-        val nCmp = pv.select(col("a").as("item"), (col("wa") + col("wb")).as("n"))
-          .unionByName(pv.select(col("b").as("item"), (col("wa") + col("wb")).as("n")))
-          .groupBy("item").agg(sum(col("n")).as("n_comparisons"))
-        // directed transitions i -> j at rate round(w_ji/(n*dmax), 6),
-        // fixed for all sweeps. Rounding bound (r18 advice, documented
-        // rather than clamped — a clamp would have to change engine,
-        // driver fold AND SQL oracle in lockstep): each HALF_UP round
-        // adds at most 5e-7, so an item of degree d near d_max can
-        // carry a row-sum excess up to d·5e-7 and its stationary
-        // component can drift below 0 by that same bounded amount
-        // before the sum-1 renormalization — scores may leave [0,1] by
-        // <= deg_max·5e-7 on very dense graphs. At the intended grain
-        // (items are models/sources, degrees in the hundreds) the
-        // excursion is < 1e-4 of a score and sign-stable.
-        val adj = pv.select(col("a").as("i"), col("b").as("j"),
-            round(col("wb").cast("double")
-              / ((col("wa") + col("wb")).cast("double") * lit(dMax)), 6).as("t"))
-          .unionByName(pv.select(col("b").as("i"), col("a").as("j"),
-            round(col("wa").cast("double")
-              / ((col("wa") + col("wb")).cast("double") * lit(dMax)), 6).as("t")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val itemsC = items
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val p0 = BigDecimal(1.0 / k)
-          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-        var p = itemsC.select(col("item"), lit(p0).as("pi"))
-        for (_ <- 1 to iters) {
-          val flows = adj
-            .join(p.select(col("item").as("i"), col("pi").as("__pi")), Seq("i"))
-            .select(col("i"), col("j"),
-              round(col("__pi") * col("t"), 6).cast("decimal(28,6)").as("f"))
-          val outflow = flows.groupBy(col("i").as("item"))
-            .agg(sum(col("f")).as("__out"))
-          val inflow = flows.groupBy(col("j").as("item"))
-            .agg(sum(col("f")).as("__in"))
-          val moved = p
-            .join(outflow, Seq("item"), "left")
-            .join(inflow, Seq("item"), "left")
-            .select(col("item"),
-              // flows are <= 1, so narrowing the folded sums back to
-              // (28,6) is exact; without it the +/- chain overflows
-              // precision 38 and Spark silently drops the 6th decimal
-              (col("pi").cast("decimal(28,6)")
-                - coalesce(col("__out").cast("decimal(28,6)"),
-                    lit(0).cast("decimal(28,6)"))
-                + coalesce(col("__in").cast("decimal(28,6)"),
-                    lit(0).cast("decimal(28,6)")))
-                .as("__p"))
-          val tot = moved.agg(sum(col("__p")).cast("double").as("__tot"))
-          p = moved.crossJoin(tot)
-            .select(col("item"),
-              round(col("__p").cast("double") / col("__tot"), 6).as("pi"))
-            .localCheckpoint(true)
-        }
-        val out = itemsC.join(p, Seq("item")).join(nCmp, Seq("item"))
-          .select(col("item"), col("pi").as("score"),
-            col("n_wins"), col("n_comparisons"))
-          .localCheckpoint(true) // item-grain; lets the caches release
-        adj.unpersist()
-        itemsC.unpersist()
-        out
-      }
-    oc.unpersist()
-    res
-  }
-
-  /** Driver power-iteration fold for [[rankCentrality]] — same grid
-    * arithmetic as the distributed sweeps, bitwise interchangeable.
-    */
-  private def rankCentralityDriver(
-      pv: DataFrame, items: DataFrame, iters: Int): DataFrame = {
-    val spark = pv.sparkSession
+    val spark = df.sparkSession
     import spark.implicits._
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val pvRows = pv.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    val itemRows = items.collect().map(r => (r.getString(0), r.getLong(1)))
-    val k = itemRows.length
-    val deg = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    val nCmp = scala.collection.mutable.Map.empty[String, Long].withDefaultValue(0L)
-    pvRows.foreach { case (a, b, wa, wb) =>
-      deg(a) += 1L; deg(b) += 1L
-      nCmp(a) += wa + wb; nCmp(b) += wa + wb
-    }
-    val dMax = if (deg.isEmpty) 1.0 else deg.values.max.toDouble
-    // directed transitions on the 6dp grid, fixed for all sweeps
-    val adj = pvRows.flatMap { case (a, b, wa, wb) =>
-      val n = (wa + wb).toDouble
-      Seq((a, b, r6(wb.toDouble / (n * dMax))),
-        (b, a, r6(wa.toDouble / (n * dMax))))
-    }
-    val zero6 = BigDecimal(0).setScale(6)
-    var pi = itemRows.map { case (it, _) => it -> r6(1.0 / k) }.toMap
-    for (_ <- 1 to iters) {
-      val in = scala.collection.mutable.Map.empty[String, BigDecimal]
-        .withDefaultValue(zero6)
-      val outF = scala.collection.mutable.Map.empty[String, BigDecimal]
-        .withDefaultValue(zero6)
-      adj.foreach { case (i, j, t) =>
-        val f = BigDecimal(r6(pi(i) * t)).setScale(6)
-        outF(i) += f; in(j) += f
-      }
-      val moved = itemRows.map { case (it, _) =>
-        it -> (BigDecimal(pi(it)).setScale(6) - outF(it) + in(it))
-      }
-      val tot = moved.map(_._2).sum.toDouble
-      pi = moved.map { case (it, v) => it -> r6(v.toDouble / tot) }.toMap
-    }
-    itemRows.toSeq.map { case (it, w) => (it, pi(it), w, nCmp(it)) }
-      .toDF("item", "score", "n_wins", "n_comparisons")
-  }
-
-  /** Driver MM fold for [[plackettLuce]] — the same grid arithmetic as
-    * the distributed path (6dp rounds, exact BigDecimal staging, one
-    * IEEE division per stage term), so the two are bitwise
-    * interchangeable.
-    */
-  private def plackettLuceDriver(
-      census: DataFrame, items: DataFrame, iters: Int): DataFrame = {
-    val spark = census.sparkSession
-    import spark.implicits._
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val ords = census.collect()
-      .map(r => (r.getSeq[String](0).toArray, r.getLong(1)))
-    val itemRows = items.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-    val k = itemRows.length.toDouble
-    val zero6 = BigDecimal(0).setScale(6)
-    var gamma = itemRows.map { case (it, _, _) => it -> 1.0 }.toMap
-    for (_ <- 1 to iters) {
-      val acc = scala.collection.mutable.Map.empty[String, BigDecimal]
-        .withDefaultValue(zero6)
-      ords.foreach { case (ord, n) =>
-        val m = ord.length
-        val sfx = new Array[BigDecimal](m)
-        var run = zero6
-        var t = m - 1
-        while (t >= 0) {
-          run = run + BigDecimal(gamma(ord(t))).setScale(6)
-          sfx(t) = run
-          t -= 1
+    val pv = pairVotes(orderedCensus(normalizeCmp(df, winnerCol, loserCol)))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val items = collectItems(pairItems(pv), "rankCentrality")
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      // d_max: the max distinct-opponent degree
+      val dMax = if (items.isEmpty) 1.0 else items.map(_._4).max.toDouble
+      val census = Census(pv, pairRowBytes("a", "b"), bound)
+      var pi = items.map(_._1 -> r6(1.0 / items.length)).toMap
+      for (_ <- 1 to iters) {
+        val p = pi
+        // net flow per item. Directed transitions i -> j at rate
+        // round(w_ji/(n*dmax), 6). Rounding bound (r18 advice,
+        // documented rather than clamped — a clamp would have to change
+        // engine AND SQL oracle in lockstep): each HALF_UP round adds
+        // at most 5e-7, so an item of degree d near d_max can carry a
+        // row-sum excess up to d·5e-7 and its stationary component can
+        // drift below 0 by that same bounded amount before the sum-1
+        // renormalization — scores may leave [0,1] by <= deg_max·5e-7
+        // on very dense graphs. At the intended grain (items are
+        // models/sources, degrees in the hundreds) the excursion is
+        // < 1e-4 of a score and sign-stable.
+        val net = census.sweep { (r, acc) =>
+          val (a, b) = (r.getString(0), r.getString(1))
+          val (wa, wb) = (r.getLong(2), r.getLong(3))
+          val n = (wa + wb).toDouble
+          val fab = d6(p(a) * r6(wb.toDouble / (n * dMax)))
+          val fba = d6(p(b) * r6(wa.toDouble / (n * dMax)))
+          acc.add(a, fba - fab); acc.add(b, fab - fba)
         }
-        var pre = zero6
-        t = 0
-        while (t < m) {
-          val sd = sfx(t).toDouble
-          val inv = if (t < m - 1 && sd > 0.0) r6(n.toDouble / sd) else 0.0
-          pre = pre + BigDecimal(inv).setScale(6)
-          acc(ord(t)) += pre
-          t += 1
-        }
+        val moved = items.map { case (it, _, _, _) =>
+          it -> (BigDecimal(p(it)).setScale(6) + net(it)) }
+        val tot = moved.map(_._2).sum.toDouble
+        pi = moved.map { case (it, v) => it -> r6(v.toDouble / tot) }.toMap
       }
-      val gu = itemRows.map { case (it, wCh, _) =>
-        val d = acc(it).toDouble
-        it -> (if (d > 0.0) r6(wCh.toDouble / d) else 0.0)
-      }
-      val tot = gu.map { case (_, v) => BigDecimal(v).setScale(6) }.sum.toDouble
-      gamma = gu.map { case (it, v) => it -> r6(v * k / tot) }.toMap
-    }
-    itemRows.toSeq.map { case (it, wCh, nr) =>
-      (it, gamma(it), wCh, nr, r6(gamma(it) / (gamma(it) + 1.0)))
-    }.toDF("item", "strength", "n_chosen", "n_rankings", "p_beat_avg")
+      items.toSeq.map { case (it, w, n, _) => (it, pi(it), w, n) }
+        .toDF("item", "score", "n_wins", "n_comparisons")
+    } finally pv.unpersist()
   }
 }

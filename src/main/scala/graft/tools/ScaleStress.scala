@@ -847,9 +847,9 @@ object ScaleStress {
     // items with planted strengths (item id ~ skill; the md5-coin gives
     // the stronger item the win with probability skill_a/(skill_a +
     // skill_b) — the BT generative model). Folds to ~500k distinct
-    // pairs; both MM paths run: the driver fast path (the default for
-    // item-grain data) and the distributed sweeps (driverPairLimit=0).
-    import graft.operators.Preferences
+    // pairs; the fit runs both ways: collected (the default for
+    // item-grain data) and swept in place (CollectBound.InPlace).
+    import graft.operators.{CollectBound, Preferences}
     val n = 5000000L
     // opponent = ia + (1..999 block offset) mod 1000: every item meets
     // every other across the 5000 blocks (~5 comparisons per pair)
@@ -870,14 +870,14 @@ object ScaleStress {
           col("ib")).otherwise(col("ia")).cast("string").as("loser"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[stress] pref comparisons: ${cmps.count()}")
-    val fitD = time("pref: BT driver fold (1000 items)")(
+    val fitD = time("pref: BT collected fold (1000 items)")(
       Preferences.bradleyTerry(cmps, "winner", "loser", iters = 10)
         .orderBy(desc("strength")).limit(5).collect())
     println("[stress]   top-5 by strength: " +
       fitD.map(r => s"${r.getString(0)}=${r.getDouble(1)}").mkString(", "))
-    time("pref: BT distributed sweeps")(
+    time("pref: BT in-place sweeps")(
       Preferences.bradleyTerry(cmps, "winner", "loser", iters = 10,
-        driverPairLimit = 0L).count())
+        bound = CollectBound.InPlace).count())
     time("pref: circular triads")(
       println("[stress]   " + Preferences
         .circularTriads(cmps, "winner", "loser").collect().head))
@@ -886,20 +886,20 @@ object ScaleStress {
     // favor larger ids, so first-shown mostly loses and theta < 1);
     // one scalar fold per sweep on top of the plain fit's shape.
     val cmpsF = cmps.withColumn("first", least(col("winner"), col("loser")))
-    time("pref: BT order-effect driver fold")(
+    time("pref: BT order-effect collected fold")(
       println("[stress]   theta(first=lower-id) = " + Preferences
         .bradleyTerryOrder(cmpsF, "winner", "loser", "first", iters = 10)
         .select("theta").head().getDouble(0)))
     // r18: the spectral estimator on the same 5M comparisons — both
     // regimes, same pair-census reuse as the MM fit
-    val rcD = time("pref: rank centrality driver fold")(
+    val rcD = time("pref: rank centrality collected fold")(
       Preferences.rankCentrality(cmps, "winner", "loser", iters = 10)
         .orderBy(desc("score")).limit(5).collect())
     println("[stress]   top-5 by score: " +
       rcD.map(r => s"${r.getString(0)}=${r.getDouble(1)}").mkString(", "))
-    time("pref: rank centrality distributed")(
+    time("pref: rank centrality in-place")(
       Preferences.rankCentrality(cmps, "winner", "loser", iters = 10,
-        driverPairLimit = 0L).count())
+        bound = CollectBound.InPlace).count())
     cmps.unpersist(blocking = false)
 
     // r17: COMPLETE tournament (one decided comparison per pair, 2000
@@ -933,9 +933,8 @@ object ScaleStress {
     // non-overlapping offset bands and ranks them by a noisy skill
     // draw (Thurstonian generator: value = skill x md5-uniform), so
     // higher ids should fit stronger. Noise makes nearly every
-    // ordering distinct (~2M census rows), pushing the fit onto the
-    // DISTRIBUTED sweeps: per sweep one item join + two windows over
-    // the ~8M-row census explode.
+    // ordering distinct (~2M census rows), past the collect bound: each
+    // sweep runs in place over the cached census.
     import graft.operators.Preferences
     val sessions = 2000000L
     val rank4 = spark.range(sessions * 4).select(
@@ -962,7 +961,7 @@ object ScaleStress {
       })
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[stress] listwise rows: ${rank4.count()} over $sessions sessions")
-    val plFit = time(s"listwise: PL fit, $sessions sessions x 4 (distributed)")(
+    val plFit = time(s"listwise: PL fit, $sessions sessions x 4 (in place)")(
       Preferences.plackettLuce(rank4, "s", "item", "rk", iters = 5)
         .orderBy(desc("strength")).limit(5).collect())
     println("[stress]   top-5 by strength: " +
@@ -1108,7 +1107,7 @@ object ScaleStress {
     // pathological inputs, and that the shared-exchange kappa folds
     // survive a hot unit without pathological spill.
     section("gates") {
-      import graft.operators.{MlEval, Preferences}
+      import graft.operators.{CollectBound, MlEval, Preferences}
       // 1) high-cardinality "label" column: every row its own category
       //    -> the cell census is row-sized, the gate must fail loudly
       //    BEFORE the driver holds it (2M+1 limit rides the collect job)
@@ -1122,11 +1121,11 @@ object ScaleStress {
           got.failed.get.getMessage.contains("cell census exceeds"),
           s"gate did not fire: $got")
       }
-      // 2) pathological slice: one slice's pair census above the driver
-      //    pair limit -> that slice must take the distributed fit, the
-      //    query completes, and no slice census ever crossed ungated
-      // hot: 1200 items -> far above the 10k pair gate (distributed
-      // fit); cold: 50 items -> ~1.2k pairs (driver core). Both must
+      // 2) pathological slice: one slice's pair census above the
+      //    collect bound -> that slice is swept in place, the query
+      //    completes, and no slice census ever crossed ungated
+      // hot: 1200 items -> far above a 10k-row bound (in place);
+      // cold: 50 items -> ~1.2k pairs (collected). Both must
       // complete, and the hot slice's census must never be collected.
       val hotCmp = spark.range(720000L * 2).select(
         when(col("id") < 720000L, lit("hot")).otherwise(lit("cold")).as("seg"),
@@ -1135,10 +1134,10 @@ object ScaleStress {
         concat(lit("i"), pmod(col("id") * 104729L + 1L,
           when(col("id") < 720000L, lit(1200L)).otherwise(lit(50L)))).as("loser"))
         .filter(col("winner") =!= col("loser"))
-      time("gates: bt_by_slice hot slice falls back distributed") {
+      time("gates: bt_by_slice hot slice swept in place") {
         val n = Preferences.bradleyTerryBySlice(
-          hotCmp, "seg", "winner", "loser", iters = 2,
-          driverPairLimit = 10000L).count()
+          hotCmp, "seg", "winner", "loser", iters = 2, maxSlices = 1000,
+          bound = CollectBound.Default.copy(rows = 10000L)).count()
         println(s"[stress]   bt_by_slice rows = $n")
       }
       // 3) hot unit (verdict #9): one unit carrying 100k votes through

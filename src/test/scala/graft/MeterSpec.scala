@@ -39,6 +39,10 @@ class MeterSpec extends SparkSpec {
     assert(Meter.measure(spark)(spark.range(10).count()).cachedPlans == 0)
   }
 
+  test("q_label_alpha_interval leaves no plan cached") {
+    assert(run("q_label_alpha_interval").cachedPlans == 0)
+  }
+
   test("the meter's listener is removed when measure returns, also on failure") {
     val before = listenerCount()
     Meter.measure(spark)(spark.range(100).count())

@@ -224,29 +224,26 @@ class MlEvalSpec extends SparkSpec {
     // r20: the kappa/AC1/weighted driver assemblies collect a
     // categories²-bounded cell census; the gate rides the same job
     // (limit max+1) and must fail loudly on a high-cardinality label
-    // column instead of OOMing the driver. Lower the seam, prove the
-    // message, restore, and pin that gated == ungated values.
+    // column instead of OOMing the driver. Pass a low limit, prove the
+    // message, and pin that gated == ungated values.
     val rows =
       Seq.fill(20)(("yes", "yes")) ++ Seq.fill(5)(("yes", "no")) ++
       Seq.fill(10)(("no", "yes")) ++ Seq.fill(15)(("no", "no"))
     val df = rows.toDF("ra", "rb")
     val before = MlEval.cohenKappa(df, "ra", "rb").collect().head
-    val saved = MlEval.MaxDriverCells
-    try {
-      MlEval.MaxDriverCells = 3L // census has 4 cells -> over limit
-      val ex = intercept[IllegalArgumentException](
-        MlEval.cohenKappa(df, "ra", "rb").collect())
-      assert(ex.getMessage.contains("cell census exceeds"), ex.getMessage)
-      val ex2 = intercept[IllegalArgumentException](
-        MlEval.gwetAc1(df, "ra", "rb").collect())
-      assert(ex2.getMessage.contains("cell census exceeds"), ex2.getMessage)
-      val graded = Seq((1L, 1L), (1L, 2L), (2L, 3L), (3L, 3L)).toDF("ga", "gb")
-      val ex3 = intercept[IllegalArgumentException](
-        MlEval.cohenKappaWeighted(graded, "ga", "gb").collect())
-      assert(ex3.getMessage.contains("cell census exceeds"), ex3.getMessage)
-    } finally MlEval.MaxDriverCells = saved
-    val after = MlEval.cohenKappa(df, "ra", "rb").collect().head
-    assert(before == after, "the gate must not change under-limit values")
+    // census has 4 cells -> over a limit of 3
+    val ex = intercept[IllegalArgumentException](
+      MlEval.cohenKappa(df, "ra", "rb", 3).collect())
+    assert(ex.getMessage.contains("cell census exceeds"), ex.getMessage)
+    val ex2 = intercept[IllegalArgumentException](
+      MlEval.gwetAc1(df, "ra", "rb", 3).collect())
+    assert(ex2.getMessage.contains("cell census exceeds"), ex2.getMessage)
+    val graded = Seq((1L, 1L), (1L, 2L), (2L, 3L), (3L, 3L)).toDF("ga", "gb")
+    val ex3 = intercept[IllegalArgumentException](
+      MlEval.cohenKappaWeighted(graded, "ga", "gb", 3).collect())
+    assert(ex3.getMessage.contains("cell census exceeds"), ex3.getMessage)
+    assert(MlEval.cohenKappa(df, "ra", "rb", 4).collect().head == before,
+      "the gate must not change values at the limit")
   }
 
   test("fleissKappa: hand value; unbalanced panel fails loudly; degenerate nulls") {

@@ -1,10 +1,67 @@
 package graft
 
-import graft.operators.Preferences
+import graft.operators.{CollectBound, Preferences}
+import graft.tools.Meter
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, to_timestamp, when}
 
 class PreferencesSpec extends SparkSpec {
   import spark.implicits._
+
+  // Fixtures of the collected-vs-in-place pins: every fit runs the same
+  // fold either way, so outputs must agree bitwise.
+  private lazy val btCmp = (
+    Seq.fill(8)(("x", "y")) ++ Seq.fill(2)(("y", "x")) ++
+    Seq.fill(9)(("x", "z")) ++ Seq.fill(1)(("z", "x")) ++
+    Seq.fill(7)(("y", "z")) ++ Seq.fill(3)(("z", "y")) ++
+    Seq.fill(4)(("w", "x")) ++ Seq.fill(2)(("x", "w"))
+  ).toDF("winner", "loser")
+  private lazy val tiesCmp = (
+    Seq.fill(6)(("x", "y", "a")) ++ Seq.fill(2)(("x", "y", "b")) ++
+    Seq.fill(8)(("x", "y", "tie")) ++
+    Seq.fill(5)(("y", "z", "a")) ++ Seq.fill(1)(("y", "z", "b")) ++
+    Seq.fill(2)(("y", "z", "tie")) ++
+    Seq.fill(6)(("x", "z", "a")) ++ Seq.fill(2)(("x", "z", "tie"))
+  ).toDF("item_a", "item_b", "outcome")
+  private lazy val orderCmp = (
+    (1 to 7).map(_ => ("a", "b", "a")) ++ (1 to 3).map(_ => ("b", "a", "a")) ++
+    (1 to 6).map(_ => ("a", "c", "c")) ++ (1 to 2).map(_ => ("c", "a", "c")) ++
+    (1 to 5).map(_ => ("b", "c", "b")) ++ (1 to 4).map(_ => ("c", "b", "c"))
+  ).toDF("winner", "loser", "first")
+  private lazy val plRankings = samplePlRankings(
+      Seq("a" -> 3.0, "b" -> 1.5, "c" -> 1.0, "d" -> 0.7, "e" -> 0.4), 120, seed = 11L)
+    .toDF("session", "item", "rank")
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy("item").collect().map(_.toSeq).toSeq
+
+  private def btFit(bound: CollectBound) =
+    Preferences.bradleyTerry(btCmp, "winner", "loser", 10, bound)
+  private def tiesFit(bound: CollectBound) =
+    Preferences.bradleyTerryTies(tiesCmp, "item_a", "item_b", "outcome", 1.5, 10, bound)
+  private def orderFit(bound: CollectBound) =
+    Preferences.bradleyTerryOrder(orderCmp, "winner", "loser", "first", 10, bound)
+  private def plFit(bound: CollectBound) =
+    Preferences.plackettLuce(plRankings, "session", "item", "rank", 10, bound)
+  private def rcFit(bound: CollectBound) =
+    Preferences.rankCentrality(btCmp, "winner", "loser", 10, bound)
+  private val fits = Seq[(String, CollectBound => DataFrame)](
+    ("bradleyTerry", btFit _), ("bradleyTerryTies", tiesFit _),
+    ("bradleyTerryOrder", orderFit _), ("plackettLuce", plFit _),
+    ("rankCentrality", rcFit _))
+
+  /** Runs `body` with every shuffle output — so every census — cut
+    * into exactly `n` partitions.
+    */
+  private def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    spark.conf.set(keys(0), n.toLong)
+    spark.conf.set(keys(1), false)
+    try body
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 
   test("bradleyTerry: recovers a planted total order; win probs track strengths") {
     // Planted strengths x > y > z via lopsided head-to-head records:
@@ -42,17 +99,8 @@ class PreferencesSpec extends SparkSpec {
   }
 
   test("bradleyTerry: driver fast path is bitwise identical to the distributed MM") {
-    val cmp = (
-      Seq.fill(8)(("x", "y")) ++ Seq.fill(2)(("y", "x")) ++
-      Seq.fill(9)(("x", "z")) ++ Seq.fill(1)(("z", "x")) ++
-      Seq.fill(7)(("y", "z")) ++ Seq.fill(3)(("z", "y")) ++
-      Seq.fill(4)(("w", "x")) ++ Seq.fill(2)(("x", "w"))
-    ).toDF("winner", "loser")
-    def pins(limit: Long) = Preferences
-      .bradleyTerry(cmp, "winner", "loser", iters = 10, driverPairLimit = limit)
-      .orderBy("item").collect().map(_.toSeq).toSeq
-    assert(pins(Long.MaxValue) == pins(0L),
-      "driver and distributed sweeps must agree bitwise")
+    assert(rows(btFit(CollectBound.Default)) == rows(btFit(CollectBound.InPlace)),
+      "collected and in-place sweeps must agree bitwise")
   }
 
   test("circularTriads: rock-paper-scissors is one cycle; transitive data none") {
@@ -104,13 +152,7 @@ class PreferencesSpec extends SparkSpec {
   test("bradleyTerryTies: ties pull strengths together; tie-free matches plain BT order") {
     // x dominates y in decided games, but half the records are ties —
     // strengths must still order x > y, with ties counted in the census.
-    val cmp = (
-      Seq.fill(6)(("x", "y", "a")) ++ Seq.fill(2)(("x", "y", "b")) ++
-      Seq.fill(8)(("x", "y", "tie")) ++
-      Seq.fill(5)(("y", "z", "a")) ++ Seq.fill(1)(("y", "z", "b")) ++
-      Seq.fill(2)(("y", "z", "tie")) ++
-      Seq.fill(6)(("x", "z", "a")) ++ Seq.fill(2)(("x", "z", "tie"))
-    ).toDF("item_a", "item_b", "outcome")
+    val cmp = tiesCmp
     val got = graft.operators.Preferences
       .bradleyTerryTies(cmp, "item_a", "item_b", "outcome", theta = 1.5, iters = 20)
       .collect().map(r => r.getString(0) ->
@@ -119,12 +161,8 @@ class PreferencesSpec extends SparkSpec {
       s"order wrong: $got")
     assert(got("x")._2 == 12L, "x won 6+6 decided games")
     assert(got("x")._3 == 10L, "x tied 8+2 times")
-    // driver == distributed, bitwise
-    def pins(limit: Long) = graft.operators.Preferences
-      .bradleyTerryTies(cmp, "item_a", "item_b", "outcome",
-        theta = 1.5, iters = 10, driverPairLimit = limit)
-      .orderBy("item").collect().map(_.toSeq).toSeq
-    assert(pins(Long.MaxValue) == pins(0L))
+    // collected == in place, bitwise
+    assert(rows(tiesFit(CollectBound.Default)) == rows(tiesFit(CollectBound.InPlace)))
     // theta = 1 rejected (ties would carry zero mass)
     intercept[IllegalArgumentException] {
       graft.operators.Preferences.bradleyTerryTies(
@@ -198,12 +236,10 @@ class PreferencesSpec extends SparkSpec {
       Seq.fill(6)((s"${big}x", s"${big}y")) ++ Seq.fill(2)((s"${big}y", s"${big}x")) ++
       Seq.fill(5)((s"${big}x", s"${big}z")) ++ Seq.fill(4)((s"${big}z", s"${big}y"))
     ).toDF("winner", "loser")
-    def fit(byteLimit: Long) = Preferences
-      .bradleyTerry(cmp, "winner", "loser", iters = 10,
-        driverPairLimit = Long.MaxValue, driverByteLimit = byteLimit)
-      .orderBy("item").collect().map(_.toSeq).toSeq
+    def fit(byteLimit: Long) = rows(Preferences.bradleyTerry(cmp, "winner", "loser",
+      10, CollectBound(Long.MaxValue, byteLimit)))
     assert(fit(Long.MaxValue) == fit(0L),
-      "byte-gated distributed fallback must agree bitwise with the driver fold")
+      "byte-gated in-place sweeps must agree bitwise with the collected fold")
   }
 
   test("bradleyTerryOrder: pure position effect loads on theta, not strengths") {
@@ -257,17 +293,8 @@ class PreferencesSpec extends SparkSpec {
   }
 
   test("bradleyTerryOrder: driver fast path is bitwise identical to distributed") {
-    val cmp = (
-      (1 to 7).map(_ => ("a", "b", "a")) ++ (1 to 3).map(_ => ("b", "a", "a")) ++
-      (1 to 6).map(_ => ("a", "c", "c")) ++ (1 to 2).map(_ => ("c", "a", "c")) ++
-      (1 to 5).map(_ => ("b", "c", "b")) ++ (1 to 4).map(_ => ("c", "b", "c"))
-    ).toDF("winner", "loser", "first")
-    def fit(limit: Long) = graft.operators.Preferences
-      .bradleyTerryOrder(cmp, "winner", "loser", "first", iters = 10,
-        driverPairLimit = limit)
-      .orderBy("item").collect().map(_.toSeq).toSeq
-    assert(fit(Long.MaxValue) == fit(0L),
-      "driver and distributed alternating sweeps must agree bitwise")
+    assert(rows(orderFit(CollectBound.Default)) == rows(orderFit(CollectBound.InPlace)),
+      "collected and in-place alternating sweeps must agree bitwise")
   }
 
   test("bradleyTerryStdErr: se shrinks as 1/sqrt(n); fit is count-scale invariant") {
@@ -452,15 +479,8 @@ class PreferencesSpec extends SparkSpec {
   }
 
   test("plackettLuce: driver fast path is bitwise identical to the distributed sweeps") {
-    val planted = Seq("a" -> 3.0, "b" -> 1.5, "c" -> 1.0, "d" -> 0.7, "e" -> 0.4)
-    val rk = samplePlRankings(planted, 120, seed = 11L)
-      .toDF("session", "item", "rank")
-    def pins(limit: Long) = Preferences
-      .plackettLuce(rk, "session", "item", "rank", iters = 10,
-        driverOrderingLimit = limit)
-      .orderBy("item").collect().map(_.toSeq).toSeq
-    assert(pins(Long.MaxValue) == pins(0L),
-      "driver and distributed sweeps must agree bitwise")
+    assert(rows(plFit(CollectBound.Default)) == rows(plFit(CollectBound.InPlace)),
+      "collected and in-place sweeps must agree bitwise")
   }
 
   test("plackettLuce: two-item rankings agree with bradleyTerry") {
@@ -524,17 +544,8 @@ class PreferencesSpec extends SparkSpec {
   }
 
   test("rankCentrality: driver fast path is bitwise identical to the distributed sweeps") {
-    val cmp = (
-      Seq.fill(8)(("x", "y")) ++ Seq.fill(2)(("y", "x")) ++
-      Seq.fill(9)(("x", "z")) ++ Seq.fill(1)(("z", "x")) ++
-      Seq.fill(7)(("y", "z")) ++ Seq.fill(3)(("z", "y")) ++
-      Seq.fill(4)(("w", "x")) ++ Seq.fill(2)(("x", "w"))
-    ).toDF("winner", "loser")
-    def pins(limit: Long) = Preferences
-      .rankCentrality(cmp, "winner", "loser", iters = 10, driverPairLimit = limit)
-      .orderBy("item").collect().map(_.toSeq).toSeq
-    assert(pins(Long.MaxValue) == pins(0L),
-      "driver and distributed sweeps must agree bitwise")
+    assert(rows(rcFit(CollectBound.Default)) == rows(rcFit(CollectBound.InPlace)),
+      "collected and in-place sweeps must agree bitwise")
   }
 
   test("rankCentrality: symmetric records give the uniform stationary vector") {
@@ -577,11 +588,10 @@ class PreferencesSpec extends SparkSpec {
   }
 
   test("bradleyTerryBySlice: over-limit slices fall back distributed BEFORE any census collect, same output") {
-    // r20 gate: the pair-row/byte thresholds are checked from a
-    // slice-grain stats job before the census collect, so an over-limit
-    // slice routes to the distributed fit (never the driver) and the
-    // under-limit slice keeps the driver core — outputs identical to
-    // the ungated all-driver run on the same data.
+    // r20 gate: the pair-row/byte bound is checked from a slice-grain
+    // stats job before the census collect, so an over-bound slice is
+    // swept in place (never collected) and the under-bound slice is
+    // collected — outputs identical to the all-collected run.
     val cmp = (
       Seq.fill(8)(("A", "a", "b")) ++ Seq.fill(2)(("A", "b", "a")) ++
       Seq.fill(2)(("B", "a", "b")) ++ Seq.fill(8)(("B", "b", "a")) ++
@@ -589,18 +599,15 @@ class PreferencesSpec extends SparkSpec {
     ).toDF("seg", "winner", "loser")
     val default = Preferences.bradleyTerryBySlice(cmp, "seg", "winner", "loser")
       .orderBy("slice", "item").collect().map(_.toSeq).toSeq
-    // pair limit 2: slice B (3 distinct pairs) exceeds it and must take
-    // the distributed path; slice A (1 pair) stays on the driver
-    val gated = Preferences.bradleyTerryBySlice(cmp, "seg", "winner", "loser",
-        driverPairLimit = 2L)
+    // row bound 2: slice B (3 distinct pairs) exceeds it and is swept
+    // in place; slice A (1 pair) is collected
+    def fit(bound: CollectBound) = Preferences
+      .bradleyTerryBySlice(cmp, "seg", "winner", "loser", 10, 1000, bound)
       .orderBy("slice", "item").collect().map(_.toSeq).toSeq
-    assert(gated == default,
-      "distributed fallback must reproduce the driver fit bitwise")
-    // byte limit 1: EVERY slice falls back distributed; still identical
-    val allDistributed = Preferences.bradleyTerryBySlice(cmp, "seg", "winner", "loser",
-        driverByteLimit = 1L)
-      .orderBy("slice", "item").collect().map(_.toSeq).toSeq
-    assert(allDistributed == default)
+    assert(fit(CollectBound.Default.copy(rows = 2L)) == default,
+      "in-place sweeps must reproduce the collected fit bitwise")
+    // byte bound 1: EVERY slice is swept in place; still identical
+    assert(fit(CollectBound.Default.copy(bytes = 1L)) == default)
   }
 
   test("rankBreak: every in-session pair, winner = better-ranked; hygiene matches plackettLuce") {
@@ -663,5 +670,40 @@ class PreferencesSpec extends SparkSpec {
     assert(got("z")._2 == 0L)
     assert(got("z")._1 < 0.05, s"always-last strength: ${got("z")._1}")
     assert(got("a")._1 > 1.0 && got("b")._1 > 1.0)
+  }
+
+  test("in-place sweeps are bitwise the collected fold on 1 and on 7 census partitions") {
+    // exact decimal partial sums merge to the same bits in any order,
+    // so the partitioning of the cached census cannot show in the output
+    fits.foreach { case (name, fit) =>
+      val collected = rows(fit(CollectBound.Default))
+      Seq(1, 7).foreach { n =>
+        val inPlace = withShufflePartitions(n)(rows(fit(CollectBound.InPlace)))
+        assert(inPlace == collected, s"$name on $n partitions")
+      }
+    }
+  }
+
+  test("every fit releases its census cache, collected and in place") {
+    val bySlice = (bound: CollectBound) => Preferences.bradleyTerryBySlice(
+      btCmp.withColumn("seg", when(col("winner") < "y", "p").otherwise("q")),
+      "seg", "winner", "loser", 10, 1000, bound)
+    (fits :+ (("bradleyTerryBySlice", bySlice))).foreach { case (name, fit) =>
+      val collected = Meter.measure(spark)(fit(CollectBound.Default).collect())
+      val inPlace = Meter.measure(spark)(fit(CollectBound.InPlace).collect())
+      assert(collected.cachedPlans == 0 && inPlace.cachedPlans == 0, name)
+      // in place, each of the 10 sweeps is its own job over the cache
+      assert(inPlace.jobs >= collected.jobs + 9, s"$name did not sweep in place")
+    }
+  }
+
+  test("an item vector past the item bound fails loudly and names the bound") {
+    // 100001 comparisons in a chain: 100002 items, over the 100000 bound
+    val chain = spark.range(100001L)
+      .select(col("id").cast("string").as("winner"),
+        (col("id") + 1L).cast("string").as("loser"))
+    val ex = intercept[IllegalArgumentException](
+      Preferences.bradleyTerry(chain, "winner", "loser"))
+    assert(ex.getMessage.contains("item vector exceeds 100000 rows"), ex.getMessage)
   }
 }
