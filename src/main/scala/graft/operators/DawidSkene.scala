@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import Census.r6
+
 /** DAWID-SKENE LABEL AGGREGATION (Dawid & Skene 1979, "Maximum
   * likelihood estimation of observer error-rates using the EM
   * algorithm"): the truth-inference step every annotation / judge-model
@@ -148,13 +150,11 @@ object DawidSkene {
     // full unit × class grid), so the collected numerators span the
     // complete observed grid and the rater census needs no separate
     // distinct scan. The π/prior cells then assemble on the DRIVER
-    // with the house byte-identical arithmetic (r6 == Spark
+    // with the house byte-identical arithmetic (Census.r6 == Spark
     // round(…, 6), BigDecimal.doubleValue == the decimal→double cast,
-    // exact scale-6 adds == the old den sum — the bradleyTerryDriver
+    // exact scale-6 adds == the old den sum — the Census fold's
     // posture, spec- and oracle-pinned), so no per-sweep priors job
     // and no broadcast-exchange subtree remain in the plan.
-    def r6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
     def mStep(p: DataFrame): (Seq[(String, String, String, Double)], Seq[(String, Double)]) = {
       val rows = votes.join(p, Seq("u"))
         .select(lit(1).as("t"), col("r"), col("j"), col("l"), col("p"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import Census.r6
+
 /** SCALAR-GRADE TRUTH INFERENCE — the continuous-response companion to
   * [[DawidSkene]]: reward-model and rubric pipelines collect per-
   * (unit, rater) SCALAR grades, and each rater reads the shared scale
@@ -57,9 +59,6 @@ object ScalarConsensus {
     */
   final case class ScalarFit(truth: DataFrame, raters: DataFrame)
 
-  private def r6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   private def dec(c: Column): Column = c.cast("decimal(28,6)")
 
   def fit(
@@ -95,8 +94,8 @@ object ScalarConsensus {
     // rater table is BOUNDED, so each sweep runs ONE distributed job —
     // the five exact sufficient statistics per rater, collected — and
     // the OLS + gauge assemblies fold on the driver with the house
-    // byte-identical arithmetic (r6 == Spark round(…, 6), the
-    // bradleyTerryDriver posture, spec-pinned): each cast is
+    // byte-identical arithmetic (Census.r6 == Spark round(…, 6), the
+    // Census fold's posture, spec-pinned): each cast is
     // BigDecimal.doubleValue, each assembly the same fixed-order IEEE
     // chain, the gauge sums exact scale-6 BigDecimal adds. The rater
     // lenses then enter the truth step as a LOCAL relation, so the old

@@ -847,9 +847,10 @@ object ScaleStress {
     // items with planted strengths (item id ~ skill; the md5-coin gives
     // the stronger item the win with probability skill_a/(skill_a +
     // skill_b) — the BT generative model). Folds to ~500k distinct
-    // pairs; the fit runs both ways: collected (the default for
-    // item-grain data) and swept in place (CollectBound.InPlace).
+    // pairs, past CollectBound.Default: the default runs in place, and
+    // the fit also runs forced collected for comparison.
     import graft.operators.{CollectBound, Preferences}
+    val collectAll = CollectBound(Long.MaxValue, Long.MaxValue)
     val n = 5000000L
     // opponent = ia + (1..999 block offset) mod 1000: every item meets
     // every other across the 5000 blocks (~5 comparisons per pair)
@@ -871,8 +872,8 @@ object ScaleStress {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[stress] pref comparisons: ${cmps.count()}")
     val fitD = time("pref: BT collected fold (1000 items)")(
-      Preferences.bradleyTerry(cmps, "winner", "loser", iters = 10)
-        .orderBy(desc("strength")).limit(5).collect())
+      Preferences.bradleyTerry(cmps, "winner", "loser", iters = 10,
+        bound = collectAll).orderBy(desc("strength")).limit(5).collect())
     println("[stress]   top-5 by strength: " +
       fitD.map(r => s"${r.getString(0)}=${r.getDouble(1)}").mkString(", "))
     time("pref: BT in-place sweeps")(
@@ -886,15 +887,15 @@ object ScaleStress {
     // favor larger ids, so first-shown mostly loses and theta < 1);
     // one scalar fold per sweep on top of the plain fit's shape.
     val cmpsF = cmps.withColumn("first", least(col("winner"), col("loser")))
-    time("pref: BT order-effect collected fold")(
+    time("pref: BT order-effect in place")(
       println("[stress]   theta(first=lower-id) = " + Preferences
         .bradleyTerryOrder(cmpsF, "winner", "loser", "first", iters = 10)
         .select("theta").head().getDouble(0)))
     // r18: the spectral estimator on the same 5M comparisons — both
     // regimes, same pair-census reuse as the MM fit
     val rcD = time("pref: rank centrality collected fold")(
-      Preferences.rankCentrality(cmps, "winner", "loser", iters = 10)
-        .orderBy(desc("score")).limit(5).collect())
+      Preferences.rankCentrality(cmps, "winner", "loser", iters = 10,
+        bound = collectAll).orderBy(desc("score")).limit(5).collect())
     println("[stress]   top-5 by score: " +
       rcD.map(r => s"${r.getString(0)}=${r.getDouble(1)}").mkString(", "))
     time("pref: rank centrality in-place")(
@@ -925,6 +926,57 @@ object ScaleStress {
       println("[stress]   " + Preferences
         .circularTriads(complete, "winner", "loser").collect().head))
     complete.unpersist(blocking = false)
+    }
+
+    section("crossover") {
+    // Where the collected fold stops beating the in-place sweeps — the
+    // row bound of CollectBound.Default. BT and RC (10 sweeps each) on
+    // complete tournaments of k items: k(k-1)/2 pair-census rows, 3
+    // planted-BT comparisons per pair (P(i wins) = (i+1)/(i+j+2)). Per
+    // size each mode runs three times, interleaved C I / I C / C I.
+    import graft.operators.{CollectBound, Preferences}
+    val collectAll = CollectBound(Long.MaxValue, Long.MaxValue)
+    def tournament(k: Long): DataFrame = {
+      val ids = spark.range(k)
+      ids.select(col("id").as("i"))
+        .crossJoin(ids.select(col("id").as("j")))
+        .filter(col("i") < col("j"))
+        .crossJoin(spark.range(3L).select(col("id").as("rep")))
+        .select(col("i"), col("j"),
+          (conv(substring(md5(concat_ws("_", col("i"), col("j"), col("rep"))),
+            1, 8), 16, 10).cast("double") / lit(4294967296.0)).as("u"))
+        .select(
+          when(col("u") < (col("i") + 1).cast("double")
+            / (col("i") + col("j") + 2).cast("double"), col("i"))
+            .otherwise(col("j")).cast("string").as("winner"),
+          when(col("u") < (col("i") + 1).cast("double")
+            / (col("i") + col("j") + 2).cast("double"), col("j"))
+            .otherwise(col("i")).cast("string").as("loser"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    def fits(cmps: DataFrame, bound: CollectBound, label: String): Unit = {
+      time(s"crossover: BT $label")(Preferences.bradleyTerry(
+        cmps, "winner", "loser", iters = 10, bound = bound).count())
+      time(s"crossover: RC $label")(Preferences.rankCentrality(
+        cmps, "winner", "loser", iters = 10, bound = bound).count())
+    }
+    // warm-up (JIT, first jobs), untimed in the table below
+    val warm = tournament(46L)
+    warm.count()
+    fits(warm, collectAll, "warm-up collected")
+    fits(warm, CollectBound.InPlace, "warm-up in place")
+    warm.unpersist(blocking = false)
+    for (k <- Seq(20L, 46L, 100L, 142L, 178L, 200L, 225L, 317L, 447L, 633L, 1000L)) {
+      val cmps = tournament(k)
+      cmps.count()
+      val pairs = k * (k - 1) / 2
+      for (rep <- 1 to 3) {
+        val modes = Seq(collectAll -> "collected", CollectBound.InPlace -> "in place")
+        for ((bound, mode) <- if (rep == 2) modes.reverse else modes)
+          fits(cmps, bound, f"$pairs%6d pairs $mode")
+      }
+      cmps.unpersist(blocking = false)
+    }
     }
 
     section("listwise") {
@@ -1107,7 +1159,7 @@ object ScaleStress {
     // pathological inputs, and that the shared-exchange kappa folds
     // survive a hot unit without pathological spill.
     section("gates") {
-      import graft.operators.{CollectBound, MlEval, Preferences}
+      import graft.operators.{MlEval, Preferences}
       // 1) high-cardinality "label" column: every row its own category
       //    -> the cell census is row-sized, the gate must fail loudly
       //    BEFORE the driver holds it (2M+1 limit rides the collect job)
@@ -1124,7 +1176,7 @@ object ScaleStress {
       // 2) pathological slice: one slice's pair census above the
       //    collect bound -> that slice is swept in place, the query
       //    completes, and no slice census ever crossed ungated
-      // hot: 1200 items -> far above a 10k-row bound (in place);
+      // hot: 1200 items -> far above the 10k-row bound (in place);
       // cold: 50 items -> ~1.2k pairs (collected). Both must
       // complete, and the hot slice's census must never be collected.
       val hotCmp = spark.range(720000L * 2).select(
@@ -1136,8 +1188,7 @@ object ScaleStress {
         .filter(col("winner") =!= col("loser"))
       time("gates: bt_by_slice hot slice swept in place") {
         val n = Preferences.bradleyTerryBySlice(
-          hotCmp, "seg", "winner", "loser", iters = 2, maxSlices = 1000,
-          bound = CollectBound.Default.copy(rows = 10000L)).count()
+          hotCmp, "seg", "winner", "loser", iters = 2, maxSlices = 1000).count()
         println(s"[stress]   bt_by_slice rows = $n")
       }
       // 3) hot unit (verdict #9): one unit carrying 100k votes through
