@@ -1694,7 +1694,7 @@ object SparkEntry {
     // surprisal LMs read; count floor 3 on the small fixtures.
     "q_pmi" -> ((s, d) =>
       graft.operators.CorpusStats.pmiCollocations(
-          t(s, d, "documents"), "doc_id", "text", minCount = 3L)
+          t(s, d, "documents"), "text", minCount = 3L)
         .orderBy("w1", "w2")),
 
     // Within-session event-type transition matrix (r13): Markov counts
@@ -2639,7 +2639,7 @@ object SparkEntry {
     // filter's degenerate-but-replayable form): token census broadcast
     // back onto the exploded tokens, per-doc mean -log2 p(token).
     "q_quality_surprisal" -> ((s, d) =>
-      graft.operators.CorpusStats.unigramSurprisal(
+      graft.operators.CorpusStats.surprisal(
         t(s, d, "documents"), "doc_id", "text")
         .orderBy("doc_id")),
 
@@ -2649,16 +2649,16 @@ object SparkEntry {
     // unigram filter is blind (word salad keeps its unigram score and
     // loses every bigram).
     "q_quality_surprisal_bigram" -> ((s, d) =>
-      graft.operators.CorpusStats.bigramSurprisal(
-        t(s, d, "documents"), "doc_id", "text")
+      graft.operators.CorpusStats.surprisal(
+        t(s, d, "documents"), "doc_id", "text", order = 2)
         .orderBy("doc_id")),
 
     // TRIGRAM surprisal, full backoff chain: trigram ratio when seen,
     // alpha*bigram ratio, alpha^2*unigram — the chain entered at each
     // token's available history depth.
     "q_quality_surprisal_trigram" -> ((s, d) =>
-      graft.operators.CorpusStats.trigramSurprisal(
-        t(s, d, "documents"), "doc_id", "text")
+      graft.operators.CorpusStats.surprisal(
+        t(s, d, "documents"), "doc_id", "text", order = 3)
         .orderBy("doc_id")),
 
     // Frozen trigram LM: odds scored under the evens' three censuses,
@@ -2667,11 +2667,11 @@ object SparkEntry {
     "q_quality_surprisal_trigram_incr" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val evens = docs.filter(col("doc_id") % 2 === 0)
-      graft.operators.CorpusStats.trigramSurprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-          graft.operators.CorpusStats.tokenCensus(evens, "text"),
-          graft.operators.CorpusStats.bigramCensus(evens, "doc_id", "text"),
-          graft.operators.CorpusStats.trigramCensus(evens, "doc_id", "text"))
+      graft.operators.CorpusStats.surprisalAgainstCensus(
+          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", Seq(
+            graft.operators.CorpusStats.tokenCensus(evens, "text"),
+            graft.operators.CorpusStats.gramCensus(evens, "text", 2),
+            graft.operators.CorpusStats.gramCensus(evens, "text", 3)))
         .orderBy("doc_id")
     }),
 
@@ -2681,10 +2681,10 @@ object SparkEntry {
     "q_quality_surprisal_bigram_incr" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val evens = docs.filter(col("doc_id") % 2 === 0)
-      graft.operators.CorpusStats.bigramSurprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-          graft.operators.CorpusStats.tokenCensus(evens, "text"),
-          graft.operators.CorpusStats.bigramCensus(evens, "doc_id", "text"))
+      graft.operators.CorpusStats.surprisalAgainstCensus(
+          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", Seq(
+            graft.operators.CorpusStats.tokenCensus(evens, "text"),
+            graft.operators.CorpusStats.gramCensus(evens, "text", 2)))
         .orderBy("doc_id")
     }),
 
@@ -2697,11 +2697,11 @@ object SparkEntry {
     "q_quality_surprisal_bigram_pruned" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val evens = docs.filter(col("doc_id") % 2 === 0)
-      graft.operators.CorpusStats.bigramSurprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-          graft.operators.CorpusStats.tokenCensus(evens, "text"),
-          graft.operators.CorpusStats.pruneCensus(
-            graft.operators.CorpusStats.bigramCensus(evens, "doc_id", "text"), 15L))
+      graft.operators.CorpusStats.surprisalAgainstCensus(
+          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", Seq(
+            graft.operators.CorpusStats.tokenCensus(evens, "text"),
+            graft.operators.CorpusStats.pruneCensus(
+              graft.operators.CorpusStats.gramCensus(evens, "text", 2), 15L)))
         .orderBy("doc_id")
     }),
 
@@ -2715,7 +2715,7 @@ object SparkEntry {
       val census = graft.operators.CorpusStats.tokenCensus(
         docs.filter(col("doc_id") % 2 === 0), "text")
       graft.operators.CorpusStats.surprisalAgainstCensus(
-          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", census)
+          docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", Seq(census))
         .orderBy("doc_id")
     }),
 
@@ -3523,7 +3523,7 @@ object SparkEntry {
       // quantile descent AND the final vote job — unpersisted, each
       // consumer re-ran the tokenize + census + join lineage (r20;
       // the bench/verify harnesses clearCache() between queries)
-      val sur = graft.operators.CorpusStats.unigramSurprisal(
+      val sur = graft.operators.CorpusStats.surprisal(
           docs, "doc_id", "text")
         .filter(col("n_tokens") > 0)
         .persist()
@@ -3576,7 +3576,7 @@ object SparkEntry {
       // quantile descent AND the final vote job — unpersisted, each
       // consumer re-ran the tokenize + census + join lineage (r20;
       // the bench/verify harnesses clearCache() between queries)
-      val sur = graft.operators.CorpusStats.unigramSurprisal(
+      val sur = graft.operators.CorpusStats.surprisal(
           docs, "doc_id", "text")
         .filter(col("n_tokens") > 0)
         .persist()
@@ -3945,8 +3945,8 @@ object SparkEntry {
     // text" ingestion signal. Exact integer membership, FULL oracle.
     "q_text_novelty" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val census = graft.operators.CorpusStats.trigramCensus(
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0), "doc_id", "text")
+      val census = graft.operators.CorpusStats.gramCensus(
+        docs.filter(pmod(col("doc_id"), lit(2L)) === 0), "text", 3)
       graft.operators.CorpusStats.gramNovelty(docs, "doc_id", "text", census, n = 3)
         .orderBy("doc_id")
     }),

@@ -82,7 +82,7 @@ object RunCorpusPipeline {
         */
       stripLines: Boolean = false,
       /** Surprisal band gate (corpus self-perplexity,
-        * [[graft.operators.CorpusStats.unigramSurprisal]]): documents
+        * [[graft.operators.CorpusStats.surprisal]]): documents
         * whose mean token surprisal falls outside
         * [minSurprisal, maxSurprisal] are gated out — low = degenerate
         * repetition, high = gibberish/OCR noise/wrong tokenizer.
@@ -175,7 +175,7 @@ object RunCorpusPipeline {
       if (cfg.minSurprisal.isNegInfinity && cfg.maxSurprisal.isPosInfinity) ann
       else {
         val s = graft.operators.CorpusStats
-          .unigramSurprisal(ann, "doc_id", "text")
+          .surprisal(ann, "doc_id", "text")
           .filter(col("avg_surprisal").between(cfg.minSurprisal, cfg.maxSurprisal))
           .select("doc_id")
         ann.join(s, Seq("doc_id"), "left_semi")
@@ -296,17 +296,17 @@ object RunCorpusPipeline {
     * composition. The envelope decode half is pinned offline by the
     * [[graft.streaming.FileEnvelopeSource]] golden in
     * CorpusPipelineSpec.
-    */
-  /** @param surprisalCensusPath a [[graft.operators.CensusStore]] token
-    *        census ([[graft.operators.CorpusStats.tokenCensus]]) to
-    *        apply the min/maxSurprisal band IN the stream. The batch
-    *        arm's SELF-surprisal is corpus-stateful and stays
-    *        batch-only, but scoring against a FROZEN census needs no
-    *        corpus state at all — each micro-batch scores under the
-    *        standing LM via the sink's per-batch transform hook (a
-    *        per-doc mean over exploded tokens is a batch aggregation,
-    *        not an unbounded streaming one). None (default) = band off,
-    *        composition byte-identical to the pre-census arm.
+    *
+    * The overload below takes `surprisalCensusPath`, a
+    * [[graft.operators.CensusStore]] token census
+    * ([[graft.operators.CorpusStats.tokenCensus]]), to apply the
+    * min/maxSurprisal band IN the stream. The batch arm's
+    * SELF-surprisal is corpus-stateful and stays batch-only, but scoring
+    * against a FROZEN census needs no corpus state at all — each
+    * micro-batch scores under the standing LM via the sink's per-batch
+    * transform hook (a per-doc mean over exploded tokens is a batch
+    * aggregation, not an unbounded streaming one). None (this form) =
+    * band off, composition byte-identical to the pre-census arm.
     */
   def runStreaming(
       spark: SparkSession,
@@ -335,15 +335,7 @@ object RunCorpusPipeline {
     require(cfg.dsirMinLogWeight.isNegInfinity || cfg.dsirCensusRoot.isDefined,
       "runStreaming: dsirMinLogWeight is set but dsirCensusRoot is None - " +
         "pass the CensusStore root holding /target and /raw feature censuses")
-    val gated = source.load(spark)
-      .filter(
-        TextFunctions.qualityScore(col("text")) >= cfg.minQuality &&
-          TextFunctions.languageId(col("text")).isin(cfg.langs.toSeq: _*) &&
-          TextFunctions.topGramFraction(col("text"), 2) <= cfg.maxTopGramFrac &&
-          TextFunctions.repetitionRatio(col("text"), 3) <= cfg.maxRepetition &&
-          (if (cfg.gopherRules) graft.quality.GopherRules.passes(col("text"))
-           else lit(true)))
-      .withColumn("clean_text", TextFunctions.redactPii(col("text")))
+    val gated = streamGate(source.load(spark), cfg)
     val chunks = Chunker.chunkDocuments(
       gated, "clean_text", "doc_id", cfg.window, cfg.stride, carryCols = Seq("source"))
     val bandBatch: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -364,7 +356,7 @@ object RunCorpusPipeline {
             col("doc_id").cast("string"), col("chunk_id").cast("string"))
           val keyed = chunkBatch.withColumn("__cuid", cuid)
           val scored = graft.operators.CorpusStats.surprisalAgainstCensus(
-            keyed, "__cuid", "chunk_text", census)
+            keyed, "__cuid", "chunk_text", Seq(census))
           val keep = scored.filter(
               col("avg_surprisal").between(cfg.minSurprisal, cfg.maxSurprisal))
             .select(col("__cuid"))
@@ -414,8 +406,20 @@ object RunCorpusPipeline {
       dropAgreement: Double = 0.9,
       linkAgreement: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
     val schema = spark.read.parquet(inDir).schema
-    val stream = spark.readStream.schema(schema).parquet(inDir)
-    val gated = stream
+    val gated = streamGate(spark.readStream.schema(schema).parquet(inDir), cfg)
+    graft.operators.Ingest.ingestSink(
+      gated, "doc_id", "text",
+      s"${cfg.root}/dedup_index", s"${cfg.root}/cluster_store",
+      s"${cfg.root}/silver_stream", s"${cfg.root}/ckpt_dedup",
+      dropAgreement, linkAgreement)
+  }
+
+  /** The row-local gate both streaming arms apply per record: quality,
+    * language, top-gram, repetition and (opt-in) Gopher gates, then the
+    * PII scrub into `clean_text`.
+    */
+  private def streamGate(docs: DataFrame, cfg: CorpusConfig): DataFrame =
+    docs
       .filter(
         TextFunctions.qualityScore(col("text")) >= cfg.minQuality &&
           TextFunctions.languageId(col("text")).isin(cfg.langs.toSeq: _*) &&
@@ -424,18 +428,11 @@ object RunCorpusPipeline {
           (if (cfg.gopherRules) graft.quality.GopherRules.passes(col("text"))
            else lit(true)))
       .withColumn("clean_text", TextFunctions.redactPii(col("text")))
-    graft.operators.Ingest.ingestSink(
-      gated, "doc_id", "text",
-      s"${cfg.root}/dedup_index", s"${cfg.root}/cluster_store",
-      s"${cfg.root}/silver_stream", s"${cfg.root}/ckpt_dedup",
-      dropAgreement, linkAgreement)
-  }
 
   /** CLI: runMain graft.app.RunCorpusPipeline <docsParquet> <outRoot> [--stream] */
   def main(args: Array[String]): Unit = {
     val Array(docsPath, outRoot) = args.take(2)
-    val spark = graft.core.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val spark = graft.core.GraftSession.local(graft.core.GraftSession.cores())
     if (args.contains("--stream")) {
       val q = runStreaming(spark, docsPath, CorpusConfig(root = outRoot))
       q.processAllAvailable() // drain what exists, then exit (CLI form)

@@ -69,7 +69,7 @@ object RunPipeline {
 
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse("target/pipeline")
-    val spark = GraftSession.local()
+    val spark = GraftSession.local(GraftSession.cores())
     try run(spark, PipelineConfig(root))
     finally spark.stop()
   }

@@ -44,7 +44,7 @@ object Components {
     * themselves.
     *
     * Two regimes behind one API:
-    *   - edge lists under `driverEdgeLimit` collect to a driver-side
+    *   - edge lists up to [[DriverEdgeLimit]] collect to a driver-side
     *     union-find (path-halving): one materialization of the (already
     *     filtered, tiny) pair list instead of ~log(d) full fixpoint
     *     rounds — duplicate-pair graphs are sparse by nature, so this is
@@ -58,8 +58,23 @@ object Components {
       edges: DataFrame,
       srcCol: String,
       dstCol: String,
-      maxIter: Int = 30,
-      driverEdgeLimit: Long = 4000000L): DataFrame = {
+      maxIter: Int = 30): DataFrame =
+    connectedComponents(edges, srcCol, dstCol, maxIter, DriverEdgeLimit)
+
+  /** Edge rows up to which [[connectedComponents]] runs the driver
+    * union-find: 4M (src, dst) longs are ~64 MB of collected rows.
+    */
+  private[graft] val DriverEdgeLimit: Long = 4000000L
+
+  /** [[connectedComponents]] with its own driver bound; 0 forces the
+    * distributed fixpoint (specs, ScaleStress).
+    */
+  private[graft] def connectedComponents(
+      edges: DataFrame,
+      srcCol: String,
+      dstCol: String,
+      maxIter: Int,
+      driverEdgeLimit: Long): DataFrame = {
     require(maxIter >= 1, s"maxIter must be positive, got $maxIter")
     val spark = edges.sparkSession
     val pairList = edges

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   *     fingerprint occurs more than once CORPUS-WIDE (cross-source
   *     duplication shows up in both sources — that is the point)
   *   - `mean_surprisal`: mean per-doc self-LM surprisal
-  *     ([[CorpusStats.unigramSurprisal]]) — gibberish scores high,
+  *     ([[CorpusStats.surprisal]]) — gibberish scores high,
   *     degenerate repetition low
   *
   * Scale shape: three keyed aggregations (per-source token stats, a
@@ -50,7 +50,7 @@ object CorpusReport {
     val flagged = base.join(dupFps.withColumn("__dup", lit(1L)), Seq("__fp"), "left")
       .withColumn("__dup", coalesce(col("__dup"), lit(0L)))
 
-    val surprisal = CorpusStats.unigramSurprisal(df, idCol, textCol)
+    val surprisal = CorpusStats.surprisal(df, idCol, textCol)
       .select(col(idCol).as("doc_id"), col("avg_surprisal"))
 
     // per-source distinct-token vocabulary

@@ -59,245 +59,233 @@ object CorpusStats {
           col("n_common").cast("double") / col("n_grams"), lit(0.0)), 6).as("common_frac"))
   }
 
-  /** Corpus SELF-PERPLEXITY quality score (the unigram form of CCNet's
-    * LM filter): per document, the mean surprisal of its tokens under
-    * the corpus's own unigram distribution —
-    * avg over tokens of -log2(count(token)/total_tokens). High =
+  /** Vocabulary rows up to which the unigram census is broadcast onto
+    * the token stream. Natural-language vocabularies stay sub-million
+    * rows even at 100 TB (Heaps' law), but a pathological "vocabulary"
+    * (tokenized binary, URLs, IDs) can exceed executor/driver broadcast
+    * limits and fail at runtime; past this bound the join shuffles with
+    * AQE skew handling. The row count comes from the one-row aggregate
+    * the totals need anyway, so the guard adds no job.
+    */
+  private[graft] val BroadcastVocabRows: Long = 4000000L
+
+  /** Corpus SELF-PERPLEXITY (CCNet's LM filter scored under the corpus's
+    * own counts): per document, the mean surprisal -log2 p(w | history)
+    * of its tokens under an order-`order` stupid-backoff n-gram LM
+    * (Brants et al. 2007, "Large Language Models in Machine
+    * Translation" — the backoff chosen FOR distributed counting: no
+    * discount normalization pass, a score is a count ratio or alpha
+    * times the next-shorter one) built from `df` itself:
+    *   p = c(h w) / c(h)                 the n-gram was seen,
+    *     = alpha · (backoff to the (n-1)-gram),
+    *   p_uni(w) = c(w) / T               MLE unigram, T = corpus tokens,
+    * each token entering the chain at its available history depth
+    * (the first token of a document scores the unigram). High =
     * improbable tokens (OCR noise, gibberish, wrong language); low =
     * repetitive boilerplate; the useful corpus lives between, so the
-    * score feeds band filters rather than a single threshold.
+    * score feeds band filters rather than a single threshold. Order 2
+    * and 3 are far sharper gibberish/boilerplate separators than the
+    * unigram: shuffled word salad keeps its unigram score but loses
+    * every bigram. A corpus without tokens scores all zeros.
     *
-    * Scale shape: one token census (map-side combined groupBy —
-    * vocab-sized result, Zipf-bounded), BROADCAST back onto the
-    * exploded tokens when it fits, then a per-doc mean whose partial
-    * aggregation collapses map-side because a doc's exploded tokens
-    * are co-partitioned with their source row.
-    *
-    * `broadcastVocab = None` (the default) AUTO-GUARDS the broadcast:
-    * natural-language vocabularies are sub-million-row even at 100 TB
-    * (Heaps' law), but a pathological "vocabulary" (tokenized binary,
-    * URLs, IDs) can exceed executor/driver broadcast limits and fail
-    * at runtime — past `broadcastMaxVocab` rows the join falls back to
-    * shuffle with AQE skew handling. The row count is read from the
-    * SAME one-row aggregate the total needs, so the guard adds no job.
-    * `Some(true)`/`Some(false)` force a side, both spec-pinned equal.
+    * Scale shape: the censuses ([[tokenCensus]], [[gramCensus]]) are
+    * map-side combined groupBys, one row per gram; the unigram census
+    * broadcasts under [[BroadcastVocabRows]], the n-gram censuses join
+    * by key (one row per gram — Zipf-hot grams are what AQE's skew
+    * split handles); every token's history is cut from its own row's
+    * token array, so nothing is exchanged by doc; the per-doc mean
+    * aggregates map-side.
     */
-  def unigramSurprisal(
+  def surprisal(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      broadcastVocab: Option[Boolean] = None,
-      broadcastMaxVocab: Long = 4000000L): DataFrame = {
-    val toks = df.select(
-      col(idCol),
-      explode(graft.functions.TextFunctions.tokens(col(textCol))).as("tok"))
-    val census = toks.groupBy("tok").agg(count(lit(1)).as("tf"))
+      order: Int = 1,
+      alpha: Double = 0.4): DataFrame =
+    surprisal(df, idCol, textCol, order, alpha, BroadcastVocabRows)
+
+  private[graft] def surprisal(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      order: Int,
+      alpha: Double,
+      broadcastRows: Long): DataFrame = {
+    require(order >= 1 && order <= 3, s"order must be in [1,3], got $order")
+    val uni = tokenCensus(df, textCol)
+    val head = uni.agg(sum(col("n")), count(lit(1))).head()
     // sum over an EMPTY census is null, not 0 — a corpus of blank docs
     // must yield all-zero scores, not an NPE at plan time.
-    val totalRow = census.agg(sum(col("tf")), count(lit(1))).head()
-    val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
-    if (total == 0L)
+    if (head.isNullAt(0) || head.getLong(0) == 0L)
       return df.select(
         col(idCol), lit(0L).as("n_tokens"), lit(0.0).as("avg_surprisal"))
-    val vocabRows = totalRow.getLong(1)
-    val vocab =
-      if (broadcastVocab.getOrElse(vocabRows <= broadcastMaxVocab))
-        broadcast(census)
-      else census
-    val perDoc = toks.join(vocab, "tok")
-      .groupBy(idCol)
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        avg(-log2(col("tf").cast("double") / total.toDouble)).as("surprisal"))
-    df.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        round(coalesce(col("surprisal"), lit(0.0)), 6).as("avg_surprisal"))
+    val total = head.getLong(0).toDouble
+    backoffSurprisal(df, idCol, textCol,
+      uni +: (2 to order).map(gramCensus(df, textCol, _)), alpha,
+      head.getLong(1) <= broadcastRows,
+      (a, cu) => weigh(a, cu.cast("double")) / total)
   }
 
-  /** BIGRAM surprisal with STUPID BACKOFF (Brants et al. 2007, "Large
-    * Language Models in Machine Translation" — the backoff chosen FOR
-    * distributed counting: no discount normalization pass, score =
-    * count ratio or alpha·unigram): per document, the mean of
-    * -log2 p(w_i | w_{i-1}) where
-    *   p(w | prev) = count(prev w) / count(prev ·)   when the bigram
-    *                                                 was seen,
-    *               = alpha · count(w) / T            otherwise,
-    * and the first token of a document scores against the unigram
-    * distribution (no history). A far sharper gibberish/boilerplate
-    * signal than [[unigramSurprisal]]: shuffled word salad keeps its
-    * unigram score but loses every bigram.
-    *
-    * Scale shape: one token explode with positions (the lag window is
-    * keyed by doc — state bounded by one document), a bigram census
-    * (map-side combined groupBy, ~O(corpus tokens) distinct keys),
-    * a shuffle join keyed by bigram (Zipf-hot bigrams are exactly what
-    * AQE's skew split handles; the census side is one row per bigram so
-    * it never explodes), and the unigram census broadcast under the
-    * same auto-guard as [[unigramSurprisal]].
+  /** FROZEN-LM surprisal: score `batch` under REFERENCE censuses rather
+    * than under the batch itself — the shape CCNet's perplexity filter
+    * actually has (a fixed LM scores every incoming document; a
+    * document's score does not drift as the batch around it changes).
+    * `censuses` = [[tokenCensus]] followed by 0-2 [[gramCensus]]es of
+    * orders 2, 3 (CensusStore roots keyed "tok" / "g", merged or
+    * [[pruneCensus]]d); their count sets the LM order. The chain is
+    * [[surprisal]]'s with two differences:
+    *   - add-one-smoothed unigrams with a single OOV bucket,
+    *     p_uni(w) = (c(w) + 1) / (T + V + 1) (T census tokens, V census
+    *     vocabulary), so unseen tokens get the finite ceiling
+    *     -log2(1/(T+V+1)) instead of infinity;
+    *   - a token whose preceding token the census never saw has no
+    *     context mass to condition on and scores plain p_uni.
+    * An empty unigram census fails loudly. Same scale shape as
+    * [[surprisal]]: only batch tokens stream through the joins.
     */
-  def bigramSurprisal(
-      df: DataFrame,
+  def surprisalAgainstCensus(
+      batch: DataFrame,
       idCol: String,
       textCol: String,
-      alpha: Double = 0.4,
-      broadcastVocab: Option[Boolean] = None,
-      broadcastMaxVocab: Long = 4000000L): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    val toks = df.select(
-        col(idCol),
-        posexplode(graft.functions.TextFunctions.tokens(col(textCol)))
-          .as(Seq("i", "tok")))
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("i"))
-    val withPrev = toks.withColumn("prev", lag(col("tok"), 1).over(byDoc))
-    val uni = toks.groupBy("tok").agg(count(lit(1)).as("cu"))
-    val uniHead = uni.agg(sum(col("cu")), count(lit(1))).head()
-    val total = if (uniHead.isNullAt(0)) 0L else uniHead.getLong(0)
-    if (total == 0L)
-      return df.select(
-        col(idCol), lit(0L).as("n_tokens"), lit(0.0).as("avg_surprisal"))
-    val big = withPrev.where(col("prev").isNotNull)
-      .groupBy(col("prev"), col("tok")).agg(count(lit(1)).as("cb"))
-    val uniB =
-      if (broadcastVocab.getOrElse(uniHead.getLong(1) <= broadcastMaxVocab))
-        broadcast(uni)
-      else uni
-    val prevCounts = uniB.select(col("tok").as("prev"), col("cu").as("cprev"))
-    val scored = withPrev
-      .join(uniB, Seq("tok"))
-      .join(prevCounts, Seq("prev"), "left")
-      .join(big, Seq("prev", "tok"), "left")
-      .withColumn("__s",
-        when(col("prev").isNull,
-          -log2(col("cu").cast("double") / total.toDouble))
-        .when(col("cb").isNotNull,
-          -log2(col("cb").cast("double") / col("cprev").cast("double")))
-        .otherwise(
-          -log2(lit(alpha) * col("cu").cast("double") / total.toDouble)))
-    val perDoc = scored.groupBy(idCol)
-      .agg(count(lit(1)).as("n_tokens"), avg(col("__s")).as("surprisal"))
-    df.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        round(coalesce(col("surprisal"), lit(0.0)), 6).as("avg_surprisal"))
-  }
+      censuses: Seq[DataFrame],
+      alpha: Double = 0.4): DataFrame =
+    surprisalAgainstCensus(batch, idCol, textCol, censuses, alpha, BroadcastVocabRows)
 
-  /** TRIGRAM surprisal with the full stupid-backoff CHAIN (Brants
-    * 2007): per token, -log2 of
-    *   p(w | w-2 w-1) = c3(w-2 w-1 w) / c2(w-2 w-1)   trigram seen,
-    *                  = alpha   · c2(w-1 w) / c1(w-1) bigram seen,
-    *                  = alpha^2 · c1(w) / T           otherwise;
-    * the first two tokens of a document enter the chain at their
-    * available history depth (unigram, then bigram). One token explode
-    * with two lag windows (doc-keyed — state bounded per doc), three
-    * map-combined censuses, and keyed left joins for each chain level;
-    * the unigram census broadcasts under the usual auto-guard, the
-    * bigram/trigram censuses join by key (one row per gram — AQE-skew
-    * safe). A sharper repetition/gibberish separator than the bigram
-    * form on corpora with heavy templated phrasing.
-    */
-  def trigramSurprisal(
-      df: DataFrame,
+  private[graft] def surprisalAgainstCensus(
+      batch: DataFrame,
       idCol: String,
       textCol: String,
-      alpha: Double = 0.4,
-      broadcastVocab: Option[Boolean] = None,
-      broadcastMaxVocab: Long = 4000000L): DataFrame = {
+      censuses: Seq[DataFrame],
+      alpha: Double,
+      broadcastRows: Long): DataFrame = {
+    require(censuses.size >= 1 && censuses.size <= 3,
+      s"need a token census plus at most two gram censuses, got ${censuses.size}")
+    val head = censuses.head.agg(sum(col("n")), count(lit(1))).head()
+    require(!head.isNullAt(0) && head.getLong(0) > 0,
+      "surprisalAgainstCensus needs a non-empty census - build one with tokenCensus")
+    val denom = head.getLong(0).toDouble + head.getLong(1).toDouble + 1.0
+    backoffSurprisal(batch, idCol, textCol, censuses, alpha,
+      head.getLong(1) <= broadcastRows,
+      (a, cu) => weigh(a, (coalesce(cu, lit(0L)) + 1).cast("double") / denom))
+  }
+
+  /** `a · x`, with the multiply left out at a = 1 (alpha⁰) so every
+    * branch keeps the exact IEEE operation order the oracle replays.
+    */
+  private def weigh(a: Double, x: Column): Column = if (a == 1.0) x else lit(a) * x
+
+  /** The stupid-backoff chain behind both entries. `censuses(0)` is the
+    * (tok, n) unigram census, `censuses(k)` the (g, n) census of order
+    * k+1; `unigram(a, c)` is the entry's alpha-weighted unigram
+    * probability of a token with census count `c` (null when unseen),
+    * a = alpha^k after k backoffs. Level j (1 ≤ j < order) of a token
+    * is its j-token history `__h$j` and the (j+1)-gram `__g$j` ending at
+    * it, both from the [[histories]] of the token's own row; the
+    * ladder takes the deepest level whose gram and history counts are
+    * both known and falls back one level per miss, multiplying by
+    * alpha each time.
+    */
+  private def backoffSurprisal(
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      censuses: Seq[DataFrame],
+      alpha: Double,
+      broadcastUni: Boolean,
+      unigram: (Double, Column) => Column): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    val toks = df.select(
-      col(idCol),
-      posexplode(graft.functions.TextFunctions.tokens(col(textCol)))
-        .as(Seq("i", "tok")))
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("i"))
-    val ctx = toks
-      .withColumn("p1", lag(col("tok"), 1).over(byDoc))
-      .withColumn("p2", lag(col("tok"), 2).over(byDoc))
-    val uni = toks.groupBy("tok").agg(count(lit(1)).as("cu"))
-    val uniHead = uni.agg(sum(col("cu")), count(lit(1))).head()
-    val total = if (uniHead.isNullAt(0)) 0L else uniHead.getLong(0)
-    if (total == 0L)
-      return df.select(
-        col(idCol), lit(0L).as("n_tokens"), lit(0.0).as("avg_surprisal"))
-    val big = ctx.where(col("p1").isNotNull)
-      .groupBy(col("p1"), col("tok")).agg(count(lit(1)).as("cb"))
-    val tri = ctx.where(col("p2").isNotNull)
-      .groupBy(col("p2"), col("p1"), col("tok")).agg(count(lit(1)).as("ct"))
-    val uniB =
-      if (broadcastVocab.getOrElse(uniHead.getLong(1) <= broadcastMaxVocab))
-        broadcast(uni)
-      else uni
-    val scored = ctx
-      .join(uniB, Seq("tok")) // cu: always present (self census)
-      .join(uniB.select(col("tok").as("p1"), col("cu").as("c1p")), Seq("p1"), "left")
-      .join(big, Seq("p1", "tok"), "left")
-      // context count for the trigram level is the BIGRAM count of
-      // (p2, p1) — rename the same census's keys
-      .join(big.select(col("p1").as("p2"), col("tok").as("p1"),
-        col("cb").as("c2ctx")), Seq("p2", "p1"), "left")
-      .join(tri, Seq("p2", "p1", "tok"), "left")
-      .withColumn("__s",
-        when(col("p1").isNull,
-          -log2(col("cu").cast("double") / total.toDouble))
-        .when(col("p2").isNull,
-          when(col("cb").isNotNull,
-            -log2(col("cb").cast("double") / col("c1p").cast("double")))
-          .otherwise(
-            -log2(lit(alpha) * col("cu").cast("double") / total.toDouble)))
-        .when(col("ct").isNotNull,
-          -log2(col("ct").cast("double") / col("c2ctx").cast("double")))
-        .when(col("cb").isNotNull,
-          -log2(lit(alpha) * col("cb").cast("double") / col("c1p").cast("double")))
-        .otherwise(
-          -log2(lit(alpha * alpha) * col("cu").cast("double") / total.toDouble)))
-    val perDoc = scored.groupBy(idCol)
-      .agg(count(lit(1)).as("n_tokens"), avg(col("__s")).as("surprisal"))
-    df.select(col(idCol)).join(perDoc, Seq(idCol), "left")
+    val order = censuses.size
+    val levels = 1 until order
+    val ctx = histories(batch, textCol, order - 1, idCol).select(
+      col(idCol) +: col("tok") +: levels.flatMap(j => Seq(
+        when(col(s"__p$j").isNotNull, spaced(j, 1)).as(s"__h$j"),
+        when(col(s"__p$j").isNotNull, spaced(j, 0)).as(s"__g$j"))): _*)
+    val uni = if (broadcastUni) broadcast(censuses.head) else censuses.head
+    def counts(census: DataFrame, from: String, key: String, as: String): DataFrame =
+      census.select(col(from).as(key), col("n").as(as))
+    val counted = levels.foldLeft(
+        ctx.join(counts(uni, "tok", "tok", "__c0"), Seq("tok"), "left")) { (acc, j) =>
+      val history =
+        if (j == 1) counts(uni, "tok", "__h1", "__hc1")
+        else counts(censuses(j - 1), "g", s"__h$j", s"__hc$j")
+      acc
+        .join(history, Seq(s"__h$j"), "left")
+        .join(counts(censuses(j), "g", s"__g$j", s"__gc$j"), Seq(s"__g$j"), "left")
+    }
+    def ladder(j: Int, a: Double): Column =
+      if (j == 0) unigram(a, col("__c0"))
+      else {
+        val (g, h) = (col(s"__gc$j"), col(s"__hc$j"))
+        when(g.isNotNull && h.isNotNull, weigh(a, g.cast("double")) / h.cast("double"))
+          .otherwise(ladder(j - 1, a * alpha))
+      }
+    // Entry at each token's history depth. A history the census never
+    // saw (`__hc1` null) has no mass to condition on and scores the
+    // unigram; a self census holds every history, so only a frozen one
+    // can miss.
+    val p =
+      if (order == 1) ladder(0, 1.0)
+      else when(col("__hc1").isNull, ladder(0, 1.0)).otherwise(
+        (2 until order).foldLeft(ladder(1, 1.0)) { (shallower, j) =>
+          when(col(s"__h$j").isNull, shallower).otherwise(ladder(j, 1.0))
+        })
+    val perDoc = counted.groupBy(idCol)
+      .agg(count(lit(1)).as("n_tokens"), avg(-log2(p)).as("surprisal"))
+    batch.select(col(idCol)).join(perDoc, Seq(idCol), "left")
       .select(
         col(idCol),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
         round(coalesce(col("surprisal"), lit(0.0)), 6).as("avg_surprisal"))
   }
 
-  /** The bigram census behind [[bigramSurprisalAgainstCensus]]:
-    * ("w1 w2" space-joined bigram, n) counts — mergeable like every
-    * census here, persisted through [[CensusStore]] (key "g"). Needs
-    * the doc id (unlike [[tokenCensus]]): bigrams must not pair across
-    * document boundaries, and the lag window keys on it.
+  /** The unigram census behind both surprisal entries: (tok, n)
+    * occurrence counts. Mergeable (counts add — persist and maintain it
+    * through [[CensusStore]], exactly like the substring-dedup gram
+    * census), so a streaming ingestion scores each batch against the
+    * standing corpus without ever rescanning it.
     */
-  def bigramCensus(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(
-        col(idCol).as("__d"),
-        posexplode(graft.functions.TextFunctions.tokens(col(textCol)))
-          .as(Seq("i", "tok")))
-      .withColumn("prev", lag(col("tok"), 1).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__d")).orderBy(col("i"))))
-      .where(col("prev").isNotNull)
-      .select(concat_ws(" ", col("prev"), col("tok")).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("n"))
+  def tokenCensus(df: DataFrame, textCol: String): DataFrame =
+    histories(df, textCol, 0).groupBy("tok").agg(count(lit(1)).as("n"))
 
-  /** TRIGRAM census: ("w1 w2 w3" space-joined, n) — mergeable,
-    * CensusStore-persistable (key "g"), the depth-2 sibling of
-    * [[bigramCensus]].
+  /** Word n-gram census for n >= 2: ("w1 … wn" space-joined, n) counts —
+    * the keys of [[graft.functions.TextFunctions.wordNGrams]] —
+    * mergeable and CensusStore-persistable (key "g") like
+    * [[tokenCensus]]. Row-local: n-grams never span two rows, whatever
+    * their doc ids.
     */
-  def trigramCensus(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(
-        col(idCol).as("__d"),
-        posexplode(graft.functions.TextFunctions.tokens(col(textCol)))
-          .as(Seq("i", "tok")))
-      .withColumn("p1", lag(col("tok"), 1).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__d")).orderBy(col("i"))))
-      .withColumn("p2", lag(col("tok"), 2).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__d")).orderBy(col("i"))))
-      .where(col("p2").isNotNull)
-      .select(concat_ws(" ", col("p2"), col("p1"), col("tok")).as("g"))
-      .groupBy("g").agg(count(lit(1)).as("n"))
+  def gramCensus(df: DataFrame, textCol: String, n: Int): DataFrame = {
+    require(n >= 2, s"gram order must be >= 2 (tokenCensus is the unigram), got $n")
+    histories(df, textCol, n - 1)
+      .where(col(s"__p${n - 1}").isNotNull)
+      .groupBy(spaced(n - 1, 0).as("g")).agg(count(lit(1)).as("n"))
+  }
+
+  /** Every token (`tok`) of `df` with the `depth` tokens before it in
+    * its own row (`__p1` the previous one; null before the row's
+    * start), plus the `keep` columns. One tokenizer pass, one explode,
+    * all codegen: no lambda and no exchange.
+    */
+  private def histories(df: DataFrame, textCol: String, depth: Int, keep: String*): DataFrame = {
+    val tokens = graft.functions.TextFunctions.tokens(col(textCol))
+    val kept = keep.map(col)
+    if (depth == 0) return df.select(kept :+ explode(tokens).as("tok"): _*)
+    val (t, i) = (col("__t"), col("__i"))
+    df.select(kept :+ tokens.as("__t"): _*)
+      // Explode an expression, not the bare column: a bare one gets a
+      // non-empty filter inferred, which the optimizer pushes below the
+      // projection as a second tokenizer pass.
+      .select(kept ++ Seq(t, posexplode(when(size(t) > 0, t)).as(Seq("__i", "tok"))): _*)
+      .select(kept ++ (col("tok") +: (1 to depth).map(k =>
+        when(i >= k, t.getItem(i - k)).as(s"__p$k"))): _*)
+  }
+
+  /** `__p{from}` … `__p{to}` of [[histories]], oldest first and
+    * space-joined; `__p0` is the token itself.
+    */
+  private def spaced(from: Int, to: Int): Column = {
+    val parts = (from to to by -1).map(k => if (k == 0) col("tok") else col(s"__p$k"))
+    if (parts.size == 1) parts.head else concat_ws(" ", parts: _*)
+  }
 
   /** Per-source DISTRIBUTION DRIFT: KL divergence (bits) of each
     * source's unigram distribution from the whole-corpus distribution —
@@ -696,10 +684,9 @@ object CorpusStats {
     * rows with `n < minCount`. A pruned n-gram then scores through the
     * BACKOFF branch of the stupid-backoff chain — "seen once" becomes
     * "unseen", alpha·(n-1)-gram — which is exactly the chain's existing
-    * unseen semantics, so pruning needs no changes to any scorer: feed
-    * the pruned frame to [[bigramSurprisalAgainstCensus]] /
-    * [[trigramSurprisalAgainstCensus]] and the left-join miss does the
-    * rest.
+    * unseen semantics, so pruning needs no changes to the scorer: feed
+    * the pruned frame to [[surprisalAgainstCensus]] and the left-join
+    * miss does the rest.
     *
     * Why it matters at 100 TB: n-gram censuses are Zipf — the singleton
     * tail IS the census. Measured (census rows kept and mean per-doc
@@ -728,163 +715,6 @@ object CorpusStats {
     census.filter(col("n") >= minCount)
   }
 
-  /** FROZEN trigram LM: score `batch` under persisted unigram
-    * ([[tokenCensus]]), bigram ([[bigramCensus]]) and trigram
-    * ([[trigramCensus]]) censuses with the full stupid-backoff chain
-    * and add-one-smoothed unigrams (single OOV bucket):
-    *   p = ct / cb(p2 p1)            trigram seen,
-    *     = alpha   · cb / cu(p1)     bigram seen,
-    *     = alpha^2 · p_uni(w)        context seen, both grams unseen,
-    *     = p_uni(w)                  context itself unseen (no mass to
-    *                                 condition on — mirrors the bigram
-    *                                 frozen form's unseen-prev rule),
-    * entered at each token's history depth. Same broadcast auto-guard
-    * on the unigram census; bigram/trigram censuses join by key.
-    */
-  def trigramSurprisalAgainstCensus(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      uniCensus: DataFrame,
-      biCensus: DataFrame,
-      triCensus: DataFrame,
-      alpha: Double = 0.4,
-      broadcastVocab: Option[Boolean] = None,
-      broadcastMaxVocab: Long = 4000000L): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    val head = uniCensus.agg(sum(col("n")), count(lit(1))).head()
-    require(!head.isNullAt(0) && head.getLong(0) > 0,
-      "trigramSurprisalAgainstCensus needs a non-empty unigram census")
-    val denom = head.getLong(0).toDouble + head.getLong(1).toDouble + 1.0
-    val ctx = batch.select(
-        col(idCol),
-        posexplode(graft.functions.TextFunctions.tokens(col(textCol)))
-          .as(Seq("i", "tok")))
-      .withColumn("p1", lag(col("tok"), 1).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col(idCol)).orderBy(col("i"))))
-      .withColumn("p2", lag(col("tok"), 2).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col(idCol)).orderBy(col("i"))))
-    val uniB =
-      if (broadcastVocab.getOrElse(head.getLong(1) <= broadcastMaxVocab))
-        broadcast(uniCensus)
-      else uniCensus
-    val biSplit = biCensus.select(
-      split(col("g"), " ", 2).getItem(0).as("w1"),
-      split(col("g"), " ", 2).getItem(1).as("w2"),
-      col("n"))
-    val triSplit = triCensus.select(
-      split(col("g"), " ", 3).getItem(0).as("w1"),
-      split(col("g"), " ", 3).getItem(1).as("w2"),
-      split(col("g"), " ", 3).getItem(2).as("w3"),
-      col("n").as("ct"))
-    val pUni = (cu: org.apache.spark.sql.Column) =>
-      (coalesce(cu, lit(0L)) + 1).cast("double") / denom
-    val scored = ctx
-      .join(uniB.select(col("tok"), col("n").as("cu")), Seq("tok"), "left")
-      .join(uniB.select(col("tok").as("p1"), col("n").as("c1p")), Seq("p1"), "left")
-      .join(biSplit.select(col("w1").as("p1"), col("w2").as("tok"),
-        col("n").as("cb")), Seq("p1", "tok"), "left")
-      .join(biSplit.select(col("w1").as("p2"), col("w2").as("p1"),
-        col("n").as("c2ctx")), Seq("p2", "p1"), "left")
-      .join(triSplit.select(col("w1").as("p2"), col("w2").as("p1"),
-        col("w3").as("tok"), col("ct")), Seq("p2", "p1", "tok"), "left")
-      .withColumn("__s",
-        when(col("p1").isNull || col("c1p").isNull,
-          -log2(pUni(col("cu"))))
-        .when(col("p2").isNull,
-          when(col("cb").isNotNull,
-            -log2(col("cb").cast("double") / col("c1p").cast("double")))
-          .otherwise(-log2(lit(alpha) * pUni(col("cu")))))
-        .when(col("ct").isNotNull && col("c2ctx").isNotNull,
-          -log2(col("ct").cast("double") / col("c2ctx").cast("double")))
-        .when(col("cb").isNotNull,
-          -log2(lit(alpha) * col("cb").cast("double") / col("c1p").cast("double")))
-        .otherwise(-log2(lit(alpha * alpha) * pUni(col("cu")))))
-    val perDoc = scored.groupBy(idCol)
-      .agg(count(lit(1)).as("n_tokens"), avg(col("__s")).as("surprisal"))
-    batch.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        round(coalesce(col("surprisal"), lit(0.0)), 6).as("avg_surprisal"))
-  }
-
-  /** FROZEN bigram LM scoring: score `batch` under persisted unigram
-    * (`uniCensus`: tok, n — [[tokenCensus]]) and bigram (`biCensus`:
-    * g = "w1 w2", n — [[bigramCensus]]) censuses with stupid backoff,
-    * add-one-smoothed unigrams (single OOV bucket, mirroring
-    * [[surprisalAgainstCensus]]):
-    *   p(w | prev) = cb / cprev          when the bigram was seen,
-    *               = alpha · p_uni(w)    otherwise,
-    *   p_uni(w) = (cu + 1) / (T + V + 1),
-    * first token and unseen-prev tokens score p_uni (no history /
-    * no context mass). Same broadcast auto-guard; the bigram census
-    * joins by key (one row per bigram, AQE-skew-safe).
-    */
-  def bigramSurprisalAgainstCensus(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      uniCensus: DataFrame,
-      biCensus: DataFrame,
-      alpha: Double = 0.4,
-      broadcastVocab: Option[Boolean] = None,
-      broadcastMaxVocab: Long = 4000000L): DataFrame = {
-    require(alpha > 0 && alpha <= 1, s"alpha must be in (0,1], got $alpha")
-    val head = uniCensus.agg(sum(col("n")), count(lit(1))).head()
-    require(!head.isNullAt(0) && head.getLong(0) > 0,
-      "bigramSurprisalAgainstCensus needs a non-empty unigram census")
-    val denom = head.getLong(0).toDouble + head.getLong(1).toDouble + 1.0
-    val toks = batch.select(
-        col(idCol),
-        posexplode(graft.functions.TextFunctions.tokens(col(textCol)))
-          .as(Seq("i", "tok")))
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(idCol)).orderBy(col("i"))
-    val withPrev = toks.withColumn("prev", lag(col("tok"), 1).over(byDoc))
-    val uniB =
-      if (broadcastVocab.getOrElse(head.getLong(1) <= broadcastMaxVocab))
-        broadcast(uniCensus)
-      else uniCensus
-    val pUni = (cu: org.apache.spark.sql.Column) =>
-      (coalesce(cu, lit(0L)) + 1).cast("double") / denom
-    val scored = withPrev
-      .join(uniB.select(col("tok"), col("n").as("cu")), Seq("tok"), "left")
-      .join(uniB.select(col("tok").as("prev"), col("n").as("cprev")),
-        Seq("prev"), "left")
-      .join(
-        biCensus.select(
-          split(col("g"), " ", 2).getItem(0).as("prev"),
-          split(col("g"), " ", 2).getItem(1).as("tok"),
-          col("n").as("cb")),
-        Seq("prev", "tok"), "left")
-      .withColumn("__s",
-        when(col("prev").isNull || col("cprev").isNull,
-          -log2(pUni(col("cu"))))
-        .when(col("cb").isNotNull,
-          -log2(col("cb").cast("double") / col("cprev").cast("double")))
-        .otherwise(-log2(lit(alpha) * pUni(col("cu")))))
-    val perDoc = scored.groupBy(idCol)
-      .agg(count(lit(1)).as("n_tokens"), avg(col("__s")).as("surprisal"))
-    batch.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        round(coalesce(col("surprisal"), lit(0.0)), 6).as("avg_surprisal"))
-  }
-
-  /** The token census behind [[surprisalAgainstCensus]]: (tok, n)
-    * occurrence counts. Mergeable (counts add — persist and maintain
-    * it through [[CensusStore]], exactly like the substring-dedup gram
-    * census), so a streaming ingestion scores each batch against the
-    * standing corpus without ever rescanning it.
-    */
-  def tokenCensus(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(graft.functions.TextFunctions.tokens(col(textCol))).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("n"))
-
   /** PMI collocations (Church & Hanks 1990): adjacent word pairs whose
     * co-occurrence beats chance — pmi = log2( p(w1,w2) / (p(w1)p(w2)) )
     * with p from the corpus's own unigram/bigram censuses. The corpus-
@@ -902,12 +732,11 @@ object CorpusStats {
     */
   def pmiCollocations(
       df: DataFrame,
-      idCol: String,
       textCol: String,
       minCount: Long = 5L): DataFrame = {
     require(minCount >= 1, s"minCount must be >= 1, got $minCount")
     val uni = tokenCensus(df, textCol)
-    val bi = bigramCensus(df, idCol, textCol)
+    val bi = gramCensus(df, textCol, 2)
     val nTok = uni.agg(sum(col("n")).as("n_tok"))
     val nBi = bi.agg(sum(col("n")).as("n_bi"))
     bi.filter(col("n") >= minCount)
@@ -925,64 +754,16 @@ object CorpusStats {
       .select("w1", "w2", "n_pair", "n_w1", "n_w2", "pmi")
   }
 
-  /** FROZEN-LM surprisal: score `batch` under the unigram distribution
-    * of a REFERENCE census rather than of the batch itself — the shape
-    * CCNet's perplexity filter actually has (a fixed LM scores every
-    * incoming document; the score of a document does not drift as the
-    * batch around it changes). Add-one smoothing with a single OOV
-    * bucket: p(tok) = (census_count + 1) / (T + V + 1), T = total
-    * census tokens, V = census vocabulary — unseen tokens get the
-    * finite ceiling -log2(1/(T+V+1)) instead of infinity.
-    *
-    * Scale shape mirrors [[unigramSurprisal]]: the census is
-    * vocabulary-sized and broadcasts when it fits; only batch tokens
-    * stream through the join and the per-doc mean. `broadcastVocab =
-    * None` (the default) auto-guards on the census row count — already
-    * in hand from the smoothing-denominator aggregate, so the guard is
-    * free — and falls back to a shuffle join past `broadcastMaxVocab`
-    * rows instead of failing a 100 TB run on a driver broadcast limit.
-    */
-  def surprisalAgainstCensus(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      census: DataFrame,
-      broadcastVocab: Option[Boolean] = None,
-      broadcastMaxVocab: Long = 4000000L): DataFrame = {
-    val head = census.agg(sum(col("n")), count(lit(1))).head()
-    require(!head.isNullAt(0) && head.getLong(0) > 0,
-      "surprisalAgainstCensus needs a non-empty census - build one with tokenCensus")
-    val denom = head.getLong(0).toDouble + head.getLong(1).toDouble + 1.0
-    val toks = batch.select(
-      col(idCol),
-      explode(graft.functions.TextFunctions.tokens(col(textCol))).as("tok"))
-    val vocab =
-      if (broadcastVocab.getOrElse(head.getLong(1) <= broadcastMaxVocab))
-        broadcast(census)
-      else census
-    val perDoc = toks.join(vocab, Seq("tok"), "left")
-      .groupBy(idCol)
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        avg(-log2((coalesce(col("n"), lit(0L)) + 1).cast("double") / denom))
-          .as("surprisal"))
-    batch.select(col(idCol)).join(perDoc, Seq(idCol), "left")
-      .select(
-        col(idCol),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        round(coalesce(col("surprisal"), lit(0.0)), 6).as("avg_surprisal"))
-  }
-
   /** N-GRAM NOVELTY against a standing census: the fraction of a
     * document's word n-gram OCCURRENCES absent from the census — the
     * RefinedWeb-style "how much of this batch is new text" signal an
     * incremental ingestion reads before paying for dedup (novelty ≈ 0
     * means the doc restates the standing corpus; ≈ 1 means genuinely
-    * new material). One explode + left join against the census (the
-    * [[surprisalAgainstCensus]] broadcast auto-guard, shared), one
-    * keyed re-aggregation; gramless docs report 0 grams / novelty 0.
-    * Census = [[tokenCensus]] (n=1) or the n-gram censuses keyed "g"
-    * (n>=2) — pass the matching n. Exact integer membership, so the
+    * new material). One explode + left join against the census
+    * (broadcast up to [[BroadcastVocabRows]] rows), one keyed
+    * re-aggregation; gramless docs report 0 grams / novelty 0.
+    * Census = [[tokenCensus]] (n=1) or a [[gramCensus]] (n>=2) — pass
+    * the matching n. Exact integer membership, so the
     * DuckDB oracle replays it verbatim (FULL oracle, unlike the
     * bloom-gated variants which can only over-flag).
     */
@@ -991,19 +772,23 @@ object CorpusStats {
       idCol: String,
       textCol: String,
       census: DataFrame,
-      n: Int = 3,
-      broadcastVocab: Option[Boolean] = None,
-      broadcastMaxVocab: Long = 4000000L): DataFrame = {
+      n: Int = 3): DataFrame =
+    gramNovelty(batch, idCol, textCol, census, n, BroadcastVocabRows)
+
+  private[graft] def gramNovelty(
+      batch: DataFrame,
+      idCol: String,
+      textCol: String,
+      census: DataFrame,
+      n: Int,
+      broadcastRows: Long): DataFrame = {
     require(n >= 1, s"gram order must be >= 1, got $n")
     val keyCol = census.columns.head
     val vocabRows = census.count()
     val grams = batch.select(
       col(idCol),
       explode(graft.functions.TextFunctions.wordNGrams(col(textCol), n)).as(keyCol))
-    val vocab =
-      if (broadcastVocab.getOrElse(vocabRows <= broadcastMaxVocab))
-        broadcast(census)
-      else census
+    val vocab = if (vocabRows <= broadcastRows) broadcast(census) else census
     val perDoc = grams.join(vocab, Seq(keyCol), "left")
       .groupBy(idCol)
       .agg(
@@ -1046,7 +831,7 @@ object CorpusStats {
     * `census = Some(...)` scores under a FROZEN [[tokenCensus]] LM
     * ([[surprisalAgainstCensus]] — CCNet's actual shape: the bucketing
     * of a batch must not drift with the batch's own contents);
-    * `None` self-scores via [[unigramSurprisal]].
+    * `None` self-scores via [[surprisal]].
     */
   def perplexityBuckets(
       df: DataFrame,
@@ -1058,8 +843,8 @@ object CorpusStats {
       census: Option[DataFrame] = None): DataFrame = {
     require(buckets >= 2, s"need >= 2 buckets, got $buckets")
     val scored = census match {
-      case Some(c) => surprisalAgainstCensus(df, idCol, textCol, c)
-      case None => unigramSurprisal(df, idCol, textCol)
+      case Some(c) => surprisalAgainstCensus(df, idCol, textCol, Seq(c))
+      case None => surprisal(df, idCol, textCol)
     }
     val withSource = scored.join(
       df.select(col(idCol), col(sourceCol).as("source")), Seq(idCol))

@@ -236,7 +236,7 @@ object Dsir {
     * gramless doc). `inlineRatios = None` auto-selects the zero-shuffle
     * literal-array fold while `buckets <= maxInlineBuckets` and the
     * explode + broadcast-join + ordered re-fold path past it (the
-    * broadcastVocab auto-guard pattern); both paths fold in ascending
+    * CorpusStats broadcast-guard pattern); both paths fold in ascending
     * bucket order and are bit-identical (spec-pinned).
     */
   def importanceWeights(

@@ -512,7 +512,7 @@ object ScaleStress {
     println("[stress]   vocab = " + census.count())
     time("frozen-LM scoring, 1-replica batch")(
       println("[stress]   scored = " + CorpusStats.surprisalAgainstCensus(
-        base, "doc_id", "text", census).count()))
+        base, "doc_id", "text", Seq(census)).count()))
     docs.unpersist()
     }
 
@@ -570,31 +570,37 @@ object ScaleStress {
     section("lm") {
     // The n-gram LM family at volume: census build cost and batch
     // scoring cost, unigram -> bigram -> trigram. The claim under
-    // measurement: scoring stays one window exchange + keyed joins
-    // (census sizes grow with n, but each is one row per gram), so
-    // depth buys signal at near-linear cost.
+    // measurement: scoring is a row-local token explode + keyed census
+    // joins, with no exchange by doc (census sizes grow with n, but
+    // each is one row per gram), so depth buys signal at near-linear
+    // cost.
     import graft.operators.CorpusStats
     val base = TableIO.table(spark, sfDir, "documents").select("doc_id", "text")
     val docs = replicate(base, "doc_id", reps)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[stress] lm corpus: ${docs.count()} docs (${reps}x)")
+    // Consume the scores: a bare count() lets the optimizer drop the
+    // scorer's left join onto its per-doc side (unique on the doc id),
+    // which leaves a census head and a doc count.
+    def scored(s: DataFrame): Unit =
+      println(f"[stress]   score sum = ${s.agg(sum("avg_surprisal")).head().getDouble(0)}%.3f")
     time("unigram self-surprisal")(
-      CorpusStats.unigramSurprisal(docs, "doc_id", "text").count())
+      scored(CorpusStats.surprisal(docs, "doc_id", "text")))
     time("bigram self-surprisal")(
-      CorpusStats.bigramSurprisal(docs, "doc_id", "text").count())
+      scored(CorpusStats.surprisal(docs, "doc_id", "text", order = 2)))
     time("trigram self-surprisal")(
-      CorpusStats.trigramSurprisal(docs, "doc_id", "text").count())
+      scored(CorpusStats.surprisal(docs, "doc_id", "text", order = 3)))
     val uniC = CorpusStats.tokenCensus(docs, "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val biC = CorpusStats.bigramCensus(docs, "doc_id", "text")
+    val biC = CorpusStats.gramCensus(docs, "text", 2)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val triC = CorpusStats.trigramCensus(docs, "doc_id", "text")
+    val triC = CorpusStats.gramCensus(docs, "text", 3)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[stress]   census sizes: uni=${uniC.count()} bi=${biC.count()} " +
       s"tri=${triC.count()}")
     time("frozen trigram scoring, 1-replica batch")(
-      CorpusStats.trigramSurprisalAgainstCensus(
-        base, "doc_id", "text", uniC, biC, triC).count())
+      scored(CorpusStats.surprisalAgainstCensus(
+        base, "doc_id", "text", Seq(uniC, biC, triC))))
     Seq(uniC, biC, triC).foreach(_.unpersist())
     docs.unpersist()
     }
@@ -680,7 +686,7 @@ object ScaleStress {
       Components.connectedComponents(edges, "id_a", "id_b")
         .select("component").distinct().count())
     val distCount = time("cc distributed fixpoint (2M edges)")(
-      Components.connectedComponents(edges, "id_a", "id_b", driverEdgeLimit = 0L)
+      Components.connectedComponents(edges, "id_a", "id_b", 30, driverEdgeLimit = 0L)
         .select("component").distinct().count())
     println(s"[stress]   components: union-find = $ufCount, distributed = $distCount, " +
       s"equal = ${ufCount == distCount}")

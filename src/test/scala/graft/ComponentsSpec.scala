@@ -46,7 +46,7 @@ class ComponentsSpec extends SparkSpec {
     }.toDF("id_a", "id_b")
     val small = Components.connectedComponents(edges, "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    val dist = Components.connectedComponents(edges, "id_a", "id_b", driverEdgeLimit = 0L)
+    val dist = Components.connectedComponents(edges, "id_a", "id_b", 30, driverEdgeLimit = 0L)
       .as[(Long, Long)].collect().toMap
     assert(small == dist)
     assert(small.nonEmpty)

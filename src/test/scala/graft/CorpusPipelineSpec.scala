@@ -167,7 +167,7 @@ class CorpusPipelineSpec extends SparkSpec {
 
     // pick the band threshold from the measured split: doc 4 must sit
     // strictly below every real doc, and the gate cut lands between.
-    val s = graft.operators.CorpusStats.unigramSurprisal(docs, "doc_id", "text")
+    val s = graft.operators.CorpusStats.surprisal(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val others = (1L to 3L).map(s).min
     assert(s(4L) < others, s"soup must be lowest: $s")
@@ -215,7 +215,7 @@ class CorpusPipelineSpec extends SparkSpec {
       "the uuuu of iiii and oooo but pppp with ssss for dddd"
     val docs = Seq((1L, "web", goodText), (2L, "web", oov))
       .toDF("doc_id", "source", "text")
-    val scored = CorpusStats.surprisalAgainstCensus(docs, "doc_id", "text", census)
+    val scored = CorpusStats.surprisalAgainstCensus(docs, "doc_id", "text", Seq(census))
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(scored(2L) > scored(1L), s"OOV doc must score higher: $scored")
     val thr = (scored(1L) + scored(2L)) / 2

@@ -37,7 +37,7 @@ class CorpusStatsSpec extends SparkSpec {
       (3L, "c zzz"),     // avg of -log2(1/8) twice = 3.0
       (4L, "")           // no tokens
     ).toDF("doc_id", "text")
-    val got = CorpusStats.unigramSurprisal(docs, "doc_id", "text")
+    val got = CorpusStats.surprisal(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got == Seq((1L, 4L, 1.0), (2L, 2L, 2.0), (3L, 2L, 3.0), (4L, 0L, 0.0)))
@@ -45,7 +45,7 @@ class CorpusStatsSpec extends SparkSpec {
 
   test("unigramSurprisal: all-blank corpus yields zero scores, not a null-sum NPE") {
     val docs = Seq((1L, ""), (2L, "   ")).toDF("doc_id", "text")
-    val got = CorpusStats.unigramSurprisal(docs, "doc_id", "text")
+    val got = CorpusStats.surprisal(docs, "doc_id", "text")
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(got == Seq((1L, 0L, 0.0), (2L, 0L, 0.0)))
@@ -53,11 +53,11 @@ class CorpusStatsSpec extends SparkSpec {
 
   test("unigramSurprisal: broadcast and shuffle-join paths agree; vocab side is broadcast") {
     val docs = graft.sources.TableIO.table(spark, Sf0001, "documents")
-    def rows(bc: Boolean) =
-      CorpusStats.unigramSurprisal(docs, "doc_id", "text", broadcastVocab = Some(bc))
+    def rows(bound: Long) =
+      CorpusStats.surprisal(docs, "doc_id", "text", 1, 0.4, bound)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(rows(bc = true) == rows(bc = false))
-    val plan = CorpusStats.unigramSurprisal(docs, "doc_id", "text")
+    assert(rows(CorpusStats.BroadcastVocabRows) == rows(0L))
+    val plan = CorpusStats.surprisal(docs, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
       s"vocab census should broadcast:\n$plan")
@@ -69,24 +69,30 @@ class CorpusStatsSpec extends SparkSpec {
     val before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      // vocab of sf0.001 documents is far above 10 rows: the guard must
-      // drop the broadcast hint entirely
-      val guarded = CorpusStats.unigramSurprisal(
-        docs, "doc_id", "text", broadcastMaxVocab = 10L)
-      assert(!guarded.queryExecution.executedPlan.toString.contains("Broadcast"),
-        "guarded plan must not broadcast")
-      // and under the generous default the hint is present
-      val auto = CorpusStats.unigramSurprisal(docs, "doc_id", "text")
-      assert(auto.queryExecution.executedPlan.toString.contains("Broadcast"))
-      // same for the frozen-census scorer, with score identity
-      val census = CorpusStats.tokenCensus(docs, "text")
-      val g = CorpusStats.surprisalAgainstCensus(
-        docs, "doc_id", "text", census, broadcastMaxVocab = 10L)
-      assert(!g.queryExecution.executedPlan.toString.contains("Broadcast"))
-      val a = CorpusStats.surprisalAgainstCensus(docs, "doc_id", "text", census)
-      assert(a.queryExecution.executedPlan.toString.contains("Broadcast"))
-      assert(g.collect().map(r => (r.getLong(0), r.getDouble(2))).toSet ==
-        a.collect().map(r => (r.getLong(0), r.getDouble(2))).toSet)
+      // a bound of 0 is below any non-empty vocabulary: the guard must
+      // drop the broadcast hint entirely, at every order and in both
+      // entries; under the default bound the unigram census broadcasts
+      def broadcasts(df: org.apache.spark.sql.DataFrame): Boolean =
+        df.queryExecution.executedPlan.toString.contains("Broadcast")
+      def scores(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getDouble(2))).toSet
+      val censuses = Seq(CorpusStats.tokenCensus(docs, "text"),
+        CorpusStats.gramCensus(docs, "text", 2), CorpusStats.gramCensus(docs, "text", 3))
+      for (order <- 1 to 3) {
+        val guarded = CorpusStats.surprisal(docs, "doc_id", "text", order, 0.4, 0L)
+        val auto = CorpusStats.surprisal(docs, "doc_id", "text", order, 0.4,
+          CorpusStats.BroadcastVocabRows)
+        assert(!broadcasts(guarded), s"guarded plan must not broadcast (order $order)")
+        assert(broadcasts(auto), s"default bound must broadcast (order $order)")
+        assert(scores(guarded) == scores(auto))
+        val g = CorpusStats.surprisalAgainstCensus(
+          docs, "doc_id", "text", censuses.take(order), 0.4, 0L)
+        val a = CorpusStats.surprisalAgainstCensus(
+          docs, "doc_id", "text", censuses.take(order))
+        assert(!broadcasts(g), s"guarded frozen plan must not broadcast (order $order)")
+        assert(broadcasts(a), s"default bound must broadcast the frozen census (order $order)")
+        assert(scores(g) == scores(a))
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
   }
 
@@ -95,7 +101,7 @@ class CorpusStatsSpec extends SparkSpec {
     def r6(x: Double) = math.rint(x * 1e6) / 1e6
     // corpus: T=7; cu a=3 b=3 x=1; bigrams: (a b)=3, (b a)=1, (b x)=1
     val docs = Seq((1L, "a b a b"), (2L, "a b x")).toDF("doc_id", "text")
-    val got = CorpusStats.bigramSurprisal(docs, "doc_id", "text")
+    val got = CorpusStats.surprisal(docs, "doc_id", "text", order = 2)
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     val d1 = (-lg2(3.0 / 7) + 0.0 + lg2(3.0) + 0.0) / 4
@@ -109,15 +115,15 @@ class CorpusStatsSpec extends SparkSpec {
     val salad = "seven two ten four one nine three eight five six"
     val corpus = ((1L to 6L).map(i => (i, nat)) :+ (7L, salad))
       .toDF("doc_id", "text")
-    val bi = CorpusStats.bigramSurprisal(corpus, "doc_id", "text")
+    val bi = CorpusStats.surprisal(corpus, "doc_id", "text", order = 2)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    val uniS = CorpusStats.unigramSurprisal(corpus, "doc_id", "text")
+    val uniS = CorpusStats.surprisal(corpus, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(uniS(1L) == uniS(7L), "unigram is blind to order")
     assert(bi(7L) > bi(1L) + 2.0, s"salad must score much higher: $bi")
     // empty corpus: zero rows, zero scores
     val empty = Seq((1L, ""), (2L, "  ")).toDF("doc_id", "text")
-    assert(CorpusStats.bigramSurprisal(empty, "doc_id", "text")
+    assert(CorpusStats.surprisal(empty, "doc_id", "text", order = 2)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet == Set((0L, 0.0)))
   }
 
@@ -126,7 +132,7 @@ class CorpusStatsSpec extends SparkSpec {
     def r6(x: Double) = math.rint(x * 1e6) / 1e6
     // T=9; cu a3 b3 c2 d1; cb ab3 bc2 ca1 bd1; ct abc2 bca1 cab1 abd1
     val docs = Seq((1L, "a b c a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val got = CorpusStats.trigramSurprisal(docs, "doc_id", "text")
+    val got = CorpusStats.surprisal(docs, "doc_id", "text", order = 3)
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     val d1 = (lg2(3) + 0.0 + -lg2(2.0 / 3) + 1.0 + 0.0 + -lg2(2.0 / 3)) / 6
@@ -140,7 +146,7 @@ class CorpusStatsSpec extends SparkSpec {
       (1L, "a b c a b c"), (2L, "a b d"),
       (3L, "c b c b c b")) // makes (c,b) and (b,c) both seen, (c,b,c) seen
       .toDF("doc_id", "text")
-    val m = CorpusStats.trigramSurprisal(mix, "doc_id", "text")
+    val m = CorpusStats.surprisal(mix, "doc_id", "text", order = 3)
       .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(m.keySet == Set(1L, 2L, 3L) && m.values.forall(_ >= 0.0))
     // templated phrasing scores LOWER under trigram than word salad of
@@ -148,12 +154,12 @@ class CorpusStatsSpec extends SparkSpec {
     val nat = "one two three four five one two three four five"
     val salad = "three five one four two five three one two four"
     val corpus = ((1L to 5L).map(i => (i, nat)) :+ (6L, salad)).toDF("doc_id", "text")
-    val tri = CorpusStats.trigramSurprisal(corpus, "doc_id", "text")
+    val tri = CorpusStats.surprisal(corpus, "doc_id", "text", order = 3)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(tri(6L) > tri(1L) + 0.5, s"salad must score clearly higher: $tri")
     // empty corpus yields zeros
-    assert(CorpusStats.trigramSurprisal(
-        Seq((1L, "")).toDF("doc_id", "text"), "doc_id", "text")
+    assert(CorpusStats.surprisal(
+        Seq((1L, "")).toDF("doc_id", "text"), "doc_id", "text", order = 3)
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSet == Set((0L, 0.0)))
   }
 
@@ -162,13 +168,13 @@ class CorpusStatsSpec extends SparkSpec {
     def r6(x: Double) = math.rint(x * 1e6) / 1e6
     val ref = Seq((10L, "a b a b"), (11L, "a b x")).toDF("doc_id", "text")
     val uniC = CorpusStats.tokenCensus(ref, "text")       // a3 b3 x1; T=7 V=3
-    val biC = CorpusStats.bigramCensus(ref, "doc_id", "text")
+    val biC = CorpusStats.gramCensus(ref, "text", 2)
     assert(biC.as[(String, Long)].collect().toMap ==
       Map("a b" -> 3L, "b a" -> 1L, "b x" -> 1L))
     // bigram census is a monoid through CensusStore.merge
     val m = graft.operators.CensusStore.merge(
-      CorpusStats.bigramCensus(ref.filter(col("doc_id") === 10), "doc_id", "text"),
-      CorpusStats.bigramCensus(ref.filter(col("doc_id") === 11), "doc_id", "text"),
+      CorpusStats.gramCensus(ref.filter(col("doc_id") === 10), "text", 2),
+      CorpusStats.gramCensus(ref.filter(col("doc_id") === 11), "text", 2),
       "g").as[(String, Long)].collect().toMap
     assert(m == biC.as[(String, Long)].collect().toMap)
     val batch = Seq(
@@ -176,8 +182,8 @@ class CorpusStatsSpec extends SparkSpec {
       (2L, "z a"),   // OOV first token; unseen context -> unigram both
       (3L, "x a")    // seen context, unseen bigram -> alpha backoff
     ).toDF("doc_id", "text")
-    val got = CorpusStats.bigramSurprisalAgainstCensus(
-        batch, "doc_id", "text", uniC, biC)
+    val got = CorpusStats.surprisalAgainstCensus(
+        batch, "doc_id", "text", Seq(uniC, biC))
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val denom = 11.0 // T + V + 1
@@ -185,8 +191,8 @@ class CorpusStatsSpec extends SparkSpec {
     assert(got(2L) == r6((-lg2(1 / denom) + -lg2(4 / denom)) / 2))
     assert(got(3L) == r6((-lg2(2 / denom) + -lg2(0.4 * 4 / denom)) / 2))
     // broadcast guard parity on the frozen form
-    val g = CorpusStats.bigramSurprisalAgainstCensus(
-        batch, "doc_id", "text", uniC, biC, broadcastVocab = Some(false))
+    val g = CorpusStats.surprisalAgainstCensus(
+        batch, "doc_id", "text", Seq(uniC, biC), 0.4, 0L)
       .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(g == got)
   }
@@ -196,8 +202,8 @@ class CorpusStatsSpec extends SparkSpec {
     def r6(x: Double) = math.rint(x * 1e6) / 1e6
     val ref = Seq((10L, "a b a b"), (11L, "a b x")).toDF("doc_id", "text")
     val uniC = CorpusStats.tokenCensus(ref, "text")          // a3 b3 x1; denom 11
-    val biC = CorpusStats.bigramCensus(ref, "doc_id", "text") // ab3 ba1 bx1
-    val triC = CorpusStats.trigramCensus(ref, "doc_id", "text")
+    val biC = CorpusStats.gramCensus(ref, "text", 2) // ab3 ba1 bx1
+    val triC = CorpusStats.gramCensus(ref, "text", 3)
     assert(triC.as[(String, Long)].collect().toMap ==
       Map("a b a" -> 1L, "b a b" -> 1L, "a b x" -> 1L))
     val batch = Seq(
@@ -205,8 +211,8 @@ class CorpusStatsSpec extends SparkSpec {
       (2L, "a b q"),  // double fallthrough: alpha^2 * pUni(OOV)
       (3L, "z a b")   // unseen context then bigram branch
     ).toDF("doc_id", "text")
-    val got = CorpusStats.trigramSurprisalAgainstCensus(
-        batch, "doc_id", "text", uniC, biC, triC)
+    val got = CorpusStats.surprisalAgainstCensus(
+        batch, "doc_id", "text", Seq(uniC, biC, triC))
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val d = 11.0
@@ -215,8 +221,8 @@ class CorpusStatsSpec extends SparkSpec {
     assert(got(3L) == r6((-lg2(1 / d) + -lg2(4 / d) + -lg2(0.4)) / 3))
     // trigram census is a monoid through CensusStore.merge
     val m = graft.operators.CensusStore.merge(
-      CorpusStats.trigramCensus(ref.filter(col("doc_id") === 10), "doc_id", "text"),
-      CorpusStats.trigramCensus(ref.filter(col("doc_id") === 11), "doc_id", "text"),
+      CorpusStats.gramCensus(ref.filter(col("doc_id") === 10), "text", 3),
+      CorpusStats.gramCensus(ref.filter(col("doc_id") === 11), "text", 3),
       "g").as[(String, Long)].collect().toMap
     assert(m == triC.as[(String, Long)].collect().toMap)
   }
@@ -230,7 +236,7 @@ class CorpusStatsSpec extends SparkSpec {
       (2L, "zzz"),     // OOV: -log2(1/9)
       (3L, "a zzz")    // mean of the two
     ).toDF("doc_id", "text")
-    val got = CorpusStats.surprisalAgainstCensus(batch, "doc_id", "text", census)
+    val got = CorpusStats.surprisalAgainstCensus(batch, "doc_id", "text", Seq(census))
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     def s(p: Double) = -math.log(p) / math.log(2)
@@ -238,7 +244,7 @@ class CorpusStatsSpec extends SparkSpec {
     assert(got(2L)._2 == math.rint(s(1.0 / 9) * 1e6) / 1e6)
     // frozen property: the same doc scores identically in any batch
     val solo = CorpusStats.surprisalAgainstCensus(
-        batch.filter(col("doc_id") === 1), "doc_id", "text", census)
+        batch.filter(col("doc_id") === 1), "doc_id", "text", Seq(census))
       .collect().head.getDouble(2)
     assert(solo == got(1L)._2)
     // the census persists through CensusStore and scores identically
@@ -248,13 +254,13 @@ class CorpusStatsSpec extends SparkSpec {
     graft.operators.CensusStore.appendDelta(
       CorpusStats.tokenCensus(ref.filter(col("doc_id") === 11), "text"), root, 1L)
     val loaded = graft.operators.CensusStore.read(spark, root, "tok")
-    val viaStore = CorpusStats.surprisalAgainstCensus(batch, "doc_id", "text", loaded)
+    val viaStore = CorpusStats.surprisalAgainstCensus(batch, "doc_id", "text", Seq(loaded))
       .orderBy("doc_id").collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     assert(viaStore == got.map { case (k, v) => k -> v._2 })
     // empty census fails fast with a clear message
     val e = intercept[IllegalArgumentException] {
       CorpusStats.surprisalAgainstCensus(
-        batch, "doc_id", "text", CorpusStats.tokenCensus(ref.limit(0), "text"))
+        batch, "doc_id", "text", Seq(CorpusStats.tokenCensus(ref.limit(0), "text")))
     }
     assert(e.getMessage.contains("non-empty census"))
   }
@@ -284,16 +290,59 @@ class CorpusStatsSpec extends SparkSpec {
     val censusDocs = Seq(
       (1L, "a b a b a b"), (2L, "c d")).toDF("doc_id", "text")
     val uni = CorpusStats.tokenCensus(censusDocs, "text")
-    val bi = CorpusStats.bigramCensus(censusDocs, "doc_id", "text")
+    val bi = CorpusStats.gramCensus(censusDocs, "text", 2)
     val batch = Seq((10L, "c d")).toDF("doc_id", "text")
     def score(b: org.apache.spark.sql.DataFrame): Double =
-      CorpusStats.bigramSurprisalAgainstCensus(batch, "doc_id", "text", uni, b)
+      CorpusStats.surprisalAgainstCensus(batch, "doc_id", "text", Seq(uni, b))
         .select("avg_surprisal").as[Double].head()
     val unpruned = score(bi)
     val pruned = score(CorpusStats.pruneCensus(bi, 2L))
     val absent = score(bi.filter(col("g") =!= "c d"))
     assert(pruned == absent, "pruned row must behave exactly as never-seen")
     assert(pruned > unpruned, "backoff must score the rare bigram higher")
+  }
+
+  test("surprisal, surprisalAgainstCensus and gramCensus plans hold no Window node") {
+    // Token histories are cut from each row's own token array, so no
+    // scorer order and no census build exchanges tokens by doc id.
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def windows(df: org.apache.spark.sql.DataFrame): Int = {
+      df.collect()
+      Plans.collect(df.queryExecution.executedPlan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w
+      }.size
+    }
+    val docs = Seq((1L, "a b a b c"), (2L, "a b x"), (3L, "")).toDF("doc_id", "text")
+    val censuses = CorpusStats.tokenCensus(docs, "text") +:
+      (2 to 3).map(CorpusStats.gramCensus(docs, "text", _))
+    for (order <- 1 to 3) {
+      assert(windows(CorpusStats.surprisal(docs, "doc_id", "text", order)) == 0,
+        s"self scorer, order $order")
+      assert(windows(CorpusStats.surprisalAgainstCensus(
+        docs, "doc_id", "text", censuses.take(order))) == 0, s"frozen scorer, order $order")
+    }
+    for (n <- 2 to 3)
+      assert(windows(CorpusStats.gramCensus(docs, "text", n)) == 0, s"gramCensus n=$n")
+  }
+
+  test("gramCensus counts the wordNGrams keys and never pairs tokens across rows " +
+      "that share a doc id") {
+    // Two rows of doc 1: a census windowed by doc id interleaves both
+    // rows' tokens by position and pairs tokens across the rows.
+    val docs = Seq((1L, "a b"), (1L, "c d"), (2L, "a b")).toDF("doc_id", "text")
+    assert(CorpusStats.gramCensus(docs, "text", 2).as[(String, Long)].collect().toMap ==
+      Map("a b" -> 2L, "c d" -> 1L))
+    assert(CorpusStats.gramCensus(docs, "text", 3).collect().isEmpty)
+    intercept[IllegalArgumentException] { CorpusStats.gramCensus(docs, "text", 1) }
+    val fixture = graft.sources.TableIO.table(spark, Sf0001, "documents")
+    for (n <- 2 to 4) {
+      val viaNGrams = fixture
+        .select(org.apache.spark.sql.functions.explode(
+          graft.functions.TextFunctions.wordNGrams(col("text"), n)).as("g"))
+        .groupBy("g").count().as[(String, Long)].collect().toMap
+      assert(CorpusStats.gramCensus(fixture, "text", n).as[(String, Long)].collect().toMap ==
+        viaNGrams, s"n=$n")
+    }
   }
 
   // --- perplexityBuckets -------------------------------------------------
@@ -512,24 +561,23 @@ class CorpusStatsSpec extends SparkSpec {
   test("gramNovelty: hand fractions, gramless zero, broadcast==shuffle paths") {
     import graft.operators.CorpusStats
     val standing = Seq((100L, "a b c d e")).toDF("doc_id", "text")
-    val census = CorpusStats.trigramCensus(standing, "doc_id", "text")
+    val census = CorpusStats.gramCensus(standing, "text", 3)
     val batch = Seq(
       (1L, "a b c d e"),     // all 3 trigrams seen -> 0
       (2L, "x y z w"),       // both unseen -> 1
       (3L, "a b c q r"),     // 1 of 3 seen -> 2/3
       (4L, "hi")             // gramless -> 0 grams, novelty 0
     ).toDF("doc_id", "text")
-    def run(bc: Option[Boolean]) =
-      CorpusStats.gramNovelty(batch, "doc_id", "text", census, n = 3,
-          broadcastVocab = bc)
+    def run(bound: Long) =
+      CorpusStats.gramNovelty(batch, "doc_id", "text", census, 3, bound)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val got = run(None)
+    val got = run(CorpusStats.BroadcastVocabRows)
     assert(got(1L) == ((3L, 0.0)))
     assert(got(2L) == ((2L, 1.0)))
     assert(got(3L)._1 == 3L)
     assert(math.abs(got(3L)._2 - 2.0 / 3) < 1e-6)
     assert(got(4L) == ((0L, 0.0)))
-    assert(run(Some(false)) == got, "shuffle-join path must agree")
+    assert(run(0L) == got, "shuffle-join path must agree")
   }
 
   test("pmiCollocations: a glued pair beats an independent one; floor applies") {
@@ -542,7 +590,7 @@ class CorpusStatsSpec extends SparkSpec {
       (3L, "san francisco hills the end the cat"),
       (4L, "the road the cat walked the town san francisco")
     ).toDF("doc_id", "text")
-    val got = CorpusStats.pmiCollocations(docs, "doc_id", "text", minCount = 3L)
+    val got = CorpusStats.pmiCollocations(docs, "text", minCount = 3L)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getDouble(5))).toMap
     assert(got.contains(("san", "francisco")))

@@ -75,6 +75,25 @@ class IngestSpec extends SparkSpec {
     }
   }
 
+  test("ingestIncrement: a held result keeps its dropped count across a replay of its batch") {
+    val (idx, store, out) = (tmp("held_idx"), tmp("held_store"), tmp("held_out"))
+    Ingest.ingestIncrement(Seq((1L, baseText)).toDF("doc_id", "text"),
+      "doc_id", "text", idx, store, out, batchId = 0L)
+    val held = Ingest.ingestIncrement(
+      Seq((11L, baseText), (12L, revisionText)).toDF("doc_id", "text"),
+      "doc_id", "text", idx, store, out, batchId = 1L)
+    // the replay lands different survivors over batch=1's files
+    val replay = Ingest.ingestIncrement(
+      Seq((21L, (300 to 340).map(i => s"s$i").mkString(" ")),
+        (22L, (400 to 440).map(i => s"t$i").mkString(" "))).toDF("doc_id", "text"),
+      "doc_id", "text", idx, store, out, batchId = 1L)
+    assert(replay.dropped == 0L)
+    assert(held.dropped == 1L, "the held result must keep its own count")
+    // the counting leaves the session serializable (task closures that
+    // capture it, like a RandomForest model's summary, still ship)
+    new java.io.ObjectOutputStream(new java.io.ByteArrayOutputStream()).writeObject(spark)
+  }
+
   test("ingestBackfill: N batches with one cluster fold == sequential ingestIncrement") {
     val b1 = Seq(
       (1L, baseText),
