@@ -3,6 +3,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.GraftSession
+import graft.tools.Meter
 object Bench {
   /** Fixed-work calibration canary, run once per timed pass.
     *
@@ -27,11 +28,13 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  /** A failed query still reads -1 in the contract line; stderr names
-    * the cause.
-    */
-  private def reportFailure(phase: String, name: String, e: Throwable): Unit =
-    System.err.println(s"[bench] $phase $name failed: ${e.getClass.getName}: ${e.getMessage}")
+  /** `s` as a JSON string literal. */
+  private def jsonString(s: String): String = s.map {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -47,11 +50,20 @@ object Bench {
       System.err.println(
         s"[bench] TESTDATA SCHEMA DRIFT at $sfDir — ${schemaDrift.size} finding(s):\n  " +
           schemaDrift.mkString("\n  "))
+    // A failed query still reads -1 in the contract line; stderr names
+    // the cause, and the detail file keeps each query's first one.
+    val errors = scala.collection.mutable.TreeMap.empty[String, String]
+    def reportFailure(phase: String, name: String, e: Throwable): Unit = {
+      val cause = s"${e.getClass.getName}: ${e.getMessage}"
+      System.err.println(s"[bench] $phase $name failed: $cause")
+      if (!errors.contains(name)) errors(name) = cause
+    }
     // JIT/codegen warmup: run every bench query once on the tiny sf so
     // headline timings measure the queries, not first-use classloading and
     // codegen of each operator's expression tree.
+    val warmDir = java.nio.file.Paths.get(sfDir).resolveSibling("sf0.001").toString
     SparkEntry.benchQueries.foreach { name =>
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+      try Meter.consume(SparkEntry.queries(name)(spark, warmDir))
       catch { case e: Throwable => reportFailure("warm-up", name, e) }
       spark.catalog.clearCache()
     }
@@ -68,7 +80,7 @@ object Bench {
     def timedPass(): Map[String, Double] = SparkEntry.benchQueries.map { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true }
+      val ok = try { Meter.consume(fn(spark, sfDir)); true }
         catch { case e: Throwable => reportFailure("timed pass", name, e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       // Drop intermediates persisted by operators (dedup gram/band
@@ -145,8 +157,10 @@ object Bench {
         .map { case (k, _) =>
           "\"" + k + "\":[" + p(pass1(k)) + "," + p(pass2(k)) + "," + p(pass3(k)) + "]" }
         .mkString("{", ",", "}")
+      val errs = errors.map { case (k, v) => "\"" + k + "\":" + jsonString(v) }
+        .mkString("{", ",", "}")
       val json =
-        s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","canary":${f"$canary%.3f"},"canary_passes":[${f"$canary1%.3f"},${f"$canary2%.3f"},${f"$canary3%.3f"}],"value_norm":${f"$totalNorm%.3f"},"cpus":$cpus,"failed":$failed,"queries":$detail,"passes":$passes,"sf":"$sfDir"}"""
+        s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","canary":${f"$canary%.3f"},"canary_passes":[${f"$canary1%.3f"},${f"$canary2%.3f"},${f"$canary3%.3f"}],"value_norm":${f"$totalNorm%.3f"},"cpus":$cpus,"failed":$failed,"queries":$detail,"passes":$passes,"errors":$errs,"sf":"$sfDir"}"""
       // BENCH_DETAIL.json is the committed cross-round artifact and is only
       // comparable at the canonical scale factor: a dev-loop run at sf0.001
       // replacing an sf0.1 baseline once masqueraded as a 2x speedup that
@@ -157,7 +171,9 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(detailFile),
         (json + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // detail file is best-effort
+    } catch { case e: Throwable => // detail file is best-effort
+      System.err.println(s"[bench] detail file not written: ${e.getClass.getName}: ${e.getMessage}")
+    }
     // The contract line has been lost to the driver's bounded stdout tail two
     // rounds running ("parsed": null in BENCH_r8/r9) — shutdown-hook WARNs
     // landing after it pushed it out of the window. Defense in depth:

@@ -88,13 +88,16 @@ object TextFunctions {
   /** Word n-grams (space-joined token windows); empty array when the
     * document has fewer than n tokens.
     */
-  def wordNGrams(c: Column, n: Int): Column = {
-    val toks = tokens(c)
-    when(size(toks) < n, array().cast("array<string>"))
-      .otherwise(transform(
-        sequence(lit(0), size(toks) - lit(n)),
-        i => array_join(slice(toks, i + lit(1), lit(n)), " ")))
-  }
+  def wordNGrams(c: Column, n: Int): Column =
+    // The token array is bound once, as the lambda variable of a
+    // one-element transform: a lambda body is evaluated per element, so
+    // `tokens(c)` read inside the gram lambda would rerun the tokenizer
+    // regex once per n-gram.
+    element_at(transform(array(tokens(c)), toks =>
+      when(size(toks) < n, array().cast("array<string>"))
+        .otherwise(transform(
+          sequence(lit(0), size(toks) - lit(n)),
+          i => array_join(slice(toks, i + lit(1), lit(n)), " ")))), 1)
 
   /** Character n-grams over normalized text. */
   def charNGrams(c: Column, n: Int): Column = {

@@ -43,6 +43,29 @@ object VectorOps {
   def hyperplaneSignature(vec: Column, planes: Seq[Array[Double]]): Column =
     graft.plans.HashExpressions.hyperplaneSignature(vec, planes)
 
+  /** Pigeonhole chunk keys for hyperplane LSH: a signature of `numPlanes`
+    * bits splits into maxHamming + 1 (chunk, cv) structs, so any two
+    * signatures within maxHamming bits share at least one exact chunk and
+    * a chunk equi-join finds them. With fewer planes than chunks the
+    * trailing chunks would key every row to 0 and the join silently
+    * degenerates to a cross join (correct but brute-force cost), so that
+    * config fails here, before the caller reads any data. Apply the
+    * result to the signature column.
+    */
+  private[graft] def hyperplaneChunkKeys(numPlanes: Int, maxHamming: Int): Column => Column = {
+    require(numPlanes >= maxHamming + 1,
+      s"hyperplane LSH needs numPlanes >= maxHamming + 1 (got numPlanes=$numPlanes, maxHamming=$maxHamming)")
+    val chunks = maxHamming + 1
+    val bitsPer = (numPlanes + chunks - 1) / chunks
+    sig => array((0 until chunks).map { c =>
+      val start = c * bitsPer
+      val width = math.max(1, math.min(bitsPer, numPlanes - start))
+      struct(
+        lit(c).as("chunk"),
+        shiftrightunsigned(sig, start).bitwiseAND(lit((1L << width) - 1)).as("cv"))
+    }: _*)
+  }
+
   /** Deterministic gaussian-ish hyperplanes from a seed. */
   def randomPlanes(numPlanes: Int, dim: Int, seed: Long): Seq[Array[Double]] = {
     val rng = new scala.util.Random(seed)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.plans.MinHashUnionAgg.matchingSlots
 
 /** Deduplication operators for training-data pipelines: exact (hash),
   * n-gram Jaccard (exhaustive), MinHash+LSH (approximate, scale path),
@@ -240,38 +241,50 @@ object Dedup {
     * sets the similarity threshold the join "searches" for.
     * Output: id_a, id_b candidate pairs (distinct).
     */
-  def minHashCandidates(
+  private[graft] def minHashCandidates(
       df: DataFrame,
       idCol: String,
       textCol: String,
       n: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      seed: Long = 42L): DataFrame = {
+      seed: Long = 42L): DataFrame =
+    bandCollisions(
+      fingerprintIndex(df, idCol, textCol, n, numHashes, seed).select(col("id"), col("sig")),
+      numHashes, bands)
+
+  /** The seeded band table: (bid, band, band_hash) keys derived
+    * row-locally from signature array slices — no text, no re-sketch.
+    * Docs with < n tokens have an empty gram set and the identity
+    * signature (all Long.MaxValue); they are excluded, or every such doc
+    * would band-collide with every other one, an O(tiny-docs^2) explosion.
+    */
+  private def sigBandTable(
+      src: DataFrame, id: Column, sig: Column, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val r = numHashes / bands
-    // Docs with < n tokens have an empty gram set and the identity
-    // signature (all Long.MaxValue) — without this filter every such doc
-    // band-collides with every other one, an O(tiny-docs^2) explosion.
-    val sig = df.select(
-        col(idCol).as("id"),
-        minHashSignature(col(textCol), n, numHashes, seed).as("sig"))
-      .filter(element_at(col("sig"), 1) =!= Long.MaxValue)
-    // Both sides of the collision self-join are the SAME plan (aliased,
-    // not re-projected), so their shuffle exchanges canonicalize
-    // identically and ReuseExchange materializes the band table once —
-    // signatures are computed a single time with no persist barrier and
-    // no executor cache footprint (persisting an exploded band table is
-    // exactly the kind of cluster-wide cache you don't want at 100 TB).
-    val banded = sig.select(
-      col("id"),
-      posexplode(transform(
+    src.filter(element_at(sig, 1) =!= Long.MaxValue)
+      .select(id.as("bid"), sig.as("bsig"))
+      .select(col("bid"), posexplode(transform(
         sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * lit(r) + lit(1), lit(r))))).as(Seq("band", "band_hash")))
+        b => hash(slice(col("bsig"), b * lit(r) + lit(1), lit(r))))).as(Seq("band", "band_hash")))
+  }
+
+  /** Distinct candidate pairs (id_a < id_b) of `sigs` (id, sig) rows that
+    * share a band. Both sides of the collision self-join are the SAME
+    * plan (aliased, not re-projected), so their shuffle exchanges
+    * canonicalize identically and ReuseExchange materializes the band
+    * table once — signatures are computed a single time with no persist
+    * barrier and no executor cache footprint (persisting an exploded band
+    * table is exactly the kind of cluster-wide cache you don't want at
+    * 100 TB).
+    */
+  private def bandCollisions(sigs: DataFrame, numHashes: Int, bands: Int): DataFrame = {
+    val banded = sigBandTable(sigs, col("id"), col("sig"), numHashes, bands)
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .filter(col("a.bid") < col("b.bid"))
+      .select(col("a.bid").as("id_a"), col("b.bid").as("id_b"))
       .distinct()
   }
 
@@ -311,8 +324,9 @@ object Dedup {
     val keeperDocs = df.join(
       keepers.select(col("__kid").as(idCol)), Seq(idCol), "left_semi")
 
-    val keeperPairs = minHashNearDuplicatesDistinct(
-      keeperDocs, idCol, textCol, n, numHashes, bands, minJaccard, seed)
+    val keeperPairs = minHashNearDuplicatesDistinctPresketched(keeperDocs,
+      fingerprintIndex(keeperDocs, idCol, textCol, n, numHashes, seed).select(col("id"), col("sig")),
+      idCol, textCol, n, numHashes, bands, minJaccard)
 
     // Cross-group expansion: every member of A x every member of B,
     // reordered so id_a < id_b.
@@ -344,26 +358,6 @@ object Dedup {
       .select(col("__ma").as("id_a"), col("__mb").as("id_b"), lit(1.0).as("jaccard"))
 
     cross.unionByName(within)
-  }
-
-  /** The sketch pipeline proper, assuming distinct texts (see
-    * [[minHashNearDuplicates]] for the collapse/expand wrapper).
-    */
-  def minHashNearDuplicatesDistinct(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      minJaccard: Double = 0.5,
-      seed: Long = 42L): DataFrame = {
-    // The candidate table is used three times (both prune sides + the
-    // verify join); its distinct's shuffle exchange canonicalizes
-    // identically across the uses, so ReuseExchange runs the banding
-    // subtree once — no persist barrier needed.
-    val cands = minHashCandidates(df, idCol, textCol, n, numHashes, bands, seed)
-    verifyPairsExactJaccard(cands, df, idCol, textCol, n, minJaccard)
   }
 
   /** Exact n-gram-Jaccard verification of an LSH candidate pair set.
@@ -402,14 +396,15 @@ object Dedup {
       .select("id_a", "id_b", "jaccard")
   }
 
-  /** The presketched sketch pipeline for DISTINCT-TEXT input (the
-    * [[minHashNearDuplicatesDistinct]] twin): band keys from `sigs`
-    * slices, exact-Jaccard verify over the candidate docs — text is
-    * touched only by the verify, so a caller that already exact-deduped
-    * and sketched (the ingestion step) skips the collapse/expand
-    * bookkeeping entirely. Same aliased self-join shape as
-    * [[minHashCandidates]] so ReuseExchange materializes the band table
-    * once.
+  /** The sketch pipeline proper for DISTINCT-TEXT input: band
+    * collisions of the presketched `sigs`, exact-Jaccard verify over the
+    * candidate docs. Text is touched only by the verify, so a caller that
+    * already exact-deduped and sketched (the ingestion step) skips the
+    * collapse/expand bookkeeping of [[minHashNearDuplicates]] entirely.
+    * The candidate table is used three times (both prune sides + the
+    * verify join); its distinct's shuffle exchange canonicalizes
+    * identically across the uses, so ReuseExchange runs the banding
+    * subtree once — no persist barrier needed.
     */
   def minHashNearDuplicatesDistinctPresketched(
       df: DataFrame,
@@ -419,73 +414,9 @@ object Dedup {
       n: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16,
-      minJaccard: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val r = numHashes / bands
-    val banded = sigs
-      .filter(element_at(col("sig"), 1) =!= Long.MaxValue)
-      .select(col("id"), posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("sig"), b * lit(r) + lit(1), lit(r))))).as(Seq("band", "band_hash")))
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash"))
-      .filter(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    verifyPairsExactJaccard(cands, df, idCol, textCol, n, minJaccard)
-  }
-
-  /** [[minHashNearDuplicates]] when the corpus is ALREADY sketched: the
-    * collapse bookkeeping reads `fp`'s content_md5, banding reads sig
-    * slices, and within-group eligibility reads the identity-signature
-    * marker (the all-MaxValue sig IS "empty gram set") — document text
-    * is touched exactly once, to exact-Jaccard-verify the LSH
-    * candidates (bounded by candidate volume). The single-sketch
-    * ingestion path's within-batch sweep (r16).
-    *
-    * `fp` must be [[fingerprintIndex]](df) with matching (n, numHashes,
-    * seed) — pinned equal to the sketch-from-text form in DedupSpec.
-    */
-  def minHashNearDuplicatesPresketched(
-      df: DataFrame,
-      fp: DataFrame, /* id, content_md5, sig */
-      idCol: String,
-      textCol: String,
-      n: Int = 3,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      minJaccard: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val members = fp.select(col("id").as("__mid"), col("content_md5").as("__ghash"))
-    val keepers = members.groupBy("__ghash")
-      .agg(min(col("__mid")).as("__kid"), count(lit(1)).as("__gn"))
-    val keeperSigs = fp
-      .join(keepers.select(col("__kid").as("id")), Seq("id"), "left_semi")
-      .select(col("id"), col("sig"))
-    val keeperPairs = minHashNearDuplicatesDistinctPresketched(
-      df, keeperSigs, idCol, textCol, n, numHashes, bands, minJaccard)
-
-    val kToG = keepers.select(col("__kid"), col("__ghash"))
-    val cross = keeperPairs
-      .join(kToG.select(col("__kid").as("id_a"), col("__ghash").as("__ga")), "id_a")
-      .join(kToG.select(col("__kid").as("id_b"), col("__ghash").as("__gb")), "id_b")
-      .join(members.select(col("__mid").as("__ma"), col("__ghash").as("__ga")), "__ga")
-      .join(members.select(col("__mid").as("__mb"), col("__ghash").as("__gb")), "__gb")
-      .select(
-        least(col("__ma"), col("__mb")).as("id_a"),
-        greatest(col("__ma"), col("__mb")).as("id_b"),
-        col("jaccard"))
-    val eligible = keepers.filter(col("__gn") > 1)
-      .join(fp.select(col("id").as("__kid"), col("sig")), "__kid")
-      .filter(element_at(col("sig"), 1) =!= Long.MaxValue)
-      .select(col("__ghash"))
-    val within = members.join(eligible, "__ghash")
-      .select(col("__ghash"), col("__mid").as("__ma"))
-      .join(members.select(col("__ghash"), col("__mid").as("__mb")), "__ghash")
-      .filter(col("__ma") < col("__mb"))
-      .select(col("__ma").as("id_a"), col("__mb").as("id_b"), lit(1.0).as("jaccard"))
-    cross.unionByName(within)
-  }
+      minJaccard: Double = 0.5): DataFrame =
+    verifyPairsExactJaccard(
+      bandCollisions(sigs, numHashes, bands), df, idCol, textCol, n, minJaccard)
 
   // -------------------------------------------------------------- SimHash
 
@@ -580,38 +511,56 @@ object Dedup {
       n: Int = 3,
       perms: Int = 16,
       bands: Int = 4,
-      minEstJaccard: Double = 0.5): DataFrame = {
+      minEstJaccard: Double = 0.5): DataFrame =
+    portablePairs(df, idCol, textCol, Nil, n, perms, bands, minEstJaccard)
+
+  /** [[minHashPairsPortable]] with extra band-join key columns: two docs
+    * are candidates only when they agree on every `keys` column of `df`
+    * AND on some band's key (an empty `keys` is the plain operator).
+    * Output: id_a, id_b, n_match, est_jaccard.
+    */
+  private def portablePairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      keys: Seq[String],
+      n: Int,
+      perms: Int,
+      bands: Int,
+      minEstJaccard: Double): DataFrame = {
     require(bands >= 1 && perms % bands == 0,
       s"bands must divide perms, got $perms/$bands")
-    val r = perms / bands
     val sigs = minHashSigArrays(df, idCol, textCol, n, perms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Band key = md5 over the band's sig tuple in perm order — identical
-    // string to the former collect_list(struct(perm, sig)) formulation
-    // (array slices are already perm-ordered), now computed row-locally.
-    val bandKeys = sigs.select(col("id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => md5(concat_ws(",",
-          transform(slice(col("hs"), b * lit(r) + lit(1), lit(r)),
-            _.cast("string"))))))
-        .as(Seq("band", "bkey")))
-    val cand = bandKeys.select(col("band"), col("bkey"), col("id").as("id_a"))
-      .join(bandKeys.select(col("band"), col("bkey"), col("id").as("id_b")),
-        Seq("band", "bkey"))
+    val keyed =
+      if (keys.isEmpty) sigs
+      else sigs.join(df.select(col(idCol).as("id") +: keys.map(col): _*), Seq("id"))
+    val bandKeys = keyed.select(col("id") +: keys.map(col) :+
+      posexplode(portableBandKeys(col("hs"), bands, perms / bands)).as(Seq("band", "bkey")): _*)
+    val joinKeys = keys ++ Seq("band", "bkey")
+    def side(id: String) = bandKeys.select(joinKeys.map(col) :+ col("id").as(id): _*)
+    side("id_a").join(side("id_b"), joinKeys)
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
-    cand
       .join(sigs.select(col("id").as("id_a"), col("hs").as("ha")), Seq("id_a"))
       .join(sigs.select(col("id").as("id_b"), col("hs").as("hb")), Seq("id_b"))
-      .withColumn("n_match",
-        aggregate(zip_with(col("ha"), col("hb"),
-            (x, y) => when(x === y, 1L).otherwise(0L)),
-          lit(0L), (acc, x) => acc + x))
+      .withColumn("n_match", matchingSlots(col("ha"), col("hb")))
       .withColumn("est_jaccard",
         round(col("n_match").cast("double") / perms, 6))
       .filter(col("est_jaccard") >= minEstJaccard)
       .select("id_a", "id_b", "n_match", "est_jaccard")
   }
+
+  /** Portable band keys of a signature array: band b's key is the md5 of
+    * its r = perms/bands slot values in perm order, joined by "," —
+    * identical to the former collect_list(struct(perm, sig)) formulation
+    * (array slices are already perm-ordered), computed row-locally.
+    * array<string> of `bands` keys.
+    */
+  private def portableBandKeys(hs: Column, bands: Int, r: Int): Column =
+    transform(sequence(lit(0), lit(bands - 1)),
+      b => md5(concat_ws(",",
+        transform(slice(hs, b * lit(r) + lit(1), lit(r)), _.cast("string")))))
 
   /** The LSH OPERATING CURVE (r16): precision/recall of the banded pair
     * set vs the exhaustive Jaccard truth for EVERY (bands, rows/band)
@@ -645,12 +594,8 @@ object Dedup {
     val sigs = minHashSigArrays(df, idCol, textCol, n, perms)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val allKeys = sigs.select(col("id"), explode(concat(bandConfigs.map { b =>
-        val r = perms / b
-        transform(sequence(lit(0), lit(b - 1)),
-          i => struct(lit(b).as("cfg_bands"), i.as("band"),
-            md5(concat_ws(",",
-              transform(slice(col("hs"), i * lit(r) + lit(1), lit(r)),
-                _.cast("string")))).as("bkey")))
+        transform(portableBandKeys(col("hs"), b, perms / b),
+          (k, i) => struct(lit(b).as("cfg_bands"), i.as("band"), k.as("bkey")))
       }: _*)).as("k"))
       .select(col("id"), col("k.cfg_bands"), col("k.band"), col("k.bkey"))
     val cand = allKeys
@@ -665,9 +610,7 @@ object Dedup {
       .join(sigs.select(col("id").as("id_a"), col("hs").as("ha")), Seq("id_a"))
       .join(sigs.select(col("id").as("id_b"), col("hs").as("hb")), Seq("id_b"))
       .withColumn("__est", round(
-        aggregate(zip_with(col("ha"), col("hb"),
-            (x, y) => when(x === y, 1L).otherwise(0L)),
-          lit(0L), (acc, x) => acc + x).cast("double") / perms, 6))
+        matchingSlots(col("ha"), col("hb")).cast("double") / perms, 6))
       .filter(col("__est") >= minJaccard)
       .select("id_a", "id_b")
     val lsh = cand.join(est, Seq("id_a", "id_b"), "left_semi")
@@ -732,9 +675,6 @@ object Dedup {
       perms: Int = 16,
       bands: Int = 4,
       minEstJaccard: Double = 0.5): DataFrame = {
-    require(bands >= 1 && perms % bands == 0,
-      s"bands must divide perms, got $perms/$bands")
-    val r = perms / bands
     val canon = df.withColumn("__canon",
       graft.functions.TextFunctions.canonicalUrl(col(urlCol)))
     val groups = canon.groupBy(col("__canon"))
@@ -744,32 +684,9 @@ object Dedup {
       .join(groups.select(col("__canon"), col("n_url_dupes")), Seq("__canon"))
       .withColumn("__domain", graft.functions.TextFunctions.registeredDomain(
         graft.functions.TextFunctions.urlHost(col("__canon"))))
-    val sigs = minHashSigArrays(keepers, idCol, textCol, n, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sigd = sigs.join(
-      keepers.select(col(idCol).as("id"), col("__domain").as("dom")), Seq("id"))
-    val bandKeys = sigd.select(col("id"), col("dom"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => md5(concat_ws(",",
-          transform(slice(col("hs"), b * lit(r) + lit(1), lit(r)),
-            _.cast("string"))))))
-        .as(Seq("band", "bkey")))
-    val cand = bandKeys
-      .select(col("dom"), col("band"), col("bkey"), col("id").as("id_a"))
-      .join(bandKeys
-        .select(col("dom"), col("band"), col("bkey"), col("id").as("id_b")),
-        Seq("dom", "band", "bkey"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    val nearDropped = cand
-      .join(sigs.select(col("id").as("id_a"), col("hs").as("ha")), Seq("id_a"))
-      .join(sigs.select(col("id").as("id_b"), col("hs").as("hb")), Seq("id_b"))
-      .withColumn("__est", round(
-        aggregate(zip_with(col("ha"), col("hb"),
-            (x, y) => when(x === y, 1L).otherwise(0L)),
-          lit(0L), (acc, x) => acc + x).cast("double") / perms, 6))
-      .filter(col("__est") >= minEstJaccard)
-      .select(col("id_b").as(idCol)).distinct()
+    val nearDropped =
+      portablePairs(keepers, idCol, textCol, Seq("__domain"), n, perms, bands, minEstJaccard)
+        .select(col("id_b").as(idCol)).distinct()
     keepers.join(nearDropped, Seq(idCol), "left_anti")
       .select(col(idCol), col("__canon").as("canon"),
         col("__domain").as("domain"), col("n_url_dupes"))
@@ -944,10 +861,7 @@ object Dedup {
     val right = sigs.select(col("group").as("group_b"), col("group_sig").as("sb"))
     left.crossJoin(right)
       .filter(col("group_a") < col("group_b"))
-      .withColumn("n_match",
-        aggregate(zip_with(col("sa"), col("sb"),
-            (x, y) => when(x === y, 1L).otherwise(0L)),
-          lit(0L), (acc, x) => acc + x))
+      .withColumn("n_match", matchingSlots(col("sa"), col("sb")))
       .withColumn("est_jaccard",
         round(col("n_match").cast("double") / perms, 6))
       .select("group_a", "group_b", "n_match", "est_jaccard")
@@ -1027,6 +941,7 @@ object Dedup {
       maxHamming: Int = 2,
       seed: Long = 42L): DataFrame = {
     import graft.functions.VectorOps
+    val chunkKeys = VectorOps.hyperplaneChunkKeys(numPlanes, maxHamming)
     val dim = df.select(size(col(vecCol))).head().getInt(0)
     val planes = VectorOps.randomPlanes(numPlanes, dim, seed)
     // Norm per row up front: the verify join scores every candidate pair
@@ -1036,16 +951,7 @@ object Dedup {
       .withColumn("nrm", VectorOps.l2Norm(col("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    val chunks = maxHamming + 1
-    val bitsPer = (numPlanes + chunks - 1) / chunks
-    val chunkCols = (0 until chunks).map { c =>
-      val start = c * bitsPer
-      val width = math.max(1, math.min(bitsPer, numPlanes - start))
-      struct(
-        lit(c).as("chunk"),
-        shiftrightunsigned(col("sig"), start).bitwiseAND(lit((1L << width) - 1)).as("cv"))
-    }
-    val exploded = v.select(col("id"), explode(array(chunkCols: _*)).as("ch"))
+    val exploded = v.select(col("id"), explode(chunkKeys(col("sig"))).as("ch"))
       .select(col("id"), col("ch.chunk").as("chunk"), col("ch.cv").as("cv"))
     val cands = exploded.select(col("id").as("id_a"), col("chunk"), col("cv"))
       .join(exploded.select(col("id").as("id_b"), col("chunk"), col("cv")), Seq("chunk", "cv"))
@@ -1100,11 +1006,10 @@ object Dedup {
     * `minAgreement` is the estimated-Jaccard cutoff (estimator stddev
     * ~ sqrt(j(1-j)/numHashes), ~0.06 at j=0.5, numHashes=64).
     *
-    * Sketches the batch once and delegates to the presketched id probe
-    * ([[duplicateIdsAgainstIndex]]) — callers that already hold a
-    * [[fingerprintIndex]] frame for the batch (the ingestion step does,
-    * it writes one as the index delta anyway) should call the
-    * presketched form directly and skip this sketch entirely.
+    * Drops the `id_a` set of [[pairsAgainstIndex]] — callers that
+    * already hold a [[fingerprintIndex]] frame for the batch (the
+    * ingestion step does, it writes one as the index delta anyway) read
+    * it from [[pairsAgainstIndexPresketched]] and skip this sketch.
     */
   def dropAgainstIndex(
       batch: DataFrame,
@@ -1116,65 +1021,9 @@ object Dedup {
       minAgreement: Double = 0.5,
       n: Int = 3,
       seed: Long = 42L): DataFrame = {
-    val fp = fingerprintIndex(batch, idCol, textCol, n, numHashes, seed)
-    val dup = duplicateIdsAgainstIndex(fp, index, numHashes, bands, minAgreement)
-    batch.join(dup.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-  }
-
-  /** The shared presketched banding step: (band, band_hash) keys derived
-    * row-locally from signature array slices — no text, no re-sketch.
-    * Identity signatures (sub-n-token docs) are excluded on both sides.
-    */
-  private def sigBandTable(
-      src: DataFrame, id: Column, sig: Column, bands: Int, r: Int): DataFrame =
-    src.filter(element_at(sig, 1) =!= Long.MaxValue)
-      .select(id.as("bid"), sig.as("bsig"))
-      .select(col("bid"), posexplode(transform(
-        sequence(lit(0), lit(bands - 1)),
-        b => hash(slice(col("bsig"), b * lit(r) + lit(1), lit(r))))).as(Seq("band", "band_hash")))
-
-  /** Ids of `fp` rows that duplicate the INDEXED corpus — exact copies
-    * by content-md5 join, near copies by band collision verified with
-    * signature agreement. Pure fingerprint arithmetic on BOTH sides:
-    * `fp` is a [[fingerprintIndex]] frame (id, content_md5, sig), so
-    * the probe touches no document text at all (r16 — this is what
-    * lets [[graft.operators.Ingest.ingestIncrement]] sketch its batch
-    * exactly once).
-    */
-  def duplicateIdsAgainstIndex(
-      fp: DataFrame, /* id, content_md5, sig */
-      index: DataFrame, /* id, content_md5, sig */
-      numHashes: Int = 64,
-      bands: Int = 16,
-      minAgreement: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    require(minAgreement > 0 && minAgreement <= 1,
-      s"minAgreement must be in (0,1], got $minAgreement")
-    val r = numHashes / bands
-    // Exact copies of indexed content: the content-hash join.
-    val exact = fp.join(
-        index.select(col("content_md5")), Seq("content_md5"), "left_semi")
-      .select(col("id"))
-    val afterExact = fp.join(
-      index.select(col("content_md5")), Seq("content_md5"), "left_anti")
-    // Candidate (batch, index) pairs from band collisions — the sigs are
-    // NOT carried through the 16x explode; they rejoin per distinct pair.
-    val cands = sigBandTable(afterExact, col("id"), col("sig"), bands, r)
-      .join(
-        sigBandTable(index, col("id"), col("sig"), bands, r)
-          .withColumnRenamed("bid", "iid"),
-        Seq("band", "band_hash"))
-      .select(col("bid"), col("iid")).distinct()
-    val near = cands
-      .join(afterExact.select(col("id").as("bid"), col("sig").as("_sig")), "bid")
-      .join(index.select(col("id").as("iid"), col("sig")), "iid")
-      .withColumn("_agree",
-        aggregate(zip_with(col("_sig"), col("sig"),
-            (a, b) => when(a === b, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / lit(numHashes))
-      .filter(col("_agree") >= minAgreement)
-      .select(col("bid").as("id")).distinct()
-    exact.unionByName(near)
+    val dup = pairsAgainstIndex(batch, idCol, textCol, index, numHashes, bands, minAgreement, n, seed)
+      .select(col("id_a").as(idCol)).distinct()
+    batch.join(dup, Seq(idCol), "left_anti")
   }
 
   /** Cross-batch near-duplicate PAIRS: (id_a = batch doc, id_b = indexed
@@ -1218,10 +1067,8 @@ object Dedup {
       numHashes: Int = 64,
       bands: Int = 16,
       minAgreement: Double = 0.5): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
     require(minAgreement > 0 && minAgreement <= 1,
       s"minAgreement must be in (0,1], got $minAgreement")
-    val r = numHashes / bands
     val bfp = fp.select(
       col("id").as("id_a"), col("content_md5").as("_md5"), col("sig").as("_sig"))
     val exactPairs = bfp
@@ -1231,19 +1078,18 @@ object Dedup {
     val afterExact = bfp.join(
       index.select(col("content_md5").as("_md5")), Seq("_md5"), "left_anti")
 
-    val cands = sigBandTable(afterExact, col("id_a"), col("_sig"), bands, r)
+    // Candidate (batch, index) pairs from band collisions — the sigs are
+    // NOT carried through the band explode; they rejoin per distinct pair.
+    val cands = sigBandTable(afterExact, col("id_a"), col("_sig"), numHashes, bands)
       .join(
-        sigBandTable(index, col("id"), col("sig"), bands, r)
+        sigBandTable(index, col("id"), col("sig"), numHashes, bands)
           .withColumnRenamed("bid", "iid"),
         Seq("band", "band_hash"))
       .select(col("bid"), col("iid")).distinct()
     val nearPairs = cands
       .join(afterExact.select(col("id_a").as("bid"), col("_sig")), "bid")
       .join(index.select(col("id").as("iid"), col("sig")), "iid")
-      .withColumn("agreement",
-        aggregate(zip_with(col("_sig"), col("sig"),
-            (a, b) => when(a === b, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / lit(numHashes))
+      .withColumn("agreement", matchingSlots(col("_sig"), col("sig")).cast("double") / lit(numHashes))
       .filter(col("agreement") >= minAgreement)
       .select(col("bid").as("id_a"), col("iid").as("id_b"), col("agreement"))
     exactPairs.unionByName(nearPairs)

@@ -1184,22 +1184,9 @@ object SimilaritySearch {
       maxHamming: Int = 2,
       seed: Long = 42L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // With fewer planes than chunks, the trailing chunks would hash every
-    // row to 0 and the join silently degenerates to a cross join (correct
-    // but brute-force cost) — fail loudly instead.
-    require(numPlanes >= maxHamming + 1,
-      s"knnJoinLSH needs numPlanes >= maxHamming + 1 (got numPlanes=$numPlanes, maxHamming=$maxHamming)")
+    val chunkCols = VectorOps.hyperplaneChunkKeys(numPlanes, maxHamming)
     val dim = left.select(size(col(vecColL))).head().getInt(0)
     val planes = VectorOps.randomPlanes(numPlanes, dim, seed)
-    val chunks = maxHamming + 1
-    val bitsPer = (numPlanes + chunks - 1) / chunks
-    def chunkCols(sig: Column): Column = array((0 until chunks).map { c =>
-      val start = c * bitsPer
-      val width = math.max(1, math.min(bitsPer, numPlanes - start))
-      struct(
-        lit(c).as("chunk"),
-        shiftrightunsigned(sig, start).bitwiseAND(lit((1L << width) - 1)).as("cv"))
-    }: _*)
 
     def prep(df: DataFrame, idCol: String, vecCol: String, side: String): DataFrame =
       df.select(col(idCol).as(s"id_$side"), col(vecCol).as(s"v_$side"))

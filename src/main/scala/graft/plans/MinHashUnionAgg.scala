@@ -101,9 +101,15 @@ object MinHashUnionAgg {
   /** Estimated Jaccard between two equal-length signatures: fraction of
     * agreeing slots (the MinHash estimator).
     */
-  def signatureJaccard(a: Column, b: Column): Column = {
+  def signatureJaccard(a: Column, b: Column): Column =
+    matchingSlots(a, b).cast("double") / org.apache.spark.sql.functions.size(a)
+
+  /** Number of slots (bigint) at which two equal-length signatures agree:
+    * the numerator of every MinHash Jaccard estimate, seeded or portable.
+    */
+  private[graft] def matchingSlots(a: Column, b: Column): Column = {
     import org.apache.spark.sql.functions._
-    val pairs = zip_with(a, b, (x, y) => (x === y).cast("int"))
-    aggregate(pairs, lit(0), (acc, x) => acc + x).cast("double") / size(a)
+    aggregate(zip_with(a, b, (x, y) => when(x === y, 1L).otherwise(0L)),
+      lit(0L), (acc, x) => acc + x)
   }
 }

@@ -511,8 +511,7 @@ object ScaleStress {
     val census = CensusStore.read(spark, censusPath, "tok")
     println("[stress]   vocab = " + census.count())
     time("frozen-LM scoring, 1-replica batch")(
-      println("[stress]   scored = " + CorpusStats.surprisalAgainstCensus(
-        base, "doc_id", "text", Seq(census)).count()))
+      Meter.consume(CorpusStats.surprisalAgainstCensus(base, "doc_id", "text", Seq(census))))
     docs.unpersist()
     }
 

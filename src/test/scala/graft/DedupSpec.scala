@@ -159,6 +159,14 @@ class DedupSpec extends SparkSpec {
     assert(lsh.contains((100L, 101L)), "near-identical vectors share every hyperplane side")
   }
 
+  test("embeddingNearDuplicatesLSH rejects the degenerate numPlanes < maxHamming + 1 config") {
+    val emb = TableIO.table(spark, Sf0001, "embeddings").limit(10)
+    intercept[IllegalArgumentException] {
+      Dedup.embeddingNearDuplicatesLSH(emb, "vec_id", "embedding", 0.5,
+        numPlanes = 2, maxHamming = 2)
+    }
+  }
+
   test("embedding near-dup finds planted duplicate") {
     val emb = Seq(
       (1L, Seq(1.0f, 0.0f, 0.0f)),
@@ -235,23 +243,17 @@ class DedupSpec extends SparkSpec {
   }
 
   test("presketched forms are output-identical to the sketch-from-text forms") {
-    // Copy-dense + near-dup + tiny-doc corpus: exercises the collapse/
-    // expand bookkeeping, the within-group 1.0 pairs, the identity-
-    // signature eligibility marker, and both index probes.
+    // Copy-dense + near-dup + tiny-doc corpus: exercises exact (md5)
+    // and near (band + agreement) index pairs, the identity-signature
+    // exclusion, and the drop policy built on the pair probe.
     val t1 = "the quick brown fox jumps over the lazy dog near the river bank today"
     val t2 = "the quick brown fox jumps over the lazy dog near the river bank tonight"
     val t3 = "completely unrelated content about astronomy telescopes and distant galaxies"
     val docs = Seq(
       (1L, t1), (2L, t1), (3L, t2), (4L, t3), (5L, "tiny doc"), (6L, "tiny doc")
     ).toDF("doc_id", "text")
-    val fp = Dedup.fingerprintIndex(docs, "doc_id", "text")
     def pins(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
-    // within-corpus pairs
-    assert(
-      pins(Dedup.minHashNearDuplicatesPresketched(
-        docs, fp, "doc_id", "text", 3, 64, 16, 0.4)) ==
-      pins(Dedup.minHashNearDuplicates(docs, "doc_id", "text", 3, 64, 16, 0.4)))
     // index probes: evens indexed, odds the batch
     val corpus = docs.filter($"doc_id" % 2 === 0)
     val batch = docs.filter($"doc_id" % 2 === 1)
@@ -261,8 +263,9 @@ class DedupSpec extends SparkSpec {
       pins(Dedup.pairsAgainstIndexPresketched(fpB, index, minAgreement = 0.4)) ==
       pins(Dedup.pairsAgainstIndex(batch, "doc_id", "text", index,
         minAgreement = 0.4)))
-    val dupIds = Dedup.duplicateIdsAgainstIndex(fpB, index, minAgreement = 0.4)
-      .as[Long].collect().toSet
+    val dupIds = Dedup.pairsAgainstIndexPresketched(fpB, index, minAgreement = 0.4)
+      .select("id_a").as[Long].collect().toSet
+    assert(dupIds == Set(1L, 3L, 5L)) // exact copy of 2, near copy of 2, exact tiny copy of 6
     val kept = Dedup.dropAgainstIndex(batch, "doc_id", "text", index,
       minAgreement = 0.4).select("doc_id").as[Long].collect().toSet
     assert(batch.select("doc_id").as[Long].collect().toSet -- dupIds == kept)

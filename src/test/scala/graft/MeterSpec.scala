@@ -6,7 +6,7 @@ import graft.tools.Meter
 
 class MeterSpec extends SparkSpec {
   private def run(name: String): Meter.Reading = {
-    val r = Meter.measure(spark)(SparkEntry.queries(name)(spark, Sf0001).count())
+    val r = Meter.measure(spark)(Meter.consume(SparkEntry.queries(name)(spark, Sf0001)))
     spark.catalog.clearCache()
     r
   }
@@ -37,6 +37,17 @@ class MeterSpec extends SparkSpec {
       assert(r.jobs >= 1)
     } finally leaked.unpersist(blocking = true)
     assert(Meter.measure(spark)(spark.range(10).count()).cachedPlans == 0)
+  }
+
+  test("consume computes every projected column of every row; count() does not") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val seen = spark.sparkContext.longAccumulator("meter_consume_rows")
+    val bump = udf { (x: Long) => seen.add(1L); x }
+    val df = spark.range(0, 500, 1, 4).select(bump(col("id")).as("x"))
+    df.count()
+    assert(seen.value == 0L, "count() pruned the projection")
+    Meter.consume(df)
+    assert(seen.value == 500L)
   }
 
   test("q_label_alpha_interval leaves no plan cached") {
