@@ -16,7 +16,10 @@ import graft.operators.{Chunker, TrainingData}
   *   2. GATE + DEDUP (silver): quality/language/contamination gates,
   *      then exact dedup keeping the lowest doc id per fingerprint.
   *      Gates run BEFORE the dedup shuffle, so rejected documents never
-  *      cross the wire.
+  *      cross the wire. When a corpus-stateful stage follows (near
+  *      dedup, line or span strip), the exact-dedup pool lands under
+  *      `silver_exact` first, so those stages read one parquet scan
+  *      instead of re-running the gate lineage once per reference.
   *   3. CHUNK: sliding token windows over the REDACTED text, document
   *      metadata carried through the explode.
   *   4. PACK + WRITE: per-source token-budget shard assignment, written
@@ -38,7 +41,8 @@ object RunCorpusPipeline {
       maxContamination: Double = 0.2,
       /** Also drop NEAR-duplicates (MinHash -> verified pairs ->
         * transitive clusters -> keep-min) between the exact-dedup and
-        * chunking stages. Off by default: near-dedup is the one stage
+        * chunking stages, reading the exact-dedup pool landed under
+        * `silver_exact`. Off by default: near-dedup is the one stage
         * whose cost is super-linear in candidate density, so it is an
         * explicit opt-in exactly like the reference pipelines it
         * mirrors.
@@ -116,6 +120,14 @@ object RunCorpusPipeline {
   def silver(cfg: CorpusConfig): String = s"${cfg.root}/silver"
   def shards(cfg: CorpusConfig): String = s"${cfg.root}/shards"
 
+  /** Writes `df` to `path` as parquet and reads it back, so every later
+    * stage plans against one file scan instead of `df`'s lineage.
+    */
+  private def land(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.parquet(path)
+  }
+
   /** Numeric chunk uid for shard packing: doc_id * 1000 + chunk_id,
     * GUARDED row-locally (`raise_error`, zero extra jobs) against the
     * two silent-corruption modes of arithmetic key packing — a doc with
@@ -154,7 +166,7 @@ object RunCorpusPipeline {
     // Stage 1 — annotate: single scan, row-local, no shuffle. The
     // repetition signals ride the same scan (byte kernels) whether or
     // not their gates are enabled — annotations are the product.
-    docs
+    val ann = land(docs
       .select(Seq(
         col("doc_id"), col("source"), col("text"),
         TextFunctions.qualityScore(col("text")).as("quality"),
@@ -165,11 +177,9 @@ object RunCorpusPipeline {
         TextFunctions.redactPii(col("text")).as("clean_text")) ++
         TextFunctions.PiiPatterns.map { case (kind, _) =>
           TextFunctions.piiCount(col("text"), kind).as(s"n_pii_${kind.toLowerCase}")
-        }: _*)
-      .write.mode("overwrite").parquet(annotated(cfg))
+        }: _*), annotated(cfg))
 
     // Stage 2 — gate + exact dedup.
-    val ann = spark.read.parquet(annotated(cfg))
     val langGate = col("lang_pred").isin(cfg.langs.toSeq: _*)
     val bandGated =
       if (cfg.minSurprisal.isNegInfinity && cfg.maxSurprisal.isPosInfinity) ann
@@ -209,11 +219,17 @@ object RunCorpusPipeline {
       .withColumn("_rn", row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
       .filter(col("_rn") === 1)
       .drop("_rn")
+    // Near dedup and the strips reference their input several times
+    // each; landing the pool runs the gate lineage once for all of them.
+    val exactPool =
+      if (cfg.nearDedup || cfg.stripLines || cfg.stripSpans)
+        land(exactDeduped, s"${cfg.root}/silver_exact")
+      else exactDeduped
     val deduped =
       if (cfg.nearDedup)
         graft.operators.Components.dropNearDuplicates(
-          exactDeduped, "doc_id", "text", minJaccard = cfg.nearDedupJaccard)
-      else exactDeduped
+          exactPool, "doc_id", "text", minJaccard = cfg.nearDedupJaccard)
+      else exactPool
     // Boilerplate passes run on the SURVIVORS' redacted text: whole-doc
     // dedup first (cheapest, removes entire copies), then line-grain
     // strip, then the span pass only pays for what remains.
@@ -234,28 +250,27 @@ object RunCorpusPipeline {
     // then read parquet instead of re-executing the gate/dedup/strip
     // lineage per pass, and the unselected pool is itself a product
     // (re-select with a different target without re-cleaning).
-    if (!dsirOn) stripped.write.mode("overwrite").parquet(silver(cfg))
-    else {
-      import graft.operators.Dsir
-      stripped.write.mode("overwrite").parquet(s"${cfg.root}/silver_pre_dsir")
-      val pool = spark.read.parquet(s"${cfg.root}/silver_pre_dsir")
-      val root = cfg.dsirCensusRoot.get
-      val w = Dsir.importanceWeights(pool, "doc_id", "clean_text",
-          Dsir.readFeatureCensus(spark, s"$root/target"),
-          Dsir.readFeatureCensus(spark, s"$root/raw"), cfg.dsirBuckets)
-        .filter(col("log_weight") >= cfg.dsirMinLogWeight)
-      val selected =
+    val selected =
+      if (!dsirOn) stripped
+      else {
+        import graft.operators.Dsir
+        val pool = land(stripped, s"${cfg.root}/silver_pre_dsir")
+        val root = cfg.dsirCensusRoot.get
+        val w = Dsir.importanceWeights(pool, "doc_id", "clean_text",
+            Dsir.readFeatureCensus(spark, s"$root/target"),
+            Dsir.readFeatureCensus(spark, s"$root/raw"), cfg.dsirBuckets)
+          .filter(col("log_weight") >= cfg.dsirMinLogWeight)
         if (cfg.dsirSampleK > 0L)
           Dsir.resampleTopK(w, "doc_id", col("log_weight"), cfg.dsirSampleK,
             salt = "dsir")
         else w
-      selected.write.mode("overwrite").parquet(silver(cfg))
-    }
+      }
+    val silverDocs = land(selected, silver(cfg))
 
     // Stage 3 + 4 — chunk the redacted text, pack per source, write
     // shard-partitioned data + manifest.
     val chunks = Chunker
-      .chunkDocuments(spark.read.parquet(silver(cfg)), "clean_text", "doc_id",
+      .chunkDocuments(silverDocs, "clean_text", "doc_id",
         cfg.window, cfg.stride, carryCols = Seq("source"))
       .withColumn("chunk_uid", packedChunkUid)
     val packed = TrainingData.packShards(

@@ -277,8 +277,9 @@ object Ingest {
           .select(col("id_a").as(idCol)).distinct()
         landingDedup.join(dupIds, Seq(idCol), "left_anti")
     }
-    val counts = writeObserved(landing.observe(landedRows, count(lit(1))),
-      s"$outPath/batch=$batchId", Seq(batchRows, landedRows))
+    val counts = graft.sources.TableIO.writeObserved(
+      landing.observe(landedRows, count(lit(1))), s"$outPath/batch=$batchId",
+      Seq(batchRows, landedRows), SaveMode.Overwrite)
     val dropped = counts(batchRows) - counts(landedRows)
     val survivors = spark.read.parquet(s"$outPath/batch=$batchId")
 
@@ -315,32 +316,5 @@ object Ingest {
           .unionByName(within)
     }
     (IngestResult(survivors, dropped), edges, candPairs)
-  }
-
-  /** Overwrites `path` with `df` as parquet and returns the one-count
-    * metrics `names` that `df`'s named `observe` nodes recorded in that
-    * write. Read through a query listener, not an `Observation`: an
-    * Observation starts the session's ObservationManager, which is not
-    * serializable, and from then on every task closure that captures
-    * the session fails (a RandomForest model's training summary holds
-    * it, so `FraudModel` predictions broke).
-    */
-  private def writeObserved(
-      df: DataFrame, path: String, names: Seq[String]): Map[String, Long] = {
-    val seen = scala.concurrent.Promise[Map[String, Long]]()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          ns: Long): Unit = {
-        val m = qe.observedMetrics
-        if (names.forall(m.contains)) seen.trySuccess(names.map(n => n -> m(n).getLong(0)).toMap)
-      }
-      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
-          e: Exception): Unit = ()
-    }
-    df.sparkSession.listenerManager.register(listener)
-    try {
-      df.write.mode(SaveMode.Overwrite).parquet(path)
-      scala.concurrent.Await.result(seen.future, scala.concurrent.duration.Duration.Inf)
-    } finally df.sparkSession.listenerManager.unregister(listener)
   }
 }

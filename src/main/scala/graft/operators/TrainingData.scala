@@ -284,7 +284,9 @@ object TrainingData {
     * one directory per shard, the layout a sequential shard reader
     * expects — plus the [[shardManifest]] under `manifest`. The
     * partition-aligned repartition before the write keeps it to one file
-    * per shard instead of one file per (task x shard).
+    * per shard instead of one file per (task x shard). Its explicit
+    * count (the session's shuffle partitions) stops AQE from coalescing
+    * the exchange into one task that writes every shard serially.
     */
   def writeShards(
       packed: DataFrame,
@@ -292,7 +294,8 @@ object TrainingData {
       idCol: String,
       outDir: String): Unit = {
     packed
-      .repartition(col(groupCol), col("shard_idx"))
+      .repartition(packed.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col(groupCol), col("shard_idx"))
       .sortWithinPartitions(col(groupCol), col("shard_idx"), col(idCol))
       .write.mode("overwrite")
       .partitionBy(groupCol, "shard_idx")

@@ -23,6 +23,34 @@ object TableIO {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
   }
 
+  /** Writes `df` to `path` as parquet with `mode` and returns the
+    * one-count metrics `names` that `df`'s named `observe` nodes
+    * recorded in that write, so a row count costs no job of its own.
+    * Read through a query listener, not an `Observation`: an
+    * Observation starts the session's ObservationManager, which is not
+    * serializable, and from then on every task closure that captures
+    * the session fails (a RandomForest model's training summary holds
+    * it, so `FraudModel` predictions broke).
+    */
+  private[graft] def writeObserved(
+      df: DataFrame, path: String, names: Seq[String], mode: SaveMode): Map[String, Long] = {
+    val seen = scala.concurrent.Promise[Map[String, Long]]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = {
+        val m = qe.observedMetrics
+        if (names.forall(m.contains)) seen.trySuccess(names.map(n => n -> m(n).getLong(0)).toMap)
+      }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    df.sparkSession.listenerManager.register(listener)
+    try {
+      df.write.mode(mode).parquet(path)
+      scala.concurrent.Await.result(seen.future, scala.concurrent.duration.Duration.Inf)
+    } finally df.sparkSession.listenerManager.unregister(listener)
+  }
+
   /** Bucketed external table write: both sides of a repeated equi-join
     * bucketed (+sorted) into the same bucket count on the join key join
     * with ZERO shuffle exchanges afterwards — pay the partitioning once

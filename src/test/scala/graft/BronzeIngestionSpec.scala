@@ -39,6 +39,26 @@ class BronzeIngestionSpec extends SparkSpec {
     assert(ts.toString == "2023-05-01 10:00:00.123456")
   }
 
+  test("corruptRows counts this run's quarantine rows, not earlier runs' appends") {
+    val rows = Seq(
+      "t1,2023-05-01T10:00:00.123456,a1,a2,10.5,payment,grocery,Berlin,atm,false,,1.0,0.1,2,0.3,card,ip,d1",
+      "t3,2023-05-02T12:00:00.000000,a2,a1,NOT_A_NUMBER,payment,grocery,Berlin,atm,false,,1.0,0.1,2,0.3,card,ip,d3",
+      "garbage,row")
+    val quarantine = s"$root/quarantine_rerun_${System.nanoTime()}"
+    Seq(1, 2).foreach { run =>
+      val res = BronzeIngestion.ingestToBronze(
+        spark, writeCsv(rows), s"$root/bronze_rerun", quarantine)
+      assert(res.corruptRows == 2, s"run $run")
+      assert(res.cleanRows == 1, s"run $run")
+    }
+    // The quarantine itself still appends: both runs' rows are kept.
+    assert(spark.read.parquet(quarantine).count() == 4)
+    // A run with no corrupt rows reports 0 from its own (empty) write.
+    val clean = BronzeIngestion.ingestToBronze(
+      spark, writeCsv(rows.take(1)), s"$root/bronze_rerun", quarantine)
+    assert(clean.corruptRows == 0)
+  }
+
   test("interim path fails closed on null amounts") {
     val csv = writeCsv(Seq(
       "t1,2023-05-01T10:00:00.000000,a1,a2,,payment,grocery,Berlin,atm,false,,1,0.1,2,0.3,card,ip,d1"))

@@ -152,6 +152,48 @@ class CorpusPipelineSpec extends SparkSpec {
       Set(1L, 3L))
   }
 
+  test("near dedup reads the landed exact-dedup pool; silver_exact lands only for stateful stages") {
+    val docs = Seq(
+      (1L, "web", goodText),
+      (2L, "web", goodText.replace("dog", "cat")),
+      (3L, "web", goodText), // exact copy of doc 1
+      (4L, "web", "completely different content that stands firmly on its own " +
+        "with the a of and to in words enough to pass the quality gate"))
+      .toDF("doc_id", "source", "text")
+    def run(tag: String, cfg: String => CorpusConfig): String = {
+      val root = s"target/tmp/corpus_land_${tag}_${System.nanoTime()}"
+      RunCorpusPipeline.run(spark, docs, cfg(root))
+      root
+    }
+    def landed(root: String): Boolean = new java.io.File(s"$root/silver_exact").exists()
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+      df.select(df.columns.sorted.map(col): _*).orderBy("doc_id").collect().toSeq
+
+    // With no stateful stage, silver is the exact-dedup frame and nothing else lands.
+    val off = run("off", r => CorpusConfig(root = r, window = 8, stride = 6))
+    assert(!landed(off))
+    val exactRows = spark.read.parquet(s"$off/silver").collect()
+    val schema = spark.read.parquet(s"$off/silver").schema
+    val inMemory = spark.createDataFrame(
+      spark.sparkContext.parallelize(exactRows.toSeq, 2), schema)
+    assert(exactRows.map(_.getAs[Long]("doc_id")).toSet == Set(1L, 2L, 4L))
+
+    val cfgOn = (r: String) => CorpusConfig(root = r, window = 8, stride = 6, nearDedup = true)
+    val on = run("near", cfgOn)
+    assert(landed(on))
+    assert(sorted(spark.read.parquet(s"$on/silver_exact")) == sorted(inMemory))
+    val expected = graft.operators.Components.dropNearDuplicates(
+      inMemory, "doc_id", "text", minJaccard = cfgOn(on).nearDedupJaccard)
+    assert(sorted(spark.read.parquet(s"$on/silver")) == sorted(expected))
+    assert(spark.read.parquet(s"$on/silver").select("doc_id").as[Long].collect().toSet ==
+      Set(1L, 4L))
+
+    assert(landed(run("lines", r =>
+      CorpusConfig(root = r, window = 8, stride = 6, stripLines = true))))
+    assert(landed(run("spans", r =>
+      CorpusConfig(root = r, window = 8, stride = 6, stripSpans = true, stripSpanMinLen = 40))))
+  }
+
   test("stripSpans removes planted boilerplate; surprisal band gates the degenerate doc") {
     // boilerplate (>= minLen) planted in two otherwise-distinct docs;
     // doc 4 is stopword soup: lowest surprisal by construction (every

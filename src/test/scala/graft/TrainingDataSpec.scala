@@ -135,6 +135,36 @@ class TrainingDataSpec extends SparkSpec {
     assert(persisted.count() == manifest.size)
   }
 
+  test("writeShards writes exactly one data file per shard directory at 1 and 4 partitions") {
+    val docs = (1L to 60L).map(i => (i, if (i % 3 == 0) "g2" else "g1", s"w$i x y z"))
+      .toDF("doc_id", "source", "text")
+    val packed = TrainingData.packShards(
+      docs, "doc_id", "source",
+      graft.functions.TextFunctions.tokenCount(col("text")), budgetTokens = 12L)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try Seq(1, 4).foreach { parts =>
+      spark.conf.set(key, parts.toString)
+      val out = s"target/tmp/shard_files_${parts}_${System.nanoTime()}"
+      TrainingData.writeShards(packed, "source", "doc_id", out)
+      val manifest = spark.read.parquet(s"$out/manifest").collect()
+      assert(manifest.length > 4, s"fixture should span several shards: ${manifest.length}")
+      val dirs = new java.io.File(s"$out/data").listFiles().filter(_.isDirectory)
+        .flatMap(_.listFiles().filter(_.isDirectory))
+      assert(dirs.length == manifest.length, s"one directory per manifest row at $parts partitions")
+      dirs.foreach { d =>
+        val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"$d holds ${files.mkString(",")} at $parts partitions")
+      }
+      manifest.foreach { r =>
+        val (src, idx, nDocs) = (r.getAs[String]("source"), r.getAs[Int]("shard_idx"),
+          r.getAs[Long]("n_docs"))
+        assert(spark.read.parquet(s"$out/data/source=$src/shard_idx=$idx").count() == nDocs,
+          s"shard $src/$idx rows at $parts partitions")
+      }
+    } finally spark.conf.set(key, saved)
+  }
+
   test("packShards rejects a non-positive budget") {
     val docs = Seq((1L, "g", "x")).toDF("doc_id", "source", "text")
     intercept[IllegalArgumentException] {
