@@ -16,10 +16,10 @@ import graft.operators.{Chunker, TrainingData}
   *   2. GATE + DEDUP (silver): quality/language/contamination gates,
   *      then exact dedup keeping the lowest doc id per fingerprint.
   *      Gates run BEFORE the dedup shuffle, so rejected documents never
-  *      cross the wire. When a corpus-stateful stage follows (near
-  *      dedup, line or span strip), the exact-dedup pool lands under
-  *      `silver_exact` first, so those stages read one parquet scan
-  *      instead of re-running the gate lineage once per reference.
+  *      cross the wire. With near dedup on, the exact-dedup pool
+  *      lands under `silver_exact` first, so near dedup reads one
+  *      parquet scan instead of re-running the gate lineage once per
+  *      reference.
   *   3. CHUNK: sliding token windows over the REDACTED text, document
   *      metadata carried through the explode.
   *   4. PACK + WRITE: per-source token-budget shard assignment, written
@@ -219,17 +219,14 @@ object RunCorpusPipeline {
       .withColumn("_rn", row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
       .filter(col("_rn") === 1)
       .drop("_rn")
-    // Near dedup and the strips reference their input several times
-    // each; landing the pool runs the gate lineage once for all of them.
-    val exactPool =
-      if (cfg.nearDedup || cfg.stripLines || cfg.stripSpans)
-        land(exactDeduped, s"${cfg.root}/silver_exact")
-      else exactDeduped
+    // Near dedup references its input several times; landing the pool
+    // runs the gate lineage once for all of them.
     val deduped =
       if (cfg.nearDedup)
         graft.operators.Components.dropNearDuplicates(
-          exactPool, "doc_id", "text", minJaccard = cfg.nearDedupJaccard)
-      else exactPool
+          land(exactDeduped, s"${cfg.root}/silver_exact"), "doc_id", "text",
+          minJaccard = cfg.nearDedupJaccard)
+      else exactDeduped
     // Boilerplate passes run on the SURVIVORS' redacted text: whole-doc
     // dedup first (cheapest, removes entire copies), then line-grain
     // strip, then the span pass only pays for what remains.

@@ -152,7 +152,7 @@ class CorpusPipelineSpec extends SparkSpec {
       Set(1L, 3L))
   }
 
-  test("near dedup reads the landed exact-dedup pool; silver_exact lands only for stateful stages") {
+  test("near dedup reads the landed exact-dedup pool; silver_exact lands only for near dedup") {
     val docs = Seq(
       (1L, "web", goodText),
       (2L, "web", goodText.replace("dog", "cat")),
@@ -169,7 +169,7 @@ class CorpusPipelineSpec extends SparkSpec {
     def sorted(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
       df.select(df.columns.sorted.map(col): _*).orderBy("doc_id").collect().toSeq
 
-    // With no stateful stage, silver is the exact-dedup frame and nothing else lands.
+    // Without near dedup, silver is the exact-dedup frame and nothing else lands.
     val off = run("off", r => CorpusConfig(root = r, window = 8, stride = 6))
     assert(!landed(off))
     val exactRows = spark.read.parquet(s"$off/silver").collect()
@@ -187,11 +187,6 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(sorted(spark.read.parquet(s"$on/silver")) == sorted(expected))
     assert(spark.read.parquet(s"$on/silver").select("doc_id").as[Long].collect().toSet ==
       Set(1L, 4L))
-
-    assert(landed(run("lines", r =>
-      CorpusConfig(root = r, window = 8, stride = 6, stripLines = true))))
-    assert(landed(run("spans", r =>
-      CorpusConfig(root = r, window = 8, stride = 6, stripSpans = true, stripSpanMinLen = 40))))
   }
 
   test("stripSpans removes planted boilerplate; surprisal band gates the degenerate doc") {

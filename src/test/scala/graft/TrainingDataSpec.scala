@@ -135,7 +135,7 @@ class TrainingDataSpec extends SparkSpec {
     assert(persisted.count() == manifest.size)
   }
 
-  test("writeShards writes exactly one data file per shard directory at 1 and 4 partitions") {
+  test("writeShards writes one file per shard directory and one task per shuffle partition") {
     val docs = (1L to 60L).map(i => (i, if (i % 3 == 0) "g2" else "g1", s"w$i x y z"))
       .toDF("doc_id", "source", "text")
     val packed = TrainingData.packShards(
@@ -146,7 +146,22 @@ class TrainingDataSpec extends SparkSpec {
     try Seq(1, 4).foreach { parts =>
       spark.conf.set(key, parts.toString)
       val out = s"target/tmp/shard_files_${parts}_${System.nanoTime()}"
-      TrainingData.writeShards(packed, "source", "doc_id", out)
+      // Result stages are the two writes (data, manifest); every other
+      // stage is a shuffle map stage. AQE coalesces a bare column
+      // repartition of this small input into one write task.
+      val resultStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (e.taskType == "ResultTask") resultStages.add(e.stageId)
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        TrainingData.writeShards(packed, "source", "doc_id", out)
+        org.apache.spark.sql.GraftMeterBridge.drainListeners(spark)
+      } finally spark.sparkContext.removeSparkListener(l)
+      val tasksPerStage = resultStages.toArray.groupBy(identity).values.map(_.length)
+      assert(tasksPerStage.max == parts,
+        s"the data write should run one task per shuffle partition: $tasksPerStage")
       val manifest = spark.read.parquet(s"$out/manifest").collect()
       assert(manifest.length > 4, s"fixture should span several shards: ${manifest.length}")
       val dirs = new java.io.File(s"$out/data").listFiles().filter(_.isDirectory)

@@ -1,15 +1,14 @@
 #!/usr/bin/env python3
 """Interleaved A/B comparison of two source trees on the repository benchmark.
 
-    python3 tools/perfbench_ab.py --base <rev> [--workload W ...] [--pairs 10]
-        [--seed 1000] [--seconds S] [--trace 0|1] [--json out.json]
+    python3 tools/perfbench_ab.py --base-tree DIR [--workload W ...] [--pairs 10]
+        [--seed 1000] [--json out.json]
     python3 tools/perfbench_ab.py --aa [...]          # this tree against itself
-    python3 tools/perfbench_ab.py --base-tree DIR [...]  # an existing checkout as base
 
 The "new" side is the tree this script lives in, as it stands on disk. The
-"base" side is `--base` checked out with `git worktree` under the system
-temp directory (removed on exit), or an existing checkout given with
-`--base-tree`, or, with `--aa`, this tree again.
+"base" side is an existing checkout given with `--base-tree` (make one with
+`git archive <rev> | tar -x -C DIR`), or, with `--aa`, this tree again.
+Every run is untraced and lasts the benchmark's `run_seconds`.
 
 Each tree runs its own `perfbench/run.py`, so each builds and caches its
 own `target/`. Never copy `target/` between trees: one tree's sbt then
@@ -20,9 +19,9 @@ Pair i runs seed `--seed + i` once on each side, alternating which side
 runs first (even pairs: base first). For every metric the report gives
 each side's median and quartiles, the change's wins over the pairs (ties
 count for neither side) and a verdict:
-  gain         the change won at least 9/10 of the pairs and its median
-               is better than the base median by more than the base's
-               quartile distance (IQR);
+  gain         at least 10 pairs ran, the change won at least 9/10 of
+               them, and its median is better than the base median by
+               more than the base's quartile distance (IQR);
   regression   an end-to-end metric whose change median is worse than the
                base median by more than the bound in BENCHMARK.json;
   unresolved   an end-to-end metric whose base IQR over its median is
@@ -35,11 +34,9 @@ import argparse
 import json
 import math
 import os
-import shutil
 import statistics
 import subprocess
 import sys
-import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -66,10 +63,10 @@ def build(tree):
         sys.exit("perfbench_ab: build failed in %s" % tree)
 
 
-def run_once(tree, workload, seed, seconds, trace):
+def run_once(tree, workload, seed, seconds):
     """One perfbench run; returns its result dict, or None if the run failed."""
     cmd = [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True)
     lines = p.stdout.splitlines()
@@ -104,7 +101,7 @@ def verdict(m, base, new):
     out = dict(base_median=bmed, base_q1=bq1, base_q3=bq3,
                new_median=nmed, new_q1=nq1, new_q3=nq3,
                wins=wins, pairs=len(base))
-    if wins >= math.ceil(0.9 * len(base)) and gain > (bq3 - bq1):
+    if len(base) >= 10 and wins >= math.ceil(0.9 * len(base)) and gain > (bq3 - bq1):
         out["verdict"] = "gain"
     elif m["e2e"] and bmed and -gain > m["bound"] * abs(bmed):
         out["verdict"] = "regression"
@@ -119,53 +116,33 @@ def verdict(m, base, new):
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     side = ap.add_mutually_exclusive_group(required=True)
-    side.add_argument("--base", help="git revision to compare against")
     side.add_argument("--base-tree", help="existing checkout to use as the base side")
     side.add_argument("--aa", action="store_true", help="run this tree against itself")
     ap.add_argument("--workload", action="append", help="default: every workload")
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1000)
-    ap.add_argument("--seconds", type=int, help="default: BENCHMARK.json run_seconds")
-    ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--json", help="write every run and the summary here")
     a = ap.parse_args()
 
     spec, metrics = load_spec(ROOT)
     workloads = a.workload or [w["name"] for w in spec["workloads"]]
-    seconds = a.seconds or spec["run_seconds"]
+    seconds = spec["run_seconds"]
 
-    worktree = None
-    if a.aa:
-        base_tree = ROOT
-    elif a.base_tree:
-        base_tree = os.path.abspath(a.base_tree)
-    else:
-        worktree = tempfile.mkdtemp(prefix="perfbench-ab-")
-        os.rmdir(worktree)
-        subprocess.run(["git", "-C", ROOT, "worktree", "add", "--detach", worktree, a.base],
-                       check=True, stdout=subprocess.DEVNULL)
-        base_tree = worktree
-    trees = {"base": base_tree, "new": ROOT}
-    report = {"base": a.base or base_tree, "aa": a.aa, "pairs": a.pairs, "seed": a.seed,
-              "seconds": seconds, "trace": a.trace, "workloads": {}}
-    try:
-        for t in sorted(set(trees.values())):
-            build(t)
-        for w in workloads:
-            runs = {"base": [], "new": []}
-            for i in range(a.pairs):
-                order = ("base", "new") if i % 2 == 0 else ("new", "base")
-                for s in order:
-                    r = run_once(trees[s], w, a.seed + i, seconds, a.trace)
-                    runs[s].append(r)
-                    wall = r["metrics"].get("wall_s", {}).get("value") if r else None
-                    sys.stderr.write("[ab] %s pair %d %s wall_s=%s\n" % (w, i, s, wall))
-            report["workloads"][w] = summarize(w, runs, metrics)
-    finally:
-        if worktree:
-            subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", worktree],
-                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
-            shutil.rmtree(worktree, ignore_errors=True)
+    trees = {"base": ROOT if a.aa else os.path.abspath(a.base_tree), "new": ROOT}
+    report = {"base": trees["base"], "aa": a.aa, "pairs": a.pairs, "seed": a.seed,
+              "seconds": seconds, "workloads": {}}
+    for t in sorted(set(trees.values())):
+        build(t)
+    for w in workloads:
+        runs = {"base": [], "new": []}
+        for i in range(a.pairs):
+            order = ("base", "new") if i % 2 == 0 else ("new", "base")
+            for s in order:
+                r = run_once(trees[s], w, a.seed + i, seconds)
+                runs[s].append(r)
+                wall = r["metrics"].get("wall_s", {}).get("value") if r else None
+                sys.stderr.write("[ab] %s pair %d %s wall_s=%s\n" % (w, i, s, wall))
+        report["workloads"][w] = summarize(w, runs, metrics)
     if a.json:
         with open(a.json, "w") as f:
             json.dump(report, f, indent=1)
