@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.VectorOps
+import SimilaritySearch.{probeCells, rerank, topK}
 
 /** Scalar (int8-range) embedding quantization — the memory-bandwidth
   * arm of similarity search at scale. A float32 corpus at 100 TB is a
@@ -75,30 +77,11 @@ object Quantization {
     })
   }
 
-  /** Sequential-sum dot product of two decoded arrays — deterministic
-    * left-to-right double summation, reproducible in any engine.
-    */
-  def decodedDot(a: Column, b: Column): Column =
-    graft.functions.VectorOps.dot(a, b)
-
-  /** Batch top-k over quantized codes: one corpus scan scores every
-    * query (broadcast query codes, no shuffle on the corpus side until
-    * the per-query top-k window). Self-matches (same id) are excluded.
-    * Scores are decoded-dot (MIPS), rounded to 6dp so ranking ties are
-    * engine-exact; ties break on id. Output: (qid, idCol, qscore, rnk).
-    *
-    * Scale shape: corpus-side work is a single narrow projection +
-    * broadcast nested-loop against Q query rows (Q small); the only
-    * exchange is the hash partition on qid for the top-k window, whose
-    * input is already cut to |corpus| x Q scored rows. For large Q,
-    * compose with the IVF router instead — this operator is the
-    * exact-scoring arm.
-    */
   /** IVF x SQ8 — the FAISS-style composition, both scale levers at
     * once: the IVF cells prune WHICH vectors are scanned
     * (nprobe/nlist of the corpus), the SQ8 codes shrink WHAT the scan
     * reads (1 byte/dim at rest instead of 4). The index stores codes;
-    * scoring decodes to bucket midpoints and takes the exact dot
+    * scoring decodes to bucket midpoints and takes the exact cosine
     * against the full-precision query — asymmetric distance
     * computation, no query-side quantization loss. Recall vs the
     * float IVF probe is pinned in QuantizationSpec (the only extra
@@ -111,27 +94,15 @@ object Quantization {
       mins: Array[Double],
       maxs: Array[Double],
       k: Int,
-      nprobe: Int = 4): DataFrame = {
-    def dist2(c: Array[Double]): Double =
-      c.zip(query).map { case (x, y) => (x - y) * (x - y) }.sum
-    val cells = index.centroids.zipWithIndex
-      .sortBy { case (c, _) => dist2(c) }
-      .take(nprobe).map(_._2)
-    val qLit = typedLit(query)
-    index.assigned
-      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-      // codes-at-rest: in a persisted index this column IS the storage;
-      // quantize-then-decode here reproduces exactly what a stored-code
-      // scan would read.
-      .select(col(idCol),
-        sq8Dequantize(sq8Quantize(col("v"), mins, maxs), mins, maxs).as("dec"))
-      .select(col(idCol),
-        round(decodedDot(col("dec"), qLit) /
-          (sqrt(decodedDot(col("dec"), col("dec"))) * sqrt(decodedDot(qLit, qLit))), 6)
-          .as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
-  }
+      nprobe: Int = 4): DataFrame =
+    topK(probeCells(index, query, nprobe)
+        // codes-at-rest: in a persisted index this column IS the storage;
+        // quantize-then-decode here reproduces exactly what a stored-code
+        // scan would read.
+        .select(col(idCol),
+          sq8Dequantize(sq8Quantize(col("v"), mins, maxs), mins, maxs).as("dec"))
+        .select(col(idCol), SimilaritySearch.cosineTo(col("dec"), query).as("cos_sim")),
+      idCol, "cos_sim", k)
 
   // ---------------------- product quantization ---------------------- //
 
@@ -218,16 +189,10 @@ object Quantization {
       idCol: String,
       vecCol: String,
       query: Array[Double],
-      k: Int): DataFrame = {
-    val lut = adcLut(model, query)
-    corpus
-      .select(col(idCol),
-        graft.plans.HashExpressions.pqAdc(
-          pqEncode(col(vecCol), model), lut.toSeq, model.kc).as("adc"))
-      .select(col(idCol), round(col("adc"), 6).as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
+      k: Int): DataFrame =
+    topK(corpus.select(col(idCol),
+        adcScore(pqEncode(col(vecCol), model), model, query).as("score")),
+      idCol, "score", k)
 
   /** PQ shortlist + exact re-rank — the production composition: ADC
     * over codes cuts the corpus to `k * shortlist` candidates reading
@@ -242,17 +207,21 @@ object Quantization {
       vecCol: String,
       query: Array[Double],
       k: Int,
-      shortlist: Int = 4): DataFrame = {
-    val cand = pqTopK(corpus, model, idCol, vecCol, query, k * shortlist)
-      .select(col(idCol))
-    val qLit = typedLit(query.toSeq)
-    corpus.join(broadcast(cand), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        round(decodedDot(
-          graft.functions.VectorOps.asDouble(col(vecCol)), qLit), 6).as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
+      shortlist: Int = 4): DataFrame =
+    rerank(corpus, idCol, pqTopK(corpus, model, idCol, vecCol, query, k * shortlist),
+      exactDot(vecCol, query), "score", k)
+
+  /** The re-rank score of the PQ arms: exact dot of the original vector
+    * with the query, 6dp.
+    */
+  private def exactDot(vecCol: String, query: Array[Double]): Column =
+    round(VectorOps.dot(VectorOps.asDouble(col(vecCol)), typedLit(query.toSeq)), 6)
+
+  /** ADC score of PQ `codes` against one query, 6dp: m lookups in the
+    * query's LUT per row.
+    */
+  private def adcScore(codes: Column, model: PqModel, query: Array[Double]): Column =
+    round(graft.plans.HashExpressions.pqAdc(codes, adcLut(model, query).toSeq, model.kc), 6)
 
   /** OPQ-lite: a SEEDED random orthonormal rotation applied before PQ.
     * PQ quantizes each subspace independently, so a corpus whose
@@ -422,32 +391,15 @@ object Quantization {
       query: Array[Double],
       k: Int,
       shortlist: Int = 4): DataFrame = {
-    val rotQ = rotateVec(model.rotation, model.dim, query)
     val rc = corpus.select(col(idCol).as("__id"), rotate(col(vecCol), model.rotation, model.dim).as("__rv"))
-    val cand = pqTopK(rc, model.pq, "__id", "__rv", rotQ, k * shortlist)
-      .select(col("__id").as(idCol))
-    val qLit = typedLit(query.toSeq)
-    corpus.join(broadcast(cand), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        round(decodedDot(
-          graft.functions.VectorOps.asDouble(col(vecCol)), qLit), 6).as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
+    val cand = pqTopK(rc, model.pq, "__id", "__rv", rotateVec(model.rotation, model.dim, query),
+      k * shortlist).select(col("__id").as(idCol))
+    rerank(corpus, idCol, cand, exactDot(vecCol, query), "score", k)
   }
 
   /** Driver-side rotation of a single query vector. */
-  private def rotateVec(rot: Seq[Double], d: Int, v: Array[Double]): Array[Double] = {
-    val out = new Array[Double](d)
-    var i = 0
-    while (i < d) {
-      var s = 0.0
-      var j = 0
-      while (j < d) { s += rot(i * d + j) * v(j); j += 1 }
-      out(i) = s
-      i += 1
-    }
-    out
-  }
+  private def rotateVec(rot: Seq[Double], d: Int, v: Array[Double]): Array[Double] =
+    Array.tabulate(d)(i => SimilaritySearch.driverDot(d)(j => rot(i * d + j), v(_)))
 
   /** Persist a PQ store: the codebook (+ id column NAME, resolved by
     * name at load — the IVF tombstone lesson) as a tiny JSON sidecar,
@@ -514,14 +466,10 @@ object Quantization {
       k: Int,
       pred: org.apache.spark.sql.Column): DataFrame = {
     val (model, idCol) = loadPqModel(spark, path)
-    val lut = adcLut(model, query)
-    loadPqCodes(spark, path)
-      .filter(pred)
-      .select(col(idCol),
-        round(graft.plans.HashExpressions.pqAdc(col("codes"), lut.toSeq, model.kc), 6)
-          .as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
+    topK(loadPqCodes(spark, path)
+        .filter(pred)
+        .select(col(idCol), adcScore(col("codes"), model, query).as("score")),
+      idCol, "score", k)
   }
 
   /** Idempotent per-batch append of freshly-encoded codes to a
@@ -676,56 +624,15 @@ object Quantization {
     ()
   }
 
-  /** Batch probe of a persisted store: ONE scan of the codes scores
-    * every query — stored codes decode once per row, broadcast raw
-    * queries dot against the reconstruction (the same asymmetric
-    * score as [[pqTopKStored]], identity spec-pinned per query), then
-    * the per-query top-k window. Self-matches (same id) are excluded,
-    * mirroring [[pqTopKBatch]].
-    */
-  def pqTopKStoredBatch(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      queries: DataFrame,
-      queryIdCol: String,
-      queryVecCol: String,
-      k: Int): DataFrame = {
-    val (model, idCol) = loadPqModel(spark, path)
-    val qs = broadcast(queries.select(
-      col(queryIdCol).as("qid"),
-      graft.functions.VectorOps.asDouble(col(queryVecCol)).as("qvec")))
-    val decoded = loadPqCodes(spark, path)
-      .select(col(idCol), pqDecode(col("codes"), model).as("dec"))
-    val w = Window.partitionBy("qid").orderBy(desc("qscore"), col(idCol))
-    decoded.join(qs, col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol),
-        round(decodedDot(col("dec"), col("qvec")), 6).as("qscore"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
-
   /** The query's per-centroid partial-dot lookup table (m x kc). */
   private def adcLut(model: PqModel, query: Array[Double]): Array[Double] = {
     require(query.length == model.m * model.subDim,
       s"query dim ${query.length} != ${model.m * model.subDim}")
-    val lut = new Array[Double](model.m * model.kc)
-    var sub = 0
-    while (sub < model.m) {
-      var c = 0
-      while (c < model.kc) {
-        val base = (sub * model.kc + c) * model.subDim
-        var d = 0.0
-        var j = 0
-        while (j < model.subDim) {
-          d += query(sub * model.subDim + j) * model.codebook(base + j)
-          j += 1
-        }
-        lut(sub * model.kc + c) = d
-        c += 1
-      }
-      sub += 1
+    Array.tabulate(model.m * model.kc) { sc =>
+      val q0 = sc / model.kc * model.subDim
+      SimilaritySearch.driverDot(model.subDim)(
+        j => query(q0 + j), j => model.codebook(sc * model.subDim + j))
     }
-    lut
   }
 
   /** IVF x PQ — the FAISS IVF-PQ composition, both scale levers at
@@ -743,40 +650,22 @@ object Quantization {
       query: Array[Double],
       k: Int,
       nprobe: Int = 4,
-      shortlist: Int = 4): DataFrame = {
-    def dist2(c: Array[Double]): Double =
-      c.zip(query).map { case (x, y) => (x - y) * (x - y) }.sum
-    val cells = index.centroids.zipWithIndex
-      .sortBy { case (c, _) => dist2(c) }
-      .take(nprobe).map(_._2)
-    val probed = index.assigned
-      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-    pqTopKReranked(probed, model, idCol, "v", query, k, shortlist)
-  }
+      shortlist: Int = 4): DataFrame =
+    pqTopKReranked(probeCells(index, query.toSeq, nprobe), model, idCol, "v", query, k, shortlist)
 
-  /** Batch PQ top-k: decode-then-dot (identical ranking to ADC), one
-    * corpus scan against broadcast query reconstructions, per-query
-    * top-k window — the sq8TopKBatch shape over 32x-smaller codes.
+  /** Batch top-k over quantized codes: one corpus scan scores every
+    * query (broadcast query codes, no shuffle on the corpus side until
+    * the per-query top-k window). Self-matches (same id) are excluded.
+    * Scores are decoded-dot (MIPS), rounded to 6dp so ranking ties are
+    * engine-exact; ties break on id. Output: (qid, idCol, qscore, rnk).
+    *
+    * Scale shape: corpus-side work is a single narrow projection +
+    * broadcast nested-loop against Q query rows (Q small); the only
+    * exchange is the hash partition on qid for the top-k window, whose
+    * input is already cut to |corpus| x Q scored rows. For large Q,
+    * compose with the IVF router instead — this operator is the
+    * exact-scoring arm.
     */
-  def pqTopKBatch(
-      corpus: DataFrame,
-      queries: DataFrame,
-      model: PqModel,
-      idCol: String,
-      vecCol: String,
-      k: Int): DataFrame = {
-    def decoded(vec: Column): Column = pqDecode(pqEncode(vec, model), model)
-    val qs = broadcast(
-      queries.select(col(idCol).as("qid"), decoded(col(vecCol)).as("qdec")))
-    val cs = corpus.select(col(idCol), decoded(col(vecCol)).as("dec"))
-    val w = Window.partitionBy("qid").orderBy(desc("qscore"), col(idCol))
-    cs.join(qs, col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol),
-        round(decodedDot(col("dec"), col("qdec")), 6).as("qscore"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
-
   def sq8TopKBatch(
       corpus: DataFrame,
       queries: DataFrame,
@@ -784,16 +673,8 @@ object Quantization {
       vecCol: String,
       k: Int): DataFrame = {
     val (mins, maxs) = sq8Params(corpus, vecCol)
-    def decoded(vec: Column): Column =
-      sq8Dequantize(sq8Quantize(vec, mins, maxs), mins, maxs)
-    val qs = broadcast(
-      queries.select(col(idCol).as("qid"), decoded(col(vecCol)).as("qdec")))
-    val cs = corpus.select(col(idCol), decoded(col(vecCol)).as("dec"))
-    val w = Window.partitionBy("qid").orderBy(desc("qscore"), col(idCol))
-    cs.join(qs, col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol),
-        round(decodedDot(col("dec"), col("qdec")), 6).as("qscore"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    SimilaritySearch.exhaustiveTopKPerQuery(corpus, queries, idCol, vecCol,
+      v => sq8Dequantize(sq8Quantize(v, mins, maxs), mins, maxs),
+      (c, q) => round(VectorOps.dot(c, q), 6), "qscore", k)
   }
 }

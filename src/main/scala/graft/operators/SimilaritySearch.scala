@@ -6,37 +6,167 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
 
-/** Approximate-nearest-neighbor search over an embedding column.
-  *
-  * Two paths, same API:
-  *  - brute-force cosine top-k: the exact baseline; one broadcast of the
-  *    query vector, one scan, one TakeOrdered — at 100 TB this is the
-  *    "score everything" pass and it parallelizes perfectly.
-  *  - LSH-bucketed: random-hyperplane signatures partition vectors into
-  *    2^numPlanes buckets; search touches only the query's bucket (plus
-  *    optional hamming-1 probes). Candidate set shrinks ~2^planes-fold
-  *    at the cost of recall — the standard ANN trade.
+/** Vector search over an embedding column: brute-force cosine, LSH
+  * buckets, IVF cells (plain, PCA-reduced, filtered, auto-widened,
+  * batch), kNN joins, contrastive-pair mining and the 1-bit sign store;
+  * [[Quantization]] adds the SQ8/PQ/OPQ scorers. Every top-k in the two
+  * files is route → probe → score → rank over the core below:
+  *  - route: one distance, Σ(c−q)² folded left to right, on the driver
+  *    for one query ([[nearestCells]]: its `cell IN (…)` list bucket-
+  *    prunes a persisted index) or row-locally in the plan for a batch
+  *    ([[nearestCellsInPlan]]) — a query gets the same cells either way;
+  *  - probe: routed cells (plus a predicate), an LSH signature filter,
+  *    or the whole corpus;
+  *  - score: exact cosine ([[cosineScore]]), SQ8-decoded cosine or dot,
+  *    PQ ADC, or Hamming;
+  *  - rank: [[topK]], [[topKPerQuery]], [[rerank]] and
+  *    [[exhaustiveTopKPerQuery]].
   */
 object SimilaritySearch {
 
-  /** Exact top-k by cosine against a literal query vector. `cos_sim` is
-    * rounded to 6dp for cross-engine determinism; ties break on id.
+  // ------------- the probe core: route, probe, score, rank ------------- //
+
+  /** Σ(c−q)² folded left to right: the bits of [[nearestCellsInPlan]]'s fold. */
+  private def sqDist(c: Array[Double], q: Seq[Double]): Double =
+    c.zip(q).map { case (x, y) => (x - y) * (x - y) }.sum
+
+  /** Route one query on the driver: its `n` nearest cells, nearest first,
+    * ties to the lower cell id.
+    */
+  private[operators] def nearestCells(centroids: Array[Array[Double]], q: Seq[Double], n: Int): Seq[Int] =
+    centroids.indices.sortBy(i => sqDist(centroids(i), q)).take(n)
+
+  /** Route in the plan: the `n` nearest cells of the array<double> column
+    * `qv`, nearest first, by [[nearestCells]]' distance and tie order.
+    * The centroid table is a literal column, so routing is row-local: no
+    * exchange.
+    */
+  private[operators] def nearestCellsInPlan(qv: Column, centroids: Array[Array[Double]], n: Int): Column = {
+    val table = array(centroids.zipWithIndex.map { case (c, i) =>
+      struct(lit(i).as("cell"), typedLit(c.toSeq).as("cv"))
+    }.toIndexedSeq: _*)
+    slice(array_sort(transform(table, c => struct(
+      aggregate(zip_with(qv, c("cv"), (x, y) => (x - y) * (x - y)),
+        lit(0.0), (acc, d) => acc + d).as("d2"),
+      c("cell").as("cell")))), 1, n)("cell")
+  }
+
+  /** Σ a(j)·b(j) for j < n, left to right: the driver-side query maps
+    * (PCA projection, OPQ rotation, the PQ ADC table).
+    */
+  private[operators] def driverDot(n: Int)(a: Int => Double, b: Int => Double): Double = {
+    var s = 0.0
+    var j = 0
+    while (j < n) { s += a(j) * b(j); j += 1 }
+    s
+  }
+
+  /** Probe one query: the rows of its `nprobe` nearest cells. */
+  private[operators] def probeCells(index: IvfIndex, q: Seq[Double], nprobe: Int): DataFrame =
+    index.assigned.filter(col("cell").isin(
+      nearestCells(index.centroids, q, nprobe).map(Integer.valueOf): _*))
+
+  /** A query batch as (qid, qv: array<double>, qn = ‖qv‖). */
+  private def batchQueries(queries: DataFrame, qIdCol: String, qVecCol: String): DataFrame =
+    queries.select(col(qIdCol).as("qid"), VectorOps.asDouble(col(qVecCol)).as("qv"))
+      .withColumn("qn", VectorOps.l2Norm(col("qv")))
+
+  /** Route a query batch in the plan: one row per query and each of its
+    * `n` nearest cells.
+    */
+  private def routeBatch(queries: DataFrame, qIdCol: String, qVecCol: String,
+      centroids: Array[Array[Double]], n: Int): DataFrame =
+    batchQueries(queries, qIdCol, qVecCol)
+      .withColumn("cell", explode(nearestCellsInPlan(col("qv"), centroids, n)))
+
+  /** Probe and score a routed batch: each (qid, qv, qn, cell) row meets
+    * its cell's rows of `assigned` — an equi-join on `cell`, which a
+    * cell-bucketed store serves without a corpus-side shuffle. Output
+    * (qid, id, cos_sim).
+    */
+  private def probeBatch(assigned: DataFrame, routed: DataFrame, excludeSelf: Boolean): DataFrame = {
+    val corpus = assigned.select(col(assigned.columns.head).as("id"), col("v"), col("cell"))
+      .withColumn("nrm", VectorOps.l2Norm(col("v")))
+    val joined = routed.join(corpus, "cell")
+    (if (excludeSelf) joined.filter(col("qid") =!= col("id")) else joined)
+      .select(col("qid"), col("id"),
+        cosineScore(col("v"), col("nrm"), col("qv"), col("qn")).as("cos_sim"))
+  }
+
+  /** Score: exact cosine from both norms, rounded to 6dp for cross-engine
+    * determinism. A zero-norm vector on either side has no cosine: its
+    * zero divisor turns null (`nullif`, which evaluates the product once)
+    * instead of dividing by zero, which ANSI mode raises and which would
+    * fail the whole query; the rank steps drop null scores.
+    */
+  private[operators] def cosineScore(v: Column, vn: Column, q: Column, qn: Column): Column =
+    round(VectorOps.dot(v, q) / nullif(vn * qn, lit(0.0)), 6)
+
+  private[operators] def cosineScore(v: Column, q: Column): Column =
+    cosineScore(v, VectorOps.l2Norm(v), q, VectorOps.l2Norm(q))
+
+  /** Against one driver-side query. Float embeddings are consumed in
+    * place (type-aware dot kernel), with no array<double> copy.
+    */
+  private[operators] def cosineTo(v: Column, q: Seq[Double]): Column = cosineScore(v, typedLit(q))
+
+  private def rankOrder(score: String, ascending: Boolean): Column =
+    if (ascending) asc_nulls_last(score) else desc(score)
+
+  /** Rank one query: the `k` best rows by `score` (lowest first for a
+    * distance), ties to the lower id — a global orderBy + limit, planned
+    * as one TakeOrderedAndProject. Null scores rank last and are dropped.
+    */
+  private[operators] def topK(scored: DataFrame, idCol: String, score: String, k: Int,
+      ascending: Boolean = false): DataFrame =
+    scored.orderBy(rankOrder(score, ascending), col(idCol)).limit(k).filter(col(score).isNotNull)
+
+  /** Rank a batch: per `qidCol`, the `k` best rows numbered 1..k in
+    * `rankCol` — a row_number window partitioned by query. Same order
+    * and null rule as [[topK]].
+    */
+  private[operators] def topKPerQuery(scored: DataFrame, qidCol: String, idCol: String,
+      score: String, k: Int, rankCol: String, ascending: Boolean = false): DataFrame =
+    scored.withColumn(rankCol, row_number().over(
+        Window.partitionBy(qidCol).orderBy(rankOrder(score, ascending), col(idCol))))
+      .filter(col(rankCol) <= k && col(score).isNotNull)
+
+  /** Shortlist-then-exact re-rank: re-score only the `shortlist` ids of
+    * `corpus` (a broadcast semi-join: the full-precision read touches
+    * only the shortlist) and keep the `k` best.
+    */
+  private[operators] def rerank(corpus: DataFrame, idCol: String, shortlist: DataFrame,
+      score: Column, scoreName: String, k: Int): DataFrame =
+    topK(corpus.join(broadcast(shortlist.select(col(idCol))), Seq(idCol), "left_semi")
+      .select(col(idCol), score.as(scoreName)), idCol, scoreName, k)
+
+  /** The exhaustive batch: ONE corpus scan scores every query — `code` on
+    * both sides, the small query set broadcast, self-pairs excluded —
+    * then [[topKPerQuery]] into `rnk`, which shuffles only scored rows.
+    * Output (qid, idCol, scoreName, rnk).
+    */
+  private[operators] def exhaustiveTopKPerQuery(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String, code: Column => Column, score: (Column, Column) => Column,
+      scoreName: String, k: Int, ascending: Boolean = false): DataFrame = {
+    val qs = broadcast(queries.select(col(idCol).as("qid"), code(col(vecCol)).as("__q")))
+    topKPerQuery(corpus.select(col(idCol), code(col(vecCol)).as("__c"))
+        .join(qs, col(idCol) =!= col("qid"))
+        .select(col("qid"), col(idCol), score(col("__c"), col("__q")).as(scoreName)),
+      "qid", idCol, scoreName, k, "rnk", ascending)
+  }
+
+  // --------------------------- the top-k forms --------------------------- //
+
+  /** Exact top-k by cosine against a literal query vector: one scan, one
+    * TakeOrderedAndProject. `cos_sim` is rounded to 6dp; ties break on id.
     */
   def bruteForceTopK(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       query: Seq[Double],
-      k: Int): DataFrame = {
-    val q = typedLit(query)
-    // Float embeddings are consumed in place (type-aware dot kernel) —
-    // no array<double> cast copy of the corpus.
-    df.select(
-        col(idCol),
-        round(VectorOps.cosine(col(vecCol), q), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
-  }
+      k: Int): DataFrame =
+    topK(df.select(col(idCol), cosineTo(col(vecCol), query).as("cos_sim")), idCol, "cos_sim", k)
 
   /** Two-stage coarse-to-fine search: a truncated-dimension scan
     * ([[graft.functions.VectorOps.truncate]] — a quarter of the vector
@@ -56,13 +186,10 @@ object SimilaritySearch {
       coarseDims: Int,
       coarseK: Int): DataFrame = {
     require(coarseK >= k, s"coarseK ($coarseK) must be >= k ($k)")
-    import graft.functions.VectorOps
     val cand = bruteForceTopK(
       df.withColumn("__t", VectorOps.truncate(col(vecCol), coarseDims)),
       idCol, "__t", query.take(coarseDims), coarseK)
-      .select(col(idCol))
-    bruteForceTopK(
-      df.join(broadcast(cand), Seq(idCol), "left_semi"), idCol, vecCol, query, k)
+    rerank(df, idCol, cand, cosineTo(col(vecCol), query), "cos_sim", k)
   }
 
   /** Bucketed ANN: restrict scoring to vectors whose hyperplane signature
@@ -77,23 +204,24 @@ object SimilaritySearch {
       k: Int,
       numPlanes: Int = 12,
       maxProbeHamming: Int = 1,
-      seed: Long = 42L): DataFrame = {
-    val dim = query.length
-    val planes = VectorOps.randomPlanes(numPlanes, dim, seed)
+      seed: Long = 42L): DataFrame =
+    lshProbe(df, idCol, vecCol, query, k, numPlanes, seed)((sig, qSig) =>
+      bit_count(sig.bitwiseXOR(lit(qSig))) <= maxProbeHamming)
+
+  /** The LSH probe both forms share: sign the corpus with the seeded
+    * planes, keep rows whose signature is `near` the query's, rank by
+    * exact cosine.
+    */
+  private def lshProbe(df: DataFrame, idCol: String, vecCol: String, query: Seq[Double],
+      k: Int, numPlanes: Int, seed: Long)(near: (Column, Long) => Column): DataFrame = {
+    val planes = VectorOps.randomPlanes(numPlanes, query.length, seed)
     val qSig: Long = planes.zipWithIndex.map { case (p, i) =>
       val d = p.zip(query).map { case (x, y) => x * y }.sum
       if (d >= 0) 1L << i else 0L
     }.foldLeft(0L)(_ | _)
-
-    val qLit = typedLit(query)
-    df.select(
-        col(idCol),
-        col(vecCol).as("v"),
-        VectorOps.hyperplaneSignature(col(vecCol), planes).as("sig"))
-      .filter(bit_count(col("sig").bitwiseXOR(lit(qSig))) <= maxProbeHamming)
-      .select(col(idCol), round(VectorOps.cosine(col("v"), qLit), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
+    topK(df.filter(near(VectorOps.hyperplaneSignature(col(vecCol), planes), qSig))
+        .select(col(idCol), cosineTo(col(vecCol), query).as("cos_sim")),
+      idCol, "cos_sim", k)
   }
 
   /** All signatures within `maxHamming` bit flips of `qSig` over
@@ -138,25 +266,9 @@ object SimilaritySearch {
       k: Int,
       numPlanes: Int = 12,
       maxProbeHamming: Int = 1,
-      seed: Long = 42L): DataFrame = {
-    val dim = query.length
-    val planes = VectorOps.randomPlanes(numPlanes, dim, seed)
-    val qSig: Long = planes.zipWithIndex.map { case (p, i) =>
-      val d = p.zip(query).map { case (x, y) => x * y }.sum
-      if (d >= 0) 1L << i else 0L
-    }.foldLeft(0L)(_ | _)
-    val probes = probeSignatures(qSig, numPlanes, maxProbeHamming)
-
-    val qLit = typedLit(query)
-    df.select(
-        col(idCol),
-        col(vecCol).as("v"),
-        VectorOps.hyperplaneSignature(col(vecCol), planes).as("sig"))
-      .filter(col("sig").isin(probes: _*))
-      .select(col(idCol), round(VectorOps.cosine(col("v"), qLit), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
-  }
+      seed: Long = 42L): DataFrame =
+    lshProbe(df, idCol, vecCol, query, k, numPlanes, seed)((sig, qSig) =>
+      sig.isin(probeSignatures(qSig, numPlanes, maxProbeHamming): _*))
 
   /** 1-bit sign quantization + Hamming top-k: pack each vector's sign
     * bits into 64-bit words (8 bytes for a 64-dim corpus — 32x under
@@ -167,43 +279,20 @@ object SimilaritySearch {
     * DuckDB oracle. Ties break id-ascending; the plan is one
     * codegen'd scan + TakeOrderedAndProject. At rest, persist
     * `signPack(vec)` next to ids and the probe reads 8 bytes/vector.
+    * Shortlist + exact re-rank is the composition
+    * `bruteForceTopK(corpus semi-joined to binarySignTopK(…, k * f))`,
+    * the [[coarseToFineTopK]] shape with the cheapest coarse pass.
     */
   def binarySignTopK(
       corpus: DataFrame,
       idCol: String,
       vecCol: String,
       query: Array[Double],
-      k: Int): DataFrame = {
-    val qWords = packSignsDriver(query)
-    corpus.select(
-        col(idCol),
-        graft.plans.HashExpressions.hammingTo(
-          graft.plans.HashExpressions.signPack(VectorOps.asDouble(col(vecCol))),
-          qWords).as("hamming"))
-      .orderBy(asc("hamming"), col(idCol))
-      .limit(k)
-  }
-
-  /** Hamming shortlist + exact-dot re-rank on original vectors — the
-    * same coarse-to-fine composition as the PQ/SQ8 arms, with the
-    * cheapest possible coarse pass.
-    */
-  def binarySignTopKReranked(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      query: Array[Double],
-      k: Int,
-      shortlist: Int = 4): DataFrame = {
-    val cand = binarySignTopK(corpus, idCol, vecCol, query, k * shortlist)
-      .select(col(idCol))
-    val qLit = typedLit(query.toSeq)
-    corpus.join(broadcast(cand), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        round(VectorOps.dot(VectorOps.asDouble(col(vecCol)), qLit), 6).as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
+      k: Int): DataFrame =
+    topK(corpus.select(col(idCol),
+        graft.plans.HashExpressions.hammingTo(signPack(col(vecCol)), packSignsDriver(query))
+          .as("hamming")),
+      idCol, "hamming", k, ascending = true)
 
   /** Batch form: ONE corpus scan serves every query — corpus packs
     * once per row, the (tiny) packed query set broadcasts, pairwise
@@ -216,20 +305,12 @@ object SimilaritySearch {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int): DataFrame = {
-    val packed = corpus.select(
-      col(idCol),
-      graft.plans.HashExpressions.signPack(VectorOps.asDouble(col(vecCol))).as("__cw"))
-    val qs = broadcast(queries.select(
-      col(idCol).as("qid"),
-      graft.plans.HashExpressions.signPack(VectorOps.asDouble(col(vecCol))).as("__qw")))
-    val w = Window.partitionBy("qid").orderBy(asc("hamming"), col(idCol))
-    packed.join(qs, col(idCol) =!= col("qid"))
-      .select(col("qid"), col(idCol),
-        graft.plans.HashExpressions.hammingPair(col("__cw"), col("__qw")).as("hamming"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-  }
+      k: Int): DataFrame =
+    exhaustiveTopKPerQuery(corpus, queries, idCol, vecCol, signPack,
+      graft.plans.HashExpressions.hammingPair, "hamming", k, ascending = true)
+
+  private def signPack(v: Column): Column =
+    graft.plans.HashExpressions.signPack(VectorOps.asDouble(v))
 
   /** Persist packed sign words — the 1-bit codes-at-rest form: the
     * stored table is (id, words) at ~8 bytes/vector payload, and a
@@ -239,12 +320,12 @@ object SimilaritySearch {
     * plain parquet dir — the PQ staging/tombstone machinery drops in
     * unchanged; kept minimal here because packing is so cheap that
     * rebuild-on-change is usually the right call at this code size).
-    */
-  /** @param carryCols metadata columns stored beside the sign words —
-    *                   same attribute co-location as
-    *                   [[buildIvfIndex]]'s carryCols, enabling
-    *                   [[binaryTopKStoredWhere]] to filter inside the
-    *                   stored probe.
+    *
+    * @param carryCols metadata columns stored beside the sign words —
+    *                  same attribute co-location as
+    *                  [[buildIvfIndex]]'s carryCols, enabling
+    *                  [[binaryTopKStoredWhere]] to filter inside the
+    *                  stored probe.
     */
   def saveBinaryIndex(
       corpus: DataFrame,
@@ -258,8 +339,7 @@ object SimilaritySearch {
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .json(s"$path/idcol")
     corpus
-      .select((Seq(col(idCol),
-        graft.plans.HashExpressions.signPack(VectorOps.asDouble(col(vecCol))).as("words")) ++
+      .select((Seq(col(idCol), signPack(col(vecCol)).as("words")) ++
         carryCols.map(col)): _*)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$path/words")
@@ -288,13 +368,11 @@ object SimilaritySearch {
       k: Int,
       pred: org.apache.spark.sql.Column): DataFrame = {
     val idCol = spark.read.json(s"$path/idcol").select("id_col").head().getString(0)
-    val qWords = packSignsDriver(query)
-    loadBinaryWords(spark, path)
-      .filter(pred)
-      .select(col(idCol),
-        graft.plans.HashExpressions.hammingTo(col("words"), qWords).as("hamming"))
-      .orderBy(asc("hamming"), col(idCol))
-      .limit(k)
+    topK(loadBinaryWords(spark, path)
+        .filter(pred)
+        .select(col(idCol),
+          graft.plans.HashExpressions.hammingTo(col("words"), packSignsDriver(query)).as("hamming")),
+      idCol, "hamming", k, ascending = true)
   }
 
   /** The stored sign words with tombstones filtered (broadcast
@@ -502,15 +580,9 @@ object SimilaritySearch {
   }
 
   /** y = A(q − μ), driver-side — queries are single vectors. */
-  private def pcaProjectQuery(
-      m: EmbeddingStats.PcaModel, q: Seq[Double]): Seq[Double] = {
+  private def pcaProjectQuery(m: EmbeddingStats.PcaModel, q: Seq[Double]): Seq[Double] = {
     require(q.length == m.d, s"query dim ${q.length} != model dim ${m.d}")
-    m.axes.toSeq.map { a =>
-      var s = 0.0
-      var i = 0
-      while (i < a.length) { s += a(i) * (q(i) - m.mean(i)); i += 1 }
-      s
-    }
+    m.axes.toSeq.map(a => driverDot(a.length)(a(_), i => q(i) - m.mean(i)))
   }
 
   /** Coarse-to-fine ANN through the PCA-reduced index: project the
@@ -531,16 +603,8 @@ object SimilaritySearch {
       nprobe: Int = 4,
       shortlist: Int = 4): DataFrame = {
     require(shortlist >= 1, s"shortlist factor must be >= 1, got $shortlist")
-    val qp = pcaProjectQuery(index.pca, query)
-    val cand = ivfTopK(index.ivf, idCol, qp, k * shortlist, nprobe)
-      .select(col(idCol))
-    val qLit = typedLit(query)
-    index.ivf.assigned
-      .join(broadcast(cand), Seq(idCol), "left_semi")
-      .select(col(idCol),
-        round(VectorOps.cosine(col("__full"), qLit), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
+    val cand = ivfTopK(index.ivf, idCol, pcaProjectQuery(index.pca, query), k * shortlist, nprobe)
+    rerank(index.ivf.assigned, idCol, cand, cosineTo(col("__full"), query), "cos_sim", k)
   }
 
   /** Persist an IVF index: centroids as a tiny JSON-lines table (nlist
@@ -783,34 +847,19 @@ object SimilaritySearch {
   }
 
   /** Assign each row to its nearest centroid cell — the routing half of
-    * IVF without any clustering: exact argmin over the (tiny, broadcast)
-    * centroid table via the same dot-identity distance as
-    * [[ivfTopKBatch]]. Output schema matches `IvfIndex.assigned`
-    * (id, v in its ORIGINAL vector type, cell), so the result appends
-    * into a persisted index layout unchanged.
+    * IVF without any clustering: [[nearestCellsInPlan]] with n = 1, the
+    * same distance a probe routes by, row-local. Output schema matches
+    * `IvfIndex.assigned` (id, v in its ORIGINAL vector type, cell), so
+    * the result appends into a persisted index layout unchanged.
     */
   def assignCells(
       df: DataFrame,
       idCol: String,
       vecCol: String,
-      centroids: Array[Array[Double]]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    import spark.implicits._
-    val cents = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "cvec")
-      .withColumn("cn2", VectorOps.dot(col("cvec"), col("cvec")))
-    val w = Window.partitionBy(idCol).orderBy(col("d2"), col("cell"))
+      centroids: Array[Array[Double]]): DataFrame =
     df.select(col(idCol), col(vecCol).as("v"))
-      .withColumn("qd", VectorOps.asDouble(col("v")))
-      .withColumn("qn2", VectorOps.dot(col("qd"), col("qd")))
-      .crossJoin(broadcast(cents))
-      .withColumn("d2", col("qn2") + col("cn2") - lit(2.0) * VectorOps.dot(col("qd"), col("cvec")))
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .select(col(idCol), col("v"), col("cell"))
-  }
+      .withColumn("cell",
+        element_at(nearestCellsInPlan(VectorOps.asDouble(col("v")), centroids, 1), 1))
 
   /** Append pre-assigned rows into a persisted index table, preserving
     * the bucketed-by-cell layout (the bucket spec must match the one the
@@ -888,19 +937,8 @@ object SimilaritySearch {
       idCol: String,
       query: Seq[Double],
       k: Int,
-      nprobe: Int = 4): DataFrame = {
-    def dist2(c: Array[Double]): Double =
-      c.zip(query).map { case (x, y) => (x - y) * (x - y) }.sum
-    val cells = index.centroids.zipWithIndex
-      .sortBy { case (c, _) => dist2(c) }
-      .take(nprobe).map(_._2)
-    val qLit = typedLit(query)
-    index.assigned
-      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-      .select(col(idCol), round(VectorOps.cosine(col("v"), qLit), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
-  }
+      nprobe: Int = 4): DataFrame =
+    ivfTopKWhere(index, idCol, query, lit(true), k, nprobe)
 
   /** Attribute-FILTERED ANN through the IVF index — top-k among rows
     * satisfying `pred` (over `carryCols` the index was built with, plus
@@ -922,20 +960,11 @@ object SimilaritySearch {
       query: Seq[Double],
       pred: org.apache.spark.sql.Column,
       k: Int,
-      nprobe: Int = 8): DataFrame = {
-    def dist2(c: Array[Double]): Double =
-      c.zip(query).map { case (x, y) => (x - y) * (x - y) }.sum
-    val cells = index.centroids.zipWithIndex
-      .sortBy { case (c, _) => dist2(c) }
-      .take(nprobe).map(_._2)
-    val qLit = typedLit(query)
-    index.assigned
-      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-      .filter(pred)
-      .select(col(idCol), round(VectorOps.cosine(col("v"), qLit), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), col(idCol))
-      .limit(k)
-  }
+      nprobe: Int = 8): DataFrame =
+    topK(probeCells(index, query, nprobe)
+        .filter(pred)
+        .select(col(idCol), cosineTo(col("v"), query).as("cos_sim")),
+      idCol, "cos_sim", k)
 
   /** [[ivfTopKWhere]] with AUTO-WIDENING nprobe: a selective predicate
     * thins each probed cell's candidate pool, and a fixed nprobe that
@@ -948,8 +977,9 @@ object SimilaritySearch {
     * Cost shape: widening rounds count only the NEWLY-added cells
     * (nprobe, then doubling), so the probed region is scanned at most
     * twice — once counting, once ranking — and the unprobed remainder
-    * is never touched. On a predicate dense in the nearest cells the
-    * first count already clears the bar and the overhead is one
+    * is never touched: on a cell-bucketed store each round reads only
+    * its new cells' buckets. On a predicate dense in the nearest cells
+    * the first count already clears the bar and the overhead is one
     * counting pass over nprobe cells. nprobe = nlist from the start
     * degenerates to exact filtered brute force, as ever.
     */
@@ -962,11 +992,8 @@ object SimilaritySearch {
       nprobe: Int = 8,
       minPoolFactor: Int = 4): DataFrame = {
     require(minPoolFactor >= 1, s"minPoolFactor must be >= 1, got $minPoolFactor")
-    def dist2(c: Array[Double]): Double =
-      c.zip(query).map { case (x, y) => (x - y) * (x - y) }.sum
-    val order = index.centroids.zipWithIndex
-      .sortBy { case (c, _) => dist2(c) }.map(_._2)
-    val nlist = order.length
+    val nlist = index.centroids.length
+    val order = nearestCells(index.centroids, query, nlist)
     val target = minPoolFactor.toLong * k
     var probed = 0
     var pool = 0L
@@ -974,7 +1001,7 @@ object SimilaritySearch {
     while (pool < target && probed < nlist) {
       val newCells = order.slice(probed, width)
       pool += index.assigned
-        .filter(col("cell").isin(newCells.map(Integer.valueOf).toSeq: _*))
+        .filter(col("cell").isin(newCells.map(Integer.valueOf): _*))
         .filter(pred)
         .count()
       probed = width
@@ -983,20 +1010,21 @@ object SimilaritySearch {
     ivfTopKWhere(index, idCol, query, pred, k, nprobe = probed)
   }
 
-  /** [[ivfTopKBatchWhere]] with PER-QUERY auto-widening — the batch
-    * analogue of [[ivfTopKWhereWiden]], and a strictly better widening
-    * rule because a batch can afford exact knowledge: ONE counting
-    * pass over the predicate slice (`slice.groupBy(cell).count()`,
-    * nlist rows out) is amortized over every query, so each query
-    * keeps the MINIMAL prefix of its distance-ranked cells whose
-    * cumulative slice count reaches `minPoolFactor * k` (never below
-    * the `nprobe` floor), instead of the single-query form's blind
-    * doubling (which exists precisely to avoid a full-slice counting
-    * scan for one query). Fully declarative — the per-query prefix is
-    * a running-sum window over queries x nlist routing rows, no driver
-    * loop — and each query's probed set is a superset of the fixed
-    * nprobe set, so its returned scores dominate
-    * [[ivfTopKBatchWhere]]'s pointwise.
+  /** Batch auto-widening, the batch analogue of [[ivfTopKWhereWiden]]
+    * over the predicate slice, and a strictly better widening rule
+    * because a batch can afford exact knowledge: ONE counting pass over
+    * the slice (`slice.groupBy(cell).count()`, nlist rows out) is
+    * amortized over every query, so each query keeps the MINIMAL prefix
+    * of its distance-ranked cells whose cumulative slice count reaches
+    * `minPoolFactor * k` (never below the `nprobe` floor), instead of
+    * the single-query form's blind doubling (which exists precisely to
+    * avoid a full-slice counting scan for one query). Fully declarative
+    * — the per-query prefix is a row-local fold of the slice's
+    * (cell → count) map over the query's ranked cells, no driver loop
+    * and no exchange — and each query's probed set
+    * is a superset of the fixed nprobe set, so its returned scores
+    * dominate the fixed probe's (`ivfTopKBatch` over
+    * `index.copy(assigned = index.assigned.filter(pred))`) pointwise.
     */
   def ivfTopKBatchWhereWiden(
       index: IvfIndex,
@@ -1009,112 +1037,42 @@ object SimilaritySearch {
       minPoolFactor: Int = 4,
       excludeSelf: Boolean = true): DataFrame = {
     require(minPoolFactor >= 1, s"minPoolFactor must be >= 1, got $minPoolFactor")
-    import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val idName = index.assigned.columns.head
-    val slice = index.assigned.filter(pred)
-    val counts = slice.groupBy(col("cell")).agg(count(lit(1)).as("cnt"))
-    val cents = index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "cvec")
-      .withColumn("cn2", VectorOps.dot(col("cvec"), col("cvec")))
-    val q = queries.select(col(qIdCol).as("qid"), VectorOps.asDouble(col(qVecCol)).as("qv"))
-      .withColumn("qn", VectorOps.l2Norm(col("qv")))
-    val wRoute = Window.partitionBy("qid").orderBy(col("d2"), col("cell"))
-    val routed = q.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        col("qn") * col("qn") + col("cn2") - lit(2.0) * VectorOps.dot(col("qv"), col("cvec")))
-      .withColumn("rn", row_number().over(wRoute))
-      .join(broadcast(counts), Seq("cell"), "left")
-      .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-      // Slice rows in cells ranked strictly before this one; the cell
-      // is probed while that running pool is still short of the target.
-      .withColumn("pool_before", coalesce(
-        sum(col("cnt")).over(wRoute.rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .filter(col("rn") <= nprobe ||
-        col("pool_before") < lit(minPoolFactor.toLong * k))
-      .select(col("qid"), col("qv"), col("qn"), col("cell"))
-    val corpus = slice
-      .select(col(idName).as("id"), col("v"), col("cell"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-    val wRank = Window.partitionBy("qid").orderBy(desc("cos_sim"), col("id"))
-    val joined = routed.join(corpus, "cell")
-    val candidates = if (excludeSelf) joined.filter(col("qid") =!= col("id")) else joined
-    candidates
-      .withColumn("cos_sim",
-        round(VectorOps.dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
+    val inSlice = index.assigned.filter(pred)
+    // The slice's cell -> row count map, one row joined to every query.
+    val counts = inSlice.groupBy("cell").agg(count(lit(1)).as("cnt"))
+      .agg(map_from_entries(collect_list(struct(col("cell"), col("cnt")))).as("cnts"))
+    // Row-local: the cell at position i of a query's distance order is
+    // probed while i < nprobe or the slice rows in the cells before it
+    // are still short of the target.
+    val routed = batchQueries(queries, qIdCol, qVecCol)
+      .crossJoin(broadcast(counts))
+      .withColumn("cells", nearestCellsInPlan(col("qv"), index.centroids, index.centroids.length))
+      .select(col("qid"), col("qv"), col("qn"), explode(filter(col("cells"), (c, i) =>
+        i < nprobe || aggregate(slice(col("cells"), lit(1), i), lit(0L),
+          (acc, p) => acc + coalesce(col("cnts")(p), lit(0L))) < minPoolFactor.toLong * k)).as("cell"))
+    topKPerQuery(probeBatch(inSlice, routed, excludeSelf), "qid", "id", "cos_sim", k, "rank")
       .select("qid", "id", "cos_sim", "rank")
   }
 
-  /** Attribute-filtered BATCH ANN: [[ivfTopKBatch]] restricted to
-    * corpus rows satisfying `pred` (over carryCols the index was built
-    * with) — completes the filtered-search matrix: single-query
-    * ([[ivfTopKWhere]]), id-set ([[ivfTopKBatchAmong]]), and
-    * attribute-predicate batch. The predicate narrows the corpus side
-    * BEFORE the cell equi-join, so out-of-slice rows never join, score,
-    * or rank; at nprobe = nlist each query's rows are exactly its
-    * filtered brute-force top-k (the SimilaritySpec identity).
-    */
-  def ivfTopKBatchWhere(
-      index: IvfIndex,
-      queries: DataFrame,
-      qIdCol: String,
-      qVecCol: String,
-      pred: org.apache.spark.sql.Column,
-      k: Int,
-      nprobe: Int = 8,
-      excludeSelf: Boolean = true): DataFrame =
-    ivfTopKBatch(
-      IvfIndex(index.centroids, index.assigned.filter(pred)),
-      queries, qIdCol, qVecCol, k, nprobe, excludeSelf)
-
-  /** Subset-restricted batch ANN: results limited to corpus ids present
-    * in `allowed` (one-column DataFrame, any name) — the id-set form of
-    * filtered search, for when the slice is an upstream computation
-    * (dedup survivors, a decontamination pass) rather than a stored
-    * attribute. The restriction is a semi-join on the candidate set
-    * BEFORE ranking (broadcast when small), so correctness never depends
-    * on the slice being an index attribute.
-    */
-  def ivfTopKBatchAmong(
-      index: IvfIndex,
-      queries: DataFrame,
-      qIdCol: String,
-      qVecCol: String,
-      allowed: DataFrame,
-      k: Int,
-      nprobe: Int = 8,
-      excludeSelf: Boolean = true): DataFrame = {
-    val idName = index.assigned.columns.head
-    val allow = allowed.select(
-      col(allowed.columns.head)
-        .cast(index.assigned.schema(idName).dataType).as("__allow_id"))
-      .distinct()
-    val restricted = IvfIndex(
-      index.centroids,
-      index.assigned.join(
-        broadcast(allow),
-        index.assigned(idName) === col("__allow_id"), "left_semi"))
-    ivfTopKBatch(restricted, queries, qIdCol, qVecCol, k, nprobe, excludeSelf)
-  }
-
   /** Batch ANN through the IVF index: a whole DataFrame of queries is
-    * routed in one plan — queries x centroids (centroids broadcast;
-    * nlist rows each) -> keep each query's nprobe nearest cells ->
+    * routed in one plan — each query's nprobe nearest cells, row-local
+    * ([[nearestCellsInPlan]], the same cells [[ivfTopK]] probes) ->
     * equi-join with the cell-partitioned corpus -> exact cosine -> rank.
-    * Shuffle volume: each query replicated nprobe ways, each corpus
-    * vector touched only for probed cells. This is the scale API — one
-    * driver-side vector per call ([[ivfTopK]]) cannot amortize the scan.
-    */
-  /** @param excludeSelf drop candidate rows whose corpus id equals the
-    *                     query id — right for self-search (queries drawn
-    *                     from the corpus, the identity match is noise);
-    *                     set false when querying a foreign corpus where
-    *                     ids may coincide by accident.
+    * Each query is replicated nprobe ways, each corpus vector touched
+    * only for probed cells. This is the scale API — one driver-side
+    * vector per call ([[ivfTopK]]) cannot amortize the scan.
+    *
+    * Filtered batch search is this over a narrowed index:
+    * `index.copy(assigned = index.assigned.filter(pred))` for an
+    * attribute predicate over carryCols, or a `left_semi` join of
+    * `assigned` to an allowed-id set — the corpus side narrows BEFORE
+    * the cell join, so out-of-slice rows never join, score, or rank.
+    *
+    * @param excludeSelf drop candidate rows whose corpus id equals the
+    *                    query id — right for self-search (queries drawn
+    *                    from the corpus, the identity match is noise);
+    *                    set false when querying a foreign corpus where
+    *                    ids may coincide by accident.
     */
   def ivfTopKBatch(
       index: IvfIndex,
@@ -1124,46 +1082,11 @@ object SimilaritySearch {
       k: Int,
       nprobe: Int = 4,
       excludeSelf: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val cents = index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "cvec")
-      .withColumn("cn2", VectorOps.dot(col("cvec"), col("cvec")))
-
-    val q = queries.select(col(qIdCol).as("qid"), VectorOps.asDouble(col(qVecCol)).as("qv"))
-      .withColumn("qn", VectorOps.l2Norm(col("qv")))
-
-    // Squared euclidean distance to each centroid via dot identities —
-    // no per-pair norm recomputation.
-    val wRoute = Window.partitionBy("qid").orderBy(col("d2"), col("cell"))
-    val routed = q.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        col("qn") * col("qn") + col("cn2") - lit(2.0) * VectorOps.dot(col("qv"), col("cvec")))
-      .withColumn("rn", row_number().over(wRoute))
-      .filter(col("rn") <= nprobe)
-      .select("qid", "qv", "qn", "cell")
-
-    val corpus = index.assigned
-      .select(col(index.assigned.columns.head).as("id"), col("v"), col("cell"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-
-    val wRank = Window.partitionBy("qid").orderBy(desc("cos_sim"), col("id"))
-    val joined = routed.join(corpus, "cell")
-    val candidates = if (excludeSelf) joined.filter(col("qid") =!= col("id")) else joined
-    candidates
-      .withColumn("cos_sim",
-        round(VectorOps.dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
+    val routed = routeBatch(queries, qIdCol, qVecCol, index.centroids, nprobe)
+    topKPerQuery(probeBatch(index.assigned, routed, excludeSelf), "qid", "id", "cos_sim", k, "rank")
       .select("qid", "id", "cos_sim", "rank")
   }
 
-  /** All-pairs exact top-k join (each left row to its k nearest right
-    * rows) — building block for kNN-graph construction. Brute force with
-    * a rank window; LSH-bucket before calling at scale.
-    */
   /** LSH-bucketed kNN join — the scale path for [[knnJoin]]: candidates
     * are pairs whose hyperplane signatures agree on at least one
     * (maxHamming+1)-way chunk (pigeonhole guarantees every pair within
@@ -1183,14 +1106,12 @@ object SimilaritySearch {
       numPlanes: Int = 16,
       maxHamming: Int = 2,
       seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val chunkCols = VectorOps.hyperplaneChunkKeys(numPlanes, maxHamming)
     val dim = left.select(size(col(vecColL))).head().getInt(0)
     val planes = VectorOps.randomPlanes(numPlanes, dim, seed)
 
     def prep(df: DataFrame, idCol: String, vecCol: String, side: String): DataFrame =
-      df.select(col(idCol).as(s"id_$side"), col(vecCol).as(s"v_$side"))
-        .withColumn(s"n_$side", VectorOps.l2Norm(col(s"v_$side")))
+      normed(df, idCol, vecCol, side)
         .withColumn("ch", explode(chunkCols(
           VectorOps.hyperplaneSignature(col(s"v_$side"), planes))))
         .select(col(s"id_$side"), col(s"v_$side"), col(s"n_$side"),
@@ -1213,21 +1134,31 @@ object SimilaritySearch {
         prep(left, idColL, vecColL, "l").join(prep(right, idColR, vecColR, "r"), Seq("chunk", "cv"))
       }
 
-    val w = Window.partitionBy("id_l").orderBy(desc("cos_sim"), col("id_r"))
     // Score at the collision, THEN dedup on the scalar triple — a pair
     // colliding in multiple chunks costs an extra dot product but the
     // dedup shuffle carries no vectors.
-    collided
-      .filter(col("id_l") =!= col("id_r"))
-      .withColumn("cos_sim",
-        round(VectorOps.dot(col("v_l"), col("v_r")) / (col("n_l") * col("n_r")), 6))
-      .select("id_l", "id_r", "cos_sim")
-      .distinct()
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("id_l", "id_r", "cos_sim", "rank")
+    topKPerQuery(collided
+        .filter(col("id_l") =!= col("id_r"))
+        .select(col("id_l"), col("id_r"), pairCosine("l", "r").as("cos_sim"))
+        .distinct(),
+      "id_l", "id_r", "cos_sim", k, "rank")
   }
 
+  /** (id_side, v_side, n_side = ‖v‖): norms per ROW, not per pair —
+    * cosine as one expression would redo both norms for every candidate
+    * pair (measured 3x slower on a 4M-pair join).
+    */
+  private def normed(df: DataFrame, idCol: String, vecCol: String, side: String): DataFrame =
+    df.select(col(idCol).as(s"id_$side"), col(vecCol).as(s"v_$side"))
+      .withColumn(s"n_$side", VectorOps.l2Norm(col(s"v_$side")))
+
+  private def pairCosine(a: String, b: String): Column =
+    cosineScore(col(s"v_$a"), col(s"n_$a"), col(s"v_$b"), col(s"n_$b"))
+
+  /** All-pairs exact top-k join (each left row to its k nearest right
+    * rows) — building block for kNN-graph construction. Brute force with
+    * a rank window; LSH-bucket ([[knnJoinLSH]]) at scale.
+    */
   def knnJoin(
       left: DataFrame,
       right: DataFrame,
@@ -1236,23 +1167,10 @@ object SimilaritySearch {
       vecColL: String,
       vecColR: String,
       k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // Norms precomputed per ROW, not per pair: cosine-as-one-expression
-    // would run three dot products per candidate (the two norms redone
-    // |L|x|R| times) — measured 3x slower on a 4M-pair join.
-    val l = left.select(col(idColL).as("id_l"), col(vecColL).as("v_l"))
-      .withColumn("n_l", VectorOps.l2Norm(col("v_l")))
-    val r = right.select(col(idColR).as("id_r"), col(vecColR).as("v_r"))
-      .withColumn("n_r", VectorOps.l2Norm(col("v_r")))
-    val scored = l.crossJoin(r)
-      .filter(col("id_l") =!= col("id_r"))
-      .withColumn("cos_sim",
-        round(VectorOps.dot(col("v_l"), col("v_r")) / (col("n_l") * col("n_r")), 6))
-    val w = Window.partitionBy("id_l").orderBy(desc("cos_sim"), col("id_r"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("id_l", "id_r", "cos_sim", "rank")
+    topKPerQuery(normed(left, idColL, vecColL, "l").crossJoin(normed(right, idColR, vecColR, "r"))
+        .filter(col("id_l") =!= col("id_r"))
+        .select(col("id_l"), col("id_r"), pairCosine("l", "r").as("cos_sim")),
+      "id_l", "id_r", "cos_sim", k, "rank")
   }
 
   /** Contrastive-pair mining for retrieval/embedding training: per
@@ -1283,32 +1201,34 @@ object SimilaritySearch {
       posMin: Double = 0.95,
       negMin: Double = 0.5,
       negMax: Double = 0.9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    mineRoles(normed(candidates, idCol, vecCol, "c")
+        .crossJoin(broadcast(normed(anchors, anchorIdCol, anchorVecCol, "a")))
+        .filter(col("id_c") =!= col("id_a"))
+        .select(col("id_a").as("anchor_id"), col("id_c").as("vec_id"),
+          pairCosine("c", "a").as("cos_sim")),
+      k, posMin, negMin, negMax)
+  }
+
+  /** Role assignment over scored (anchor_id, vec_id, cos_sim) pairs: the
+    * positives (cos ≥ posMin, unbounded) plus each anchor's top-k in
+    * the [negMin, negMax) band. A zero vector scores null and so falls
+    * in neither role.
+    */
+  private def mineRoles(
+      scored: DataFrame,
+      k: Int,
+      posMin: Double,
+      negMin: Double,
+      negMax: Double): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(negMin < negMax && negMax <= posMin,
       s"need negMin < negMax <= posMin, got $negMin/$negMax/$posMin")
-    // Zero vectors have no cosine direction: filter them explicitly
-    // (matching the other entry points' convention) instead of letting
-    // a NaN cos_sim silently fail every band filter.
-    val a = anchors.select(col(anchorIdCol).as("anchor_id"),
-        col(anchorVecCol).as("v_a"))
-      .withColumn("n_a", VectorOps.l2Norm(col("v_a")))
-      .filter(col("n_a") > 0)
-    val c = candidates.select(col(idCol).as("vec_id"), col(vecCol).as("v_c"))
-      .withColumn("n_c", VectorOps.l2Norm(col("v_c")))
-      .filter(col("n_c") > 0)
-    val scored = c.crossJoin(broadcast(a))
-      .filter(col("vec_id") =!= col("anchor_id"))
-      .withColumn("cos_sim",
-        round(VectorOps.dot(col("v_a"), col("v_c")) / (col("n_a") * col("n_c")), 6))
     val pos = scored.filter(col("cos_sim") >= posMin)
       .select(col("anchor_id"), col("vec_id"), col("cos_sim"),
         lit("positive").as("role"))
-    val w = Window.partitionBy("anchor_id").orderBy(desc("cos_sim"), col("vec_id"))
-    val neg = scored
-      .filter(col("cos_sim") >= negMin && col("cos_sim") < negMax)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= k)
+    val neg = topKPerQuery(
+        scored.filter(col("cos_sim") >= negMin && col("cos_sim") < negMax),
+        "anchor_id", "vec_id", "cos_sim", k, "__rk")
       .select(col("anchor_id"), col("vec_id"), col("cos_sim"),
         lit("hard_negative").as("role"))
     pos.unionByName(neg)
@@ -1339,45 +1259,9 @@ object SimilaritySearch {
       negMin: Double = 0.5,
       negMax: Double = 0.9,
       nprobe: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(negMin < negMax && negMax <= posMin,
-      s"need negMin < negMax <= posMin, got $negMin/$negMax/$posMin")
-    val spark = anchors.sparkSession
-    import spark.implicits._
-    val cents = index.centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "cvec")
-      .withColumn("cn2", VectorOps.dot(col("cvec"), col("cvec")))
-    val a = anchors.select(col(anchorIdCol).as("anchor_id"),
-        VectorOps.asDouble(col(anchorVecCol)).as("qv"))
-      .withColumn("qn", VectorOps.l2Norm(col("qv")))
-      .filter(col("qn") > 0)
-    val wRoute = Window.partitionBy("anchor_id").orderBy(col("d2"), col("cell"))
-    val routed = a.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        col("qn") * col("qn") + col("cn2") - lit(2.0) * VectorOps.dot(col("qv"), col("cvec")))
-      .withColumn("rn", row_number().over(wRoute))
-      .filter(col("rn") <= nprobe)
-      .select("anchor_id", "qv", "qn", "cell")
-    val corpus = index.assigned
-      .select(col(index.assigned.columns.head).as("vec_id"), col("v"), col("cell"))
-      .withColumn("nrm", VectorOps.l2Norm(col("v")))
-      .filter(col("nrm") > 0)
-    val scored = routed.join(corpus, "cell")
-      .filter(col("vec_id") =!= col("anchor_id"))
-      .withColumn("cos_sim",
-        round(VectorOps.dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6))
-    val pos = scored.filter(col("cos_sim") >= posMin)
-      .select(col("anchor_id"), col("vec_id"), col("cos_sim"),
-        lit("positive").as("role"))
-    val wRank = Window.partitionBy("anchor_id").orderBy(desc("cos_sim"), col("vec_id"))
-    val neg = scored
-      .filter(col("cos_sim") >= negMin && col("cos_sim") < negMax)
-      .withColumn("__rk", row_number().over(wRank))
-      .filter(col("__rk") <= k)
-      .select(col("anchor_id"), col("vec_id"), col("cos_sim"),
-        lit("hard_negative").as("role"))
-    pos.unionByName(neg)
+    val routed = routeBatch(anchors, anchorIdCol, anchorVecCol, index.centroids, nprobe)
+    mineRoles(probeBatch(index.assigned, routed, excludeSelf = true)
+        .select(col("qid").as("anchor_id"), col("id").as("vec_id"), col("cos_sim")),
+      k, posMin, negMin, negMax)
   }
 }

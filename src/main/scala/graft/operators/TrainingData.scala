@@ -287,6 +287,11 @@ object TrainingData {
     * per shard instead of one file per (task x shard). Its explicit
     * count (the session's shuffle partitions) stops AQE from coalescing
     * the exchange into one task that writes every shard serially.
+    *
+    * The manifest aggregates the landed shard data, so `packed` is
+    * computed once. It is read back with `packed`'s schema: partition
+    * inference would otherwise retype `shard_idx` or a numeric-looking
+    * group value.
     */
   def writeShards(
       packed: DataFrame,
@@ -300,7 +305,8 @@ object TrainingData {
       .write.mode("overwrite")
       .partitionBy(groupCol, "shard_idx")
       .parquet(s"$outDir/data")
-    shardManifest(packed, groupCol, idCol)
+    val landed = packed.sparkSession.read.schema(packed.schema).parquet(s"$outDir/data")
+    shardManifest(landed, groupCol, idCol)
       .repartition(1)
       .write.mode("overwrite")
       .parquet(s"$outDir/manifest")
@@ -1287,8 +1293,7 @@ object TrainingData {
       .select(
         col(idCol),
         col("__eid"),
-        round(graft.functions.VectorOps.cosine(col("__v"), col("__ev")), 6)
-          .as("__cos"))
+        SimilaritySearch.cosineScore(col("__v"), col("__ev")).as("__cos"))
     val best = scored
       .groupBy(idCol)
       .agg(max(struct(col("__cos"), (-col("__eid")).as("__neg"))).as("__b"))
@@ -1296,7 +1301,7 @@ object TrainingData {
         col(idCol),
         (-col("__b.__neg")).as("nearest_eval_id"),
         col("__b.__cos").as("cos_sim"))
-    best.withColumn("is_contaminated", col("cos_sim") >= minCosine)
+    best.withColumn("is_contaminated", coalesce(col("cos_sim") >= minCosine, lit(false)))
   }
 
   /** IVF-bucketed semantic decontamination — the 100 TB arm of
@@ -1335,35 +1340,21 @@ object TrainingData {
       s"nprobe in [1,$nlist], got $nprobe")
     val index = SimilaritySearch.buildIvfIndex(corpus, idCol, vecCol,
       nlist = nlist, seed = seed)
-    // Route each eval vector to its nprobe nearest centroids with the
-    // centroid table as a literal column (nlist is metadata-sized):
-    // build (dist², cell) structs, array_sort, keep the head — the
-    // same shuffle-free routing the IVF probes use.
-    val centroids = index.centroids.zipWithIndex.map { case (c, i) =>
-      struct(lit(i).as("cell"),
-        array(c.map(lit).toIndexedSeq: _*).as("cv"))
-    }
-    val ev = eval.select(
-      col(evalIdCol).as("__eid"),
-      graft.functions.VectorOps.asDouble(col(evalVecCol)).as("__ev"))
-    val routed = ev
-      .withColumn("__cands", array(centroids.toIndexedSeq: _*))
-      .withColumn("__ranked", array_sort(transform(col("__cands"), c =>
-        struct(
-          aggregate(zip_with(col("__ev"), c("cv"), (x, y) => (x - y) * (x - y)),
-            lit(0.0), (acc, v) => acc + v).as("d2"),
-          c("cell").as("cell")))))
-      .select(col("__eid"), col("__ev"),
-        explode(slice(col("__ranked"), 1, nprobe)).as("__p"))
-      .select(col("__eid"), col("__ev"), col("__p.cell").as("cell"))
+    // Route each eval vector to its nprobe nearest centroids in the
+    // plan — the router the batch IVF probes use, row-local (the
+    // centroid table is a literal column), so no exchange.
+    val routed = eval.select(
+        col(evalIdCol).as("__eid"),
+        graft.functions.VectorOps.asDouble(col(evalVecCol)).as("__ev"))
+      .withColumn("cell", explode(
+        SimilaritySearch.nearestCellsInPlan(col("__ev"), index.centroids, nprobe)))
     // Candidate scoring: corpus rows meet ONLY the eval vectors that
     // probed their cell; the eval side is tiny — broadcast the routed
     // fan-out so the big assigned table never shuffles.
     val scored = index.assigned
       .join(broadcast(routed), Seq("cell"))
       .select(col(idCol), col("__eid"),
-        round(graft.functions.VectorOps.cosine(col("v"), col("__ev")), 6)
-          .as("__cos"))
+        SimilaritySearch.cosineScore(col("v"), col("__ev")).as("__cos"))
     val best = scored
       .groupBy(idCol)
       .agg(max(struct(col("__cos"), (-col("__eid")).as("__neg"))).as("__b"))

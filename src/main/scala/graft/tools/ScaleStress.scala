@@ -87,8 +87,8 @@ object ScaleStress {
     time("ivf probe top-20 (nprobe=8)")(
       SimilaritySearch.ivfTopK(idx, "vec_id", q, 20, nprobe = 8).collect())
     time("emb near-dup LSH (cos>=0.9)")(
-      println("[stress]   n_pairs = " + Dedup.embeddingNearDuplicatesLSH(
-        emb, "vec_id", "embedding", 0.9, numPlanes = 20, maxHamming = 1).count()))
+      Meter.consume(Dedup.embeddingNearDuplicatesLSH(
+        emb, "vec_id", "embedding", 0.9, numPlanes = 20, maxHamming = 1)))
     // PCA->IVF (r13): the moments fold + clustering in 16-of-64 dims at
     // volume, then the coarse-to-fine probe. The claim: the reduced
     // probe touches k/d of the vector bytes in the shortlist stage, so
@@ -138,9 +138,8 @@ object ScaleStress {
       s"widened rows = ${widenSel.length}/20")
     val queries100 = emb.filter(col("vec_id") % 400 === 1).limit(100)
     time("batch minimal-prefix widen, 100 queries")(
-      SimilaritySearch.ivfTopKBatchWhereWiden(
-        fidx, queries100, "vec_id", "embedding", selPred, k = 20, nprobe = 8)
-        .count())
+      Meter.consume(SimilaritySearch.ivfTopKBatchWhereWiden(
+        fidx, queries100, "vec_id", "embedding", selPred, k = 20, nprobe = 8)))
     }
 
     section("stores") {

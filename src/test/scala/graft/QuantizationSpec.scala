@@ -74,12 +74,19 @@ class QuantizationSpec extends SparkSpec {
     assert(adc == viaDecode)
   }
 
-  test("PQ batch top-k tracks exact-dot top-k (mean recall floor)") {
+  test("PQ per-query top-k of the decoded query tracks exact-dot top-k (mean recall floor)") {
     val k = 10
-    val queries = emb.filter(col("vec_id") < 5)
-    val got = Quantization.pqTopKBatch(emb, queries, model8, "vec_id", "embedding", k)
-      .select("qid", "vec_id").as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
+    // Symmetric PQ search composed from pqTopK: ADC against the query's
+    // own reconstruction is dot(decoded query, decoded row), self excluded.
+    val got = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id"), Quantization.pqDecode(
+        Quantization.pqEncode(col("embedding"), model8), model8))
+      .as[(Long, Seq[Double])].collect()
+      .map { case (q, dec) =>
+        q -> Quantization.pqTopK(emb.filter(col("vec_id") =!= q), model8, "vec_id",
+            "embedding", dec.toArray, k)
+          .select("vec_id").as[Long].collect().toSet
+      }.toMap
     val v = emb.select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("e"))
     val exact = v.select(col("vec_id").as("qid"), col("e").as("qe"))
       .filter(col("qid") < 5)
@@ -396,19 +403,16 @@ class QuantizationSpec extends SparkSpec {
       "refused append must leave the store untouched")
   }
 
-  test("batch probe of a persisted store equals per-query stored probes") {
+  test("self-excluding stored probe (pqTopKStoredWhere, id =!= qid) equals the plain stored probe") {
     val path = s"target/tmp/pq_batch_store_${System.nanoTime()}"
     val corpus = emb.filter(col("vec_id") >= 5)
     Quantization.savePqIndex(corpus, model8, "vec_id", "embedding", path)
-    val queries = emb.filter(col("vec_id") < 3)
-    val batch = Quantization
-      .pqTopKStoredBatch(spark, path, queries, "vec_id", "embedding", k = 10)
-      .select("qid", "vec_id", "qscore", "rnk")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-      .groupBy(_._1).view.mapValues(_.sortBy(_._4).map(x => (x._2, x._3)).toSeq).toMap
     (0L until 3L).foreach { qid =>
       val q = emb.filter(col("vec_id") === qid)
         .select(VectorOps.asDouble(col("embedding"))).as[Seq[Double]].head().toArray
+      val batch = Map(qid -> Quantization
+        .pqTopKStoredWhere(spark, path, q, k = 10, col("vec_id") =!= qid)
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq)
       val single = Quantization.pqTopKStored(spark, path, q, k = 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(batch(qid) == single, s"query $qid diverged")
@@ -481,6 +485,23 @@ class QuantizationSpec extends SparkSpec {
     assert(pruned.intersect(brute).size >= 8,
       s"pruned recall ${pruned.intersect(brute).size}/20")
     idx.release()
+  }
+
+  test("full probe is brute force, bitwise: ivfSq8TopK at nprobe = nlist") {
+    import graft.operators.SimilaritySearch
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val q = emb.filter(col("vec_id") === 0)
+      .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
+    val idx = SimilaritySearch.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 8)
+    try {
+      val (mins, maxs) = Quantization.sq8Params(corpus, "embedding")
+      val decoded = corpus.withColumn("dec", Quantization.sq8Dequantize(
+        Quantization.sq8Quantize(col("embedding"), mins, maxs), mins, maxs))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      val brute = rows(SimilaritySearch.bruteForceTopK(decoded, "vec_id", "dec", q, 20))
+      assert(rows(Quantization.ivfSq8TopK(idx, "vec_id", q, mins, maxs, k = 20, nprobe = 8)) == brute)
+    } finally idx.release()
   }
 
   test("quantized scores and ranks are deterministic across runs") {

@@ -78,11 +78,15 @@ class SimilaritySpec extends SparkSpec {
     assert(plain == again)
 
     // 1 bit/dim still carries signal: the Hamming shortlist overlaps the
-    // true cosine top-k, and the exact-dot rerank arm dominates it.
+    // true cosine top-k, and an exact re-rank of a wider shortlist dominates it.
     val plainRecall = plain.map(_._1).count(brute.contains)
     assert(plainRecall >= 4, s"binary recall $plainRecall/20 collapsed")
-    val reranked = SimilaritySearch
-      .binarySignTopKReranked(corpus, "vec_id", "embedding", q, k = 20, shortlist = 8)
+    // Shortlist + exact re-rank composed from the public forms: the
+    // k * 8 Hamming shortlist, re-scored by exact cosine.
+    val shortlist = SimilaritySearch.binarySignTopK(corpus, "vec_id", "embedding", q, 20 * 8)
+      .select("vec_id")
+    val reranked = SimilaritySearch.bruteForceTopK(
+        corpus.join(shortlist, Seq("vec_id"), "left_semi"), "vec_id", "embedding", q, 20)
       .select("vec_id").as[Long].collect()
     val rerankRecall = reranked.count(brute.contains)
     assert(rerankRecall >= plainRecall, s"rerank $rerankRecall < plain $plainRecall")
@@ -167,6 +171,71 @@ class SimilaritySpec extends SparkSpec {
     assert(sims.zip(sims.tail).forall { case (a, b) => a >= b })
   }
 
+  private def idScore(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  test("full probe is brute force, bitwise: ivfTopK at nprobe = nlist") {
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val idx = SimilaritySearch.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 8)
+    try {
+      val brute = idScore(SimilaritySearch.bruteForceTopK(corpus, "vec_id", "embedding", query, 20))
+      assert(idScore(SimilaritySearch.ivfTopK(idx, "vec_id", query, 20, nprobe = 8)) == brute)
+    } finally idx.release()
+  }
+
+  test("full probe is brute force, bitwise: ivfTopKBatch at nprobe = nlist, self excluded") {
+    val idx = SimilaritySearch.buildIvfIndex(emb, "vec_id", "embedding", nlist = 8)
+    try {
+      val qids = Seq(0L, 1L, 2L)
+      val batch = SimilaritySearch.ivfTopKBatch(
+          idx, emb.filter(col("vec_id").isin(qids: _*)), "vec_id", "embedding", k = 10, nprobe = 8)
+        .collect()
+        .groupBy(_.getAs[Long]("qid"))
+        .view.mapValues(_.sortBy(_.getAs[Int]("rank")).map(r =>
+          (r.getAs[Long]("id"), r.getAs[Double]("cos_sim"))).toSeq).toMap
+      qids.foreach { qid =>
+        val qv = emb.filter(col("vec_id") === qid)
+          .select(VectorOps.asDouble(col("embedding"))).head().getSeq[Double](0)
+        val brute = idScore(SimilaritySearch.bruteForceTopK(
+          emb.filter(col("vec_id") =!= qid), "vec_id", "embedding", qv, 10))
+        assert(batch(qid) == brute, s"mismatch for query $qid")
+      }
+    } finally idx.release()
+  }
+
+  test("full probe is brute force, bitwise: LSH at maxProbeHamming = numPlanes, both forms") {
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val brute = idScore(SimilaritySearch.bruteForceTopK(corpus, "vec_id", "embedding", query, 20))
+    assert(idScore(SimilaritySearch.lshTopK(
+      corpus, "vec_id", "embedding", query, k = 20, numPlanes = 8, maxProbeHamming = 8)) == brute)
+    assert(idScore(SimilaritySearch.lshTopKMultiProbe(
+      corpus, "vec_id", "embedding", query, k = 20, numPlanes = 8, maxProbeHamming = 8)) == brute)
+  }
+
+  test("a zero vector has no cosine: brute, IVF and batch IVF drop it instead of failing") {
+    // Spark 4 runs ANSI mode, where x / 0.0 raises DIVIDE_BY_ZERO: one
+    // all-zero vector on either side must not abort the query.
+    val zeroId = 1000000L
+    val zero = Seq((zeroId, Array.fill(query.length)(0.0f), 0))
+      .toDF("vec_id", "embedding", "label")
+    val corpus = emb.filter(col("vec_id") =!= 0).unionByName(zero)
+    val brute = SimilaritySearch.bruteForceTopK(corpus, "vec_id", "embedding", query, 10)
+      .collect().map(_.getLong(0))
+    assert(brute.length == 10 && !brute.contains(zeroId))
+    val idx = SimilaritySearch.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 4)
+    try {
+      val ivf = SimilaritySearch.ivfTopK(idx, "vec_id", query, 10, nprobe = 4)
+        .collect().map(_.getLong(0))
+      assert(ivf.length == 10 && !ivf.contains(zeroId))
+      val queries = emb.filter(col("vec_id").isin(1L, 2L)).unionByName(zero)
+      val batch = SimilaritySearch.ivfTopKBatch(
+          idx, queries, "vec_id", "embedding", k = 10, nprobe = 4)
+        .select("qid", "id").as[(Long, Long)].collect()
+      assert(batch.groupBy(_._1).view.mapValues(_.length).toMap == Map(1L -> 10, 2L -> 10))
+      assert(!batch.exists(_._2 == zeroId))
+    } finally idx.release()
+  }
+
   test("filtered search: predicate prunes inside the probe; exhaustive == filtered brute") {
     val corpus = emb.filter(col("vec_id") =!= 0)
     val idx = SimilaritySearch.buildIvfIndex(
@@ -243,16 +312,16 @@ class SimilaritySpec extends SparkSpec {
     } finally idx.release()
   }
 
-  test("ivfTopKBatchWhere: batch slice probe equals per-query filtered probes at full probe") {
+  test("filtered batch probe (ivfTopKBatch over assigned.filter(pred)) equals per-query filtered brute at full probe") {
     val corpus = emb.filter(col("vec_id") =!= 0)
     val idx = SimilaritySearch.buildIvfIndex(
       corpus, "vec_id", "embedding", nlist = 8, carryCols = Seq("label"))
     try {
       val pred = col("label") === 1
       val queries = emb.filter(col("vec_id").isin(0L, 1L, 2L))
-      val batch = SimilaritySearch.ivfTopKBatchWhere(
-          idx, queries, "vec_id", "embedding", pred, k = 10, nprobe = 8,
-          excludeSelf = true)
+      val batch = SimilaritySearch.ivfTopKBatch(
+          idx.copy(assigned = idx.assigned.filter(pred)), queries, "vec_id", "embedding",
+          k = 10, nprobe = 8, excludeSelf = true)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       // Per-query filtered brute force (label slice, self excluded).
       val expected = Seq(0L, 1L, 2L).flatMap { qid =>
@@ -295,8 +364,9 @@ class SimilaritySpec extends SparkSpec {
       val dense = col("label") === 1
       def byQuery(rows: Array[org.apache.spark.sql.Row]) =
         rows.map(r => (r.getLong(0), r.getInt(3)) -> r.getDouble(2)).toMap
-      val fixedD = byQuery(SimilaritySearch.ivfTopKBatchWhere(
-        idx, queries, "vec_id", "embedding", dense, k = 10, nprobe = 2).collect())
+      val fixedD = byQuery(SimilaritySearch.ivfTopKBatch(
+        idx.copy(assigned = idx.assigned.filter(dense)), queries, "vec_id", "embedding",
+        k = 10, nprobe = 2).collect())
       val widenD = byQuery(SimilaritySearch.ivfTopKBatchWhereWiden(
         idx, queries, "vec_id", "embedding", dense, k = 10, nprobe = 2,
         minPoolFactor = 4).collect())
@@ -307,13 +377,14 @@ class SimilaritySpec extends SparkSpec {
     } finally idx.release()
   }
 
-  test("ivfTopKBatchAmong restricts results to the allowed id set, exactly at full probe") {
+  test("allowed-id batch probe (ivfTopKBatch over a semi-joined index) is exact at full probe") {
     val idx = SimilaritySearch.buildIvfIndex(emb, "vec_id", "embedding", nlist = 8)
     val allowed = emb.filter(col("vec_id") % 3 === 0).select("vec_id")
     val allowSet = allowed.as[Long].collect().toSet
     val queries = emb.filter(col("vec_id").isin(1L, 2L))
-    val got = SimilaritySearch.ivfTopKBatchAmong(
-      idx, queries, "vec_id", "embedding", allowed, k = 10, nprobe = 8)
+    val got = SimilaritySearch.ivfTopKBatch(
+        idx.copy(assigned = idx.assigned.join(allowed, Seq("vec_id"), "left_semi")),
+        queries, "vec_id", "embedding", k = 10, nprobe = 8)
       .collect()
     assert(got.map(_.getAs[Long]("id")).forall(allowSet))
     // Full probe == per-query brute force over the allowed slice.
