@@ -3538,9 +3538,11 @@ object SparkEntry {
         .select(col("doc_id"),
           least(floor(TextFunctions.qualityScore(col("text")) * 4), lit(3L))
             .cast("long").as("grade_quality"))
-      graft.operators.MlEval.cohenKappaWeighted(
+      // the kappa is collected on the driver, so the cache releases here
+      try graft.operators.MlEval.cohenKappaWeighted(
         gradedS.join(gradedQ, Seq("doc_id")),
         "grade_surprisal", "grade_quality")
+      finally sur.unpersist()
     }),
 
     // Krippendorff's alpha (r16): the UNBALANCED-panel agreement

@@ -1,9 +1,11 @@
 package graft.operators
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** How much of a census a fit may collect to the driver: a row count
   * and an estimated on-heap size (keys are strings, so rows alone do
@@ -51,6 +53,19 @@ private[graft] final class Census private (rows: Either[Array[Row], DataFrame]) 
     case Right(cached) =>
       cached.rdd.aggregate(new Census.Sums)((s, r) => { term(r, s); s }, _ merge _)
   }
+
+  /** The output a fit builds once after its last sweep: `f` maps each
+    * census row to output rows. Collected, it is a local relation; in
+    * place, the mapped census is checkpointed eagerly. Either way it
+    * outlives the census cache.
+    */
+  def emit(spark: SparkSession, schema: StructType)(f: Row => Iterator[Row]): DataFrame =
+    rows match {
+      case Left(collected) =>
+        spark.createDataFrame(collected.iterator.flatMap(f).toSeq.asJava, schema)
+      case Right(cached) =>
+        spark.createDataFrame(cached.rdd.flatMap(f), schema).localCheckpoint(true)
+    }
 }
 
 private[graft] object Census {
@@ -93,12 +108,14 @@ private[graft] object Census {
   val Zero6: BigDecimal = BigDecimal(0).setScale(6)
 
   /** Exact per-key sums of scale-6 decimals: a sweep's result, and in
-    * place, each partition's partial.
+    * place, each partition's partial. Keys are any values with
+    * structural equality (strings, tuples, case classes).
     */
   final class Sums extends Serializable {
-    private val m = mutable.HashMap.empty[String, BigDecimal]
-    def add(k: String, v: BigDecimal): Unit = m.update(k, apply(k) + v)
-    def apply(k: String): BigDecimal = m.getOrElse(k, Zero6)
+    private val m = mutable.HashMap.empty[Any, BigDecimal]
+    def add(k: Any, v: BigDecimal): Unit = m.update(k, apply(k) + v)
+    def apply(k: Any): BigDecimal = m.getOrElse(k, Zero6)
+    def iterator: Iterator[(Any, BigDecimal)] = m.iterator
     def merge(o: Sums): Sums = { o.m.foreach { case (k, v) => add(k, v) }; this }
   }
 }

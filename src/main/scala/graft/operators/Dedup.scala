@@ -517,7 +517,9 @@ object Dedup {
   /** [[minHashPairsPortable]] with extra band-join key columns: two docs
     * are candidates only when they agree on every `keys` column of `df`
     * AND on some band's key (an empty `keys` is the plain operator).
-    * Output: id_a, id_b, n_match, est_jaccard.
+    * Output: id_a, id_b, n_match, est_jaccard. The signatures are not
+    * persisted: without a cache Meter at sf0.1 shows no more jobs or
+    * shuffle bytes, and the lazy result would leak it.
     */
   private def portablePairs(
       df: DataFrame,
@@ -531,7 +533,6 @@ object Dedup {
     require(bands >= 1 && perms % bands == 0,
       s"bands must divide perms, got $perms/$bands")
     val sigs = minHashSigArrays(df, idCol, textCol, n, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keyed =
       if (keys.isEmpty) sigs
       else sigs.join(df.select(col(idCol).as("id") +: keys.map(col): _*), Seq("id"))
@@ -577,7 +578,9 @@ object Dedup {
     * 31 at the default ladder); one aliased self-join; the exhaustive
     * truth is the same sf-bounded audit q_lsh_quality runs. Like that
     * audit, this is a MEASUREMENT query — the truth side is quadratic
-    * in near-dup density by design; run it on samples at scale.
+    * in near-dup density by design; run it on samples at scale. The
+    * signatures are not persisted: without a cache Meter at sf0.1 shows
+    * no more jobs or shuffle bytes, and the lazy result would leak it.
     */
   def lshOperatingCurve(
       df: DataFrame,
@@ -592,7 +595,6 @@ object Dedup {
     val spark = df.sparkSession
     import spark.implicits._
     val sigs = minHashSigArrays(df, idCol, textCol, n, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val allKeys = sigs.select(col("id"), explode(concat(bandConfigs.map { b =>
         transform(portableBandKeys(col("hs"), b, perms / b),
           (k, i) => struct(lit(b).as("cfg_bands"), i.as("band"), k.as("bkey")))
@@ -930,7 +932,9 @@ object Dedup {
     * On the sf0.1 embeddings (16 planes, maxHamming 2: chunks of 6, 6 and
     * 4 bits, minCosine 0.5) the chunk join yields 198,913 collisions and
     * 193,326 distinct pairs for exact cosine to verify, of which 7 pass:
-    * the verify join does nearly all the work.
+    * the verify join does nearly all the work. The signed vectors are
+    * not persisted: without a cache Meter at sf0.1 shows no more jobs
+    * or shuffle bytes, and the lazy result would leak it.
     */
   def embeddingNearDuplicatesLSH(
       df: DataFrame,
@@ -949,7 +953,6 @@ object Dedup {
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       .withColumn("sig", VectorOps.hyperplaneSignature(col("v"), planes))
       .withColumn("nrm", VectorOps.l2Norm(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     val exploded = v.select(col("id"), explode(chunkKeys(col("sig"))).as("ch"))
       .select(col("id"), col("ch.chunk").as("chunk"), col("ch.cv").as("cv"))

@@ -1,9 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
-import Census.r6
+import Census.{d6, r6}
 
 /** SCALAR-GRADE TRUTH INFERENCE — the continuous-response companion to
   * [[DawidSkene]]: reward-model and rubric pipelines collect per-
@@ -38,140 +40,125 @@ import Census.r6
   * posture): grades land on the 6dp grid at ingestion; every per-row
   * product lands back on the grid before an exact decimal fold
   * (order-free sums); each a/b/t is a fixed-order IEEE assembly
-  * rounded to the grid; the gauge means are bounded rater-grain folds
-  * (one tiny driver action per sweep, the DS-priors pattern). A fixed
+  * rounded to the grid; the gauge means are exact folds over the
+  * bounded rater table on the driver. A fixed
   * sweep count therefore replays exactly in SQL with the sweeps
   * unrolled as CTEs.
   *
-  * Scale shape: votes fold once per sweep into the bounded rater
-  * table (one rater-keyed aggregation over votes ⋈ truth) and once
-  * into the unit truths (one unit-keyed aggregation with the rater
-  * lenses broadcast); the truth state localCheckpoints per sweep so
-  * plan depth stays constant. Work per sweep is proportional to
-  * votes — never units² or raters².
+  * Scale shape: grades fold ONCE into a unit census — one row per
+  * unit holding its (rater, grade) votes — and every sweep is one
+  * [[Census]] pass over it. The state that crosses sweeps is
+  * rater-grain (each rater's lens), and a unit's truth depends only on
+  * its own grades and the lenses, so one term function runs the unit's
+  * truth step and adds its five rater sufficient statistics as exact
+  * decimals; OLS and the gauge fix run on the driver. A sweep is no job
+  * when the census is collected and one when it runs in place; the
+  * truth table is built once, after the last sweep. Work per sweep is
+  * proportional to votes — never units² or raters².
   */
 object ScalarConsensus {
 
   /** The fitted model: `truth` (u, truth, n_votes) — the consensus
     * grade per unit on the panel's common scale; `raters`
-    * (r, bias, scale, n_votes) — each rater's fitted affine lens,
+    * (r, n_votes, bias, scale) — each rater's fitted affine lens,
     * gauge-normalized to mean-0 bias / mean-1 scale.
     */
   final case class ScalarFit(truth: DataFrame, raters: DataFrame)
-
-  private def dec(c: Column): Column = c.cast("decimal(28,6)")
 
   def fit(
       df: DataFrame,
       unitCol: String,
       raterCol: String,
       valueCol: String,
-      iters: Int = 5): ScalarFit = {
-    require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
-    val votes = df.select(
-        col(unitCol).cast("string").as("u"),
-        col(raterCol).cast("string").as("r"),
-        round(col(valueCol).cast("double"), 6).as("y"))
-      .filter(col("u").isNotNull && col("r").isNotNull && col("y").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nRaters = votes.select("r").distinct().count()
-    require(nRaters >= 1, "scalar consensus needs at least one rater")
+      iters: Int = 5): ScalarFit =
+    fit(df, unitCol, raterCol, valueCol, iters, CollectBound.Default)
 
-    // init: per-unit plain mean on the grid (the model every harsh-
-    // rater story starts from)
-    var truth = votes.groupBy("u")
-      .agg(count(lit(1)).as("__m"), sum(dec(col("y"))).as("__sy"))
-      .select(col("u"),
-        round(col("__sy").cast("double") / col("__m").cast("double"), 6)
-          .as("t"))
-      // LAZY checkpoint (r19, the DawidSkene sweep pattern): the next
-      // sweep's sufficient-statistics collect materializes the state,
-      // so each sweep schedules one job instead of two
-      .localCheckpoint(false)
-    var raters: DataFrame = null
-
-    // r19 sweep shape (guide §2.4, the DawidSkene.fitCore pattern): the
-    // rater table is BOUNDED, so each sweep runs ONE distributed job —
-    // the five exact sufficient statistics per rater, collected — and
-    // the OLS + gauge assemblies fold on the driver with the house
-    // byte-identical arithmetic (Census.r6 == Spark round(…, 6), the
-    // Census fold's posture, spec-pinned): each cast is
-    // BigDecimal.doubleValue, each assembly the same fixed-order IEEE
-    // chain, the gauge sums exact scale-6 BigDecimal adds. The rater
-    // lenses then enter the truth step as a LOCAL relation, so the old
-    // per-sweep rFit/raters checkpoint jobs, the gauge job and the
-    // broadcast-exchange build are all gone from the distributed plan.
-    val spark = votes.sparkSession
-    import spark.implicits._
-    for (_ <- 1 to iters) {
-      // rater step: the sweep's one rater-keyed distributed job
-      val rsRows = votes.join(truth, Seq("u"))
-        .groupBy("r")
-        .agg(
-          count(lit(1)).as("n"),
-          sum(dec(col("t"))).as("__st"),
-          sum(dec(col("y"))).as("__sy"),
-          sum(dec(round(col("t") * col("y"), 6))).as("__sty"),
-          sum(dec(round(col("t") * col("t"), 6))).as("__stt"))
-        .collect()
-      // OLS per rater: b = (nΣty − ΣtΣy)/(nΣt² − (Σt)²) when the
-      // denom is positive, else 1; a = (Σy − b·Σt)/n — the verbatim
-      // old column expressions, folded on the driver
-      val rFit = rsRows.map { row =>
-        val n = row.getLong(1)
-        val nD = n.toDouble
-        val stD = row.getDecimal(2).doubleValue
-        val syD = row.getDecimal(3).doubleValue
-        val styD = row.getDecimal(4).doubleValue
-        val sttD = row.getDecimal(5).doubleValue
-        val denom = nD * sttD - stD * stD
-        val b =
-          if (denom > 0.0) r6((nD * styD - stD * syD) / denom) else 1.0
-        val a = r6((syD - b * stD) / nD)
-        (row.getString(0), n, a, b)
+  /** A unit's truth from its (r, y) grades: the plain mean without
+    * lenses, else the precision-weighted readback Σ b(y − a) / Σ b²,
+    * falling back to the mean when the weight mass is not positive.
+    */
+  private def truthOf(vs: Seq[Row], lens: Option[Map[String, (Double, Double)]]): Double = {
+    val mean = r6(vs.foldLeft(Census.Zero6)((s, v) => s + d6(v.getDouble(1))).toDouble /
+      vs.length.toDouble)
+    lens.fold(mean) { l =>
+      var num, den = Census.Zero6
+      vs.foreach { v =>
+        val (a, b) = l(v.getString(0))
+        num += d6(b * (v.getDouble(1) - a))
+        den += d6(b * b)
       }
-      // gauge: exact scale-6 decimal folds of the 6dp a/b values
-      val sa = rFit.iterator.map { case (_, _, a, _) =>
-        BigDecimal(a).setScale(6) }.foldLeft(BigDecimal(0).setScale(6))(_ + _)
-      val sb = rFit.iterator.map { case (_, _, _, b) =>
-        BigDecimal(b).setScale(6) }.foldLeft(BigDecimal(0).setScale(6))(_ + _)
-      val aBar = r6(sa.toDouble / nRaters.toDouble)
-      val bBar = r6(sb.toDouble / nRaters.toDouble)
-      val raterRows =
+      if (den.toDouble > 0.0) r6(num.toDouble / den.toDouble) else mean
+    }
+  }
+
+  /** `iters` fused sweeps — each a truth step from the current lenses
+    * (the plain means first) and the rater step it feeds — then one
+    * truth readback through the final lenses.
+    */
+  private[graft] def fit(
+      df: DataFrame, unitCol: String, raterCol: String, valueCol: String,
+      iters: Int, bound: CollectBound): ScalarFit = {
+    require(iters >= 1 && iters <= 50, s"iters in [1,50], got $iters")
+    val spark = df.sparkSession
+    import spark.implicits._
+    val census = df.select(
+        col(unitCol).cast("string").as("u"),
+        struct(col(raterCol).cast("string").as("r"),
+          round(col(valueCol).cast("double"), 6).as("y")).as("v"))
+      .filter(col("u").isNotNull && col("v.r").isNotNull && col("v.y").isNotNull)
+      .groupBy("u").agg(collect_list(col("v")).as("vs"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val units = Census(census, lit(120L) + lit(2L) * length(col("u")) +
+        aggregate(col("vs"), lit(0L), (acc, v) => acc + lit(140L) + lit(2L) * length(v("r"))),
+        bound)
+      // one fused sweep: each unit's truth through `lens` and its rater
+      // statistics n, Σt, Σy, Σty, Σt² (keys (r, 0..4)), then OLS and
+      // the gauge fix per rater on the driver
+      def sweep(lens: Option[Map[String, (Double, Double)]]) = {
+        val s = units.sweep { (row, acc) =>
+          val vs = row.getSeq[Row](1)
+          val t = truthOf(vs, lens)
+          vs.foreach { v =>
+            val (r, y) = (v.getString(0), v.getDouble(1))
+            acc.add((r, 0), BigDecimal(1))
+            acc.add((r, 1), d6(t))
+            acc.add((r, 2), d6(y))
+            acc.add((r, 3), d6(t * y))
+            acc.add((r, 4), d6(t * t))
+          }
+        }
+        // OLS per rater: b = (nΣty − ΣtΣy)/(nΣt² − (Σt)²) when the
+        // denom is positive, else 1; a = (Σy − b·Σt)/n
+        val rFit = s.iterator.collect { case ((r: String, 0), n) => (r, n.toLong) }
+          .toSeq.sorted.map { case (r, n) =>
+            val nD = n.toDouble
+            val Seq(stD, syD, styD, sttD) = (1 to 4).map(k => s((r, k)).toDouble)
+            val denom = nD * sttD - stD * stD
+            val b = if (denom > 0.0) r6((nD * styD - stD * syD) / denom) else 1.0
+            (r, n, r6((syD - b * stD) / nD), b)
+          }
+        require(rFit.nonEmpty, "scalar consensus needs at least one rater")
+        // gauge: exact scale-6 decimal folds of the 6dp a/b values
+        val nRaters = rFit.length.toDouble
+        val aBar = r6(rFit.map(x => BigDecimal(x._3).setScale(6)).sum.toDouble / nRaters)
+        val bBar = r6(rFit.map(x => BigDecimal(x._4).setScale(6)).sum.toDouble / nRaters)
         if (bBar > 0.0) {
           val q = r6(aBar / bBar)
-          rFit.map { case (r, n, a, b) =>
-            (r, n, r6(a - b * q), r6(b / bBar))
-          }
+          rFit.map { case (r, n, a, b) => (r, n, r6(a - b * q), r6(b / bBar)) }
         } else rFit
-      raters = raterRows.toSeq
-        .toDF("r", "n_votes", "bias", "scale")
-      // truth step: precision-weighted readback through the lenses
-      truth = votes
-        .join(broadcast(raters.select(col("r"), col("bias"), col("scale"))),
-          Seq("r"))
-        .groupBy("u")
-        .agg(
-          count(lit(1)).as("__m"),
-          sum(dec(round(col("scale") * (col("y") - col("bias")), 6)))
-            .as("__num"),
-          sum(dec(round(col("scale") * col("scale"), 6))).as("__den"),
-          sum(dec(col("y"))).as("__sy"))
-        .select(col("u"),
-          when(col("__den").cast("double") > 0.0,
-            round(col("__num").cast("double") / col("__den").cast("double"), 6))
-          .otherwise(
-            round(col("__sy").cast("double") / col("__m").cast("double"), 6))
-          .as("t"))
-        .localCheckpoint(false) // lazy — next sweep's collect materializes
-    }
-
-    val nVotes = votes.groupBy("u").agg(count(lit(1)).as("n_votes"))
-    val truthOut = truth.join(nVotes, Seq("u"))
-      .select(col("u"), col("t").as("truth"), col("n_votes"))
-      .localCheckpoint(true)
-    votes.unpersist()
-    ScalarFit(truthOut, raters)
+      }
+      def lensOf(raters: Seq[(String, Long, Double, Double)]) =
+        Some(raters.map { case (r, _, a, b) => r -> (a, b) }.toMap)
+      val raters = (2 to iters).foldLeft(sweep(None))((rs, _) => sweep(lensOf(rs)))
+      val lens = lensOf(raters)
+      val truth = units.emit(spark, StructType(Seq(StructField("u", StringType),
+          StructField("truth", DoubleType), StructField("n_votes", LongType)))) { row =>
+        val vs = row.getSeq[Row](1)
+        Iterator(Row(row.getString(0), truthOf(vs, lens), vs.length.toLong))
+      }
+      ScalarFit(truth, raters.toDF("r", "n_votes", "bias", "scale"))
+    } finally census.unpersist()
   }
 
   /** One-call consensus form: fit + the truth table. */

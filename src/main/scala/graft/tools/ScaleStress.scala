@@ -38,6 +38,55 @@ object ScaleStress {
         .drop("_rep")
     }
 
+    /** Order-free checksum of every row and column, so runs of an arm
+      * can be compared.
+      */
+    def checksum(df: DataFrame): Long =
+      df.agg(bit_xor(xxhash64(df.columns.map(col).toSeq: _*))).head().getLong(0)
+
+    /** Dawid-Skene votes: `units` units x 5 raters x 3 classes with
+      * planted per-rater accuracies (two sharp, two mediocre, one noisy).
+      */
+    def dsVotes(units: Long): DataFrame = {
+      val acc = array(lit(0.92), lit(0.88), lit(0.6), lit(0.6), lit(0.38))
+      spark.range(units * 5).select(
+          // Column `/` is FRACTIONAL division — floor+cast for the
+          // integer unit id
+          col("id"),
+          floor(col("id") / 5L).cast("long").as("u"))
+        .select(
+          col("u"),
+          concat(lit("r"), (col("id") % 5L).cast("string")).as("r"),
+          (col("u") % 3L).as("truth"),
+          element_at(acc, (col("id") % 5L + 1).cast("int")).as("a"),
+          (conv(substring(md5(concat(col("id").cast("string"), lit("ds"))), 1, 8),
+            16, 10).cast("double") / lit(4294967296.0)).as("coin"))
+        .select(col("u"), col("r"),
+          concat(lit("c"), when(col("coin") < col("a"), col("truth"))
+            .otherwise(pmod(col("truth") + 1L
+              + (col("coin") * 1000).cast("long") % 2L, lit(3L)))
+            .cast("string")).as("l"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+
+    /** Scalar grades: `units` units x 3 raters with planted lenses (fair
+      * / harsh -0.2 / stretch 2x) and md5 noise.
+      */
+    def scGrades(units: Long): DataFrame =
+      spark.range(units * 3).select(
+          floor(col("id") / 3L).cast("long").as("u"),
+          (col("id") % 3L).as("ri"),
+          (conv(substring(md5(concat(col("id").cast("string"), lit("sc"))), 1, 8),
+            16, 10).cast("double") / lit(4294967296.0) - 0.5).as("eps"))
+        .select(col("u"),
+          concat(lit("g"), col("ri").cast("string")).as("r"), {
+            val t = (col("u") % 1000L).cast("double") / 1000.0
+            round(when(col("ri") === 0L, t)
+              .when(col("ri") === 1L, t - 0.2)
+              .otherwise(lit(0.1) + t * 2.0) + col("eps") * 0.05, 6)
+          }.as("y"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
     section("dedup") {
     val docs = replicate(TableIO.table(spark, sfDir, "documents"), "doc_id", reps)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -981,6 +1030,33 @@ object ScaleStress {
       }
       cmps.unpersist(blocking = false)
     }
+    // The label fits sweep a unit census: Dawid-Skene (5 raters, 3
+    // classes) and scalar consensus (3 raters), 10 sweeps each, same
+    // interleave.
+    import graft.operators.{DawidSkene, ScalarConsensus}
+    def labelFits(votes: DataFrame, grades: DataFrame, bound: CollectBound,
+        label: String): Unit = {
+      time(s"crossover: DS $label")(Meter.consume(DawidSkene.fit(
+        votes, "u", "r", "l", 10, 0.01, bound).posterior))
+      time(s"crossover: SC $label")(Meter.consume(ScalarConsensus.fit(
+        grades, "u", "r", "y", 10, bound).truth))
+    }
+    val (warmV, warmG) = (dsVotes(1000L), scGrades(1000L))
+    labelFits(warmV, warmG, collectAll, "warm-up collected")
+    labelFits(warmV, warmG, CollectBound.InPlace, "warm-up in place")
+    warmV.unpersist(blocking = false)
+    warmG.unpersist(blocking = false)
+    for (units <- Seq(1000L, 3000L, 10000L, 30000L, 100000L)) {
+      val (votes, grades) = (dsVotes(units), scGrades(units))
+      votes.count(); grades.count()
+      for (rep <- 1 to 3) {
+        val modes = Seq(collectAll -> "collected", CollectBound.InPlace -> "in place")
+        for ((bound, mode) <- if (rep == 2) modes.reverse else modes)
+          labelFits(votes, grades, bound, f"$units%6d units $mode")
+      }
+      votes.unpersist(blocking = false)
+      grades.unpersist(blocking = false)
+    }
     }
 
     section("listwise") {
@@ -1026,38 +1102,20 @@ object ScaleStress {
     }
 
     section("labels") {
-    // Dawid-Skene at scale (r17): 200k units x 5 raters x 3 classes
-    // with planted per-rater accuracies (two sharp, two mediocre, one
-    // noisy) — the EM fit is per-sweep one votes-x-classes join plus a
-    // unit-keyed fold, so wall should track votes x classes x sweeps.
+    // Dawid-Skene at scale (r17): 200k and 400k units x 5 raters x 3
+    // classes, past the collect bound, so each of the 6 sweeps is one
+    // job over the cached unit census; wall should track votes x
+    // classes x sweeps. The checksum compares runs.
     import graft.operators.DawidSkene
-    def votesOf(units: Long) = {
-      val acc = array(lit(0.92), lit(0.88), lit(0.6), lit(0.6), lit(0.38))
-      spark.range(units * 5).select(
-          // Column `/` is FRACTIONAL division — floor+cast for the
-          // integer unit id (the r15 trap list strikes again)
-          col("id"),
-          floor(col("id") / 5L).cast("long").as("u"))
-        .select(
-          col("u"),
-          concat(lit("r"), (col("id") % 5L).cast("string")).as("r"),
-          (col("u") % 3L).as("truth"),
-          element_at(acc, (col("id") % 5L + 1).cast("int")).as("a"),
-          (conv(substring(md5(concat(col("id").cast("string"), lit("ds"))), 1, 8),
-            16, 10).cast("double") / lit(4294967296.0)).as("coin"))
-        .select(col("u"), col("r"),
-          concat(lit("c"), when(col("coin") < col("a"), col("truth"))
-            .otherwise(pmod(col("truth") + 1L
-              + (col("coin") * 1000).cast("long") % 2L, lit(3L)))
-            .cast("string")).as("l"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
     for (units <- Seq(200000L, 400000L)) {
-      val v = votesOf(units)
+      val v = dsVotes(units)
       println(s"[stress] ds votes: ${v.count()} over $units units")
-      val fit = time(s"labels: dawid-skene fit+consensus, $units units x 5 raters")(
-        DawidSkene.label(v, "u", "r", "l", iters = 5).count())
-      println(s"[stress]   consensus rows = $fit")
+      val lab = time(s"labels: dawid-skene fit+consensus, $units units x 5 raters") {
+        val l = DawidSkene.label(v, "u", "r", "l", iters = 5)
+        Meter.consume(l)
+        l
+      }
+      println(s"[stress]   consensus rows = ${lab.count()} checksum = ${checksum(lab)}")
       v.unpersist(blocking = false)
     }
     }
@@ -1093,32 +1151,22 @@ object ScaleStress {
 
     section("scalar") {
     // Scalar consensus at scale (r18): 500k units x 3 raters (1.5M
-    // grades) with planted lenses (fair / harsh -0.2 / stretch 2x) and
-    // md5 noise — per sweep one rater-keyed fold + one unit-keyed fold
-    // with the 3-row lens table broadcast, so wall should track votes
-    // x sweeps.
+    // grades), past the collect bound, so each of the 5 sweeps is one
+    // job over the cached unit census and the truth readback one more;
+    // wall should track votes x sweeps. The checksum compares runs.
     import graft.operators.ScalarConsensus
     val units = 500000L
-    val grades = spark.range(units * 3).select(
-        floor(col("id") / 3L).cast("long").as("u"),
-        (col("id") % 3L).as("ri"),
-        (conv(substring(md5(concat(col("id").cast("string"), lit("sc"))), 1, 8),
-          16, 10).cast("double") / lit(4294967296.0) - 0.5).as("eps"))
-      .select(col("u"),
-        concat(lit("g"), col("ri").cast("string")).as("r"), {
-          val t = (col("u") % 1000L).cast("double") / 1000.0
-          round(when(col("ri") === 0L, t)
-            .when(col("ri") === 1L, t - 0.2)
-            .otherwise(lit(0.1) + t * 2.0) + col("eps") * 0.05, 6)
-        }.as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val grades = scGrades(units)
     println(s"[stress] scalar grades: ${grades.count()} over $units units")
-    val sfit = time(s"scalar: consensus ALS fit, $units units x 3 raters")(
-      ScalarConsensus.fit(grades, "u", "r", "y", iters = 5))
+    val sfit = time(s"scalar: consensus ALS fit, $units units x 3 raters") {
+      val f = ScalarConsensus.fit(grades, "u", "r", "y", iters = 5)
+      Meter.consume(f.truth)
+      f
+    }
     println("[stress]   lenses: " + sfit.raters.orderBy("r").collect()
       .map(r => s"${r.getString(0)}: bias=${r.getDouble(2)} scale=${r.getDouble(3)}")
       .mkString("; "))
-    println(s"[stress]   truths = ${sfit.truth.count()}")
+    println(s"[stress]   truths = ${sfit.truth.count()} checksum = ${checksum(sfit.truth)}")
     grades.unpersist(blocking = false)
     }
 

@@ -1,9 +1,16 @@
 package graft
 
-import graft.operators.DawidSkene
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.{CollectBound, DawidSkene}
+import graft.tools.Meter
 
 class DawidSkeneSpec extends SparkSpec {
   import spark.implicits._
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy(df.columns.map(org.apache.spark.sql.functions.col).toSeq: _*)
+      .collect().map(_.toSeq).toSeq
 
   /** Deterministic planted-rater fixture: `n` units with truth class
     * `u % 3`, five raters with planted confusion — two accurate (90%),
@@ -133,5 +140,35 @@ class DawidSkeneSpec extends SparkSpec {
       DawidSkene.fit(votes.toDF("u", "r", "l"), "u", "r", "l", iters = 1)
     }
     assert(ex.getMessage.contains("underflow"), ex.getMessage)
+    val inPlace = intercept[IllegalArgumentException] {
+      DawidSkene.fit(votes.toDF("u", "r", "l"), "u", "r", "l", 1, 0.01, CollectBound.InPlace)
+    }
+    assert(inPlace.getMessage == ex.getMessage, inPlace.getMessage)
+  }
+
+  test("in-place sweeps are bitwise the collected fit on 1 and on 7 census partitions") {
+    // exact decimal partial sums merge to the same bits in any order,
+    // so the partitioning of the cached census cannot show in the fit
+    val df = planted(240)._1.toDF("u", "r", "l")
+    def fit(bound: CollectBound) = {
+      val f = DawidSkene.fit(df, "u", "r", "l", 5, 0.01, bound)
+      Seq(rows(f.posterior), rows(f.confusion), rows(f.priors))
+    }
+    val collected = fit(CollectBound.Default)
+    Seq(1, 7).foreach { n =>
+      assert(withShufflePartitions(n)(fit(CollectBound.InPlace)) == collected,
+        s"in place on $n partitions")
+    }
+  }
+
+  test("a sweep runs no job collected and one job in place; the census is released") {
+    val df = planted(60)._1.toDF("u", "r", "l")
+    def run(iters: Int, bound: CollectBound) = Meter.measure(spark)(
+      DawidSkene.fit(df, "u", "r", "l", iters, 0.01, bound).posterior.collect())
+    val (c3, c4) = (run(3, CollectBound.Default), run(4, CollectBound.Default))
+    val (i3, i4) = (run(3, CollectBound.InPlace), run(4, CollectBound.InPlace))
+    assert(c4.jobs == c3.jobs, s"collected: ${c3.jobs} -> ${c4.jobs} jobs")
+    assert(i4.jobs == i3.jobs + 1, s"in place: ${i3.jobs} -> ${i4.jobs} jobs")
+    assert(Seq(c3, c4, i3, i4).forall(_.cachedPlans == 0))
   }
 }

@@ -50,19 +50,6 @@ class PreferencesSpec extends SparkSpec {
     ("bradleyTerryOrder", orderFit _), ("plackettLuce", plFit _),
     ("rankCentrality", rcFit _))
 
-  /** Runs `body` with every shuffle output — so every census — cut
-    * into exactly `n` partitions.
-    */
-  private def withShufflePartitions[T](n: Int)(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val saved = keys.map(k => k -> spark.conf.get(k))
-    spark.conf.set(keys(0), n.toLong)
-    spark.conf.set(keys(1), false)
-    try body
-    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
   test("bradleyTerry: recovers a planted total order; win probs track strengths") {
     // Planted strengths x > y > z via lopsided head-to-head records:
     // x beats y 8/2, x beats z 9/1, y beats z 7/3.

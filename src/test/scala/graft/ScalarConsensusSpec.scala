@@ -1,9 +1,15 @@
 package graft
 
-import graft.operators.ScalarConsensus
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.{CollectBound, ScalarConsensus}
+import graft.tools.Meter
 
 class ScalarConsensusSpec extends SparkSpec {
   import spark.implicits._
+
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
+    df.orderBy(df.columns.head).collect().map(_.toSeq).toSeq
 
   // noiseless planted panel: truth t = u/10; a fair rater (a=0, b=1),
   // a harsh one (a=-0.2, b=1), a rubric-stretcher (a=0.1, b=2)
@@ -77,5 +83,31 @@ class ScalarConsensusSpec extends SparkSpec {
     assert(!tr.getDouble(1).isNaN)
     assert(f.raters.collect().forall(r =>
       !r.getDouble(2).isNaN && !r.getDouble(3).isNaN))
+  }
+
+  test("in-place sweeps are bitwise the collected fit on 1 and on 7 census partitions") {
+    // the harsh rater abstains on odd units, so the lenses move every sweep
+    val df = planted.filter { case (u, r, _) => r != "harsh" || u % 2 == 0 }
+      .toDF("u", "r", "y")
+    def fit(bound: CollectBound) = {
+      val f = ScalarConsensus.fit(df, "u", "r", "y", 5, bound)
+      Seq(rows(f.truth), rows(f.raters))
+    }
+    val collected = fit(CollectBound.Default)
+    Seq(1, 7).foreach { n =>
+      assert(withShufflePartitions(n)(fit(CollectBound.InPlace)) == collected,
+        s"in place on $n partitions")
+    }
+  }
+
+  test("a sweep runs no job collected and one job in place; the census is released") {
+    val df = planted.toDF("u", "r", "y")
+    def run(iters: Int, bound: CollectBound) = Meter.measure(spark)(
+      ScalarConsensus.fit(df, "u", "r", "y", iters, bound).truth.collect())
+    val (c3, c4) = (run(3, CollectBound.Default), run(4, CollectBound.Default))
+    val (i3, i4) = (run(3, CollectBound.InPlace), run(4, CollectBound.InPlace))
+    assert(c4.jobs == c3.jobs, s"collected: ${c3.jobs} -> ${c4.jobs} jobs")
+    assert(i4.jobs == i3.jobs + 1, s"in place: ${i3.jobs} -> ${i4.jobs} jobs")
+    assert(Seq(c3, c4, i3, i4).forall(_.cachedPlans == 0))
   }
 }
