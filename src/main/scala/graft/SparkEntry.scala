@@ -4195,6 +4195,7 @@ object SparkEntry {
         emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", nlist = 16)
       SimilaritySearch.saveIvfIndex(
         idx, "vec_id", "ivf_persisted_q", "target/tmp/ivf_persisted_q", buckets = 8)
+      idx.release()
       val loaded = SimilaritySearch.loadIvfIndex(s, "ivf_persisted_q", "target/tmp/ivf_persisted_q")
       SimilaritySearch.ivfTopK(loaded, "vec_id", q, k = 20, nprobe = 4)
     }),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import SimilaritySearch.{probeCells, rerank, topK}
+import SimilaritySearch.{loadStore, probeCells, readSidecar, replaceStore, rerank, topK, writeSidecar}
 
 /** Scalar (int8-range) embedding quantization — the memory-bandwidth
   * arm of similarity search at scale. A float32 corpus at 100 TB is a
@@ -404,13 +404,15 @@ object Quantization {
   /** Persist a PQ store: the codebook (+ id column NAME, resolved by
     * name at load — the IVF tombstone lesson) as a tiny JSON sidecar,
     * and the corpus as encoded codes at rest — m bytes/vector instead
-    * of the float array. A probe of the loaded store scans ONLY codes;
-    * nothing re-encodes, nothing re-trains.
-    */
-  /** @param carryCols metadata columns stored beside the codes — same
-    *                   attribute co-location as the IVF/binary stores,
-    *                   enabling [[pqTopKStoredWhere]] to filter inside
-    *                   the stored probe.
+    * of the float array — in the [[graft.sources.VersionedTable]]
+    * `codes/`. A probe of the loaded store scans ONLY codes; nothing
+    * re-encodes, nothing re-trains. Deletion is the shared
+    * [[SimilaritySearch.deleteFromIndex]].
+    *
+    * @param carryCols metadata columns stored beside the codes — same
+    *                  attribute co-location as the IVF/binary stores,
+    *                  enabling [[pqTopKStoredWhere]] to filter inside
+    *                  the stored probe.
     */
   def savePqIndex(
       corpus: DataFrame,
@@ -421,24 +423,19 @@ object Quantization {
       carryCols: Seq[String] = Nil): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    Seq((model.m, model.kc, model.subDim, model.codebook, idCol))
-      .toDF("m", "kc", "sub_dim", "codebook", "id_col")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$path/codebook")
-    corpus
-      .select((Seq(col(idCol), pqEncode(col(vecCol), model).as("codes")) ++
-        carryCols.map(col)): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/codes")
+    writeSidecar(Seq((model.m, model.kc, model.subDim, model.codebook, idCol))
+      .toDF("m", "kc", "sub_dim", "codebook", "id_col"), s"$path/codebook")
+    replaceStore(pqRows(corpus, model, idCol, vecCol, carryCols), s"$path/codes", path)
   }
+
+  private def pqRows(
+      df: DataFrame, model: PqModel, idCol: String, vecCol: String, carryCols: Seq[String]): DataFrame =
+    df.select((Seq(col(idCol), pqEncode(col(vecCol), model).as("codes")) ++ carryCols.map(col)): _*)
 
   /** Load the codebook sidecar. */
   def loadPqModel(spark: org.apache.spark.sql.SparkSession, path: String): (PqModel, String) = {
-    val r = spark.read.json(s"$path/codebook")
-      .select(col("m").cast("int"), col("kc").cast("int"), col("sub_dim").cast("int"),
-        col("codebook").cast("array<double>"), col("id_col"))
-      .head()
+    val r = readSidecar(spark, s"$path/codebook",
+      "m int, kc int, sub_dim int, codebook array<double>, id_col string")
     (PqModel(r.getInt(0), r.getInt(1), r.getInt(2), r.getSeq[Double](3)), r.getString(4))
   }
 
@@ -466,35 +463,28 @@ object Quantization {
       k: Int,
       pred: org.apache.spark.sql.Column): DataFrame = {
     val (model, idCol) = loadPqModel(spark, path)
-    topK(loadPqCodes(spark, path)
+    topK(loadStore(spark, s"$path/codes", path, idCol)
         .filter(pred)
         .select(col(idCol), adcScore(col("codes"), model, query).as("score")),
       idCol, "score", k)
   }
 
   /** Idempotent per-batch append of freshly-encoded codes to a
-    * persisted PQ store — EXACTLY-once under restarts, not merely
-    * marker-guarded. A bare mode-Append before the marker would leave a
-    * window (crash after append, before marker) that replays the batch
-    * and duplicates ids. Instead the batch stages into a batch-scoped
-    * directory (Overwrite — a replayed attempt rewrites the same rows)
-    * and its part files move into `codes/` under DETERMINISTIC names
-    * keyed by (batchId, part index), after sweeping any `graft-b<id>-*`
-    * leftovers of a prior attempt. Whatever point the previous attempt
-    * died at, the replay converges on the same destination file set;
-    * the marker is the final commit that short-circuits clean replays.
-    * (The IVF ingest's bucketed `insertInto` cannot stage-rename like
-    * this; its contract stays at-least-once with the marker closing the
-    * window to one batch — see
+    * persisted PQ store — EXACTLY-once under restarts: one
+    * [[graft.sources.VersionedTable.commit]] keyed on
+    * `(checkpoint, batchId)`, whose record lands atomically with the
+    * file list. A replay of a committed batch writes nothing; a batch
+    * that died before its commit left no record and lands once. The
+    * record survives saves and vacuums of the store. (The IVF ingest's
+    * bucketed `insertInto` stays outside the manifest; its contract is
+    * at-least-once with a marker closing the window to one batch — see
     * [[SimilaritySearch.appendIvfBatchIdempotent]].)
     *
     * `carryCols` MUST match the columns the store was written with
-    * ([[savePqIndex]]'s carryCols): appended files joining a
-    * carry-bearing store without them would read those columns as null
-    * for appended rows and silently drop them from filtered probes.
-    * ENFORCED: the existing `codes/` schema is read and the appended
-    * column set must equal it, else the append fails fast instead of
-    * writing schema-divergent files.
+    * ([[savePqIndex]]'s carryCols): the commit's schema check refuses a
+    * batch of another shape before writing anything, so no appended
+    * row reads its carry columns as null and silently drops out of
+    * filtered probes.
     */
   def appendPqBatchIdempotent(
       batch: DataFrame,
@@ -504,46 +494,9 @@ object Quantization {
       path: String,
       checkpoint: String,
       batchId: Long,
-      carryCols: Seq[String] = Nil): Unit = {
-    val hconf = batch.sparkSession.sessionState.newHadoopConf()
-    val marker = new org.apache.hadoop.fs.Path(s"$checkpoint/graft-batch-commits/$batchId")
-    val fs = marker.getFileSystem(hconf)
-    if (fs.exists(marker)) return
-    val staging = new org.apache.hadoop.fs.Path(s"$checkpoint/graft-batch-staging/$batchId")
-    val appended = batch.select((Seq(col(idCol), pqEncode(col(vecCol), model).as("codes")) ++
-        carryCols.map(col)): _*)
-    val codesDir = new org.apache.hadoop.fs.Path(s"$path/codes")
-    // Fail fast on a carryCols/store mismatch: files whose column set
-    // diverges from the store's would read the missing columns as null
-    // and silently vanish from filtered probes (pqTopKStoredWhere).
-    if (fs.exists(codesDir) && fs.listStatus(codesDir).exists(s => s.isFile && s.getLen > 0)) {
-      val storeCols = batch.sparkSession.read.parquet(codesDir.toString).columns.sorted.toSeq
-      val batchCols = appended.columns.sorted.toSeq
-      require(batchCols == storeCols,
-        s"appendPqBatchIdempotent carryCols mismatch: store at $path/codes has " +
-          s"columns ${storeCols.mkString("[", ", ", "]")} but this batch would " +
-          s"append ${batchCols.mkString("[", ", ", "]")} - pass the same " +
-          "carryCols the store was written with")
-    }
-    appended
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(staging.toString)
-    val destDir = codesDir
-    fs.mkdirs(destDir)
-    val batchPrefix = s"graft-b$batchId-"
-    fs.listStatus(destDir).map(_.getPath)
-      .filter(_.getName.startsWith(batchPrefix))
-      .foreach(p => fs.delete(p, false))
-    val parts = fs.listStatus(staging).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    parts.zipWithIndex.foreach { case (p, i) =>
-      val dest = new org.apache.hadoop.fs.Path(destDir, batchPrefix + f"p$i%05d.parquet")
-      require(fs.rename(p, dest), s"staging rename $p -> $dest failed")
-    }
-    fs.delete(staging, true)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
-  }
+      carryCols: Seq[String] = Nil): Unit =
+    graft.sources.VersionedTable.commit(batch.sparkSession, s"$path/codes",
+      pqRows(batch, model, idCol, vecCol, carryCols), batch = Some((checkpoint, batchId)))
 
   /** Continuous ingest into a persisted PQ store: each micro-batch is
     * encoded against the EXISTING codebooks (row-local projection, no
@@ -567,62 +520,12 @@ object Quantization {
       }
       .start()
 
-  /** Tombstone deletion for a persisted PQ store — metadata-only,
-    * O(deletions): ids append to `_tombstones`; [[loadPqCodes]] (and so
-    * [[pqTopKStored]]) anti-joins them out, keyed on the id column BY
-    * NAME from the sidecar. Same contract as the IVF store's
-    * tombstones; [[vacuumPqIndex]] folds them in.
+  /** Fold tombstones into the store: a compaction commit of the live
+    * codes. O(index) — amortize over many deletions, like the IVF
+    * vacuum.
     */
-  def deleteFromPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ids: Seq[Long]): Unit = {
-    if (ids.nonEmpty) {
-      import spark.implicits._
-      deleteFromPqIndex(spark, path, ids.toDF("__del_id"))
-    }
-  }
-
-  /** Batch form: `ids` is a one-column DataFrame — a GDPR batch or an
-    * upstream tombstone table flows in as data, never as driver plan
-    * text. The tombstone file stays metadata-sized; dedup happens at
-    * load ([[loadPqCodes]] distincts before the anti-join).
-    */
-  def deleteFromPqIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ids: DataFrame): Unit = {
-    ids.select(col(ids.columns.head).as("__del_id")).distinct()
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/_tombstones")
-  }
-
-  /** The stored codes with tombstones filtered (broadcast anti-join —
-    * deletion sets are index metadata, not corpus-sized).
-    */
-  def loadPqCodes(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    val (_, idCol) = loadPqModel(spark, path)
-    val codes = spark.read.parquet(s"$path/codes")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tp)) {
-      val ts = spark.read.parquet(tp.toString).distinct()
-      codes.join(broadcast(ts), codes(idCol) === ts("__del_id"), "left_anti")
-    } else codes
-  }
-
-  /** Fold tombstones into the store: rewrite codes without deleted rows
-    * and drop the tombstone file. O(index) — amortize over many
-    * deletions, like the IVF vacuum.
-    */
-  def vacuumPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val clean = loadPqCodes(spark, path).localCheckpoint(true)
-    clean.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/codes")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
-    ()
-  }
+  def vacuumPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
+    replaceStore(loadStore(spark, s"$path/codes", path, loadPqModel(spark, path)._2), s"$path/codes", path)
 
   /** The query's per-centroid partial-dot lookup table (m x kc). */
   private def adcLut(model: PqModel, query: Array[Double]): Array[Double] = {

@@ -312,14 +312,85 @@ object SimilaritySearch {
   private def signPack(v: Column): Column =
     graft.plans.HashExpressions.signPack(VectorOps.asDouble(v))
 
+  // --------- persisted stores: sidecars, commits and tombstones --------- //
+
+  /** Store metadata (centroids, codebooks, the id column NAME, which
+    * keys the tombstone anti-join by name, never by ordinal) is a tiny
+    * JSON sidecar; its reader passes the schema, so no inference job.
+    */
+  private[operators] def writeSidecar(meta: DataFrame, dir: String): Unit =
+    meta.coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite).json(dir)
+
+  private[operators] def readSidecar(
+      spark: org.apache.spark.sql.SparkSession, dir: String, ddl: String): org.apache.spark.sql.Row =
+    spark.read.schema(ddl).json(dir).head()
+
+  private def storeIdCol(spark: org.apache.spark.sql.SparkSession, path: String): String =
+    readSidecar(spark, s"$path/idcol", "id_col string").getString(0)
+
+  private def tombstoneDir(path: String) = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
+
+  /** Delete ids from a persisted store — IVF, PQ or binary — by
+    * tombstone: metadata-only, O(deletions). `ids` is a one-column
+    * DataFrame, so a deletion batch flows in as data, never as driver
+    * plan text; re-deleting an id appends a duplicate the load-time
+    * anti-join ignores. The store's own vacuum folds the tombstones in,
+    * and any save at the path clears them.
+    */
+  def deleteFromIndex(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      ids: DataFrame): Unit =
+    ids.select(col(ids.columns.head).as("__del_id")).distinct()
+      .coalesce(1)
+      .write.mode(org.apache.spark.sql.SaveMode.Append)
+      .parquet(tombstoneDir(path).toString)
+
+  /** `stored` without its tombstoned ids: a broadcast anti-join —
+    * deletion sets are index metadata, not corpus-sized.
+    */
+  private def withoutTombstones(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      stored: DataFrame,
+      idCol: String): DataFrame = {
+    val tp = tombstoneDir(path)
+    if (tp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(tp)) {
+      val ts = spark.read.parquet(tp.toString).distinct()
+      stored.join(broadcast(ts), stored(idCol) === ts("__del_id"), "left_anti")
+    } else stored
+  }
+
+  private def clearTombstones(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
+    val tp = tombstoneDir(path)
+    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
+  }
+
+  /** Replace a codes-at-rest store's rows (`dir` = `path/words` or
+    * `path/codes`, a [[graft.sources.VersionedTable]]): one overwrite
+    * commit — the batch record rides along — then a vacuum to it, so
+    * no earlier file stays on disk, then the tombstones are cleared:
+    * the new rows are the whole store. The files a compaction reads
+    * are immutable, so it needs no checkpoint of its input.
+    */
+  private[operators] def replaceStore(rows: DataFrame, dir: String, path: String): Unit = {
+    val spark = rows.sparkSession
+    val v = graft.sources.VersionedTable.commit(spark, dir, rows,
+      overwrite = true, overwriteSchema = true)
+    graft.sources.VersionedTable.vacuum(spark, dir, v)
+    clearTombstones(spark, path)
+  }
+
+  private[operators] def loadStore(
+      spark: org.apache.spark.sql.SparkSession, dir: String, path: String, idCol: String): DataFrame =
+    withoutTombstones(spark, path, graft.sources.VersionedTable.read(spark, dir), idCol)
+
   /** Persist packed sign words — the 1-bit codes-at-rest form: the
     * stored table is (id, words) at ~8 bytes/vector payload, and a
-    * probe scans ONLY it (no floats, no re-pack). The id column name
-    * travels in a sidecar like the IVF/PQ stores; deletion lifecycle
-    * would mirror [[deleteFromIvfIndex]]'s tombstones (the store is a
-    * plain parquet dir — the PQ staging/tombstone machinery drops in
-    * unchanged; kept minimal here because packing is so cheap that
-    * rebuild-on-change is usually the right call at this code size).
+    * probe scans ONLY it (no floats, no re-pack). `words/` is a
+    * [[graft.sources.VersionedTable]]; the id column name travels in a
+    * sidecar like the IVF/PQ stores, and deletion is the shared
+    * [[deleteFromIndex]].
     *
     * @param carryCols metadata columns stored beside the sign words —
     *                  same attribute co-location as
@@ -335,14 +406,10 @@ object SimilaritySearch {
       carryCols: Seq[String] = Nil): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    Seq(idCol).toDF("id_col").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$path/idcol")
-    corpus
-      .select((Seq(col(idCol), signPack(col(vecCol)).as("words")) ++
-        carryCols.map(col)): _*)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$path/words")
+    writeSidecar(Seq(idCol).toDF("id_col"), s"$path/idcol")
+    replaceStore(
+      corpus.select((Seq(col(idCol), signPack(col(vecCol)).as("words")) ++ carryCols.map(col)): _*),
+      s"$path/words", path)
   }
 
   /** Hamming probe over a persisted sign store — identical ranking to
@@ -367,69 +434,22 @@ object SimilaritySearch {
       query: Array[Double],
       k: Int,
       pred: org.apache.spark.sql.Column): DataFrame = {
-    val idCol = spark.read.json(s"$path/idcol").select("id_col").head().getString(0)
-    topK(loadBinaryWords(spark, path)
+    val idCol = storeIdCol(spark, path)
+    topK(loadStore(spark, s"$path/words", path, idCol)
         .filter(pred)
         .select(col(idCol),
           graft.plans.HashExpressions.hammingTo(col("words"), packSignsDriver(query)).as("hamming")),
       idCol, "hamming", k, ascending = true)
   }
 
-  /** The stored sign words with tombstones filtered (broadcast
-    * anti-join, keyed on the id column by NAME from the sidecar) —
-    * same lifecycle contract as the IVF and PQ stores.
-    */
-  def loadBinaryWords(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val idCol = spark.read.json(s"$path/idcol").select("id_col").head().getString(0)
-    val words = spark.read.parquet(s"$path/words")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    val fs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(tp)) {
-      val ts = spark.read.parquet(tp.toString).distinct()
-      words.join(broadcast(ts), words(idCol) === ts("__del_id"), "left_anti")
-    } else words
-  }
-
-  /** Tombstone deletion for a persisted sign store — metadata-only,
-    * O(deletions); probes via [[binaryTopKStored]]/
-    * [[binaryTopKStoredWhere]] exclude deleted ids at load. Batch form:
-    * ids flow in as DATA (a one-column DataFrame), never plan text.
-    */
-  def deleteFromBinaryIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ids: DataFrame): Unit = {
-    ids.select(col(ids.columns.head).as("__del_id")).distinct()
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/_tombstones")
-  }
-
-  def deleteFromBinaryIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ids: Seq[Long]): Unit = {
-    if (ids.nonEmpty) {
-      import spark.implicits._
-      deleteFromBinaryIndex(spark, path, ids.toDF("__del_id"))
-    }
-  }
-
-  /** Fold tombstones into the sign store: rewrite words without the
-    * deleted rows, drop the tombstone file. O(index) — amortize over
-    * many deletions, like the IVF/PQ vacuums.
+  /** Fold tombstones into the sign store: a compaction commit of the
+    * live words. O(index) — amortize over many deletions, like the
+    * IVF/PQ vacuums.
     */
   def vacuumBinaryIndex(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val clean = loadBinaryWords(spark, path).localCheckpoint(true)
-    clean.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$path/words")
-    val tp = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    tp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(tp, true)
-    ()
-  }
+      path: String): Unit =
+    replaceStore(loadStore(spark, s"$path/words", path, storeIdCol(spark, path)), s"$path/words", path)
 
   private def packSignsDriver(v: Array[Double]): Seq[Long] = {
     val words = new Array[Long]((v.length + 63) >>> 6)
@@ -548,12 +568,9 @@ object SimilaritySearch {
       buckets: Int = 16): Unit = {
     val spark = index.ivf.assigned.sparkSession
     import spark.implicits._
-    Seq((index.pca.mean.toSeq, index.pca.axes.flatten.toSeq,
+    writeSidecar(Seq((index.pca.mean.toSeq, index.pca.axes.flatten.toSeq,
         index.pca.explained.toSeq, index.pca.k, index.pca.d))
-      .toDF("mean", "axes_flat", "explained", "k", "d")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$path/pca")
+      .toDF("mean", "axes_flat", "explained", "k", "d"), s"$path/pca")
     saveIvfIndex(index.ivf, idCol, tableName, s"$path/ivf", buckets)
   }
 
@@ -626,19 +643,10 @@ object SimilaritySearch {
       buckets: Int = 16): Unit = {
     val spark = index.assigned.sparkSession
     import spark.implicits._
-    index.centroids.zipWithIndex
+    writeSidecar(index.centroids.zipWithIndex
       .map { case (c, i) => (i, c.toSeq) }.toSeq
-      .toDF("cell", "cvec")
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$path/centroids")
-    // Persist the id column NAME next to the centroids: the tombstone
-    // anti-join at load must key on the id by name, not by ordinal —
-    // a store written with a different column order would otherwise
-    // silently stop filtering deletions.
-    Seq(idCol).toDF("id_col").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .json(s"$path/idcol")
+      .toDF("cell", "cvec"), s"$path/centroids")
+    writeSidecar(Seq(idCol).toDF("id_col"), s"$path/idcol")
     // Persist EVERY assignment column — id/vector/cell plus any
     // carryCols metadata the index was built with: filtered search
     // ([[ivfTopKWhere]]) must survive the persist/load round-trip, and
@@ -650,14 +658,16 @@ object SimilaritySearch {
     graft.sources.TableIO.writeBucketed(
       index.assigned.select((Seq(col(idCol), col("v"), col("cell")) ++ carry): _*),
       tableName, s"$path/assigned", buckets, Seq("cell"))
+    clearTombstones(spark, path)
   }
 
   /** Load a persisted IVF index: centroids to the driver (nlist x dim —
     * tiny), the assignment as the bucketed table. The returned index is
     * drop-in for [[ivfTopK]]/[[ivfTopKBatch]]; no clustering runs.
-    * Tombstoned ids ([[deleteFromIvfIndex]]) are filtered out here with
-    * a broadcast anti-join, so every probe of a loaded index honors
-    * prior deletions without any index rewrite.
+    * Tombstoned ids ([[deleteFromIndex]]) are filtered out here, so
+    * every probe of a loaded index honors prior deletions without any
+    * index rewrite: the bucketed table stays byte-identical, its
+    * cell-sorted, bucket-pruned layout being the index's value.
     */
   def loadIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -669,57 +679,17 @@ object SimilaritySearch {
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
       .sortBy(_._1).map(_._2)
     val table = spark.table(tableName)
-    val assigned = tombstones(spark, path) match {
-      case Some(ts) =>
-        table.join(broadcast(ts), table(idColOf(spark, path, table)) === ts("__del_id"), "left_anti")
-      case None => table
-    }
-    IvfIndex(cents, assigned)
-  }
-
-  /** Delete vectors from a persisted IVF index by TOMBSTONE, not
-    * rewrite: the bucketed assignment table stays byte-identical (its
-    * cell-sorted, bucket-pruned layout is the index's value), and
-    * deleted ids land in a tiny `_tombstones` parquet that
-    * [[loadIvfIndex]] anti-joins (broadcast — deletion sets are small
-    * by nature) at load time. Idempotent: re-deleting an id appends a
-    * duplicate tombstone, which the anti-join ignores. When tombstones
-    * grow past a few percent of the corpus, rebuild with
-    * [[saveIvfIndex]] from the filtered assignment — the tombstone file
-    * is removed by that rewrite.
-    */
-  def deleteFromIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ids: Seq[Long]): Unit = {
-    if (ids.nonEmpty) {
-      import spark.implicits._
-      deleteFromIvfIndex(spark, path, ids.toDF("__del_id"))
-    }
-  }
-
-  /** Batch form: `ids` is a one-column DataFrame — deletion batches
-    * flow in as data, never as driver plan text (mirrors
-    * [[graft.operators.TrainingData.deleteFromShards]]'s batch form).
-    */
-  def deleteFromIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      ids: org.apache.spark.sql.DataFrame): Unit = {
-    ids.select(col(ids.columns.head).as("__del_id")).distinct()
-      .coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(s"$path/_tombstones")
+    IvfIndex(cents, withoutTombstones(spark, path, table, idColOf(spark, path, table)))
   }
 
   /** Fold accumulated tombstones into the store: rewrite the bucketed
-    * assignment without the deleted rows and remove the tombstone file.
-    * [[deleteFromIvfIndex]] is O(deletions) per call and every probe
-    * pays one (broadcast) anti-join; vacuum is the O(index) compaction
-    * you amortize over many deletions — run it when tombstones reach a
-    * few percent of the corpus. The kept rows are local-checkpointed
-    * before the overwrite because they are read from the very table
-    * being rewritten.
+    * assignment without the deleted rows; the save clears the
+    * tombstones. [[deleteFromIndex]] is O(deletions) per call and every
+    * probe pays one (broadcast) anti-join; vacuum is the O(index)
+    * compaction you amortize over many deletions — run it when
+    * tombstones reach a few percent of the corpus. The kept rows are
+    * local-checkpointed before the overwrite because they are read from
+    * the very table being rewritten.
     */
   def vacuumIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -730,9 +700,6 @@ object SimilaritySearch {
     val idx = loadIvfIndex(spark, tableName, path) // tombstones filtered here
     val clean = idx.assigned.localCheckpoint(true)
     saveIvfIndex(IvfIndex(idx.centroids, clean), idCol, tableName, path, buckets)
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    ()
   }
 
   /** Resolve the assignment table's id column by NAME from the `idcol`
@@ -745,17 +712,8 @@ object SimilaritySearch {
       path: String,
       table: org.apache.spark.sql.DataFrame): String = {
     val p = new org.apache.hadoop.fs.Path(s"$path/idcol")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.json(p.toString).select("id_col").head().getString(0)
+    if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) storeIdCol(spark, path)
     else table.columns.head
-  }
-
-  private def tombstones(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[org.apache.spark.sql.DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(p.toString)) else None
   }
 
   /** Split hot Voronoi cells so no probe has to scan an outsized one.
@@ -879,10 +837,12 @@ object SimilaritySearch {
     * only AFTER the append succeeds, makes the replay a no-op.
     *
     * Residual window: a crash between the append and the marker write
-    * still duplicates that one batch — exactly-once needs a transactional
-    * table format (Delta — absent in this offline environment, SURVEY
-    * §1.4). Callers needing exactness under that window should dedup on
-    * `idCol` at probe time.
+    * still duplicates that one batch. The PQ store closes it with a
+    * batch record in its [[graft.sources.VersionedTable]] manifest;
+    * this store's bucketed catalog table stays outside any
+    * manifest, because its bucket pruning and shuffle-free batch join
+    * are the index's value. Callers needing exactness under that window
+    * should dedup on `idCol` at probe time.
     */
   def appendIvfBatchIdempotent(
       batch: DataFrame,

@@ -107,6 +107,16 @@ object VersionedTable {
     a.fields.map(f => (f.name, f.dataType.catalogString)).toSeq ==
       b.fields.map(f => (f.name, f.dataType.catalogString)).toSeq
 
+  private val BatchHeader = "#batch "
+
+  /** The last batch each writer committed, as recorded by version v. */
+  private def readBatches(f: FileSystem, dir: String, v: Int): Map[String, Long] =
+    if (v < 1) Map.empty
+    else manifestLines(f, dir, v).filter(_.startsWith(BatchHeader)).map { l =>
+      val Array(id, writer) = l.drop(BatchHeader.length).split(" ", 2)
+      writer -> id.toLong
+    }.toMap
+
   /** Commit `df` as the next version. `overwrite = false` carries the
     * parent version's file list forward (logical append); `true`
     * starts from an empty list (logical replace) — parent FILES stay
@@ -127,6 +137,17 @@ object VersionedTable {
     *     returns each version under ITS OWN recorded schema.
     * Pre-r13 manifests carry no schema record: enforcement skips and
     * reads fall back to parquet's own resolution.
+    *
+    * BATCH RECORD (Delta's `txn` action): `batch = Some((writer, id))`
+    * records the writer's batch id in the manifest, atomically with the
+    * file list, and every later commit — overwrites and compactions
+    * included — carries each writer's last id forward. Batch ids of one
+    * writer increase (a streaming query's do), so a commit whose id is
+    * at or below the recorded one is a replay: it writes no file and
+    * returns the head version. The check runs against every parent the
+    * CAS loop tries, so it holds before staging and again after a lost
+    * race — a crash anywhere before the CAS leaves no record, and the
+    * replay lands the batch exactly once.
     */
   def commit(
       spark: SparkSession,
@@ -135,24 +156,33 @@ object VersionedTable {
       overwrite: Boolean = false,
       overwriteSchema: Boolean = false,
       mergeSchema: Boolean = false,
-      maxRetries: Int = 10): Int = {
+      maxRetries: Int = 10,
+      batch: Option[(String, Long)] = None): Int = {
     val f = fs(spark, dir)
     f.mkdirs(manifestDir(dir))
     f.mkdirs(new Path(s"$dir/files"))
 
-    // Stage data once — the CAS loop below re-points the SAME files at
-    // a new version number on conflict, it never rewrites data.
+    // Stage data once, after the first parent passed the batch and
+    // schema checks — the CAS loop below re-points the SAME files at a
+    // new version number on conflict, it never rewrites data.
     val stageId = java.util.UUID.randomUUID().toString.take(8)
     val stage = new Path(s"$dir/_stage_$stageId")
-    df.write.mode("overwrite").parquet(stage.toString)
-    val staged = f.listStatus(stage)
-      .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    lazy val staged = {
+      df.write.mode("overwrite").parquet(stage.toString)
+      f.listStatus(stage)
+        .map(_.getPath).filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    }
 
     var attempt = 0
     while (true) {
       attempt += 1
       val parent = latestVersion(spark, dir)
       val v = parent + 1
+      val batches = readBatches(f, dir, parent)
+      if (batch.exists { case (w, id) => batches.get(w).exists(_ >= id) }) {
+        f.delete(stage, true)
+        return parent
+      }
       // Schema enforcement runs INSIDE the CAS loop: a lost race means
       // a new parent, whose schema the retry must re-check.
       val parentSchema =
@@ -196,11 +226,12 @@ object VersionedTable {
       val carried =
         if (overwrite || parent == 0) Nil
         else readManifest(f, dir, parent)
+      val headers = (SchemaHeader + committedSchema.json) +:
+        (batches ++ batch).toSeq.sorted.map { case (w, id) => s"$BatchHeader$id $w" }
       val mTmp = new Path(s"$dir/_manifests/.tmp_v$v-$stageId")
       val out = f.create(mTmp, true)
       try out.write(
-        ((SchemaHeader + committedSchema.json) +:
-          (carried ++ newFiles)).mkString("", "\n", "\n").getBytes("UTF-8"))
+        (headers ++ carried ++ newFiles).mkString("", "\n", "\n").getBytes("UTF-8"))
       finally out.close()
       if (casPublish(f, mTmp, new Path(s"$dir/_manifests/v$v"))) {
         f.delete(stage, true)

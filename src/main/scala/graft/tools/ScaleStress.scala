@@ -96,7 +96,7 @@ object ScaleStress {
     time("exact dedup groups")(
       println("[stress]   n_groups = " + Dedup.exactDuplicateGroups(docs, "doc_id", "text").count()))
     time("simhash fingerprints")(
-      docs.select(Dedup.simHash(col("text"))).count())
+      Meter.consume(docs.select(Dedup.simHash(col("text")))))
 
     // The production near-dup pipeline: collapse exact copies FIRST
     // (cheap hash groupBy), sketch only distinct texts. Running sketches
@@ -809,7 +809,7 @@ object ScaleStress {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     println(s"[stress] minhash corpus: ${distinctDocs.count()} distinct docs")
     time("portable minhash signatures (16 perms)")(
-      D.minHashSignaturesPortable(distinctDocs, "doc_id", "text").count())
+      Meter.consume(D.minHashSignaturesPortable(distinctDocs, "doc_id", "text")))
     val nPairs = time("portable minhash banded pairs")(
       D.minHashPairsPortable(distinctDocs, "doc_id", "text").count())
     println(s"[stress]   banded pairs = $nPairs")

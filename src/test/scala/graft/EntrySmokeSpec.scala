@@ -14,12 +14,11 @@ class EntrySmokeSpec extends SparkSpec {
     * leaking fails until it is dropped from here.
     */
   private val KnownLeaks = Set(
-    // CHANGES.md FOUND: twelve IVF contract queries leave an index cache
+    // CHANGES.md FOUND: eleven IVF contract queries leave an index cache
     // behind (`SimilaritySearch.buildIvfIndex` persists `assigned`)
-    "q_sim_ivf", "q_sim_ivf_batch", "q_sim_ivf_filtered", "q_sim_ivf_persisted",
-    "q_sim_ivf_pq", "q_sim_ivf_rebalanced", "q_sim_ivf_sq8", "q_sim_ivf_widen",
-    "q_sim_ivf_widen_batch", "q_sim_pca_ivf", "q_hard_negatives_ivf",
-    "q_contamination_semantic_ivf",
+    "q_sim_ivf", "q_sim_ivf_batch", "q_sim_ivf_filtered", "q_sim_ivf_pq",
+    "q_sim_ivf_rebalanced", "q_sim_ivf_sq8", "q_sim_ivf_widen", "q_sim_ivf_widen_batch",
+    "q_sim_pca_ivf", "q_hard_negatives_ivf", "q_contamination_semantic_ivf",
     // CHANGES.md FOUND: twenty-three more queries leave a plan cached once
     // they are consumed in full on sf0.001
     "q_ab_bootstrap", "q_ab_cuped", "q_ab_fdr", "q_anomaly_frozen",

@@ -4,8 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import graft.operators.Quantization
-import graft.sources.TableIO
+import graft.operators.{Quantization, SimilaritySearch}
+import graft.sources.{TableIO, VersionedTable}
 
 class QuantizationSpec extends SparkSpec {
   import spark.implicits._
@@ -296,8 +296,8 @@ class QuantizationSpec extends SparkSpec {
     val before = Quantization.pqTopKStored(spark, path, query, k = 20)
       .select("vec_id").as[Long].collect().toSeq
     val victims = before.take(3)
-    Quantization.deleteFromPqIndex(spark, path, victims)
-    Quantization.deleteFromPqIndex(spark, path, victims.take(1)) // double delete harmless
+    SimilaritySearch.deleteFromIndex(spark, path, victims.toDF("vec_id"))
+    SimilaritySearch.deleteFromIndex(spark, path, victims.take(1).toDF("vec_id")) // double delete harmless
     val after = Quantization.pqTopKStored(spark, path, query, k = 20)
       .select("vec_id").as[Long].collect().toSeq
     assert(victims.forall(v => !after.contains(v)))
@@ -306,15 +306,31 @@ class QuantizationSpec extends SparkSpec {
     assert(before.filterNot(victims.contains) == after.take(before.size - victims.size))
     // deletion is metadata-only until vacuum: codes still hold victims
     assert(new java.io.File(s"$path/_tombstones").exists())
-    val raw = spark.read.parquet(s"$path/codes").select("vec_id").as[Long].collect().toSet
+    val raw = VersionedTable.read(spark, s"$path/codes").select("vec_id").as[Long].collect().toSet
     assert(victims.forall(raw.contains))
     Quantization.vacuumPqIndex(spark, path)
     assert(!new java.io.File(s"$path/_tombstones").exists())
     val vacuumed = Quantization.pqTopKStored(spark, path, query, k = 20)
       .select("vec_id").as[Long].collect().toSeq
     assert(vacuumed == after)
-    val rawAfter = spark.read.parquet(s"$path/codes").select("vec_id").as[Long].collect().toSet
+    // physically gone: no file left under codes/ holds a victim
+    val onDisk = new java.io.File(s"$path/codes/files").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    val rawAfter = spark.read.parquet(onDisk: _*).select("vec_id").as[Long].collect().toSet
     assert(victims.forall(v => !rawAfter.contains(v)))
+  }
+
+  test("saving over a PQ store clears its tombstones: a re-saved deleted id is probed again") {
+    val path = s"target/tmp/pq_resave_${System.nanoTime()}"
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val query = emb.filter(col("vec_id") === 0)
+      .select(VectorOps.asDouble(col("embedding"))).as[Seq[Double]].head().toArray
+    Quantization.savePqIndex(corpus, model8, "vec_id", "embedding", path)
+    val x = Quantization.pqTopKStored(spark, path, query, k = 1).select("vec_id").as[Long].head()
+    SimilaritySearch.deleteFromIndex(spark, path, Seq(x).toDF("vec_id"))
+    assert(Quantization.pqTopKStored(spark, path, query, k = 1).select("vec_id").as[Long].head() != x)
+    Quantization.savePqIndex(corpus, model8, "vec_id", "embedding", path)
+    assert(Quantization.pqTopKStored(spark, path, query, k = 1).select("vec_id").as[Long].head() == x)
   }
 
   test("streaming PQ append: streamed codes probe identically; replay is a no-op") {
@@ -359,47 +375,66 @@ class QuantizationSpec extends SparkSpec {
     assert(streamedF == oneShotF && streamedF.nonEmpty)
 
     // Replayed batch id is a no-op; a new id appends.
-    val n0 = spark.read.parquet(s"$root/idx/codes").count()
+    val codes = s"$root/idx/codes"
+    def ids(): Seq[Long] = VersionedTable.read(spark, codes).select("vec_id").as[Long].collect().toSeq
+    def assertEachOnce(why: String): Unit =
+      assert(ids().groupBy(identity).forall(_._2.size == 1), why)
+    val n0 = ids().size
+    // batch 99: five vectors under ids the store does not hold yet
+    val b99 = rest.limit(5).withColumn("vec_id", col("vec_id") + 100000L)
     Quantization.appendPqBatchIdempotent(
       rest, model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 0L,
       carryCols = Seq("label"))
-    assert(spark.read.parquet(s"$root/idx/codes").count() == n0,
-      "same batchId must not append twice")
+    assert(ids().size == n0, "same batchId must not append twice")
     Quantization.appendPqBatchIdempotent(
-      rest.limit(5), model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 99L,
+      b99, model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 99L,
       carryCols = Seq("label"))
-    assert(spark.read.parquet(s"$root/idx/codes").count() == n0 + 5)
+    assert(ids().size == n0 + 5)
+    // replay after a clean commit
+    Quantization.appendPqBatchIdempotent(
+      b99, model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 99L,
+      carryCols = Seq("label"))
+    assertEachOnce("replay after a clean commit must not duplicate the batch")
 
-    // The crash WINDOW: files landed but the marker write never happened.
-    // A bare append would duplicate the batch on replay; the staged
-    // deterministic-name move must converge to the same file set instead.
-    val marker99 = java.nio.file.Paths.get(s"$root/ckpt/graft-batch-commits/99")
-    java.nio.file.Files.delete(marker99)
+    // The crash WINDOW: batch 100 was staged and its files moved under
+    // codes/files, but the writer died before the manifest CAS. The
+    // replay must land the batch once and ignore the orphaned files.
+    val b100 = emb.filter(col("vec_id") === 0)
+    b100.select(col("vec_id"), Quantization.pqEncode(col("embedding"), model8).as("codes"), col("label"))
+      .coalesce(1).write.parquet(s"$codes/_stage_dead0100")
+    val staged = new java.io.File(s"$codes/_stage_dead0100").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    val next = VersionedTable.latestVersion(spark, codes) + 1
+    java.nio.file.Files.copy(staged, java.nio.file.Paths.get(s"$codes/files/v$next-dead0100-0.parquet"))
     Quantization.appendPqBatchIdempotent(
-      rest.limit(5), model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 99L,
+      b100, model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 100L,
       carryCols = Seq("label"))
-    assert(spark.read.parquet(s"$root/idx/codes").count() == n0 + 5,
-      "replay through the crash window must not duplicate the batch")
-    // deterministic names converge: batch 99 owns exactly one file set
-    // carrying exactly its 5 rows, whatever attempt wrote it
-    val b99Files = new java.io.File(s"$root/idx/codes").listFiles()
-      .filter(_.getName.startsWith("graft-b99-")).map(_.getPath).toSeq
-    assert(b99Files.nonEmpty)
-    assert(spark.read.parquet(b99Files: _*).count() == 5)
-    assert(java.nio.file.Files.exists(marker99), "replay must restore the marker")
+    assert(ids().size == n0 + 6)
+    assertEachOnce("replay through the crash window must not duplicate the batch")
+
+    // replay after a vacuum: the compaction commit carries the record
+    Quantization.vacuumPqIndex(spark, s"$root/idx")
+    Quantization.appendPqBatchIdempotent(
+      b100, model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 100L,
+      carryCols = Seq("label"))
+    Quantization.appendPqBatchIdempotent(
+      b99, model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt", batchId = 99L,
+      carryCols = Seq("label"))
+    assert(ids().size == n0 + 6)
+    assertEachOnce("replay after a vacuum must not duplicate a batch")
 
     // carryCols/store mismatch fails FAST: a batch appended without the
     // store's carry columns would write schema-divergent files whose
     // rows silently vanish from filtered probes — the append must
     // refuse before writing anything.
-    val nBefore = spark.read.parquet(s"$root/idx/codes").count()
+    val versionBefore = VersionedTable.latestVersion(spark, codes)
     val e = intercept[IllegalArgumentException] {
       Quantization.appendPqBatchIdempotent(
         rest.limit(3), model8, "vec_id", "embedding", s"$root/idx", s"$root/ckpt",
-        batchId = 100L, carryCols = Nil)
+        batchId = 101L, carryCols = Nil)
     }
-    assert(e.getMessage.contains("carryCols mismatch"))
-    assert(spark.read.parquet(s"$root/idx/codes").count() == nBefore,
+    assert(e.getMessage.contains("does not match table schema"))
+    assert(VersionedTable.latestVersion(spark, codes) == versionBefore && ids().size == n0 + 6,
       "refused append must leave the store untouched")
   }
 

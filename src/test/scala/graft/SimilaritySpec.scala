@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.functions.VectorOps
 import graft.operators.SimilaritySearch
-import graft.sources.TableIO
+import graft.sources.{TableIO, VersionedTable}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -114,21 +114,35 @@ class SimilaritySpec extends SparkSpec {
     // deletion is metadata-only, probes exclude victims at load,
     // vacuum folds them in and removes the tombstone file.
     val victims = stored.take(2).map(_._1)
-    SimilaritySearch.deleteFromBinaryIndex(spark, path, victims.toSeq)
+    SimilaritySearch.deleteFromIndex(spark, path, victims.toSeq.toDF("vec_id"))
     val afterDel = SimilaritySearch.binaryTopKStored(spark, path, q, 20)
       .collect().map(_.getLong(0)).toSeq
     assert(victims.forall(v => !afterDel.contains(v)))
     assert(new java.io.File(s"$path/_tombstones").exists())
     // raw words still hold the victims until vacuum
-    val raw = spark.read.parquet(s"$path/words").select("vec_id").as[Long].collect().toSet
+    val raw = VersionedTable.read(spark, s"$path/words").select("vec_id").as[Long].collect().toSet
     assert(victims.forall(raw.contains))
     SimilaritySearch.vacuumBinaryIndex(spark, path)
     assert(!new java.io.File(s"$path/_tombstones").exists())
     val afterVacuum = SimilaritySearch.binaryTopKStored(spark, path, q, 20)
       .collect().map(_.getLong(0)).toSeq
     assert(afterVacuum == afterDel)
-    val rawAfter = spark.read.parquet(s"$path/words").select("vec_id").as[Long].collect().toSet
+    // physically gone: no file left under words/ holds a victim
+    val onDisk = new java.io.File(s"$path/words/files").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    val rawAfter = spark.read.parquet(onDisk: _*).select("vec_id").as[Long].collect().toSet
     assert(victims.forall(v => !rawAfter.contains(v)))
+
+    // A save clears the store's tombstones: a deleted id saved again is
+    // probed again.
+    def top1(): Long = SimilaritySearch.binaryTopKStored(spark, path, q, 1).head().getLong(0)
+    SimilaritySearch.saveBinaryIndex(corpus, "vec_id", "embedding", path)
+    val x = stored.head._1
+    assert(top1() == x)
+    SimilaritySearch.deleteFromIndex(spark, path, Seq(x).toDF("vec_id"))
+    assert(top1() != x)
+    SimilaritySearch.saveBinaryIndex(corpus, "vec_id", "embedding", path)
+    assert(top1() == x)
 
     // Batch probe agrees with the single-query form per query.
     val batch = SimilaritySearch
@@ -616,9 +630,9 @@ class SimilaritySpec extends SparkSpec {
           "vec_id", query, 20, nprobe = 8)
         .select("vec_id").as[Long].collect().toSeq
       val victims = before.take(3)
-      SimilaritySearch.deleteFromIvfIndex(spark, path, victims)
+      SimilaritySearch.deleteFromIndex(spark, path, victims.toDF("vec_id"))
       // double delete is harmless (duplicate tombstones)
-      SimilaritySearch.deleteFromIvfIndex(spark, path, victims.take(1))
+      SimilaritySearch.deleteFromIndex(spark, path, victims.take(1).toDF("vec_id"))
       val after = SimilaritySearch
         .ivfTopK(SimilaritySearch.loadIvfIndex(spark, "ivf_del_tbl", path),
           "vec_id", query, 20, nprobe = 8)
@@ -647,6 +661,26 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS ivf_del_tbl")
   }
 
+  test("saving over an IVF store clears its tombstones: a re-saved deleted id is probed again") {
+    val corpus = emb.filter(col("vec_id") =!= 0)
+    val idx = SimilaritySearch.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 8)
+    val path = s"target/tmp/ivf_resave_${System.nanoTime()}"
+    def top1(): Long = SimilaritySearch
+      .ivfTopK(SimilaritySearch.loadIvfIndex(spark, "ivf_resave_tbl", path), "vec_id", query, 1, nprobe = 8)
+      .select("vec_id").as[Long].head()
+    try {
+      SimilaritySearch.saveIvfIndex(idx, "vec_id", "ivf_resave_tbl", path, buckets = 4)
+      val x = top1()
+      SimilaritySearch.deleteFromIndex(spark, path, Seq(x).toDF("vec_id"))
+      assert(top1() != x)
+      SimilaritySearch.saveIvfIndex(idx, "vec_id", "ivf_resave_tbl", path, buckets = 4)
+      assert(top1() == x)
+    } finally {
+      idx.release()
+      spark.sql("DROP TABLE IF EXISTS ivf_resave_tbl")
+    }
+  }
+
   test("IVF tombstones key on the id column by NAME, surviving a reordered store") {
     val corpus = emb.filter(col("vec_id") =!= 0)
     val idx = SimilaritySearch.buildIvfIndex(corpus, "vec_id", "embedding", nlist = 8)
@@ -665,7 +699,7 @@ class SimilaritySpec extends SparkSpec {
           "vec_id", query, 10, nprobe = 8)
         .select("vec_id").as[Long].collect().toSeq
       val victims = before.take(2)
-      SimilaritySearch.deleteFromIvfIndex(spark, path, victims)
+      SimilaritySearch.deleteFromIndex(spark, path, victims.toDF("vec_id"))
       val after = SimilaritySearch
         .ivfTopK(SimilaritySearch.loadIvfIndex(spark, "ivf_idcol_tbl", path),
           "vec_id", query, 10, nprobe = 8)

@@ -154,4 +154,73 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"))
     intercept[IllegalArgumentException] { VersionedTable.read(spark, dir, 7) }
   }
+
+  private def fileCount(dir: String): Int = {
+    val files = Files.list(Paths.get(s"$dir/files"))
+    try files.count().toInt finally files.close()
+  }
+
+  test("a replayed (writer, batch) adds no version and no file") {
+    val dir = freshDir("batch_replay")
+    val v1 = VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"), batch = Some(("w", 0L)))
+    val nFiles = fileCount(dir)
+    assert(VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"),
+      batch = Some(("w", 0L))) == v1)
+    assert(VersionedTable.latestVersion(spark, dir) == v1)
+    assert(fileCount(dir) == nFiles)
+    // the record is per writer: another writer's batch 0 still lands
+    assert(VersionedTable.commit(spark, dir, Seq((2L, "b")).toDF("id", "x"),
+      batch = Some(("other", 0L))) == v1 + 1)
+    assert(VersionedTable.read(spark, dir).select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
+  }
+
+  test("a batch staged but never published replays to exactly one copy") {
+    val dir = freshDir("batch_crash")
+    VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"), batch = Some(("w", 0L)))
+    // A writer of batch 1 that died before the CAS: its data staged and
+    // moved under files/, no manifest names it.
+    val batch1 = Seq((2L, "b"), (3L, "c")).toDF("id", "x")
+    batch1.coalesce(1).write.parquet(s"$dir/_stage_dead0001")
+    val part = Files.list(Paths.get(s"$dir/_stage_dead0001"))
+    try {
+      val p = part.filter(_.toString.endsWith(".parquet")).findFirst().get()
+      Files.copy(p, Paths.get(s"$dir/files/v2-dead0001-0.parquet"))
+    } finally part.close()
+    assert(VersionedTable.commit(spark, dir, batch1, batch = Some(("w", 1L))) == 2)
+    assert(VersionedTable.commit(spark, dir, batch1, batch = Some(("w", 1L))) == 2)
+    assert(VersionedTable.read(spark, dir).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L, 3L))
+  }
+
+  test("two racing commits of one (writer, batch) land one version") {
+    val dir = freshDir("batch_race")
+    VersionedTable.commit(spark, dir, Seq((0L, "seed")).toDF("id", "x"))
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val racers = (1 to 2).map { _ =>
+      Future(VersionedTable.commit(spark, dir, Seq((7L, "b")).toDF("id", "x"), batch = Some(("w", 3L))))
+    }
+    val versions = Await.result(Future.sequence(racers), 120.seconds)
+    assert(versions == Seq(2, 2), versions.toString)
+    assert(VersionedTable.latestVersion(spark, dir) == 2)
+    assert(VersionedTable.read(spark, dir).select("id").as[Long].collect().sorted.toSeq == Seq(0L, 7L))
+  }
+
+  test("the batch record survives an overwrite and a compaction commit") {
+    val dir = freshDir("batch_carry")
+    VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"), batch = Some(("w", 5L)))
+    val v2 = VersionedTable.commit(spark, dir, Seq((2L, "b")).toDF("id", "x"), overwrite = true)
+    assert(VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"),
+      batch = Some(("w", 5L))) == v2)
+    // compaction: rewrite the head's rows as one overwrite, vacuum to it
+    val v3 = VersionedTable.commit(spark, dir, VersionedTable.read(spark, dir).coalesce(1), overwrite = true)
+    VersionedTable.vacuum(spark, dir, v3)
+    assert(VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"),
+      batch = Some(("w", 4L))) == v3)
+    assert(VersionedTable.read(spark, dir).select("id").as[Long].collect().toSeq == Seq(2L))
+    // the next batch of the writer still lands
+    assert(VersionedTable.commit(spark, dir, Seq((3L, "c")).toDF("id", "x"),
+      batch = Some(("w", 6L))) == v3 + 1)
+  }
 }
