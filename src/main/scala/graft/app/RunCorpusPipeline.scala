@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
-import graft.operators.{Chunker, TrainingData}
+import graft.operators.{Chunker, Components, Dedup, TrainingData}
 
 /** End-to-end training-corpus preparation — the LLM-data counterpart of
   * [[RunPipeline]]'s fraud medallion. documents in ->
@@ -19,7 +19,10 @@ import graft.operators.{Chunker, TrainingData}
   *      cross the wire. With near dedup on, the exact-dedup pool
   *      lands under `silver_exact` first, so near dedup reads one
   *      parquet scan instead of re-running the gate lineage once per
-  *      reference.
+  *      reference. Exact dedup by `fp` leaves no repeated text, so near
+  *      dedup runs the distinct-text MinHash core
+  *      ([[graft.operators.Dedup.minHashNearDuplicatesDistinctPresketched]])
+  *      and keeps one member per cluster.
   *   3. CHUNK: sliding token windows over the REDACTED text, document
   *      metadata carried through the explode.
   *   4. PACK + WRITE: per-source token-budget shard assignment, written
@@ -42,7 +45,9 @@ object RunCorpusPipeline {
       /** Also drop NEAR-duplicates (MinHash -> verified pairs ->
         * transitive clusters -> keep-min) between the exact-dedup and
         * chunking stages, reading the exact-dedup pool landed under
-        * `silver_exact`. Off by default: near-dedup is the one stage
+        * `silver_exact`. Exact dedup by `fp` leaves no repeated text, so
+        * this runs the distinct-text MinHash core, with no collapse of
+        * copies. Off by default: near-dedup is the one stage
         * whose cost is super-linear in candidate density, so it is an
         * explicit opt-in exactly like the reference pipelines it
         * mirrors.
@@ -220,13 +225,17 @@ object RunCorpusPipeline {
       .filter(col("_rn") === 1)
       .drop("_rn")
     // Near dedup references its input several times; landing the pool
-    // runs the gate lineage once for all of them.
+    // runs the gate lineage once for all of them. The pool is unique on
+    // `fp`, so no text repeats: the distinct-text core gives the pairs
+    // Dedup.minHashNearDuplicates would, without its md5 collapse/expand.
     val deduped =
-      if (cfg.nearDedup)
-        graft.operators.Components.dropNearDuplicates(
-          land(exactDeduped, s"${cfg.root}/silver_exact"), "doc_id", "text",
-          minJaccard = cfg.nearDedupJaccard)
-      else exactDeduped
+      if (cfg.nearDedup) {
+        val pool = land(exactDeduped, s"${cfg.root}/silver_exact")
+        Components.keepClusterRepresentatives(pool, "doc_id",
+          Dedup.minHashNearDuplicatesDistinctPresketched(pool,
+            Dedup.fingerprintIndex(pool, "doc_id", "text").select("id", "sig"),
+            "doc_id", "text", minJaccard = cfg.nearDedupJaccard))
+      } else exactDeduped
     // Boilerplate passes run on the SURVIVORS' redacted text: whole-doc
     // dedup first (cheapest, removes entire copies), then line-grain
     // strip, then the span pass only pays for what remains.

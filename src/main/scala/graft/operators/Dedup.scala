@@ -293,7 +293,8 @@ object Dedup {
     * removes false positives. (False negatives are the documented LSH
     * trade-off; tune bands/numHashes for the target threshold.)
     *
-    * Exact copies are collapsed to one keeper per content hash BEFORE
+    * The collapse is for inputs that contain copies: exact copies are
+    * collapsed to one keeper per content hash BEFORE
     * sketching and the pair set is expanded algebraically afterwards —
     * identical texts have identical signatures and gram sets, so
     * within-group pairs always band-collide and score jaccard 1.0, and
@@ -304,7 +305,10 @@ object Dedup {
     * 507s raw -> seconds collapsed). Candidate volume on the sf0.1
     * documents at 32 hashes x 16 bands, minJaccard 0.2: 80k band rows,
     * 5,646 band collisions, 2,045 distinct candidates, 256 verified
-    * pairs — as many as exhaustive [[jaccardPairs]] finds there.
+    * pairs — as many as exhaustive [[jaccardPairs]] finds there. On
+    * text-distinct input every content-hash group is a singleton and the
+    * collapse/expand only reproduces its input pairs; run
+    * [[minHashNearDuplicatesDistinctPresketched]] there instead.
     */
   def minHashNearDuplicates(
       df: DataFrame,
@@ -399,8 +403,10 @@ object Dedup {
   /** The sketch pipeline proper for DISTINCT-TEXT input: band
     * collisions of the presketched `sigs`, exact-Jaccard verify over the
     * candidate docs. Text is touched only by the verify, so a caller that
-    * already exact-deduped and sketched (the ingestion step) skips the
-    * collapse/expand bookkeeping of [[minHashNearDuplicates]] entirely.
+    * already exact-deduped skips the collapse/expand bookkeeping of
+    * [[minHashNearDuplicates]] entirely: the ingestion step (which
+    * sketched its batch for the index) and the batch pipeline
+    * ([[graft.app.RunCorpusPipeline]], whose pool is unique on `fp`).
     * The candidate table is used three times (both prune sides + the
     * verify join); its distinct's shuffle exchange canonicalizes
     * identically across the uses, so ReuseExchange runs the banding

@@ -278,7 +278,7 @@ object Ingest {
         landingDedup.join(dupIds, Seq(idCol), "left_anti")
     }
     val counts = graft.sources.TableIO.writeObserved(
-      landing.observe(landedRows, count(lit(1))), s"$outPath/batch=$batchId",
+      landing.observe(landedRows, count(lit(1))), "parquet", s"$outPath/batch=$batchId",
       Seq(batchRows, landedRows), SaveMode.Overwrite)
     val dropped = counts(batchRows) - counts(landedRows)
     val survivors = spark.read.parquet(s"$outPath/batch=$batchId")

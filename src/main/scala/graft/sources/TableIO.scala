@@ -23,9 +23,9 @@ object TableIO {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).save(path)
   }
 
-  /** Writes `df` to `path` as parquet with `mode` and returns the
-    * one-count metrics `names` that `df`'s named `observe` nodes
-    * recorded in that write, so a row count costs no job of its own.
+  /** [[write]] that returns the one-count metrics `names` that `df`'s
+    * named `observe` nodes recorded in that write, so a row count costs
+    * no job of its own.
     * Read through a query listener, not an `Observation`: an
     * Observation starts the session's ObservationManager, which is not
     * serializable, and from then on every task closure that captures
@@ -33,7 +33,12 @@ object TableIO {
     * it, so `FraudModel` predictions broke).
     */
   private[graft] def writeObserved(
-      df: DataFrame, path: String, names: Seq[String], mode: SaveMode): Map[String, Long] = {
+      df: DataFrame,
+      format: String,
+      path: String,
+      names: Seq[String],
+      mode: SaveMode,
+      partitionBy: Seq[String] = Nil): Map[String, Long] = {
     val seen = scala.concurrent.Promise[Map[String, Long]]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
@@ -46,7 +51,7 @@ object TableIO {
     }
     df.sparkSession.listenerManager.register(listener)
     try {
-      df.write.mode(mode).parquet(path)
+      write(df, format, path, mode, partitionBy)
       scala.concurrent.Await.result(seen.future, scala.concurrent.duration.Duration.Inf)
     } finally df.sparkSession.listenerManager.unregister(listener)
   }

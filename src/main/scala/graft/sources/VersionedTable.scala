@@ -58,6 +58,15 @@ object VersionedTable {
       } catch { case _: FileAlreadyExistsException => false }
     } else f.rename(tmp, dest)
 
+  /** Renames a data file for [[commit]], failing when the file system
+    * reports no move (HDFS returns false for a missing source, as when a
+    * concurrent [[vacuum]] removed a stage dir): a manifest must never
+    * name a file that is not there.
+    */
+  private def move(f: FileSystem, src: Path, dst: Path): Unit =
+    if (!f.rename(src, dst))
+      throw new java.io.IOException(s"commit could not move $src to $dst")
+
   /** Latest committed version, or 0 if the table is empty/absent. */
   def latestVersion(spark: SparkSession, dir: String): Int = {
     val f = fs(spark, dir)
@@ -221,7 +230,7 @@ object VersionedTable {
         s"files/v$v-$stageId-$i.parquet"
       }
       staged.zip(newFiles).foreach { case (src, rel) =>
-        f.rename(src, new Path(s"$dir/$rel"))
+        move(f, src, new Path(s"$dir/$rel"))
       }
       val carried =
         if (overwrite || parent == 0) Nil
@@ -241,7 +250,7 @@ object VersionedTable {
       // no winner references them), recompute against the new head.
       f.delete(mTmp, true)
       newFiles.zip(staged).foreach { case (rel, back) =>
-        f.rename(new Path(s"$dir/$rel"), back)
+        move(f, new Path(s"$dir/$rel"), back)
       }
       require(attempt < maxRetries, s"commit lost $maxRetries CAS races on $dir")
     }

@@ -93,8 +93,17 @@ object ScaleStress {
     val nDocs = docs.count()
     println(s"[stress] corpus: $nDocs docs (${reps}x replication)")
 
-    time("exact dedup groups")(
-      println("[stress]   n_groups = " + Dedup.exactDuplicateGroups(docs, "doc_id", "text").count()))
+    /** Times a full consume of `df`, then prints its row count and
+      * [[checksum]] from one more job, outside the timing.
+      */
+    def consumeTallied(label: String, rows: String)(df: DataFrame): Unit = {
+      time(label)(Meter.consume(df))
+      val r = df.agg(count(lit(1)), bit_xor(xxhash64(df.columns.map(col).toSeq: _*))).head()
+      println(s"[stress]   $rows = ${r.getLong(0)} checksum = ${r.get(1)}")
+    }
+
+    consumeTallied("exact dedup groups", "n_groups")(
+      Dedup.exactDuplicateGroups(docs, "doc_id", "text"))
     time("simhash fingerprints")(
       Meter.consume(docs.select(Dedup.simHash(col("text")))))
 
@@ -102,22 +111,27 @@ object ScaleStress {
     // (cheap hash groupBy), sketch only distinct texts. Running sketches
     // on a copy-dense corpus makes every candidate bucket quadratically
     // hot with pairs that a content hash already proves identical.
-    val distinctDocs = time("collapse exact copies")(
-      Dedup.dropExactDuplicates(docs, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    println(s"[stress]   distinct docs = ${distinctDocs.count()}")
+    val distinctDocs = Dedup.dropExactDuplicates(docs, "doc_id", "text")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    consumeTallied("collapse exact copies", "distinct docs")(distinctDocs)
 
-    time("minhash near-dup on distinct (64/16, j>=0.5)")(
-      println("[stress]   n_pairs = " + Dedup.minHashNearDuplicates(
-        distinctDocs, "doc_id", "text", n = 3, numHashes = 64, bands = 16, minJaccard = 0.5).count()))
-    time("winnow candidates on distinct (minShared=4)")(
-      println("[stress]   n_cand = " + Dedup.winnowCandidatePairs(
-        distinctDocs, "doc_id", "text", minShared = 4).count()))
-    time("minhash near-dup copy-dense (auto-collapse)")(
-      println("[stress]   n_pairs = " + Dedup.minHashNearDuplicates(
-        docs, "doc_id", "text", n = 3, numHashes = 64, bands = 16, minJaccard = 0.5).count()))
-    time("group signatures by source")(
-      println("[stress]   n_groups = " + Dedup.groupSignatures(docs, "source", "text").count()))
+    // Both near-dup forms on the same text-distinct docs: the fused
+    // operator's collapse/expand only reproduces the distinct-text
+    // core's pairs there, so the two checksums must be equal.
+    consumeTallied("minhash near-dup on distinct (64/16, j>=0.5)", "n_pairs")(
+      Dedup.minHashNearDuplicates(
+        distinctDocs, "doc_id", "text", n = 3, numHashes = 64, bands = 16, minJaccard = 0.5))
+    consumeTallied("minhash distinct core (64/16, j>=0.5)", "n_pairs")(
+      Dedup.minHashNearDuplicatesDistinctPresketched(distinctDocs,
+        Dedup.fingerprintIndex(distinctDocs, "doc_id", "text").select("id", "sig"),
+        "doc_id", "text", n = 3, numHashes = 64, bands = 16, minJaccard = 0.5))
+    consumeTallied("winnow candidates on distinct (minShared=4)", "n_cand")(
+      Dedup.winnowCandidatePairs(distinctDocs, "doc_id", "text", minShared = 4))
+    consumeTallied("minhash near-dup copy-dense (auto-collapse)", "n_pairs")(
+      Dedup.minHashNearDuplicates(
+        docs, "doc_id", "text", n = 3, numHashes = 64, bands = 16, minJaccard = 0.5))
+    consumeTallied("group signatures by source", "n_groups")(
+      Dedup.groupSignatures(docs, "source", "text"))
     }
 
     section("sim") {

@@ -31,6 +31,8 @@ class BronzeIngestionSpec extends SparkSpec {
     assert(res.corruptRows == 2)
 
     val bronze = spark.read.parquet(s"$root/bronze")
+    // The observed clean count is the number of rows the write landed.
+    assert(bronze.count() == res.cleanRows)
     assert(bronze.columns.contains("ingestion_date"))
     assert(!bronze.columns.contains("_corrupt_record"))
     // µs timestamp format parsed (SURVEY §7.5-5)
@@ -50,6 +52,8 @@ class BronzeIngestionSpec extends SparkSpec {
         spark, writeCsv(rows), s"$root/bronze_rerun", quarantine)
       assert(res.corruptRows == 2, s"run $run")
       assert(res.cleanRows == 1, s"run $run")
+      // Bronze is overwritten per run, so it holds only this run's rows.
+      assert(spark.read.parquet(s"$root/bronze_rerun").count() == res.cleanRows, s"run $run")
     }
     // The quarantine itself still appends: both runs' rows are kept.
     assert(spark.read.parquet(quarantine).count() == 4)

@@ -156,9 +156,11 @@ class CorpusPipelineSpec extends SparkSpec {
     val docs = Seq(
       (1L, "web", goodText),
       (2L, "web", goodText.replace("dog", "cat")),
-      (3L, "web", goodText), // exact copy of doc 1
+      (3L, "web", goodText), // byte-identical copy of doc 1
       (4L, "web", "completely different content that stands firmly on its own " +
-        "with the a of and to in words enough to pass the quality gate"))
+        "with the a of and to in words enough to pass the quality gate"),
+      // doc 1 with only its whitespace changed: same fp, different bytes
+      (5L, "web", "  " + goodText.replace(" ", " \t ") + "\n"))
       .toDF("doc_id", "source", "text")
     def run(tag: String, cfg: String => CorpusConfig): String = {
       val root = s"target/tmp/corpus_land_${tag}_${System.nanoTime()}"
@@ -177,11 +179,19 @@ class CorpusPipelineSpec extends SparkSpec {
     val inMemory = spark.createDataFrame(
       spark.sparkContext.parallelize(exactRows.toSeq, 2), schema)
     assert(exactRows.map(_.getAs[Long]("doc_id")).toSet == Set(1L, 2L, 4L))
+    // Doc 5 passes the gates, so exact dedup by fp is what drops it.
+    val ann = spark.read.parquet(s"$off/annotated").filter(col("doc_id").isin(1L, 5L))
+    assert(ann.filter(col("quality") >= 0.5 && col("lang_pred") === "en").count() == 2)
+    assert(ann.select("fp").distinct().count() == 1)
 
     val cfgOn = (r: String) => CorpusConfig(root = r, window = 8, stride = 6, nearDedup = true)
     val on = run("near", cfgOn)
     assert(landed(on))
     assert(sorted(spark.read.parquet(s"$on/silver_exact")) == sorted(inMemory))
+    // Exact dedup by fp leaves no repeated text, the precondition for
+    // running near dedup through the distinct-text MinHash core.
+    val texts = spark.read.parquet(s"$on/silver_exact").select("text").as[String].collect()
+    assert(texts.distinct.length == texts.length)
     val expected = graft.operators.Components.dropNearDuplicates(
       inMemory, "doc_id", "text", minJaccard = cfgOn(on).nearDedupJaccard)
     assert(sorted(spark.read.parquet(s"$on/silver")) == sorted(expected))

@@ -6,6 +6,21 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.VersionedTable
 
+/** The local file system under the `vtlost` scheme, whose rename of a
+  * staged data file into `files/` finds the source gone (as after a
+  * concurrent vacuum) and reports it the way HDFS does: false.
+  */
+class LostStageFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("vtlost:///")
+  override def getScheme: String = "vtlost"
+  override def rename(
+      src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    if (src.getParent.getName.startsWith("_stage_") && dst.getParent.getName == "files") {
+      delete(src, false)
+      false
+    } else super.rename(src, dst)
+}
+
 class VersionedTableSpec extends SparkSpec {
   import spark.implicits._
 
@@ -222,5 +237,19 @@ class VersionedTableSpec extends SparkSpec {
     // the next batch of the writer still lands
     assert(VersionedTable.commit(spark, dir, Seq((3L, "c")).toDF("id", "x"),
       batch = Some(("w", 6L))) == v3 + 1)
+  }
+
+  test("a staged file missing at the move fails the commit; no manifest is published") {
+    val dir = freshDir("lost_stage")
+    VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"))
+    spark.sparkContext.hadoopConfiguration.set("fs.vtlost.impl", classOf[LostStageFileSystem].getName)
+    val lost = "vtlost://" + new java.io.File(dir).getAbsolutePath
+    val err = intercept[java.io.IOException] {
+      VersionedTable.commit(spark, lost, Seq((2L, "b")).toDF("id", "x"))
+    }
+    assert(err.getMessage.contains("_stage_") && err.getMessage.contains("/files/v2-"))
+    assert(VersionedTable.latestVersion(spark, dir) == 1)
+    assert(!Files.exists(Paths.get(s"$dir/_manifests/v2")))
+    assert(VersionedTable.read(spark, dir).select("id").as[Long].collect().toSeq == Seq(1L))
   }
 }
