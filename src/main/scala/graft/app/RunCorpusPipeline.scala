@@ -318,23 +318,16 @@ object RunCorpusPipeline {
     * [[graft.streaming.FileEnvelopeSource]] golden in
     * CorpusPipelineSpec.
     *
-    * The overload below takes `surprisalCensusPath`, a
-    * [[graft.operators.CensusStore]] token census
-    * ([[graft.operators.CorpusStats.tokenCensus]]), to apply the
+    * `surprisalCensusPath`, a [[graft.operators.CensusStore]] token
+    * census ([[graft.operators.CorpusStats.tokenCensus]]), applies the
     * min/maxSurprisal band IN the stream. The batch arm's
     * SELF-surprisal is corpus-stateful and stays batch-only, but scoring
     * against a FROZEN census needs no corpus state at all — each
     * micro-batch scores under the standing LM via the sink's per-batch
     * transform hook (a per-doc mean over exploded tokens is a batch
-    * aggregation, not an unbounded streaming one). None (this form) =
-    * band off, composition byte-identical to the pre-census arm.
+    * aggregation, not an unbounded streaming one). None = band off,
+    * composition byte-identical to the pre-census arm.
     */
-  def runStreaming(
-      spark: SparkSession,
-      source: graft.streaming.StreamSource,
-      cfg: CorpusConfig): org.apache.spark.sql.streaming.StreamingQuery =
-    runStreaming(spark, source, cfg, None)
-
   def runStreaming(
       spark: SparkSession,
       source: graft.streaming.StreamSource,
@@ -405,34 +398,6 @@ object RunCorpusPipeline {
       chunks, s"${cfg.root}/chunks", s"${cfg.root}/ckpt",
       sortCols = Seq("doc_id", "chunk_id"),
       batchTransform = bandBatch.andThen(dsirBatch))
-  }
-
-  /** Streaming arm WITH stateful dedup — closes the gap
-    * [[runStreaming]]'s docstring leaves to "run batch-side": each
-    * micro-batch runs the same row-local gates, then folds through
-    * [[graft.operators.Ingest.ingestSink]]'s per-batch increment —
-    * exact/near dedup against the STANDING fingerprint index (never the
-    * unbounded stream state a watermark-free streaming dedup would
-    * need), link-grade pairs into the cluster store, survivors landed
-    * under `<root>/silver_stream/batch=<id>` with their annotations.
-    * Everything is replay-safe (index delta overwrite + self-exclusion,
-    * idempotent edge folds, overwrite landing). Chunk/pack the landed
-    * silver with the batch pipeline's stage 3 afterwards — it reads
-    * plain parquet.
-    */
-  def runStreamingDeduped(
-      spark: SparkSession,
-      inDir: String,
-      cfg: CorpusConfig,
-      dropAgreement: Double = 0.9,
-      linkAgreement: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(inDir).schema
-    val gated = streamGate(spark.readStream.schema(schema).parquet(inDir), cfg)
-    graft.operators.Ingest.ingestSink(
-      gated, "doc_id", "text",
-      s"${cfg.root}/dedup_index", s"${cfg.root}/cluster_store",
-      s"${cfg.root}/silver_stream", s"${cfg.root}/ckpt_dedup",
-      dropAgreement, linkAgreement)
   }
 
   /** The row-local gate both streaming arms apply per record: quality,

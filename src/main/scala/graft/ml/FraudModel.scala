@@ -8,6 +8,9 @@ import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.{StandardScaler, VectorAssembler}
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+import graft.operators.TrainingData
 
 /** Fraud-model train / batch-inference (reference: src/models/train.py and
   * src/models/predict.py).
@@ -29,11 +32,17 @@ object FraudModel {
 
   def prepare(df: DataFrame): DataFrame = df.na.fill(0, ZeroFillCols)
 
-  /** Stratified downsample: keep all fraud, 10% of non-fraud, seed 42
-    * (reference: train.py:37). Map-side Bernoulli sampling — no shuffle.
+  /** Stratified downsample: keep all fraud and 10% of non-fraud; the
+    * fractions come from train.py:37. The keep is an md5 of
+    * (`transaction_id`, salt) through [[TrainingData.mixtureSample]], so
+    * the same rows are kept at any partitioning, which the reference's
+    * per-partition seeded `sampleBy` is not. Row-local, no shuffle.
     */
   def downsample(df: DataFrame): DataFrame =
-    df.stat.sampleBy("label", Map(0 -> 0.1, 1 -> 1.0), 42L)
+    TrainingData.mixtureSample(
+        df.withColumn("__label", col("label").cast("string")),
+        "transaction_id", "__label", Map("0" -> 0.1, "1" -> 1.0), defaultFrac = 0.0)
+      .drop("__label")
 
   /** Assembler -> scaler -> RF pipeline (reference: train.py:40-50). */
   def buildPipeline(numTrees: Int = 20, maxDepth: Int = 5): Pipeline = {
@@ -67,6 +76,7 @@ object FraudModel {
 
   /** Full protocol: 3-fold CV over numTrees {20,50} x maxDepth {5,10},
     * parallelism 2, seed 42 (reference: train.py:53-67).
+    * Kept without a pipeline caller: it is the reference's CV protocol.
     */
   def trainCV(train: DataFrame): CrossValidatorModel = {
     val pipeline = buildPipeline()

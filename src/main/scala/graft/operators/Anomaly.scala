@@ -66,8 +66,7 @@ object Anomaly {
     * Scale shape: the fact table is scanned THREE times (the floor for
     * two-level exact medians: the med aggregation, the |x-med|
     * aggregation, and the final scoring join) — the per-group med table
-    * is tiny (one row per group) and is persisted so its aggregation
-    * runs once instead of once per consumer; both stats joins broadcast.
+    * is tiny (one row per group); both stats joins broadcast.
     * `exact = false` swaps the exact percentile (full per-group value
     * buffer) for approx_percentile's bounded-memory sketch — the 100 TB
     * path, same plan shape.
@@ -90,7 +89,9 @@ object Anomaly {
     * anomaly burst cannot inflate the very statistics meant to catch
     * it — the train/serve separation self-scoring lacks. Columns are
     * `g`/`med`/`mad` (storage-friendly); metadata-sized (one row per
-    * group).
+    * group). Caches nothing: the med table's two consumers share its
+    * aggregation's shuffle through exchange reuse, so only the
+    * one-row-per-group final aggregate runs twice.
     */
   def robustStats(
       df: DataFrame,
@@ -101,14 +102,9 @@ object Anomaly {
     def median(c: Column): Column =
       if (exact) percentile(c, lit(0.5))
       else approx_percentile(c, lit(0.5), lit(accuracy))
-    // One row per group — persisting is a few KB and stops the med
-    // aggregation (a full fact scan) recomputing under each of its two
-    // consumers. Dropped by any catalog.clearCache(); lives with the
-    // session otherwise (same contract as broadcast dimension caches).
     val meds = df.groupBy(col(groupCol))
       .agg(median(col(valueCol)).as("med"))
       .withColumnRenamed(groupCol, "_g")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val mads = df.join(broadcast(meds), col(groupCol) === col("_g")).drop("_g")
       .groupBy(col(groupCol))
       .agg(median(abs(col(valueCol) - col("med"))).as("mad"))
@@ -244,7 +240,9 @@ object Anomaly {
     * beyond the (group, period, bucket) counts. Edges are rounded to 6
     * before comparison in BOTH engines so interpolation ulps cannot
     * flip a boundary value's bucket. `exact=false` swaps in
-    * approx_percentile for the 100 TB path.
+    * approx_percentile for the 100 TB path. Caches nothing: its two
+    * consumers recompute the edge table, one more baseline scan, which
+    * Meter at sf0.1 reads as fewer jobs and less task time than the cache.
     */
   def psiDrift(
       df: DataFrame,
@@ -259,14 +257,9 @@ object Anomaly {
     val probs = array((1 until buckets).map(i => lit(i.toDouble / buckets)): _*)
     def pct(c: Column): Column =
       if (exact) percentile(c, probs) else approx_percentile(c, probs, lit(accuracy))
-    // Lazy persist: edges feed both the bucket join and the densify
-    // frame below — without the cache the quantile aggregation (a full
-    // baseline scan) would run once per consumer (the r13 plan-audit
-    // recompute-fan-out lesson). Metadata-sized: one row per group.
     val edges = df.filter(isBaseline)
       .groupBy(col(groupCol))
       .agg(transform(pct(col(valueCol)), e => round(e, 6)).as("__edges"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bucketed = df
       .join(broadcast(edges), Seq(groupCol))
       .withColumn("bucket",

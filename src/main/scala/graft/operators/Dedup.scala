@@ -75,13 +75,6 @@ object Dedup {
 
   // ------------------------------------------------------ n-gram Jaccard
 
-  /** Exploded distinct word-n-gram set per document: (id, gram). String
-    * grams — used where an external oracle must reproduce the shingles.
-    */
-  def ngramSets(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol).as("id"), explode(TextFunctions.wordNGrams(col(textCol), n)).as("gram"))
-      .distinct()
-
   /** Exact pairwise Jaccard over word n-gram sets: pairs (id_a < id_b)
     * with similarity >= minJaccard. Output: id_a, id_b, n_common, jaccard.
     *
@@ -210,19 +203,6 @@ object Dedup {
   }
 
   // ------------------------------------------------------- MinHash + LSH
-
-  /** Prime just above 2^32 for the universal-hash family. */
-  private val MinHashPrime = 4294967311L
-
-  /** Deterministic (a*h + b) mod p coefficient arrays from a seed.
-    * a <= 2^30 and h < 2^32 keep a*h+b under 2^63 — no long overflow.
-    */
-  private def coefficients(numHashes: Int, seed: Long): (Seq[Long], Seq[Long]) = {
-    val rng = new scala.util.Random(seed)
-    val as = Seq.fill(numHashes)(1L + rng.nextInt((1 << 30) - 1).toLong)
-    val bs = Seq.fill(numHashes)(rng.nextInt(Int.MaxValue).toLong)
-    (as, bs)
-  }
 
   /** MinHash signature column (array<bigint> of length numHashes) over the
     * document's word-n-gram set. O(numHashes x |grams|) per row, no
@@ -758,31 +738,6 @@ object Dedup {
     */
   def simHash(textCol: Column): Column =
     graft.plans.HashExpressions.simHashFromText(textCol)
-
-  /** SimHash near-dup pairs within `maxHamming`, found by exact-matching
-    * one of four 16-bit chunks (pigeonhole: hamming <= 3 guarantees at
-    * least one of 4 chunks equal) then verifying with bit_count(xor).
-    */
-  def simHashNearDuplicates(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      maxHamming: Int = 3): DataFrame = {
-    val sigs = df.select(col(idCol).as("id"), simHash(col(textCol)).as("sim"))
-    // Variable shift amounts need SQL-side `>>`, hence selectExpr.
-    val exploded = sigs.selectExpr(
-      "id", "sim",
-      "posexplode(transform(sequence(0, 3), c -> (sim >> (c * 16)) & 65535)) AS (chunk, chunk_val)")
-    val a = exploded.select(col("id").as("id_a"), col("sim").as("sim_a"), col("chunk"), col("chunk_val"))
-    val b = exploded.select(col("id").as("id_b"), col("sim").as("sim_b"), col("chunk"), col("chunk_val"))
-    a.join(b, Seq("chunk", "chunk_val"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sim_a", "sim_b")
-      .distinct()
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
 
   // -------------------------------------------- collection-level MinHash
 

@@ -105,35 +105,6 @@ object Dsir {
       fused.select("bucket", "cnt"))
   }
 
-  /** [[featureCensus]] over a DETERMINISTIC uniform row sample of the
-    * corpus, counts scaled back by 1/rate — the raw-census shortcut the
-    * DSIR paper's setup permits: the censuses only enter scoring
-    * through add-one-smoothed FREQUENCIES, so a uniform sample's scaled
-    * counts estimate the same ratio table while the census-build scan
-    * reads `rate` of the corpus. Sampling is the house md5 52-bit
-    * uniform on (id, salt), so the census is replayable and
-    * append-stable (a doc is in or out of the sample forever). The
-    * CONTRACT queries stay full-census ([[featureCensus]]); this is the
-    * opt-in scale default, with rank stability spec-pinned at fixture
-    * scale.
-    */
-  def featureCensusSampled(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      buckets: Int,
-      rate: Double,
-      ns: Seq[Int] = Seq(1, 2),
-      salt: String = "census"): DataFrame = {
-    require(rate > 0.0 && rate <= 1.0, s"sample rate must be in (0, 1], got $rate")
-    val h52 = conv(
-      substring(md5(concat(col(idCol).cast("string"), lit(salt))), 1, 13),
-      16, 10).cast("long")
-    val u = (h52 + 1).cast("double") / 4503599627370496.0
-    featureCensus(df.filter(u <= rate), textCol, buckets, ns)
-      .select(col("bucket"), round(col("cnt") / lit(rate)).cast("long").as("cnt"))
-  }
-
   /** Persist one ingestion batch's hashed-gram census as a
     * [[CensusStore]] delta — the DSIR census is a plain mergeable count
     * table (counts add), so the standing raw census of a 100 TB corpus

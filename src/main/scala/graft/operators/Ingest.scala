@@ -75,33 +75,6 @@ object Ingest {
     */
   final case class IngestResult(survivors: DataFrame, dropped: Long)
 
-  /** Continuous ingestion from a document stream: foreachBatch runs
-    * [[ingestIncrement]] with the micro-batch id — the batch=<id>
-    * survivor landing, the index delta and the cluster-store fold are
-    * all replay-safe, so the sink needs no marker protocol of its own.
-    * The streaming twin of the per-batch batch API — pinned
-    * streamed == sequential-batch in IngestSpec.
-    */
-  def ingestSink(
-      docStream: DataFrame,
-      idCol: String,
-      textCol: String,
-      indexPath: String,
-      clusterStorePath: String,
-      outPath: String,
-      checkpoint: String,
-      dropAgreement: Double = 0.9,
-      linkAgreement: Double = 0.5): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        ingestIncrement(
-          batch.toDF(), idCol, textCol, indexPath, clusterStorePath, outPath,
-          id, dropAgreement, linkAgreement)
-        ()
-      }
-      .start()
-
   /** Fold one batch into the standing corpus state. The batch text is
     * SKETCHED EXACTLY ONCE (r16 — was once per consumer, 4x): one
     * persisted [[Dedup.fingerprintIndex]] frame feeds the index sweep,

@@ -112,16 +112,13 @@ object Profile {
     * needs salting BEFORE the job hangs. One counting shuffle; the
     * top-k travels as a TakeOrdered (k rows per partition cross the
     * wire, never the full key census), and the scalar stats ride a
-    * broadcast one-row frame.
+    * broadcast one-row frame. Caches nothing: the scalar stats and the
+    * top-k share the counting shuffle through exchange reuse.
     */
   def skewReport(df: DataFrame, keyCol: String, topK: Int = 10): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     import org.apache.spark.sql.expressions.Window
-    // Lazy persist: the scalar stats and the top-k both read the key
-    // census inside the caller's one action — cached, the counting
-    // shuffle runs once instead of twice (plan-audited).
     val counts = df.groupBy(col(keyCol)).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tot = counts.agg(
       sum(col("cnt")).as("n_rows"),
       count(lit(1)).as("n_keys"),

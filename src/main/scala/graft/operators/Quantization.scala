@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
-import SimilaritySearch.{loadStore, probeCells, readSidecar, replaceStore, rerank, topK, writeSidecar}
+import SimilaritySearch.{compactStore, loadStore, probeCells, readSidecar, replaceStore, rerank, topK, writeSidecar}
 
 /** Scalar (int8-range) embedding quantization — the memory-bandwidth
   * arm of similarity search at scale. A float32 corpus at 100 TB is a
@@ -522,10 +522,11 @@ object Quantization {
 
   /** Fold tombstones into the store: a compaction commit of the live
     * codes. O(index) — amortize over many deletions, like the IVF
-    * vacuum.
+    * vacuum. Kept without a pipeline caller: it maintains the PQ store
+    * that `q_sim_pq_persisted` writes.
     */
   def vacuumPqIndex(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    replaceStore(loadStore(spark, s"$path/codes", path, loadPqModel(spark, path)._2), s"$path/codes", path)
+    compactStore(spark, s"$path/codes", path, loadPqModel(spark, path)._2)
 
   /** The query's per-centroid partial-dot lookup table (m x kc). */
   private def adcLut(model: PqModel, query: Array[Double]): Array[Double] = {

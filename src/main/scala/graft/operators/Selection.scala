@@ -194,13 +194,6 @@ object Selection {
     ks.map(k => k -> resolved(k)).toMap
   }
 
-  /** Discrete quantile via [[kthSmallest]]: the element at 1-based
-    * rank floor(q * (n-1)) + 1 among non-null rows (the
-    * lower-nearest-rank definition; q=0 -> min, q=1 -> max).
-    */
-  def quantileDisc(df: DataFrame, valueCol: String, q: Double): Double =
-    quantilesDisc(df, valueCol, Seq(q))(q)
-
   /** Several exact discrete quantiles in ONE shared descent (the
     * count pass plus one [[kthSmallestMulti]] call) — the exact
     * counterpart of `percentile_approx(col, array(...))`, for the

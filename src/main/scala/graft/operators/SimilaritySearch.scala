@@ -335,7 +335,8 @@ object SimilaritySearch {
     * DataFrame, so a deletion batch flows in as data, never as driver
     * plan text; re-deleting an id appends a duplicate the load-time
     * anti-join ignores. The store's own vacuum folds the tombstones in,
-    * and any save at the path clears them.
+    * and any save at the path clears them. Kept without a pipeline
+    * caller: it maintains the stores that contract queries write.
     */
   def deleteFromIndex(
       spark: org.apache.spark.sql.SparkSession,
@@ -370,15 +371,31 @@ object SimilaritySearch {
     * `path/codes`, a [[graft.sources.VersionedTable]]): one overwrite
     * commit — the batch record rides along — then a vacuum to it, so
     * no earlier file stays on disk, then the tombstones are cleared:
-    * the new rows are the whole store. The files a compaction reads
-    * are immutable, so it needs no checkpoint of its input.
+    * the new rows are the whole store. `readVersion` is the version
+    * the rows were read from, if any: the commit then fails when the
+    * head has moved past it.
     */
-  private[operators] def replaceStore(rows: DataFrame, dir: String, path: String): Unit = {
+  private[operators] def replaceStore(
+      rows: DataFrame, dir: String, path: String, readVersion: Option[Int] = None): Unit = {
     val spark = rows.sparkSession
     val v = graft.sources.VersionedTable.commit(spark, dir, rows,
-      overwrite = true, overwriteSchema = true)
+      overwrite = true, overwriteSchema = true, expectedParent = readVersion)
     graft.sources.VersionedTable.vacuum(spark, dir, v)
     clearTombstones(spark, path)
+  }
+
+  /** Fold a codes-at-rest store's tombstones in: its live rows at the
+    * head, rewritten by [[replaceStore]] against that head, so an append
+    * that commits meanwhile fails the compaction instead of being
+    * dropped. The files a compaction reads are immutable, so it needs
+    * no checkpoint of its input.
+    */
+  private[operators] def compactStore(
+      spark: org.apache.spark.sql.SparkSession, dir: String, path: String, idCol: String): Unit = {
+    val head = graft.sources.VersionedTable.latestVersion(spark, dir)
+    replaceStore(
+      withoutTombstones(spark, path, graft.sources.VersionedTable.read(spark, dir, head), idCol),
+      dir, path, Some(head))
   }
 
   private[operators] def loadStore(
@@ -444,12 +461,13 @@ object SimilaritySearch {
 
   /** Fold tombstones into the sign store: a compaction commit of the
     * live words. O(index) — amortize over many deletions, like the
-    * IVF/PQ vacuums.
+    * IVF/PQ vacuums. Kept without a pipeline caller: it maintains the
+    * sign store that [[saveBinaryIndex]] writes (ScaleStress `stores`).
     */
   def vacuumBinaryIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Unit =
-    replaceStore(loadStore(spark, s"$path/words", path, storeIdCol(spark, path)), s"$path/words", path)
+    compactStore(spark, s"$path/words", path, storeIdCol(spark, path))
 
   private def packSignsDriver(v: Array[Double]): Seq[Long] = {
     val words = new Array[Long]((v.length + 63) >>> 6)
@@ -552,50 +570,6 @@ object SimilaritySearch {
     PcaIvfIndex(model, ivf)
   }
 
-  /** Persist a PCA->IVF index: the eigenbasis as a tiny JSON sidecar
-    * (k×d + 2 vectors — model metadata, like the PQ codebook sidecar)
-    * plus the reduced-space IVF store via [[saveIvfIndex]] (bucketed,
-    * cell-sorted, carrying the full vectors). Probes of the loaded
-    * index inherit every IVF-store property — bucket pruning on cell,
-    * tombstones, shuffle-free batch joins — and are bit-identical to
-    * the in-session index (spec-pinned).
-    */
-  def savePcaIvfIndex(
-      index: PcaIvfIndex,
-      idCol: String,
-      tableName: String,
-      path: String,
-      buckets: Int = 16): Unit = {
-    val spark = index.ivf.assigned.sparkSession
-    import spark.implicits._
-    writeSidecar(Seq((index.pca.mean.toSeq, index.pca.axes.flatten.toSeq,
-        index.pca.explained.toSeq, index.pca.k, index.pca.d))
-      .toDF("mean", "axes_flat", "explained", "k", "d"), s"$path/pca")
-    saveIvfIndex(index.ivf, idCol, tableName, s"$path/ivf", buckets)
-  }
-
-  /** Load a persisted PCA->IVF index — no clustering, no moment pass;
-    * drop-in for [[pcaIvfTopK]].
-    */
-  def loadPcaIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      tableName: String,
-      path: String): PcaIvfIndex = {
-    val r = spark.read.json(s"$path/pca")
-      .select(col("mean").cast("array<double>"),
-        col("axes_flat").cast("array<double>"),
-        col("explained").cast("array<double>"),
-        col("k").cast("int"), col("d").cast("int"))
-      .head()
-    val (mean, flat, explained, k, d) =
-      (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray,
-        r.getSeq[Double](2).toArray, r.getInt(3), r.getInt(4))
-    require(flat.length == k * d, s"axes sidecar ${flat.length} != $k x $d")
-    val model = EmbeddingStats.PcaModel(
-      mean, Array.tabulate(k)(i => flat.slice(i * d, (i + 1) * d)), explained)
-    PcaIvfIndex(model, loadIvfIndex(spark, tableName, s"$path/ivf"))
-  }
-
   /** y = A(q − μ), driver-side — queries are single vectors. */
   private def pcaProjectQuery(m: EmbeddingStats.PcaModel, q: Seq[Double]): Seq[Double] = {
     require(q.length == m.d, s"query dim ${q.length} != model dim ${m.d}")
@@ -689,7 +663,8 @@ object SimilaritySearch {
     * compaction you amortize over many deletions — run it when
     * tombstones reach a few percent of the corpus. The kept rows are
     * local-checkpointed before the overwrite because they are read from
-    * the very table being rewritten.
+    * the very table being rewritten. Kept without a pipeline caller: it
+    * maintains the IVF store that `q_sim_ivf_persisted` writes.
     */
   def vacuumIvfIndex(
       spark: org.apache.spark.sql.SparkSession,

@@ -471,60 +471,6 @@ object SubstringDedup {
         round(col("dup_chars").cast("double") / col("total_chars"), 6))
   }
 
-  /** Per-batch census delta via [[CensusStore.appendDelta]]: replays
-    * are idempotent (deterministic per-batch dir, OVERWRITE, and the
-    * post-compaction fold watermark skips already-folded batches).
-    */
-  def appendCensusDelta(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      minLen: Int,
-      path: String,
-      batchId: Long,
-      hashGrams: Boolean = true): Unit =
-    CensusStore.appendDelta(
-      gramCensus(batch, idCol, textCol, minLen, hashGrams), path, batchId)
-
-  /** The live census: [[CensusStore.read]] keyed by gram. */
-  def readCensus(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    CensusStore.read(spark, path, "g")
-
-  /** Fold the delta pile into the `delta=-1` base — crash-safe swap,
-    * single-writer; see [[CensusStore.compact]].
-    */
-  def compactCensus(spark: org.apache.spark.sql.SparkSession, path: String): Unit =
-    CensusStore.compact(spark, path, "g")
-
-  /** Maintain a gram census continuously from a document stream:
-    * foreachBatch writes each micro-batch's delta idempotently and
-    * compacts the delta pile every `compactEvery` batches (0 = never).
-    * The probe side ([[duplicatedSpansAgainstCensus]] over
-    * [[readCensus]]) then sees every ingested document without any
-    * corpus rescan — the streaming twin of the batch census, pinned
-    * streamed==batch in SubstringDedupSpec. Replay-safe across
-    * compaction: the fold watermark stamped by [[CensusStore.compact]]
-    * makes a replayed pre-compaction batch a no-op instead of a
-    * double-count.
-    */
-  def censusSink(
-      stream: DataFrame,
-      idCol: String,
-      textCol: String,
-      minLen: Int,
-      path: String,
-      checkpoint: String,
-      hashGrams: Boolean = true,
-      compactEvery: Int = 0): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        appendCensusDelta(batch.toDF(), idCol, textCol, minLen, path, id, hashGrams)
-        if (compactEvery > 0 && id % compactEvery == compactEvery - 1)
-          compactCensus(batch.sparkSession, path)
-      }
-      .start()
-
   /** Remove every duplicated span, keeping the non-duplicated
     * remainder in order: the input frame with `textCol` replaced by
     * the cleaned text. Documents with no duplicated span (and those
@@ -661,17 +607,6 @@ object SubstringDedup {
         .join(evalCensus.select(col("g")), Seq("g"), "left_semi")
         .select(col("doc_id"), col("p")),
       minLen)
-
-  /** Strip composed over the persisted-census detector. */
-  def stripContaminatedSpansAgainstCensus(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      evalCensus: DataFrame,
-      minLen: Int,
-      hashGrams: Boolean = true): DataFrame =
-    stripSpans(corpus, idCol, textCol,
-      contaminatedSpansAgainstCensus(corpus, idCol, textCol, evalCensus, minLen, hashGrams))
 
   /** TOKEN-space strip: remove every duplicated TOKEN span and replace
     * `textCol` with the space-joined kept tokens, in order. Documents

@@ -252,20 +252,6 @@ object TrainingData {
       .toDF("id", "n_tokens", "bin_id", "bin_off", "is_overflow")
   }
 
-  /** Per-bin manifest over a [[packBinsBfd]] result: doc count, used
-    * tokens, and pad tokens per bin — the loader/QA view, and the
-    * padding-efficiency report (sum(padding) / (n_bins * capacity)).
-    */
-  def binManifest(packed: DataFrame, capacity: Long): DataFrame =
-    packed.groupBy(col("bin_id"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tokens")).as("used_tokens"),
-        max(col("is_overflow")).as("is_overflow"))
-      .withColumn("pad_tokens",
-        when(col("is_overflow"), lit(0L))
-          .otherwise(lit(capacity) - col("used_tokens")))
-
   /** Per-shard manifest over a [[packShards]] result: one row per
     * (group, shard) with document count, token sum, and the id range —
     * what a training loader consumes to map shards to file paths and

@@ -81,13 +81,4 @@ object TestDataSchema {
         case e: Throwable => Seq(s"$table: failed to load from $sfDir: ${e.getMessage}")
       }
     }
-
-  /** Throws one assembled error listing every drifted column. */
-  def assertMatches(spark: SparkSession, sfDir: String): Unit = {
-    val d = drift(spark, sfDir)
-    if (d.nonEmpty) throw new IllegalStateException(
-      s"TESTDATA SCHEMA DRIFT at $sfDir (fixtures regenerated?) — " +
-        s"${d.size} finding(s):\n  " + d.mkString("\n  ") +
-        "\n  Fix: adapt TableIO.table / TestDataSchema.expected, then re-run.")
-  }
 }

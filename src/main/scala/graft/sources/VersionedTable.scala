@@ -157,6 +157,12 @@ object VersionedTable {
     * CAS loop tries, so it holds before staging and again after a lost
     * race — a crash anywhere before the CAS leaves no record, and the
     * replay lands the batch exactly once.
+    *
+    * PARENT CHECK: `expectedParent = Some(v)` commits only on top of
+    * version v. A compaction that rewrites rows it read at v passes v:
+    * if any commit landed after v, this one throws before it stages a
+    * file or writes a manifest, instead of retrying the overwrite on
+    * the new head and dropping that commit's rows.
     */
   def commit(
       spark: SparkSession,
@@ -166,7 +172,8 @@ object VersionedTable {
       overwriteSchema: Boolean = false,
       mergeSchema: Boolean = false,
       maxRetries: Int = 10,
-      batch: Option[(String, Long)] = None): Int = {
+      batch: Option[(String, Long)] = None,
+      expectedParent: Option[Int] = None): Int = {
     val f = fs(spark, dir)
     f.mkdirs(manifestDir(dir))
     f.mkdirs(new Path(s"$dir/files"))
@@ -186,6 +193,11 @@ object VersionedTable {
     while (true) {
       attempt += 1
       val parent = latestVersion(spark, dir)
+      if (expectedParent.exists(_ != parent)) {
+        f.delete(stage, true)
+        throw new java.util.ConcurrentModificationException(
+          s"commit to $dir expected parent v${expectedParent.get}, but the head is v$parent")
+      }
       val v = parent + 1
       val batches = readBatches(f, dir, parent)
       if (batch.exists { case (w, id) => batches.get(w).exists(_ >= id) }) {

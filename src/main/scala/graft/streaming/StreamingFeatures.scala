@@ -157,68 +157,6 @@ object StreamingFeatures {
       .dropDuplicatesWithinWatermark(Seq("_fp"))
       .drop("_fp")
 
-  /** Streaming NEAR-duplicate dedup via MinHash banding — the streaming
-    * half of the batch `Dedup.minHashNearDuplicates` scale path: a doc is
-    * dropped when ANY of its LSH band hashes was claimed by an earlier
-    * doc inside the watermark horizon, so reformatted/lightly-edited
-    * copies are suppressed, not just byte-copies.
-    *
-    * Shape: band hashes are computed row-local as `bands` COLUMNS (no
-    * explode — the row count never multiplies) and the stream passes
-    * through one `dropDuplicatesWithinWatermark` per band. A novel doc
-    * claims all its band keys; a near-copy collides on at least one
-    * earlier band stage and is dropped there. State is `bands` stores of
-    * (band hash -> watermark expiry) — bounded by the horizon, never by
-    * corpus size. Chained dedup states are append-mode-composable
-    * (each stage only ever drops rows).
-    *
-    * Semantics notes, both inherent to LSH and documented trade-offs of
-    * the batch operator too: (a) collision probability per band is
-    * j^(numHashes/bands) — tune (bands, numHashes) for the target
-    * similarity exactly as in batch; (b) a dropped doc's earlier-stage
-    * band claims stay in state, so a chain A~B, B~C can suppress C via
-    * B even though B itself was dropped (transitive dedup); (c) docs
-    * with fewer than `n` tokens have no gram set — they fall back to
-    * exact-text keys (md5-derived per band) instead of the identity
-    * signature that would collide every tiny doc with every other.
-    */
-  def dedupNearMinHash(
-      docs: DataFrame,
-      textCol: String,
-      tsCol: String = "ts",
-      n: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 16,
-      seed: Long = 42L,
-      maxDelay: String = "10 minutes"): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val r = numHashes / bands
-    val withSig = docs.withColumn("_sig",
-      graft.operators.Dedup.minHashSignature(col(textCol), n, numHashes, seed))
-    // Identity signature == empty gram set (sub-n-token doc): band keys
-    // degrade to exact-content keys so tiny docs only dedup byte-exact.
-    val tiny = element_at(col("_sig"), 1) === Long.MaxValue
-    // Dedup keys are the sliced signatures THEMSELVES (array<bigint> is a
-    // valid dropDuplicatesWithinWatermark key), not a 32-bit hash of them:
-    // hashing to int would make false-positive drops grow with per-band
-    // state size (~N/2^32 per band — silent data loss at corpus scale),
-    // whereas keying on the r raw minhash values leaves collisions
-    // governed purely by the banding probability j^r the operator is
-    // tuned with. A leading discriminator element keeps the exact-text
-    // fallback keyspace (tiny docs) disjoint from the signature keyspace;
-    // state cost is r+1 longs per entry instead of 4 bytes — the price of
-    // collision-free keys, bounded by the same watermark horizon.
-    val banded = (0 until bands).foldLeft(withSig) { (d, b) =>
-      d.withColumn(s"_band$b",
-        when(tiny, array(lit(1L), xxhash64(md5(col(textCol)), lit(b))))
-          .otherwise(concat(array(lit(0L)), slice(col("_sig"), b * r + 1, r))))
-    }
-    val deduped = (0 until bands).foldLeft(banded.withWatermark(tsCol, maxDelay)) {
-      (d, b) => d.dropDuplicatesWithinWatermark(Seq(s"_band$b"))
-    }
-    deduped.drop("_sig" +: (0 until bands).map(b => s"_band$b"): _*)
-  }
-
   /** Stream-static enrichment join: each micro-batch joins against a
     * batch dimension table (broadcast when small). No state, no
     * watermark requirement — the standard shape for decorating an event

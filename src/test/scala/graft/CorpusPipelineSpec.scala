@@ -388,48 +388,6 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(err.getMessage.contains("batch-only"))
   }
 
-  test("streaming arm with stateful dedup: cross-batch duplicate drops, clusters persist") {
-    val root = s"target/tmp/corpus_stream_dedup_${System.nanoTime()}"
-    val in = s"$root/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    val batches = Seq(
-      Seq((1L, "web", goodText + " original first telling"),
-          (2L, "web", "a wholly different story of the sea and the tide and " +
-            "the ships that sail them for the good of it all")),
-      Seq((11L, "web", goodText + " original first telling"), // exact cross-batch copy
-          (12L, "web", goodText + " original first telling but slightly " +
-            "changed at the end of it"),                       // near revision
-          (13L, "web", "yet another unique piece about the mountains and " +
-            "the valleys that lie between them for all to see")))
-    def feed(i: Int): Unit = {
-      val stage = s"$root/stage$i"
-      batches(i).toDF("doc_id", "source", "text").coalesce(1).write.parquet(stage)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(f, java.nio.file.Paths.get(s"$in/b$i.parquet"))
-    }
-    feed(0)
-    val q = RunCorpusPipeline.runStreamingDeduped(
-      spark, in, CorpusConfig(root = root, window = 8, stride = 6),
-      linkAgreement = 0.3)
-    try { q.processAllAvailable(); feed(1); q.processAllAvailable() }
-    finally q.stop()
-    val silver = spark.read.parquet(s"$root/silver_stream")
-    // the exact cross-batch copy (11) dropped; the revision (12) survived
-    assert(silver.select("doc_id").as[Long].collect().toSet ==
-      Set(1L, 2L, 12L, 13L), "cross-batch exact copy must drop")
-    // annotations rode through the fold
-    assert(silver.columns.contains("clean_text"))
-    // the revision linked into doc 1's standing cluster
-    val m = graft.operators.ClusterStore.read(spark, s"$root/cluster_store")
-      .as[(Long, Long)].collect().toMap
-    assert(m.get(12L).contains(1L), s"revision must share doc 1's cluster: $m")
-    // batch stage 3 runs unchanged over the landed silver
-    val chunks = Chunker.chunkDocuments(
-      silver, "clean_text", "doc_id", 8, 6, carryCols = Seq("source"))
-    assert(chunks.count() > 0)
-  }
-
   test("chunk_uid pack guard: a doc chunking past 1000 fails loudly, not silently") {
     // ~12800 tokens -> >2000 chunks at window 8 / stride 6: the packed
     // uid would collide with doc_id+1's range — must raise, not corrupt
@@ -595,7 +553,7 @@ class CorpusPipelineSpec extends SparkSpec {
 
     val q = RunCorpusPipeline.runStreaming(spark,
       FileEnvelopeSource(s"$root/topic", recordSchema),
-      CorpusConfig(root = root, window = 8, stride = 6))
+      CorpusConfig(root = root, window = 8, stride = 6), None)
     try {
       q.processAllAvailable()
       val streamed = spark.read.parquet(s"$root/chunks")

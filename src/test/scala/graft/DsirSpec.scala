@@ -133,42 +133,6 @@ class DsirSpec extends SparkSpec {
     assert(m(pair._2) == m(sep._2), "raw census counts must match")
   }
 
-  test("sampled raw census preserves the weight ranking structure") {
-    // 440 docs in 11 classes: class c mixes c target words with
-    // (10 - c) off-target words, so true importance is monotone in c.
-    // A 30% sampled raw census (counts scaled by 1/rate) must preserve
-    // that class-level monotonicity — the rank structure scoring
-    // actually consumes — while reading a fraction of the corpus.
-    val tWords = Seq("alpha", "beta", "gamma", "delta", "epsilon")
-    val oWords = Seq("zeta", "eta", "theta", "iota", "kappa")
-    val docs = (0 until 440).map { i =>
-      val c = i % 11
-      val words = (0 until c).map(j => tWords(j % 5)) ++
-        (0 until (10 - c)).map(j => oWords((i + j) % 5))
-      (i.toLong, c, words.mkString(" "))
-    }.toDF("doc_id", "cls", "text")
-    val target = docs.filter($"cls" >= 8)
-    val tc = Dsir.featureCensus(target, "text", B)
-    def classMeans(rc: org.apache.spark.sql.DataFrame): Seq[Double] =
-      Dsir.importanceWeights(docs, "doc_id", "text", tc, rc, B)
-        .groupBy("cls").agg(avg("log_weight").as("w"))
-        .orderBy("cls").select("w").as[Double].collect().toSeq
-    val full = classMeans(Dsir.featureCensus(docs, "text", B))
-    val sampled = classMeans(
-      Dsir.featureCensusSampled(docs, "doc_id", "text", B, rate = 0.3))
-    assert(full.sliding(2).forall(p => p(0) < p(1)),
-      s"full-census class means must ascend, got $full")
-    assert(sampled.sliding(2).forall(p => p(0) < p(1)),
-      s"sampled-census class means must ascend, got $sampled")
-    // Scaled counts estimate the full census totals.
-    val fullTot = Dsir.featureCensus(docs, "text", B)
-      .agg(sum("cnt")).head().getLong(0).toDouble
-    val sampTot = Dsir.featureCensusSampled(docs, "doc_id", "text", B, rate = 0.3)
-      .agg(sum("cnt")).head().getLong(0).toDouble
-    assert(math.abs(sampTot - fullTot) / fullTot < 0.3,
-      s"scaled sample total $sampTot should approximate full total $fullTot")
-  }
-
   test("streaming census sink == one-shot pair builder, exactly") {
     val root = s"target/tmp/dsir_census_stream_${System.nanoTime()}"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$root/in"))

@@ -19,13 +19,11 @@ class EntrySmokeSpec extends SparkSpec {
     "q_sim_ivf", "q_sim_ivf_batch", "q_sim_ivf_filtered", "q_sim_ivf_pq",
     "q_sim_ivf_rebalanced", "q_sim_ivf_sq8", "q_sim_ivf_widen", "q_sim_ivf_widen_batch",
     "q_sim_pca_ivf", "q_hard_negatives_ivf", "q_contamination_semantic_ivf",
-    // CHANGES.md FOUND: twenty-three more queries leave a plan cached once
+    // CHANGES.md FOUND: fifteen more queries leave a plan cached once
     // they are consumed in full on sf0.001
-    "q_ab_bootstrap", "q_ab_cuped", "q_ab_fdr", "q_anomaly_frozen",
-    "q_anomaly_robust_z", "q_anomaly_seasonal", "q_basket_capped", "q_basket_pairs",
-    "q_basket_recs", "q_corpus_divergence", "q_corpus_js", "q_drift_psi",
-    "q_funnel_latency", "q_hazard", "q_heaps_fit", "q_hll_overlap", "q_marked_tokens",
-    "q_pack_sequences", "q_resample_interp", "q_resample_locf", "q_skew_report",
+    "q_ab_bootstrap", "q_ab_cuped", "q_ab_fdr", "q_basket_capped", "q_basket_pairs",
+    "q_basket_recs", "q_corpus_divergence", "q_corpus_js", "q_funnel_latency",
+    "q_hazard", "q_heaps_fit", "q_marked_tokens", "q_pack_sequences",
     "q_source_overlap", "q_survival")
 
   test("entry returns rows") {

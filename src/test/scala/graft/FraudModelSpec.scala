@@ -55,6 +55,14 @@ class FraudModelSpec extends SparkSpec {
     assert(byLabel(0) < 150, s"negatives should be ~54, got ${byLabel(0)}")
   }
 
+  test("downsample keeps the same rows at 1 and at 7 partitions") {
+    def kept(df: org.apache.spark.sql.DataFrame): Set[String] =
+      FraudModel.downsample(df).select("transaction_id").as[String].collect().toSet
+    val one = kept(data.repartition(1))
+    assert(one.nonEmpty)
+    assert(kept(data.repartition(7)) == one)
+  }
+
   test("full CV protocol: 3 folds x {20,50} trees x {5,10} depth, parallelism 2, seed 42") {
     val Array(train, test) = data.randomSplit(Array(0.7, 0.3), 42L)
     val cv = FraudModel.trainCV(train)

@@ -134,37 +134,4 @@ class IngestSpec extends SparkSpec {
     assert(membership(stB).get(12L).contains(1L))
   }
 
-  test("ingestSink: streamed micro-batches == the sequential batch API") {
-    val root = tmp("ingest_stream")
-    val in = s"$root/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    val batches = Seq(
-      Seq((1L, baseText),
-          (2L, (100 to 140).map(i => s"q$i").mkString(" "))),
-      Seq((11L, baseText),        // exact copy of a batch-0 doc -> dropped
-          (12L, revisionText),    // soft revision -> kept + linked
-          (13L, (200 to 240).map(i => s"r$i").mkString(" "))))
-    def feed(i: Int): Unit = {
-      val stage = s"$root/stage$i"
-      batches(i).toDF("doc_id", "text").coalesce(1).write.parquet(stage)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(f, java.nio.file.Paths.get(s"$in/b$i.parquet"))
-    }
-    feed(0)
-    val stream = spark.readStream
-      .schema(batches(0).toDF("doc_id", "text").schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
-    val q = Ingest.ingestSink(
-      stream, "doc_id", "text",
-      s"$root/idx", s"$root/store", s"$root/out", s"$root/ckpt")
-    try { q.processAllAvailable(); feed(1); q.processAllAvailable() }
-    finally q.stop()
-    // survivors landed: everything except the exact copy
-    assert(spark.read.parquet(s"$root/out")
-      .select("doc_id").as[Long].collect().toSet == Set(1L, 2L, 12L, 13L))
-    // and the cluster store linked the revision, exactly like the batch API
-    assert(ClusterStore.read(spark, s"$root/store")
-      .as[(Long, Long)].collect().toMap == Map(1L -> 1L, 12L -> 1L))
-  }
 }

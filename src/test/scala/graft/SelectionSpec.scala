@@ -40,15 +40,15 @@ class SelectionSpec extends SparkSpec {
   test("long columns route correctly through the monotone double cast") {
     val df = (1L to 100000L).toDF("v")
     assert(Selection.kthSmallest(df, "v", 12345, tailThreshold = 100) == 12345.0)
-    assert(Selection.quantileDisc(df, "v", 0.5) == 50000.0)
-    assert(Selection.quantileDisc(df, "v", 0.0) == 1.0)
-    assert(Selection.quantileDisc(df, "v", 1.0) == 100000.0)
+    assert(Selection.quantilesDisc(df, "v", Seq(0.5))(0.5) == 50000.0)
+    assert(Selection.quantilesDisc(df, "v", Seq(0.0))(0.0) == 1.0)
+    assert(Selection.quantilesDisc(df, "v", Seq(1.0))(1.0) == 100000.0)
   }
 
   test("quantileDisc uses the lower-nearest-rank definition") {
     val df = Seq(10.0, 20.0, 30.0, 40.0).toDF("v")
-    assert(Selection.quantileDisc(df, "v", 0.5) == 20.0)  // floor(0.5*3)+1 = rank 2
-    assert(Selection.quantileDisc(df, "v", 0.75) == 30.0) // floor(.75*3)+1 = rank 3
+    assert(Selection.quantilesDisc(df, "v", Seq(0.5))(0.5) == 20.0)  // floor(0.5*3)+1 = rank 2
+    assert(Selection.quantilesDisc(df, "v", Seq(0.75))(0.75) == 30.0) // floor(.75*3)+1 = rank 3
   }
 
   test("quantilesDisc: one descent, same answers as per-q calls, q=0/1 endpoints") {
@@ -57,7 +57,7 @@ class SelectionSpec extends SparkSpec {
     val df = vals.toDF("v")
     val qs = Seq(0.0, 0.25, 0.5, 0.99, 1.0)
     val multi = Selection.quantilesDisc(df, "v", qs)
-    qs.foreach(q => assert(multi(q) == Selection.quantileDisc(df, "v", q), s"q=$q"))
+    qs.foreach(q => assert(multi(q) == Selection.quantilesDisc(df, "v", Seq(q))(q), s"q=$q"))
     assert(multi(0.0) == vals.min && multi(1.0) == vals.max)
   }
 

@@ -536,29 +536,6 @@ class SimilaritySpec extends SparkSpec {
     } finally spark.sql("DROP TABLE IF EXISTS ivf_spec_tbl")
   }
 
-  test("persisted PCA->IVF index round-trips: basis exact, probes identical") {
-    val corpus = emb.filter(col("vec_id") =!= 0)
-    val idx = SimilaritySearch.buildPcaIvfIndex(
-      corpus, "vec_id", "embedding", components = 16, nlist = 4, maxIter = 2)
-    val path = s"target/tmp/pca_ivf_spec_${System.nanoTime()}"
-    SimilaritySearch.savePcaIvfIndex(idx, "vec_id", "pca_ivf_spec_tbl", path, buckets = 4)
-    try {
-      val loaded = SimilaritySearch.loadPcaIvfIndex(spark, "pca_ivf_spec_tbl", path)
-      // JSON round-trips doubles exactly (shortest-repr parse identity)
-      assert(loaded.pca.mean.sameElements(idx.pca.mean))
-      val loadedAxes: Array[Double] = loaded.pca.axes.flatten
-      val builtAxes: Array[Double] = idx.pca.axes.flatten
-      assert(loadedAxes.sameElements(builtAxes))
-      assert(loaded.pca.explained.sameElements(idx.pca.explained))
-      val inSession = SimilaritySearch.pcaIvfTopK(idx, "vec_id", query, 10,
-        nprobe = 2, shortlist = 4).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val persisted = SimilaritySearch.pcaIvfTopK(loaded, "vec_id", query, 10,
-        nprobe = 2, shortlist = 4).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(persisted == inSession)
-      idx.release()
-    } finally spark.sql("DROP TABLE IF EXISTS pca_ivf_spec_tbl")
-  }
-
   test("truncated-dimension retrieval: identity at full dims, useful recall at 1/4") {
     import graft.functions.VectorOps
     val corpus = emb.filter(col("vec_id") =!= 0)

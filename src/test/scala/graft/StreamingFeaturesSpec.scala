@@ -485,50 +485,6 @@ class StreamingFeaturesSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("dedupNearMinHash drops near-copies (not just byte-copies) within the watermark") {
-    val dir = s"$root/neardup"
-    Files.createDirectories(Paths.get(s"$dir/in"))
-    val base = "alpha bravo charlie delta echo foxtrot golf hotel india juliet " +
-      "kilo lima mike november oscar papa quebec romeo sierra tango " +
-      "uniform victor whiskey xray yankee zulu ocean river mountain valley"
-    val nearCopy = base.replace("november", "different")   // 1 word of 30 changed
-    val unrelated = "entirely other content about training data pipelines at " +
-      "scale with deduplication similarity search and multimodal columns everywhere"
-    def write(name: String, rows: Seq[(Long, Timestamp, String)]): Unit = {
-      rows.toDF("doc_id", "ts", "text").coalesce(1).write.parquet(s"$dir/tmp_$name")
-      val src = Files.list(Paths.get(s"$dir/tmp_$name"))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get()
-      Files.move(src, Paths.get(s"$dir/in/$name.parquet"))
-    }
-    write("b0", Seq((1L, ts(0), base), (2L, ts(1), "hi")))
-    val schema = new StructType()
-      .add("doc_id", org.apache.spark.sql.types.LongType)
-      .add("ts", org.apache.spark.sql.types.TimestampType)
-      .add("text", org.apache.spark.sql.types.StringType)
-    val stream = spark.readStream.schema(schema).parquet(s"$dir/in")
-    val q = StreamingFeatures.dedupNearMinHash(stream, "text")
-      .writeStream.format("memory").queryName("neardup").outputMode(OutputMode.Append).start()
-    try {
-      q.processAllAvailable()
-      // near-copy, byte-copy, exact tiny copy: all inside the horizon;
-      // unrelated doc and a different tiny doc must pass.
-      write("b1", Seq(
-        (3L, ts(2), nearCopy),
-        (4L, ts(3), base),
-        (5L, ts(4), unrelated),
-        (6L, ts(5), "hi"),
-        (7L, ts(6), "yo")))
-      q.processAllAvailable()
-      val kept = spark.table("neardup").select("doc_id").as[Long].collect().toSet
-      assert(kept.contains(1L) && kept.contains(2L), "first arrivals must be kept")
-      assert(kept.contains(5L), "unrelated doc must pass")
-      assert(kept.contains(7L), "a different tiny doc must not collide with other tiny docs")
-      assert(!kept.contains(3L), "near-copy (one word changed) must be dropped")
-      assert(!kept.contains(4L), "byte-copy must be dropped")
-      assert(!kept.contains(6L), "exact tiny copy must be dropped")
-    } finally q.stop()
-  }
-
   test("enrichWithStatic joins each micro-batch against a broadcast dimension") {
     val dir = s"$root/enrich"
     Files.createDirectories(Paths.get(s"$dir/in"))

@@ -271,94 +271,6 @@ class SubstringDedupSpec extends SparkSpec {
     assert(alone == Set(101L, 103L))
   }
 
-  test("streaming census: streamed == batch, replay-idempotent, compaction preserves") {
-    val root = s"target/tmp/census_${System.nanoTime()}"
-    val in = s"$root/in"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
-    val corpus = TableIO.table(spark, Sf0001, "documents")
-      .select("doc_id", "text")
-    val parts = Seq(
-      corpus.filter(col("doc_id") % 3 === 0),
-      corpus.filter(col("doc_id") % 3 === 1),
-      corpus.filter(col("doc_id") % 3 === 2))
-    def feed(i: Int): Unit = {
-      val stage = s"$root/stage$i"
-      parts(i).coalesce(1).write.parquet(stage)
-      val f = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(_.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(f, java.nio.file.Paths.get(s"$in/b$i.parquet"))
-    }
-    feed(0)
-    val stream = spark.readStream
-      .schema(corpus.schema).option("maxFilesPerTrigger", 1).parquet(in)
-    val q = SubstringDedup.censusSink(
-      stream, "doc_id", "text", L, s"$root/census", s"$root/ckpt")
-    try {
-      q.processAllAvailable()
-      feed(1); q.processAllAvailable()
-      feed(2); q.processAllAvailable()
-    } finally q.stop()
-
-    def censusMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
-      df.as[(Long, Long)].collect().toMap
-    val batch = censusMap(
-      SubstringDedup.gramCensus(corpus, "doc_id", "text", L))
-    assert(censusMap(SubstringDedup.readCensus(spark, s"$root/census")) == batch)
-
-    // replay of an already-written batch id must not change the census
-    SubstringDedup.appendCensusDelta(
-      parts(1), "doc_id", "text", L, s"$root/census", batchId = 1)
-    assert(censusMap(SubstringDedup.readCensus(spark, s"$root/census")) == batch)
-
-    // compaction folds to the single delta=-1 base, census unchanged
-    SubstringDedup.compactCensus(spark, s"$root/census")
-    val dirs = new java.io.File(s"$root/census").listFiles()
-      .map(_.getName).filter(_.startsWith("delta=")).toSet
-    assert(dirs == Set("delta=-1"))
-    assert(censusMap(SubstringDedup.readCensus(spark, s"$root/census")) == batch)
-    // second compaction is a no-op
-    SubstringDedup.compactCensus(spark, s"$root/census")
-    assert(censusMap(SubstringDedup.readCensus(spark, s"$root/census")) == batch)
-
-    // the probe against the streamed census equals the batch-census probe
-    val probeDocs = corpus.limit(50)
-    val viaStream = SubstringDedup.duplicatedSpansAgainstCensus(
-        probeDocs, "doc_id", "text",
-        SubstringDedup.readCensus(spark, s"$root/census"), L)
-      .select("doc_id", "span_start", "span_end")
-      .as[(Long, Long, Long)].collect().toSet
-    val viaBatch = SubstringDedup.duplicatedSpansAgainstCensus(
-        probeDocs, "doc_id", "text",
-        SubstringDedup.gramCensus(corpus, "doc_id", "text", L), L)
-      .select("doc_id", "span_start", "span_end")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(viaStream == viaBatch)
-
-    // replay of a batch id ALREADY FOLDED into the base must be skipped:
-    // its counts live inside delta=-1, so re-creating delta=1 would
-    // double them (the fold watermark guards exactly this).
-    SubstringDedup.appendCensusDelta(
-      parts(1), "doc_id", "text", L, s"$root/census", batchId = 1)
-    assert(new java.io.File(s"$root/census").listFiles()
-      .map(_.getName).filter(_.startsWith("delta=")).toSet == Set("delta=-1"))
-    assert(censusMap(SubstringDedup.readCensus(spark, s"$root/census")) == batch)
-
-    // a genuinely NEW batch id above the watermark still appends, and a
-    // follow-up compaction advances the watermark past it
-    val extra = Seq((900001L, "fresh post-compaction document text here"))
-      .toDF("doc_id", "text")
-    SubstringDedup.appendCensusDelta(
-      extra, "doc_id", "text", L, s"$root/census", batchId = 3)
-    val withExtra = censusMap(SubstringDedup.mergeCensus(
-      SubstringDedup.gramCensus(corpus, "doc_id", "text", L),
-      SubstringDedup.gramCensus(extra, "doc_id", "text", L)))
-    assert(censusMap(SubstringDedup.readCensus(spark, s"$root/census")) == withExtra)
-    SubstringDedup.compactCensus(spark, s"$root/census")
-    SubstringDedup.appendCensusDelta(
-      extra, "doc_id", "text", L, s"$root/census", batchId = 3) // replay again
-    assert(censusMap(SubstringDedup.readCensus(spark, s"$root/census")) == withExtra)
-  }
-
   test("token spans: brute reference, hashed==exact, islands merge in token space") {
     def bruteTokenSpans(docs: Seq[(Long, String)], k: Int): Set[(Long, Long, Long)] = {
       val toks = docs.map { case (id, t) => id -> t.split("\\s+").filter(_.nonEmpty).toSeq }
@@ -529,7 +441,7 @@ class SubstringDedupSpec extends SparkSpec {
     assert(SubstringDedup.contaminatedSpans(
         dupOnly, "doc_id", "text", eval, "text", minLen = 30, hashGrams = false)
       .count() == 0L)
-    // persisted eval store == direct eval frame, and strips identically
+    // persisted eval store == direct eval frame
     val store = s"target/tmp/decon_store_${System.nanoTime()}"
     val evalIds = eval.withColumn("__eid", monotonically_increasing_id())
     graft.operators.CensusStore.appendDelta(
@@ -544,9 +456,6 @@ class SubstringDedupSpec extends SparkSpec {
         corpus, "doc_id", "text", census, minLen = 30, hashGrams = false)
       .select("doc_id", "span_start", "span_end")
       .as[(Long, Long, Long)].collect().toSet == spans)
-    assert(SubstringDedup.stripContaminatedSpansAgainstCensus(
-        corpus, "doc_id", "text", census, minLen = 30, hashGrams = false)
-      .select("doc_id", "text").as[(Long, String)].collect().toMap == stripped)
   }
 
   test("no duplicated window shorter than minLen is reported (threshold honored)") {

@@ -1012,16 +1012,12 @@ class TrainingDataSpec extends SparkSpec {
       .select("bin_id").distinct().count()
     assert(bfdBins <= naiveBins,
       s"BFD ($bfdBins bins) must not lose to naive sequential ($naiveBins)")
-    // Manifest: pad = capacity - used for regular bins, 0 for overflow;
-    // total used tokens equals the corpus token count.
-    val man = TrainingData.binManifest(
-      TrainingData.packBinsBfd(docs, "doc_id", col("n"), 1024L, 4), 1024L)
-    val (used, badPad) = (
-      man.agg(sum(col("used_tokens"))).as[Long].collect().head,
-      man.filter(!col("is_overflow") &&
-        col("pad_tokens") =!= lit(1024L) - col("used_tokens")).count())
-    assert(used == lens.sum)
-    assert(badPad == 0)
+    // Every token is packed once, and no regular bin overflows capacity.
+    val bins = TrainingData.packBinsBfd(docs, "doc_id", col("n"), 1024L, 4)
+      .groupBy("bin_id")
+      .agg(sum(col("n_tokens")).as("used"), max(col("is_overflow")).as("over"))
+    assert(bins.agg(sum(col("used"))).as[Long].collect().head == lens.sum)
+    assert(bins.filter(!col("over") && col("used") > 1024L).count() == 0)
   }
 
   test("packBinsBfdByKey: same fold as hash grain, partitioning-invariant, key grain replayable") {

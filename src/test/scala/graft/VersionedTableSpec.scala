@@ -239,6 +239,30 @@ class VersionedTableSpec extends SparkSpec {
       batch = Some(("w", 6L))) == v3 + 1)
   }
 
+  test("a compaction against a stale parent throws; the append it raced survives") {
+    val dir = freshDir("stale_compact")
+    VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"), batch = Some(("w", 0L)))
+    // the compaction reads v ...
+    val v = VersionedTable.latestVersion(spark, dir)
+    val live = VersionedTable.read(spark, dir, v).coalesce(1)
+    // ... an append commits v + 1 ...
+    assert(VersionedTable.commit(spark, dir, Seq((2L, "b")).toDF("id", "x"),
+      batch = Some(("w", 1L))) == v + 1)
+    val nFiles = fileCount(dir)
+    // ... and the compaction's commit against v fails, writing nothing
+    intercept[java.util.ConcurrentModificationException] {
+      VersionedTable.commit(spark, dir, live, overwrite = true, expectedParent = Some(v))
+    }
+    assert(VersionedTable.latestVersion(spark, dir) == v + 1)
+    assert(fileCount(dir) == nFiles)
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_stage_")))
+    assert(VersionedTable.read(spark, dir).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+    // the append's batch record survives: its replay writes nothing
+    assert(VersionedTable.commit(spark, dir, Seq((2L, "b")).toDF("id", "x"),
+      batch = Some(("w", 1L))) == v + 1)
+  }
+
   test("a staged file missing at the move fails the commit; no manifest is published") {
     val dir = freshDir("lost_stage")
     VersionedTable.commit(spark, dir, Seq((1L, "a")).toDF("id", "x"))
